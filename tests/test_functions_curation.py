@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -204,6 +205,26 @@ def test_asof_join_semantics(spark):
     # p2 (t=9) → the EQUAL-ts snapshot t=9; p3 (b,7): b's only build is
     # t=8 > 7 → dropped
     assert out == {"p1": 100, "p2": 200}
+
+
+class TestAsofReservedNames:
+    def test_reserved_columns_raise(self, spark):
+        probe = spark.createDataFrame(
+            [(1, 10, "x")], "k int, ts int, matched string"
+        )
+        build = spark.createDataFrame([(1, 5, 2.0)], "k int, ts int, v double")
+        from zerox_spark.operators.events import asof_join
+
+        with pytest.raises(ValueError, match="reserved"):
+            asof_join(probe, build, "k", "ts", "ts")
+
+    def test_internal_ts_collision_raises(self, spark):
+        probe = spark.createDataFrame([(1, 10, 3)], "k int, ts int, _ts int")
+        build = spark.createDataFrame([(1, 5, 2.0)], "k int, ts int, v double")
+        from zerox_spark.operators.events import asof_join
+
+        with pytest.raises(ValueError, match="reserved"):
+            asof_join(probe, build, "k", "ts", "ts")
 
 
 def test_minhash_max_bucket_drops_viral_buckets_only(spark):

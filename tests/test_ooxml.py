@@ -21,8 +21,12 @@ from zerox_spark.synth import (
     _XLSX_CT,
     _DOCX_CT,
     _W_XMLNS,
+    _odf_doc,
     _zip_bytes,
     render_docx,
+    render_odp,
+    render_ods,
+    render_odt,
     render_xlsx,
     sheet_cells,
 )
@@ -581,3 +585,80 @@ def test_zip_decompression_bomb_contained():
     )
     assert out[0].status == "ERROR"
     assert "too large" in out[0].error
+
+
+class TestOdsInteriorBlanks:
+    def _grid(self, cells_xml: str) -> str:
+        doc = _odf_doc(
+            "spreadsheet",
+            f'<table:table table:name="s">{cells_xml}</table:table>',
+            "application/vnd.oasis.opendocument.spreadsheet",
+        )
+        pages = extract_document(doc, None)
+        assert pages[0].status == "SUCCESS"
+        return pages[0].markdown
+
+    def test_interior_empty_cell_keeps_position(self):
+        md = self._grid(
+            "<table:table-row>"
+            "<table:table-cell><text:p>a</text:p></table:table-cell>"
+            "<table:table-cell/>"
+            "<table:table-cell><text:p>c</text:p></table:table-cell>"
+            "</table:table-row>"
+        )
+        # the blank holds its column: a | "" | c (not a | c)
+        assert "<th>a</th><th></th><th>c</th>" in md
+
+    def test_trailing_padding_stripped(self):
+        md = self._grid(
+            "<table:table-row>"
+            "<table:table-cell><text:p>a</text:p></table:table-cell>"
+            '<table:table-cell table:number-columns-repeated="1000"/>'
+            "</table:table-row>"
+            "<table:table-row>"
+            "<table:table-cell><text:p>b</text:p></table:table-cell>"
+            "</table:table-row>"
+        )
+        assert "<th>a</th></tr>" in md  # no 1000 empty columns
+        assert "<td>b</td>" in md
+
+    def test_interior_repeat_capped_empty_run(self):
+        md = self._grid(
+            "<table:table-row>"
+            "<table:table-cell><text:p>a</text:p></table:table-cell>"
+            '<table:table-cell table:number-columns-repeated="3"/>'
+            "<table:table-cell><text:p>z</text:p></table:table-cell>"
+            "</table:table-row>"
+        )
+        assert "<th>a</th><th></th><th></th><th></th><th>z</th>" in md
+
+
+class TestOdfTemplates:
+    """ott/ots/otp template mimetypes (README.md:495-513) extract
+    identically to their non-template siblings — routing is body-element
+    based, proven by the synth families now shipping template mimetypes
+    for a doc_id subset (extract_odf/extract_misc oracles cover it)."""
+
+    def test_ots_equals_ods(self):
+        # doc_id 4 → ots (doc_id % 4 == 0); compare against doc_id 4's
+        # sibling rendered with the plain mimetype by checking the
+        # template payload extracts the expected workbook pages
+        payload = render_ods(4)
+        assert b"spreadsheet-template" in payload[:200]
+        pages = extract_document(payload, None)
+        assert [p.status for p in pages] == ["SUCCESS", "SUCCESS"]
+        assert "## Sheet: data" in pages[0].markdown
+
+    def test_ott_extracts(self):
+        payload = render_odt(5, "one two three four five six seven")
+        assert b"text-template" in payload[:200]
+        pages = extract_document(payload, None)
+        assert pages[0].status == "SUCCESS"
+        assert pages[0].markdown.startswith("# Document 5")
+
+    def test_otp_extracts(self):
+        payload = render_odp(8, "one two three four five six seven")
+        assert b"presentation-template" in payload[:200]
+        pages = extract_document(payload, None)
+        assert [p.page_no for p in pages] == [1, 2]
+        assert pages[0].markdown.startswith("# Document 8")

@@ -81,22 +81,33 @@ def test_minhash_default_plan_is_vectorized_and_shuffle_free(spark):
     assert "REPARTITION_BY_COL" in pairs_plan or "hashpartitioning(xxhash64" in pairs_plan
 
 
-def test_minhash_map_formulation_is_shuffle_free_and_agrees(spark):
-    """minhash_signatures_map (the single-consumer variant) must plan with
-    zero exchange and produce byte-identical signatures to the default."""
+def test_minhash_signatures_match_numpy_reference(spark):
+    """minhash_signatures equals a per-document numpy reference: for each
+    permutation i, min over the doc's shingle hashes h of a_i·h + b_i mod p."""
+    import numpy as np
+
     from zerox_spark.operators.dedup import (
+        MERSENNE_PRIME,
+        _minhash_params,
+        _shingles,
         minhash_signatures,
-        minhash_signatures_map,
         with_injected_duplicates,
     )
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    plan = plan_of(minhash_signatures_map(docs))
-    assert "Exchange" not in plan and "HashAggregate" not in plan
-    corpus = with_injected_duplicates(docs).limit(120)
-    a = {r.doc_id: r.sig for r in minhash_signatures_map(corpus).collect()}
-    b = {r.doc_id: r.sig for r in minhash_signatures(corpus).collect()}
-    assert a == b and len(a) > 0
+    corpus = with_injected_duplicates(docs).orderBy("doc_id").limit(120)
+    hs = F.transform(
+        _shingles(F.col("text")),
+        lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE_PRIME)),
+    )
+    a, b = (np.array(c, dtype=np.int64)[:, None] for c in _minhash_params())
+    want = {
+        r.doc_id: ((a * np.array(r.hs) + b) % MERSENNE_PRIME).min(1).tolist()
+        for r in corpus.select("doc_id", hs.alias("hs")).collect()
+        if r.hs
+    }
+    got = {r.doc_id: r.sig for r in minhash_signatures(corpus).collect()}
+    assert got == want and len(got) > 0
 
 
 def test_curation_plan_uses_lsh_not_raw_shingle_join(spark):

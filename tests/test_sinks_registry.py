@@ -3,11 +3,19 @@ retry wrapper (O6), markdown file sink (K1), extractor registry (M1)."""
 
 from __future__ import annotations
 
+import gzip
+
 import pytest
 
 from tests.conftest import SF_SMOKE
 
-from zerox_spark.extract.core import ExtractConfig, extract_document, get_extractor
+from zerox_spark import synth
+from zerox_spark.extract.core import (
+    EXTRACTOR_NAMES,
+    ExtractConfig,
+    extract_document,
+    get_extractor,
+)
 from zerox_spark.extract.fences import sanitize_filename, sanitize_filename_node
 from zerox_spark.sinks import export_markdown_files, run_retries
 
@@ -58,6 +66,91 @@ def test_extractor_registry():
     assert pages[0][1] == "hello world"
     with pytest.raises(ValueError):
         get_extractor("gpt-4o")  # no network models in this engine
+
+
+_WORDS = " ".join(f"word{i}" for i in range(80))
+
+
+def _rows(row_fn, ids):
+    return [row_fn(i, _WORDS, "en", "cc")[0] for i in ids]
+
+
+def _own_format(name: str) -> list[bytes]:
+    """Synth payloads of the format each named route exists for."""
+    tax = range(64)
+    if name == "readability":
+        html = _rows(synth._row_taxonomy, [
+            i for i in tax
+            if not (synth.is_fast(i) or synth.is_sheet_doc(i)
+                    or synth.is_pdf_doc(i))
+        ][:12])
+        return html + [
+            b'<meta charset="latin-1"><p>caf\xe9 au lait</p>',
+            gzip.compress(html[0]),
+        ]
+    if name == "layout":
+        pdfs = [i for i in tax if synth.is_pdf_doc(i)][:6]
+        return _rows(synth._row_taxonomy, pdfs) + _rows(
+            synth._row_pdf_real, range(6)
+        )
+    if name == "sheets":
+        return _rows(
+            synth._row_taxonomy, [i for i in tax if synth.is_sheet_doc(i)]
+        )
+    row_fn = {
+        "ooxml": synth._row_ooxml,
+        "legacy_office": synth._row_legacy,
+        "delimited": synth._row_delimited,
+        "rtf": synth._row_rtf,
+    }[name]
+    return _rows(row_fn, range(8))
+
+
+_INVALID = {
+    "auto": b"",
+    "readability": b"\x89PNG\r\n\x1a\n" + b"\x00" * 64,
+    "layout": b"%PDF-SYNTH\n",
+    "sheets": b"%SHEET\n",
+    "ooxml": b"PK\x03\x04 not a zip",
+    "legacy_office": b"\xd0\xcf\x11\xe0" + b"\x00" * 60,
+    "delimited": b"just some prose\nwith two lines\n",
+    "rtf": b"plain",
+}
+
+
+@pytest.mark.parametrize("name", EXTRACTOR_NAMES)
+def test_route_table(name):
+    route = get_extractor(name)
+    named = ExtractConfig(extractor=route)
+    # a named route extracts its own format exactly as auto-routing does
+    if route is not None:
+        for payload in _own_format(name):
+            auto = extract_document(payload, None)
+            assert {p.status for p in auto} == {"SUCCESS"}
+            assert extract_document(payload, None, named) == auto
+    # an empty or invalid payload is one contained ERROR row, never zero
+    out = extract_document(_INVALID[name], None, named)
+    assert [p.status for p in out] == ["ERROR"]
+    # prose that merely starts with the bzip2 letters is not a container:
+    # the cap applies, so the output equals that of the truncated payload
+    line = b"BZh is prose, not a bzip2 stream.\n"
+    capped = ExtractConfig(extractor=route, max_payload_bytes=500)
+    assert extract_document(line * 40, None, capped) == extract_document(
+        line * (500 // len(line)), None, named
+    )
+
+
+def test_extractor_choices_track_registry():
+    from zerox_spark.job import parse_args
+
+    base = ["--output", "/tmp/x"]
+    args = parse_args(base + ["--extractor", "delimited"])
+    assert args.extractor == "delimited"
+    with pytest.raises(SystemExit):
+        parse_args(base + ["--extractor", "nope"])
+    # every registry strategy is accepted
+    for name in EXTRACTOR_NAMES:
+        assert parse_args(base + ["--extractor", name]).extractor == name
 
 
 def test_export_markdown_files(spark, tmp_path):

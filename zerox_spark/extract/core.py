@@ -3,25 +3,17 @@
 (index.ts:161-213) and error containment (ErrorMode.IGNORE,
 index.ts:338-352).
 
-Routing (logical-plan branch per document):
-
-1. trusted pre-extracted ``text`` → fast path, no DOM work
-   (node-zerox/src/index.ts:167-168 routing);
-2. ``%SHEET`` magic → structured-sheet fast path, sheet = page (the Excel
-   branch: extractPagesFromStructuredDataFile, file.ts:311-329);
-3. ``%PDF`` magic bytes → layout pass (layout.py);
-4. ``PK`` magic → OOXML zip+XML extraction (ooxml.py): xlsx sheet-per-page
-   (convertExcelToHtml analog, file.ts:210-276), docx heading/list/table
-   pages (the convertFileToPdf route, file.ts:129-150, without libreoffice);
-5. CFB magic → legacy Office extraction (cfb.py + legacy_office.py):
-   .xls BIFF8 sheet-per-page, .doc Word97 piece-table text;
-6. anything else → HTML pipeline (tokenize → DOM → score → markdown);
-7. empty/undecodable payload → ERROR page with content "" and
-   content_length 0, job continues (the IGNORE containment).
-
-A user-supplied ``ExtractConfig.extractor`` callable replaces steps 2-4
-entirely — the customModelFunction extension point
-(node-zerox/src/types.ts:9-15, invoked index.ts:287-298).
+Routing is the ordered ``ROUTES`` table: the first entry whose sniff
+matches the payload extracts it, the switch of index.ts:161-213. Ahead of
+the table, trusted pre-extracted ``text`` takes the fast path
+(index.ts:167-168) and an empty payload is an error. A named extractor
+(``get_extractor``, the createModel factory analog, models/index.ts:48-80)
+skips the sniffing and runs its own entry with the same decode, binary
+guard and no-pages check. A user-supplied ``ExtractConfig.extractor``
+callable replaces the table entirely — the customModelFunction extension
+point (node-zerox/src/types.ts:9-15, invoked index.ts:287-298). Any failure
+becomes an ERROR page with content "" and content_length 0 and the job
+continues (the IGNORE containment).
 
 Determinism guarantees: NFC unicode normalization, CRLF→LF, a single
 whitespace-collapse rule in the emitter, no environment lookups.
@@ -31,86 +23,188 @@ from __future__ import annotations
 
 import re
 import unicodedata
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from zerox_spark.extract.fences import format_markdown
-from zerox_spark.extract.layout import is_pdf, pdf_to_pages
-from zerox_spark.extract.markdown import html_to_markdown
+from zerox_spark.extract.layout import PDF_MAGIC, SYNTH_MAGIC, pdf_to_pages
+from zerox_spark.extract.markdown import Block, html_to_markdown, join_blocks
 from zerox_spark.extract.pages import normalize_select_pages, select_and_renumber
-from zerox_spark.extract.sheets import is_sheet, sheets_to_pages
+from zerox_spark.extract.sheets import SHEET_MAGIC, sheets_to_pages
+from zerox_spark.extract.sniff import IMAGE_KINDS, sniff_binary
 
 STATUS_SUCCESS = "SUCCESS"
 STATUS_ERROR = "ERROR"
 
 
-def _builtin_html(html: bytes, text: str | None):
-    src = html.decode("utf-8", errors="replace").replace("\r\n", "\n")
-    markdown, spans = html_to_markdown(src)
-    return [(1, markdown, spans)]
+@dataclass(frozen=True)
+class Route:
+    """One entry of the routing table. ``sniff`` is a magic prefix, a
+    predicate, or None (matches anything); ``extract`` maps the payload to
+    [(page_no, markdown, spans)]. A ``text`` route sniffs and extracts the
+    decoded payload (str), after the binary guards; the others see the raw
+    bytes."""
+
+    name: str
+    sniff: bytes | Callable | None
+    extract: Callable
+    # byte truncation would corrupt the payload, so the payload cap never
+    # applies: it passes whole to a parser that enforces its own bounds
+    container: bool = False
+    empty_error: str | None = None  # raised when extract yields no pages
+    text: bool = False
+    named: bool = False  # selectable by name (get_extractor, --extractor)
+
+    def matches(self, payload: bytes | str) -> bool:
+        if self.sniff is None:
+            return True
+        if isinstance(self.sniff, bytes):
+            return payload[: len(self.sniff)] == self.sniff
+        return bool(self.sniff(payload))
+
+    def __call__(self, html: bytes, text: str | None = None):
+        """Extract through this route alone — the ``ExtractConfig.extractor``
+        call contract, so a named route plugs in where a custom one would."""
+        return _extract_raw(html, None, ExtractConfig(extractor=self))
 
 
-def _builtin_layout(html: bytes, text: str | None):
-    return pdf_to_pages(html)
-
-
-def _builtin_sheets(html: bytes, text: str | None):
-    return sheets_to_pages(html)
-
-
-# strategy registry — the createModel factory analog (SURVEY.md §2.5 M1,
-# node-zerox/src/models/index.ts:48-80): named extractor strategies a
-# pipeline can select explicitly instead of the magic-byte auto-routing.
-def _builtin_ooxml(html: bytes, text: str | None):
-    from zerox_spark.extract.ooxml import ooxml_to_pages
-
-    return ooxml_to_pages(html)
-
-
-def _builtin_cfb(html: bytes, text: str | None):
+def _cfb_pages(payload: bytes):
+    # legacy Office (checkIsCFBFile, file.ts:89-92): .xls BIFF8
+    # sheet-per-page, .doc Word97 piece-table text, .ppt — the
+    # convertFileToPdf route (file.ts:129-150) without libreoffice
     from zerox_spark.extract.legacy_office import cfb_to_pages
 
-    return cfb_to_pages(html)
+    return cfb_to_pages(payload)
 
 
-def _builtin_delimited(html: bytes, text: str | None):
+def _wpd_pages(payload: bytes):
+    # WordPerfect (README.md:500): WP5.x byte-model text extraction
+    from zerox_spark.extract.legacy_office import wpd_to_pages
+
+    return wpd_to_pages(payload)
+
+
+def _rtf_pages(payload: bytes):
+    # RTF (README.md:495): group/control-word parse → paragraph blocks,
+    # \page splits pages
+    from zerox_spark.extract.rtf import rtf_to_pages
+
+    return rtf_to_pages(payload)
+
+
+def _ooxml_pages(payload: bytes):
+    # OOXML/ODF zip: xlsx sheet-per-page (convertExcelToHtml analog,
+    # file.ts:210-276), docx/pptx/odt pages (file.ts:129-150). A zip that is
+    # none of these raises → contained ERROR
+    from zerox_spark.extract.ooxml import ooxml_to_pages
+
+    return ooxml_to_pages(payload)
+
+
+def _reject_binary(payload: bytes):
+    # a crawl is full of image/font/archive/audio payloads; none may reach
+    # the text decode and extract as SUCCESS mojibake. Images get a distinct
+    # reason: the reference OCRs them (node-zerox/src/index.ts:171-182), a
+    # deterministic engine's honest outcome is a contained ERROR, the same
+    # contract as image-only PDFs
+    kind = sniff_binary(payload)
+    if kind in IMAGE_KINDS:
+        raise ValueError(f"image payload ({kind}) has no text layer — no OCR")
+    raise ValueError(f"binary/media payload ({kind})")
+
+
+_TAGGED = re.compile(r"\s*<").match
+_XML_DECL = re.compile(r"\s*<\?xml").match
+
+
+def _untagged(src: str) -> bool:
+    return not _TAGGED(src)
+
+
+def _is_delimited(src: str) -> bool:
+    from zerox_spark.extract.delimited import sniff_delimiter
+
+    return _untagged(src) and sniff_delimiter(src) is not None
+
+
+def _delimited_pages(src: str):
+    # csv/tsv structured fast path (README.md:506-507): a consistent
+    # delimited grid is one first-row-<th> table page, the same sheet
+    # contract as %SHEET/xlsx/xls
     from zerox_spark.extract.delimited import (
         delimited_to_pages,
         sniff_delimiter,
     )
 
-    src = _decode_payload(html).replace("\r\n", "\n").replace("\r", "\n")
     delim = sniff_delimiter(src)
     if delim is None:
         raise ValueError("payload is not a consistent delimited table")
     return delimited_to_pages(src, delim)
 
 
-def _builtin_rtf(html: bytes, text: str | None):
-    from zerox_spark.extract.rtf import rtf_to_pages
-
-    return rtf_to_pages(html)
+_PARA_SPLIT = re.compile(r"\n\s*\n")
+_WS_RUN = re.compile(r"\s+")
 
 
-EXTRACTORS: dict[str, object] = {
-    "auto": None,  # full dispatch below (the default)
-    "readability": _builtin_html,
-    "layout": _builtin_layout,
-    "sheets": _builtin_sheets,
-    "ooxml": _builtin_ooxml,
-    "legacy_office": _builtin_cfb,
-    "delimited": _builtin_delimited,
-    "rtf": _builtin_rtf,
-}
+def _plain_text_pages(src: str):
+    # plain text (.txt is a first-class reference input type,
+    # README.md:488-513): paragraphs on blank lines, no DOM pass
+    paras = (_WS_RUN.sub(" ", p).strip() for p in _PARA_SPLIT.split(src))
+    markdown, spans = join_blocks([Block("para", p) for p in paras if p])
+    return [(1, markdown, spans)]
 
 
-def get_extractor(name: str):
-    """Resolve a named strategy; raises at plan time on unknown names (the
+def _html_pages(src: str):
+    markdown, spans = html_to_markdown(src)
+    return [(1, markdown, spans)]
+
+
+def _xml_pages(src: str):
+    page = _generic_xml_page(src)
+    return [page] if page is not None else _html_pages(src)
+
+
+# sniffed in order on the raw bytes, then — for a payload none of those
+# claims — on the decoded text. The binary route guards the text decode:
+# _extract_raw unwraps a compressed transfer encoding (gzip/bzip2/xz) and
+# dispatches again; every other binary/media kind is a contained error.
+_BINARY = Route("binary", sniff_binary, _reject_binary, container=True)
+ROUTES: tuple[Route, ...] = (
+    Route("legacy_office", b"\xd0\xcf\x11\xe0", _cfb_pages, container=True,
+          empty_error="CFB payload with no pages", named=True),
+    Route("wpd", b"\xffWPC", _wpd_pages),
+    Route("rtf", b"{\\rtf", _rtf_pages, named=True),
+    Route("sheets", SHEET_MAGIC, sheets_to_pages,
+          empty_error="sheet payload with no sheets", named=True),
+    # the line-oriented synth grammar is safe to truncate at a newline;
+    # a real PDF is a container (stream/object/page budgets in pdf.py)
+    Route("pdf_synth", SYNTH_MAGIC, pdf_to_pages,
+          empty_error="PDF payload with no pages"),
+    Route("layout", PDF_MAGIC, pdf_to_pages, container=True,
+          empty_error="PDF payload with no pages", named=True),
+    Route("ooxml", b"PK", _ooxml_pages, container=True,
+          empty_error="OOXML payload with no pages", named=True),
+    _BINARY,
+    Route("delimited", _is_delimited, _delimited_pages, text=True, named=True),
+    Route("text", _untagged, _plain_text_pages, text=True),
+    Route("xml", _XML_DECL, _xml_pages, text=True),
+    Route("readability", None, _html_pages, text=True, named=True),
+)
+
+EXTRACTOR_NAMES: tuple[str, ...] = ("auto",) + tuple(
+    r.name for r in ROUTES if r.named
+)
+
+
+def get_extractor(name: str) -> Route | None:
+    """Resolve a named route for ``ExtractConfig.extractor`` ("auto" → None,
+    the sniffing dispatch); raises at plan time on unknown names (the
     validate-at-init pattern, modellitellm.py:33-38)."""
-    if name not in EXTRACTORS:
+    if name not in EXTRACTOR_NAMES:
         raise ValueError(
-            f"unknown extractor {name!r}; known: {sorted(EXTRACTORS)}"
+            f"unknown extractor {name!r}; known: {sorted(EXTRACTOR_NAMES)}"
         )
-    return EXTRACTORS[name]
+    return next((r for r in ROUTES if r.name == name), None)
 
 
 @dataclass
@@ -136,8 +230,9 @@ class ExtractConfig:
     trust_text: bool = True  # honor the pre-extracted text fast path
     # customModelFunction analog (node-zerox/src/types.ts:9-15): a callable
     # (html_bytes, text) → [(page_no, markdown, spans)] replacing the
-    # built-in extractor; must be deterministic and picklable (it ships to
-    # executors inside the UDF closure)
+    # ROUTES table, or one named Route (get_extractor); must be
+    # deterministic and picklable (it ships to executors inside the UDF
+    # closure)
     extractor: object | None = None
     # hybrid extraction analog (HybridInput {imagePaths, text},
     # node-zerox/src/types.ts:197-200): the reference feeds OCR images AND
@@ -254,6 +349,17 @@ def _cap_payload(html: bytes, cap: int) -> bytes:
     return head[: cut + 1] if cut > 0 else head
 
 
+def _match(payload: bytes) -> Route | None:
+    """The first byte-sniffed route that matches; None means the payload is
+    text, for a text route to pick after decoding."""
+    for route in ROUTES:
+        if route.text:
+            return None
+        if route.matches(payload):
+            return route
+    return None
+
+
 def _extract_raw(
     html: bytes | None,
     text: str | None,
@@ -264,140 +370,47 @@ def _extract_raw(
         return [(1, _finalize(text), [("para", 0, len(text), 1.0)])]
     if not html:
         raise ValueError("empty document payload")
-    if config.max_payload_bytes and len(html) > config.max_payload_bytes:
-        if (
-            html[:2] == b"PK"
-            or html[:4] == b"\xd0\xcf\x11\xe0"
-            or (
-                html[:4] == b"%PDF"
-                and not html.startswith(b"%PDF-SYNTH")
-            )
-            or html[:2] == b"\x1f\x8b"  # gzip
-            or html[:3] == b"BZh"  # bzip2
-            or html[:6] == b"\xfd7zXZ\x00"  # xz
-        ):
-            # byte-truncating a CONTAINER just corrupts it (any oversized
-            # xlsx would become an ERROR row); containers instead pass
-            # whole to parsers that enforce their own bounds — zip member
-            # decompressed-size guard (ooxml._read_member), CFB sector cap
-            # (cfb._MAX_SECTORS), PDF stream/object/page budgets
-            # (pdf.MAX_STREAM_BYTES & co) — so per-row work stays bounded
-            # without losing every large office document. Compressed
-            # transfer encodings (gzip/bzip2/xz) are containers too:
-            # byte-truncation corrupts the stream, so they pass whole to
-            # the bounded decompressors (input + 4x output budgets) and
-            # the DECOMPRESSED payload is re-capped on re-dispatch. The
-            # line-oriented %PDF-SYNTH grammar keeps the newline-boundary
-            # truncation (safe there by construction).
-            pass
-        else:
-            html = _cap_payload(html, config.max_payload_bytes)
-    if config.extractor is not None:
-        pages = config.extractor(html, text)  # type: ignore[operator]
+    route = _match(html)
+    cap = config.max_payload_bytes
+    if cap and len(html) > cap and not (route and route.container):
+        # a container skips the cap because its parser bounds the work: zip
+        # member and container budgets (ooxml.py), the CFB sector cap, PDF
+        # stream/object/page budgets, 4x output budgets on decompression
+        html = _cap_payload(html, cap)
+        route = _match(html)
+    chosen = config.extractor
+    if chosen is not None and not isinstance(chosen, Route):
+        pages = chosen(html, text)  # a custom extractor replaces the table
         return [(no, _finalize(md), spans) for no, md, spans in pages]
-    if html[:4] == b"\xd0\xcf\x11\xe0":
-        # legacy-Office CFB (checkIsCFBFile, file.ts:89-92): stdlib
-        # container+payload extraction (extract/cfb.py + legacy_office.py —
-        # the convertFileToPdf route, file.ts:129-150, without libreoffice).
-        # A CFB that is not xls/doc, or a corrupt one, raises → contained
-        # ERROR in IGNORE mode.
-        from zerox_spark.extract.legacy_office import cfb_to_pages
-
-        pages = cfb_to_pages(html)
-        if not pages:
-            raise ValueError("CFB payload with no pages")
-        return [(no, _finalize(md), spans) for no, md, spans in pages]
-    if html[:4] == b"\xffWPC":
-        # WordPerfect (README.md:500): WP5.x byte-model text extraction
-        from zerox_spark.extract.legacy_office import wpd_to_pages
-
-        pages = wpd_to_pages(html)
-        return [(no, _finalize(md), spans) for no, md, spans in pages]
-    if html[:5] == b"{\\rtf":
-        # RTF (README.md:495): group/control-word parse → paragraph blocks,
-        # \page splits pages (extract/rtf.py) — no more control-word soup
-        # through the plain-text fallback
-        from zerox_spark.extract.rtf import rtf_to_pages
-
-        pages = rtf_to_pages(html)
-        return [(no, _finalize(md), spans) for no, md, spans in pages]
-    if is_sheet(html):
-        pages = sheets_to_pages(html)
-        if not pages:
-            raise ValueError("sheet payload with no sheets")
-        return [(no, _finalize(md), spans) for no, md, spans in pages]
-    if is_pdf(html):
-        pages = pdf_to_pages(html)
-        if not pages:
-            raise ValueError("PDF payload with no pages")
-        return [(no, _finalize(md), spans) for no, md, spans in pages]
-    if html[:2] == b"PK":
-        # OOXML zip container: stdlib zip+XML extraction (extract/ooxml.py —
-        # the convertExcelToHtml / convertFileToPdf analog, file.ts:129-150,
-        # 210-276). A PK payload that is not xlsx/docx (odt, plain zip)
-        # raises → contained ERROR in IGNORE mode.
-        from zerox_spark.extract.ooxml import ooxml_to_pages
-
-        pages = ooxml_to_pages(html)
-        if not pages:
-            raise ValueError("OOXML payload with no pages")
-        return [(no, _finalize(md), spans) for no, md, spans in pages]
-    # binary/media guard (round-3 What's-wrong #1): a crawl is full of
-    # image/font/archive/audio payloads; none may reach the latin-1-total
-    # decode below and extract as SUCCESS mojibake. Recognized images get a
-    # distinct reason (the reference's image inputs exist to be OCR'd,
-    # node-zerox/src/index.ts:171-182 — a deterministic engine's honest
-    # outcome is a contained ERROR, same contract as image-only PDFs).
-    from zerox_spark.extract.sniff import IMAGE_KINDS, sniff_binary
-
-    bin_kind = sniff_binary(html)
-    if bin_kind in ("gzip", "bzip2", "xz"):
-        # crawl tables routinely store the raw transfer-encoded body;
-        # decompress (bounded) and re-dispatch — a gzip'd html page is an
-        # html page, not binary. The depth guard stops alternating-wrapper
-        # chains (gzip→bz2→gzip→…) that the per-scheme nested checks
-        # cannot see across schemes.
-        if _depth >= 2:
-            raise ValueError("compression nesting too deep")
-        if bin_kind == "gzip":
-            inner = _gunzip_payload(html, config)
-        else:
-            inner = _bounded_decompress(bin_kind, html, config)
-        return _extract_raw(inner, text, config, _depth + 1)
-    if bin_kind is not None:
-        if bin_kind in IMAGE_KINDS:
-            raise ValueError(
-                f"image payload ({bin_kind}) has no text layer — no OCR"
-            )
-        raise ValueError(f"binary/media payload ({bin_kind})")
-    src = _decode_payload(html)
-    src = src.replace("\r\n", "\n").replace("\r", "\n")
-    if _looks_binary(src):
-        # magic-less binary (raw compressed fragments, truncated media):
-        # control-character density no real text document has
-        raise ValueError("binary payload (unprintable content)")
-    if not src.lstrip().startswith("<"):
-        # csv/tsv structured fast path (README.md:506-507): a consistent
-        # delimited grid extracts as one first-row-<th> table page, the
-        # same sheet contract as %SHEET/xlsx/xls (extract/delimited.py)
-        from zerox_spark.extract.delimited import (
-            delimited_to_pages,
-            sniff_delimiter,
-        )
-
-        delim = sniff_delimiter(src)
-        if delim is not None:
-            pages = delimited_to_pages(src, delim)
-            return [(no, _finalize(md), spans) for no, md, spans in pages]
-        # plain-text document (.txt is a first-class reference input type,
-        # README.md:488-513): paragraphs on blank lines, no DOM pass
-        return [_plain_text_page(src)]
-    if src.lstrip().startswith("<?xml"):
-        page = _generic_xml_page(src)
-        if page is not None:
-            return [page]
-    markdown, spans = html_to_markdown(src)
-    return [(1, _finalize(markdown), spans)]
+    if chosen is not None and not (route is _BINARY and chosen.text):
+        route = chosen  # a named route; text ones stay behind the guard
+    if route is _BINARY:
+        kind = sniff_binary(html)
+        if kind in ("gzip", "bzip2", "xz"):
+            # crawl tables routinely store the raw transfer-encoded body; a
+            # gzip'd html page is an html page. The depth guard stops
+            # alternating-wrapper chains (gzip→bz2→gzip→…) that the
+            # per-scheme nested checks cannot see across schemes.
+            if _depth >= 2:
+                raise ValueError("compression nesting too deep")
+            if kind == "gzip":
+                inner = _gunzip_payload(html, config)
+            else:
+                inner = _bounded_decompress(kind, html, config)
+            return _extract_raw(inner, text, config, _depth + 1)
+    if route is None or route.text:
+        src = _decode_payload(html).replace("\r\n", "\n").replace("\r", "\n")
+        if _looks_binary(src):
+            # magic-less binary (raw compressed fragments, truncated media):
+            # control-character density no real text document has
+            raise ValueError("binary payload (unprintable content)")
+        route = route or next(r for r in ROUTES if r.text and r.matches(src))
+        pages = route.extract(src)
+    else:
+        pages = route.extract(html)
+    if not pages and route.empty_error:
+        raise ValueError(route.empty_error)
+    return [(no, _finalize(md), spans) for no, md, spans in pages]
 
 
 def _generic_xml_page(src: str) -> tuple[int, str, list] | None:
@@ -437,10 +450,8 @@ def _generic_xml_page(src: str) -> tuple[int, str, list] | None:
     walk(root)
     if not paras:
         return None
-    from zerox_spark.extract.markdown import Block, join_blocks
-
     markdown, spans = join_blocks([Block("para", p) for p in paras])
-    return (1, _finalize(markdown), spans)
+    return (1, markdown, spans)
 
 
 # charset resolution — the mime/extension fallback-chain analog
@@ -506,8 +517,6 @@ def _gunzip_payload(html: bytes, config: "ExtractConfig") -> bytes:
     data = b"".join(out)
     if not data:
         raise ValueError("gzip payload decompressed to nothing")
-    from zerox_spark.extract.sniff import sniff_binary
-
     if sniff_binary(data) == "gzip":
         raise ValueError("nested gzip payload")
     return data
@@ -560,8 +569,6 @@ def _bounded_decompress(
     joined = b"".join(out)
     if not joined:
         raise ValueError(f"{kind} payload decompressed to nothing")
-    from zerox_spark.extract.sniff import sniff_binary
-
     if sniff_binary(joined) == kind:
         # same-scheme-in-scheme is the classic bomb shape; a DIFFERENT
         # scheme inside is legitimate layering (bz2 dump of gzip bodies)
@@ -591,9 +598,6 @@ def _decode_payload(html: bytes) -> str:
         return html.decode("latin-1")
 
 
-_PARA_SPLIT = re.compile(r"\n\s*\n")
-_WS_RUN = re.compile(r"\s+")
-
 # C0 controls that never appear in text (tab/newline/CR/formfeed excluded),
 # C1 controls (the latin-1-total fallback maps bytes 0x80-0x9f there; real
 # text never carries them — even mislabeled cp1252 smart quotes stay rare),
@@ -612,18 +616,3 @@ def _looks_binary(src: str) -> bool:
         return False
     hits = len(_BINARYISH.findall(probe))
     return hits / len(probe) > _BINARY_RATIO
-
-
-def _plain_text_page(src: str) -> tuple[int, str, list]:
-    paras = [
-        _WS_RUN.sub(" ", p).strip() for p in _PARA_SPLIT.split(src)
-    ]
-    paras = [p for p in paras if p]
-    markdown = "\n\n".join(paras)
-    spans, pos = [], 0
-    for i, p in enumerate(paras):
-        if i:
-            pos += 2
-        spans.append(("para", pos, pos + len(p), 1.0))
-        pos += len(p)
-    return (1, _finalize(markdown), spans)

@@ -46,13 +46,6 @@ _W = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
 _CELL_REF = re.compile(r"([A-Z]+)[0-9]*$")
 
 
-def is_ooxml(payload: bytes) -> bool:
-    """Cheap magic sniff (zip local-file header). Routing only — a PK
-    payload that is not a parseable OOXML doc still fails into the
-    contained-error path."""
-    return payload[:2] == b"PK"
-
-
 def _zip(payload: bytes) -> zipfile.ZipFile:
     try:
         return zipfile.ZipFile(io.BytesIO(payload))

@@ -27,10 +27,6 @@ from zerox_spark.extract.markdown import Block, join_blocks
 SHEET_MAGIC = b"%SHEET"
 
 
-def is_sheet(payload: bytes) -> bool:
-    return payload[:6] == SHEET_MAGIC
-
-
 def parse_sheet_payload(payload: bytes) -> list[tuple[str, list[list[str]]]]:
     """payload → [(sheet_name, rows)] preserving order; cells are trimmed;
     blank lines are skipped (a corrupt line must not kill the doc)."""

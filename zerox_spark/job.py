@@ -60,12 +60,12 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap.add_argument("--error-mode", choices=["IGNORE", "THROW"], default="IGNORE")
     ap.add_argument("--select-pages", default=None, help="comma-separated 1-indexed page list")
     ap.add_argument("--export-md", default=None, help="also write one .md artifact per document to this dir (the reference's primary sink)")
-    from zerox_spark.extract.core import EXTRACTORS
+    from zerox_spark.extract.core import EXTRACTOR_NAMES
 
     ap.add_argument(
         "--extractor",
         default=None,
-        choices=sorted(EXTRACTORS),
+        choices=sorted(EXTRACTOR_NAMES),
         help="named extractor strategy instead of magic-byte auto-routing",
     )
     ap.add_argument("--master", default=None)
@@ -87,11 +87,9 @@ def main(argv: list[str] | None = None) -> int:
 
     # config validation BEFORE any I/O (validate-at-init,
     # py_zerox/pyzerox/models/modellitellm.py:33-38)
-    named_extractor = None
-    if args.extractor and args.extractor != "auto":
-        from zerox_spark.extract.core import get_extractor
+    from zerox_spark.extract.core import get_extractor
 
-        named_extractor = get_extractor(args.extractor)
+    named_extractor = get_extractor(args.extractor or "auto")
 
     spark = get_spark(args.master, app_name="zerox-spark-job")
 

@@ -11,9 +11,9 @@ One lazy plan, shaped for 100 TB:
 - the quality gate is a pure-column FILTER (textstats.quality_col), not a
   join — the expensive shingle/minhash stages see only survivors and the
   text column flows through the plan once;
-- exact dedup is a single window (row_number over text, min doc_id first)
-  — one shuffle, replacing the groupBy+min + semi-join-back shape (two
-  full-text shuffles);
+- exact dedup is one hash aggregate (groupBy text, min doc_id and min
+  quality) — one shuffle, and the map-side partial aggregate collapses
+  duplicates before it;
 - near-dup pairs come from ``dedup_minhash_pairs`` (banded LSH bucket join
   → candidates-only exact verification), NOT the raw bigram-shingle
   self-join — common shingles ("of the") give the raw join posting lists
@@ -34,7 +34,7 @@ staged table anyway (the usual multi-stage curation layout).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from zerox_spark.operators.dedup import dedup_minhash_pairs
 from zerox_spark.operators.textstats import (

@@ -248,9 +248,9 @@ def minhash_signatures(corpus: DataFrame) -> DataFrame:
     in codegen); the k×shingles permutation arithmetic runs as ONE
     vectorized Arrow/numpy batch op per partition (guide §4.2: hand whole
     batches to vectorized native code). Bit-identical output to the
-    historical explode + groupBy(128 mins) aggregation and to
-    ``minhash_signatures_map`` (all-int64 modular arithmetic, products
-    < 2^62 — no overflow on any path; equality is pytest-locked).
+    historical explode + groupBy(128 mins) aggregation (all-int64 modular
+    arithmetic, products < 2^62 — no overflow on any path; equality with
+    a per-document numpy reference is pytest-locked).
 
     Why not the 128-column aggregation any more (round 7): its generated
     code was a single huge method whose JIT state collapsed in long-lived
@@ -261,20 +261,11 @@ def minhash_signatures(corpus: DataFrame) -> DataFrame:
     old agg exchanged one 129-column row per doc); consumers that read
     signatures more than once add their own materialization point (see
     dedup_minhash_pairs)."""
-    return _sig_from_shingle_arrays(
-        corpus.select("doc_id", _shingles(F.col("text")).alias("sh"))
-    )
-
-
-def _sig_from_shingle_arrays(sh_arrays: DataFrame) -> DataFrame:
-    """(doc_id, sh: array<string>) → (doc_id, sig). Split out so a
-    consumer that ALSO needs the shingle arrays (the LSH verify stage)
-    can compute them once and feed both paths."""
     hs = F.transform(
-        F.col("sh"),
+        _shingles(F.col("text")),
         lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE_PRIME)),
     )
-    base = sh_arrays.select("doc_id", hs.alias("_hs")).filter(
+    base = corpus.select("doc_id", hs.alias("_hs")).filter(
         F.size("_hs") > 0
     )
     return base.select(
@@ -313,45 +304,6 @@ from pyspark.sql import types as _T  # noqa: E402
 _minhash_sig_udf = F.pandas_udf(
     _minhash_sig_batches, _T.ArrayType(_T.LongType())
 )
-
-
-def minhash_signatures_map(corpus: DataFrame) -> DataFrame:
-    """Shuffle-free signature formulation: shingle hashes materialize once
-    into an array column, each permutation is ``array_min(transform(…))``
-    inside whole-stage codegen — ZERO exchange (plan-tested). Byte-identical
-    output to ``minhash_signatures`` (equality-tested).
-
-    Right ONLY for single-consumer pipelines (e.g. signatures persisted to
-    a table); the default LSH path deliberately uses the agg formulation —
-    its Exchange is the reuse point for the band self-join (see
-    minhash_signatures docstring for the measured 2× end-to-end gap).
-
-    Docs with zero shingles (< n words) are filtered out — identical to
-    the explode formulation, where they simply produce no rows."""
-    a_coef, b_coef = _minhash_params()
-    hs = F.transform(
-        _shingles(F.col("text")),
-        lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE_PRIME)),
-    )
-    sig = F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    F.col("_hs"),
-                    lambda h: F.pmod(
-                        h * F.lit(a_coef[i]) + F.lit(b_coef[i]),
-                        F.lit(MERSENNE_PRIME),
-                    ),
-                )
-            )
-            for i in range(MINHASH_K)
-        ]
-    )
-    return (
-        corpus.select("doc_id", hs.alias("_hs"))
-        .filter(F.size("_hs") > 0)
-        .select("doc_id", sig.alias("sig"))
-    )
 
 
 def band_table(sigs: DataFrame) -> DataFrame:

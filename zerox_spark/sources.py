@@ -11,10 +11,9 @@ equivalents:
   HTML/PDF files via Spark's binaryFile source, mapped into the pages
   schema (url = file path, warc_ts = modificationTime). For crawl dumps not
   yet in a table.
-- magic-byte predicate columns: checkIsPdfFile / checkIsCFBFile
-  (file.ts:95-98, 89-92) re-expressed as JVM-side column expressions usable
-  in plan-level routing (``when``/filters), mirroring the reference's
-  extension-based fast-path switch (isExcelFile, file.ts:363-371).
+- ``is_valid_url``: the isValidUrl column predicate. Magic-byte routing
+  (checkIsPdfFile / checkIsCFBFile, file.ts:89-98) happens per document in
+  the extract UDF, by the ``ROUTES`` table in ``extract/core.py``.
 """
 
 from __future__ import annotations
@@ -45,36 +44,6 @@ def read_html_dir(spark: SparkSession, path: str, lang: str = "") -> DataFrame:
         F.lit("").alias("text"),
         F.lit(lang).alias("lang"),
     )
-
-
-# ---------------------------------------------------------------------------
-# magic-byte / routing predicates (all pure column expressions)
-
-
-def is_pdf_payload(col: Column) -> Column:
-    """%PDF magic sniff (checkIsPdfFile, node-zerox/src/utils/file.ts:95-98)."""
-    return F.substring(col, 1, 4) == F.lit(b"%PDF")
-
-
-def is_cfb_payload(col: Column) -> Column:
-    """Legacy-Office CFB magic D0 CF 11 E0 (checkIsCFBFile, file.ts:89-92)."""
-    return F.hex(F.substring(col, 1, 4)) == F.lit("D0CF11E0")
-
-
-def is_sheet_payload(col: Column) -> Column:
-    """Structured-sheet payload magic (the Excel fast-path analog, S6)."""
-    return F.substring(col, 1, 6) == F.lit(b"%SHEET")
-
-
-def is_html_payload(col: Column) -> Column:
-    """Loose HTML sniff: leading '<' after optional BOM/whitespace.
-
-    Works in hex space — ``decode(…,'UTF-8')`` is strict under ANSI mode and
-    would throw on arbitrary binary. The anchored alternation consumes whole
-    byte pairs, so hex-pair alignment is preserved."""
-    head = F.hex(F.substring(col, 1, 32))
-    stripped = F.regexp_replace(head, r"^((20)|(09)|(0A)|(0D)|(EFBBBF))+", "")
-    return stripped.startswith("3C")
 
 
 def is_valid_url(col: Column) -> Column:
