@@ -44,11 +44,11 @@ def main() -> None:
     # --- 2. distributed over a real-PDF corpus -----------------------------
     from zerox_spark.extract.core import ExtractConfig
     from zerox_spark.operators.extract import extract_pages
-    from zerox_spark.synth import synth_pdf_real_pages
+    from zerox_spark.synth import synth_pages
 
     spark = get_spark("local[8]", app_name="zerox-pdf-example")
     spark.sparkContext.setLogLevel("ERROR")
-    corpus = synth_pdf_real_pages(spark, sf_dir)
+    corpus = synth_pages(spark, sf_dir, family="pdf_real")
     ex = extract_pages(
         corpus, ExtractConfig(trust_text=False), num_buckets=16
     ).persist()  # two actions below — don't recompute the extraction

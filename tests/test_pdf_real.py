@@ -31,7 +31,11 @@ from zerox_spark.extract.pdf import (
 )
 from zerox_spark.extract.sniff import sniff_binary
 from zerox_spark.operators.multimodal import sniff_kind
-from zerox_spark.synth import expected_pdf_real_pages, render_pdf_real
+from zerox_spark.synth import (
+    _assemble_pdf,
+    expected_pdf_real_pages,
+    render_pdf_real,
+)
 
 REFERENCE = Path("/root/reference/shared")
 
@@ -884,3 +888,94 @@ class TestCommittedCryptFixtures:
         assert p.markdown == (
             "# Form 45\n\nApplicant 45\n\nRef 315\n\nNote 35\n\n☑"
         )
+
+
+# --------------------------------------------------------------------------
+# BDC operand-starved marked-content balance
+
+
+def _one_page(content: bytes) -> bytes:
+    objs = {
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: b"<< /Type /Pages /Kids [4 0 R] /Count 1 >>",
+        3: (
+            b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica"
+            b" /Encoding /WinAnsiEncoding >>"
+        ),
+        4: (
+            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]"
+            b" /Resources << /Font << /F1 3 0 R >> >> /Contents 5 0 R >>"
+        ),
+        5: (
+            b"<< /Length %d >>\nstream\n" % len(content)
+            + content
+            + b"\nendstream"
+        ),
+    }
+    return _assemble_pdf(objs)
+
+
+def test_bare_bdc_keeps_actualtext_frame_balanced():
+    # the bare (operand-less) BDC must push a frame: its matching EMC then
+    # pops THAT frame, and the outer /ActualText span still covers every
+    # run painted inside it — including the one after the inner EMC
+    c = (
+        b"BT /F1 12 Tf 72 700 Td"
+        b" /Span << /ActualText (GOOD) >> BDC"
+        b" (bad1) Tj BDC (bad2) Tj EMC (bad3) Tj EMC ET"
+    )
+    assert real_pdf_to_pages(_one_page(c))[0][1] == "GOOD"
+
+
+def test_bare_bdc_unmatched_emc_still_contained():
+    # nesting desync the other way: more EMC than frames — must not raise
+    c = b"BT /F1 12 Tf 72 700 Td (keep) Tj EMC EMC ET"
+    assert real_pdf_to_pages(_one_page(c))[0][1] == "keep"
+
+
+# --------------------------------------------------------------------------
+# single-stream XFA without a datasets packet
+
+
+def test_xfa_without_datasets_emits_no_field_lines():
+    ops = b"BT /F1 20 Tf 72 720 Td (XForm 9) Tj ET"
+    comp = zlib.compress(ops)
+    xdp = (
+        b"<xdp:xdp xmlns:xdp='http://ns.adobe.com/xdp/'>"
+        b"<template><subform><field name='f1'>"
+        b"<caption><text>Click here</text></caption>"
+        b"</field></subform></template>"
+        b"<config><present><pdf><fontInfo><typeface>Myriad Pro"
+        b"</typeface></fontInfo></pdf></present></config>"
+        b"</xdp:xdp>"
+    )
+    objs = {
+        1: (
+            b"<< /Type /Catalog /Pages 2 0 R"
+            b" /AcroForm << /Fields [] /XFA 6 0 R >> >>"
+        ),
+        2: b"<< /Type /Pages /Kids [4 0 R] /Count 1 >>",
+        3: (
+            b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica"
+            b" /Encoding /WinAnsiEncoding >>"
+        ),
+        4: (
+            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]"
+            b" /Resources << /Font << /F1 3 0 R >> >>"
+            b" /Contents 5 0 R >>"
+        ),
+        5: (
+            b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(comp)
+            + comp
+            + b"\nendstream"
+        ),
+        6: (
+            b"<< /Length %d >>\nstream\n" % len(xdp) + xdp + b"\nendstream"
+        ),
+    }
+    pages = real_pdf_to_pages(_assemble_pdf(objs))
+    assert pages and "XForm 9" in pages[0][1]
+    md = "\n".join(p[1] for p in pages)
+    # the template caption and config strings must NOT surface as values
+    assert "Click here" not in md
+    assert "Myriad" not in md

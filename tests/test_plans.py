@@ -238,7 +238,7 @@ def test_pdf_crypt_plan_single_exchange(spark):
     Exchange (the synth repartition) and — since the round-7 fusion — ONE
     MapInPandas doing payload build + extract together (the chained
     two-UDF shape moved every payload across the JVM↔Python boundary
-    three times; operators/extract.extract_synthetic), no join — all
+    three times; operators/extract.extract_pages ``render``), no join — all
     crypto cost stays in-UDF and budget-bounded, so the plan survives a
     100x scale-up unchanged."""
     from zerox_spark.queries import q_extract_pdf_crypt

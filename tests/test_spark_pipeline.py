@@ -6,13 +6,20 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import DataFrame, Row, functions as F
 
 from tests.conftest import SF_SMOKE
 
 from zerox_spark.pipeline import ExtractionPipeline, PipelineConfig
 from zerox_spark.sinks import ParquetSnapshotSink
-from zerox_spark.synth import doc_url, expected_markdown_pages, synth_pages
+from zerox_spark.synth import (
+    SYNTH_FAMILIES,
+    doc_url,
+    expected_markdown_pages,
+    pages_frames,
+    synth_docs,
+    synth_pages,
+)
 
 
 def expected_all(sf_dir: str) -> dict[tuple[str, int], str]:
@@ -143,6 +150,75 @@ def test_error_rows_contained_not_fatal(spark):
     assert got["https://x/2"].markdown == "fine text"
 
 
+@pytest.fixture(scope="module")
+def fused_and_chained(spark, tmp_path_factory):
+    """Rows (elapsed_ms dropped, url bucket added) of both shapes, keyed by
+    family, over SF_SMOKE's doc_ids below 24 × #families: family i renders
+    the block doc_id // 24 == i, and 24 consecutive ids hit every
+    doc_id-modulo variant of every family. Fused is ONE extract_pages
+    (render=) whose row_fn dispatches on the block; chained is ONE
+    extract_pages over the union of each family's synth_pages block. The
+    test's time is the per-task Python runner cost, so fewer runners."""
+    from functools import reduce
+
+    from zerox_spark.extract.core import ExtractConfig
+    from zerox_spark.operators.extract import extract_pages
+
+    fams = sorted(SYNTH_FAMILIES)
+    sf = str(tmp_path_factory.mktemp("docs_slice"))
+    duckdb.sql(
+        f"COPY (SELECT * FROM '{SF_SMOKE}/documents.parquet'"
+        f" WHERE doc_id < {24 * len(fams)}) TO '{sf}/documents.parquet'"
+    )
+
+    def row_fn(doc_id, text, lang, source):
+        return SYNTH_FAMILIES[fams[doc_id // 24]](doc_id, text, lang, source)
+
+    block = F.floor(
+        F.regexp_extract("url", r"/(\d+)$", 1).cast("int") / 24
+    ).cast("int")
+    # not the defaults, so a config the fused path dropped would show
+    cfg = ExtractConfig(
+        maintain_format=True, trust_text=False, chunk_chars=300
+    )
+    n = 16
+    fused = extract_pages(
+        synth_docs(spark, sf, 1), cfg, n,
+        render=lambda it: pages_frames(it, row_fn),
+    )
+    pages = reduce(DataFrame.unionByName, [
+        synth_pages(spark, sf, 1, family=f).filter(block == i)
+        for i, f in enumerate(fams)
+    ])
+    chained = extract_pages(pages.coalesce(1), cfg, n)
+    bucket = F.pmod(F.xxhash64("url"), F.lit(n)).alias("bucket")
+
+    def by_family(df):
+        out: dict[str, list] = {}
+        for r in df.drop("elapsed_ms").select(
+            "*", bucket, block.alias("_block")
+        ).collect():
+            row = r.asDict()
+            out.setdefault(fams[row.pop("_block")], []).append(row)
+        for rows in out.values():
+            rows.sort(key=lambda r: (r["url"], r["page_no"]))
+        return out
+
+    return by_family(fused), by_family(chained)
+
+
+@pytest.mark.parametrize("family", sorted(SYNTH_FAMILIES))
+def test_fused_extract_equals_chained(fused_and_chained, family):
+    """extract_pages(render=...) over the documents ≡ extract_pages over
+    that family's synth_pages corpus, partition_id included, and every
+    partition_id is the url's bucket."""
+    fused, chained = fused_and_chained
+    got = fused[family]
+    assert got == chained[family]
+    assert len({r["url"] for r in got}) == 24
+    assert all(r["partition_id"] == r["bucket"] for r in got)
+
+
 def test_simhash_finds_injected_near_dups(spark):
     from zerox_spark.operators.dedup import (
         DUP_NEAR_EQ, DUP_NEAR_MOD, DUP_NEAR_OFFSET,
@@ -167,6 +243,47 @@ def test_simhash_finds_injected_near_dups(spark):
         for r in docs.filter(F.col("doc_id") % 10 == 4).collect()
     }
     assert exact <= found
+
+
+def test_simhash_udf_matches_agg_formulation(spark):
+    from zerox_spark.operators.dedup import (
+        _bit_lit,
+        simhash,
+        with_injected_duplicates,
+    )
+
+    corpus = with_injected_duplicates(
+        spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    ).limit(150).unionByName(
+        # null text has no features and drops out; empty text keeps its
+        # one "" feature — both as in the explode formulation
+        spark.createDataFrame(
+            [(-1, None), (-2, "")], "doc_id long, text string"
+        )
+    )
+    # the historical aggregation formulation, inline as the reference
+    sh = corpus.select(
+        "doc_id",
+        F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("w"),
+    ).select("doc_id", F.xxhash64(F.col("w")).alias("h"))
+    bit_sums = sh.groupBy("doc_id").agg(
+        *[
+            F.sum(
+                F.when(F.col("h").bitwiseAND(_bit_lit(i)) != 0, 1).otherwise(-1)
+            ).alias(f"b{i}")
+            for i in range(64)
+        ]
+    )
+    acc = F.when(F.col("b0") > 0, _bit_lit(0)).otherwise(F.lit(0).cast("long"))
+    for i in range(1, 64):
+        acc = acc.bitwiseOR(
+            F.when(F.col(f"b{i}") > 0, _bit_lit(i)).otherwise(
+                F.lit(0).cast("long")
+            )
+        )
+    ref = {r.doc_id: r.s for r in bit_sums.select("doc_id", acc.alias("s")).collect()}
+    got = {r.doc_id: r.simhash for r in simhash(corpus).collect()}
+    assert got == ref and len(got) == 151 and -1 not in got
 
 
 def test_ann_lsh_recall_vs_exact(spark):

@@ -99,9 +99,11 @@ def main(argv: list[str] | None = None) -> int:
         return _run_streaming(spark, args, named_extractor)
 
     if args.synth_sf_dir:
-        from zerox_spark.synth import SYNTH_FAMILIES
+        from zerox_spark.synth import synth_pages
 
-        pages = SYNTH_FAMILIES[args.synth_family](spark, args.synth_sf_dir)
+        pages = synth_pages(
+            spark, args.synth_sf_dir, family=args.synth_family
+        )
     elif args.input_warc:
         from zerox_spark.warc import read_warc
 

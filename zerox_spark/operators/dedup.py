@@ -519,8 +519,12 @@ def simhash(corpus: DataFrame) -> DataFrame:
         F.array_distinct(F.split(F.col("text"), " ")),
         lambda w: F.xxhash64(w),
     )
-    return corpus.select("doc_id", hs.alias("_hs")).select(
-        "doc_id", _simhash_udf(F.col("_hs")).alias("simhash")
+    # null text has no features: drop the doc (as minhash_signatures does)
+    # rather than hand the UDF a null array
+    return (
+        corpus.select("doc_id", hs.alias("_hs"))
+        .filter(F.size("_hs") > 0)
+        .select("doc_id", _simhash_udf(F.col("_hs")).alias("simhash"))
     )
 
 

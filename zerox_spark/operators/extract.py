@@ -17,10 +17,12 @@ Design notes (scale-first):
   never dies.
 - Each output row carries ``partition_id`` — the **logical url bucket**
   (operators/repartition.py partition_bucket), the shared id space of the
-  lineage table, the resume anti-join and the sink's overwrite granularity —
-  plus a first-row-of-batch ``elapsed_ms`` so lineage (operators/lineage.py)
-  can aggregate per-bucket metrics without a second timing pass. (Physical
-  task ids are useless across runs; stable url buckets survive restarts.)
+  lineage table, the resume anti-join and the sink's overwrite granularity,
+  projected JVM-side over the output url after the UDF (the bucket never
+  crosses into Python) — plus a batch-amortized ``elapsed_ms`` so lineage
+  (operators/lineage.py) can aggregate per-bucket metrics without a second
+  timing pass. (Physical task ids are useless across runs; stable url
+  buckets survive restarts.)
 """
 
 from __future__ import annotations
@@ -51,6 +53,11 @@ RAW_EXTRACTED_SCHEMA = T.StructType(
 )
 
 _COLS = [f.name for f in RAW_EXTRACTED_SCHEMA.fields]
+# what the UDF yields: everything but partition_id, projected JVM-side
+_UDF_SCHEMA = T.StructType(
+    [f for f in RAW_EXTRACTED_SCHEMA.fields if f.name != "partition_id"]
+)
+_UDF_COLS = _UDF_SCHEMA.fieldNames()
 
 
 def _extract_iter(
@@ -69,11 +76,9 @@ def _extract_iter(
         c_status: list = []
         c_error: list = []
         c_spans: list = []
-        c_pid: list = []
         c_ts: list = []
-        for url, html, text, pid, ts in zip(
-            pdf["url"], pdf["html"], pdf["text"], pdf["_bucket"],
-            pdf["warc_ts"],
+        for url, html, text, ts in zip(
+            pdf["url"], pdf["html"], pdf["text"], pdf["warc_ts"]
         ):
             payload = bytes(html) if html is not None else None
             pages = extract_document(payload, text, config)
@@ -81,7 +86,6 @@ def _extract_iter(
                 # zero-shuffle inline fold: all pages of this document are
                 # right here in this task (see operators/fold.py rationale)
                 pages = refold_page_results(pages)
-            pid = int(pid)
             for page in pages:
                 c_url.append(url)
                 c_no.append(page.page_no)
@@ -95,7 +99,6 @@ def _extract_iter(
                         for k, s, e, sc in page.spans
                     ]
                 )
-                c_pid.append(pid)
                 c_ts.append(ts)
         n_rows = len(c_url)
         elapsed_us = int((time.monotonic() - t0) * 1_000_000)
@@ -116,11 +119,10 @@ def _extract_iter(
                 "status": c_status,
                 "error": c_error,
                 "spans": c_spans,
-                "partition_id": c_pid,
                 "elapsed_ms": c_elapsed,
                 "warc_ts": c_ts,
             },
-            columns=_COLS,
+            columns=_UDF_COLS,
         )
 
 
@@ -128,6 +130,7 @@ def extract_pages(
     pages: DataFrame,
     config: ExtractConfig | None = None,
     num_buckets: int = 64,
+    render=None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → raw extracted rows.
 
@@ -139,104 +142,39 @@ def extract_pages(
     Python unless a prior operator used it) — check with ``.explain``: the
     parquet ReadSchema excludes it. ``warc_ts`` IS carried through as the
     provenance/watermark carrier column (see RAW_EXTRACTED_SCHEMA).
+
+    ``render`` fuses corpus synthesis into the same UDF: a generator
+    ``render(batches) → pages frames`` (e.g. ``synth.pages_frames`` bound
+    to a family's row_fn) that turns the frames of ``pages`` — then any
+    input, such as a documents scan — into pages frames inside the worker.
+    The chained ``extract_pages(synth_pages(...))`` shape moves every
+    synthesized payload across the JVM↔Python Arrow boundary three times
+    (out of the synth worker, into the extract worker, results out again);
+    fused it crosses once — you control how many columns cross, and also
+    how many TIMES they cross. Measured at sf0.1/local[32]: pdf_crypt
+    2.48 s → 1.31 s. Same rows as the chained shape: the same renderer,
+    the same ``_extract_iter`` loop, and ``partition_id`` is projected
+    from the output url in both.
     """
     from zerox_spark.operators.repartition import partition_bucket
 
     config = config or ExtractConfig()
-    needed = pages.select(
-        "url",
-        "html",
-        "text",
-        "warc_ts",
-        partition_bucket(num_buckets).alias("_bucket"),
+    if render is None:
+        pages = pages.select("url", "html", "text", "warc_ts")
+    out = pages.mapInPandas(
+        lambda it: _extract_iter(render(it) if render else it, config),
+        schema=_UDF_SCHEMA,
     )
-    return needed.mapInPandas(
-        lambda it: _extract_iter(it, config), schema=RAW_EXTRACTED_SCHEMA
+    # the bucket is a pure function of url, which passes through the UDF
+    # unchanged: computing it here keeps it JVM-side (no extra column
+    # crosses into Python) and needs no url before the UDF
+    return out.select(
+        *[
+            partition_bucket(num_buckets).alias(c) if c == "partition_id"
+            else c
+            for c in _COLS
+        ]
     )
-
-
-def extract_synthetic(
-    docs: DataFrame,
-    row_fn,
-    config: ExtractConfig | None = None,
-    num_buckets: int = 64,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """FUSED corpus-synthesis + extraction for the sandbox query paths:
-    documents(doc_id, text, lang, source) → raw extracted rows in ONE
-    mapInPandas, instead of the chained synth_pages → extract_pages pair.
-
-    The chained shape moves every synthesized payload across the
-    JVM↔Python Arrow boundary three times (out of the synth worker, into
-    the extract worker, results out again); fusing makes it once — guide
-    §4.1's "you control how many columns cross" applied to how many TIMES
-    they cross. Measured at sf0.1/local[32]: pdf_crypt 2.48 s → 1.31 s.
-
-    Byte-identical to the chained shape by construction: the page rows are
-    built by the same ``row_fn``/``doc_url``/``doc_ts`` calls synth uses,
-    and the frames feed the same ``_extract_iter`` loop ``extract_pages``
-    runs — only the intermediate Arrow round-trip is gone. url and the
-    lineage bucket are computed JVM-side (the same xxhash64 expression as
-    ``partition_bucket``) so bucket ids match the unfused path exactly.
-
-    Production jobs (pipeline.py, job.py) read REAL pages tables and keep
-    using extract_pages — this operator exists for inputs that are
-    themselves synthesized document-by-document."""
-    from zerox_spark.operators.repartition import partition_bucket
-
-    config = config or ExtractConfig()
-    spark = docs.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    d = F.col("doc_id")
-    url = F.concat(
-        F.lit("https://site"), (d % 97).cast("string"), F.lit(".example/"),
-        F.col("source"), F.lit("/"), d.cast("string"),
-    )
-    prepared = (
-        docs.select("doc_id", "text", "lang", "source")
-        .repartition(num_partitions, "doc_id")
-        .select(
-            "doc_id", "text", "lang", "source",
-            url.alias("url"),
-            partition_bucket(num_buckets).alias("_bucket"),
-        )
-    )
-
-    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from zerox_spark.synth import doc_ts
-
-        def pages_frames() -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                c_url: list = []
-                c_ts: list = []
-                c_html: list = []
-                c_text: list = []
-                c_bucket: list = []
-                for doc_id, text, lang, source, u, bkt in zip(
-                    pdf["doc_id"], pdf["text"], pdf["lang"], pdf["source"],
-                    pdf["url"], pdf["_bucket"],
-                ):
-                    doc_id = int(doc_id)
-                    payload, trusted = row_fn(doc_id, text, lang, source)
-                    c_url.append(u)
-                    c_ts.append(doc_ts(doc_id).replace(tzinfo=None))
-                    c_html.append(payload)
-                    c_text.append(trusted)
-                    c_bucket.append(bkt)
-                yield pd.DataFrame(
-                    {
-                        "url": c_url,
-                        "warc_ts": c_ts,
-                        "html": c_html,
-                        "text": c_text,
-                        "_bucket": c_bucket,
-                    }
-                )
-
-        yield from _extract_iter(pages_frames(), config)
-
-    return prepared.mapInPandas(fused, schema=RAW_EXTRACTED_SCHEMA)
 
 
 def pages_join_expr(delim: str):

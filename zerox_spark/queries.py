@@ -37,7 +37,12 @@ from zerox_spark.operators.textstats import (
     fingerprints,
     token_counts,
 )
-from zerox_spark.synth import synth_pages
+from zerox_spark.synth import (
+    SYNTH_FAMILIES,
+    pages_frames,
+    synth_docs,
+    synth_pages,
+)
 
 NUM_BUCKETS = 64
 ANN_QUERY_MOD = 25
@@ -87,12 +92,22 @@ def _spread(df: DataFrame, *keys: str, target: int | None = None) -> DataFrame:
     return df.repartition(target, F.xxhash64(*[F.col(k) for k in keys]))
 
 
-def _extracted(spark: SparkSession, sf_dir: str, **cfg) -> DataFrame:
-    from zerox_spark.operators.extract import extract_synthetic
-    from zerox_spark.synth import _row_taxonomy
-
-    return extract_synthetic(
-        _docs(spark, sf_dir), _row_taxonomy, ExtractConfig(**cfg), NUM_BUCKETS
+def _extracted(
+    spark: SparkSession,
+    sf_dir: str,
+    family: str = "taxonomy",
+    docs: DataFrame | None = None,
+    **cfg,
+) -> DataFrame:
+    """One synth family's corpus, synthesized and extracted in ONE
+    MapInPandas (extract_pages ``render``), over every document or over
+    the ``docs`` slice of synth_docs a query passes."""
+    row_fn = SYNTH_FAMILIES[family]
+    return extract_pages(
+        synth_docs(spark, sf_dir) if docs is None else docs,
+        ExtractConfig(**cfg),
+        NUM_BUCKETS,
+        render=lambda it: pages_frames(it, row_fn),
     )
 
 
@@ -141,28 +156,18 @@ def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_page_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C8/A8: select_pages=[2,3] over ≥3-page PDF docs — page pruning +
     renumbering semantics (py_zerox/pyzerox/core/zerox.py:182-194)."""
-    from zerox_spark.operators.extract import extract_synthetic
-    from zerox_spark.synth import _row_taxonomy
-
     d = F.col("doc_id")
-    multi = _docs(spark, sf_dir).filter(
+    multi = synth_docs(spark, sf_dir).filter(
         (d % 5 == 0) & ((d % 3 == 1) | (d % 3 == 2))
     )
-    ex = extract_synthetic(
-        multi, _row_taxonomy, ExtractConfig(select_pages=[2, 3]), NUM_BUCKETS
-    )
+    ex = _extracted(spark, sf_dir, docs=multi, select_pages=[2, 3])
     return ex.select("url", "page_no", "markdown")
 
 
 def q_extract_ooxml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real OOXML containers (stdlib zip+XML): xlsx sheet-per-page + docx
     heading/list/table/page-break extraction (extract/ooxml.py)."""
-    from zerox_spark.operators.extract import extract_synthetic
-    from zerox_spark.synth import _row_ooxml
-
-    ex = extract_synthetic(
-        _docs(spark, sf_dir), _row_ooxml, ExtractConfig(trust_text=False), NUM_BUCKETS
-    )
+    ex = _extracted(spark, sf_dir, "ooxml", trust_text=False)
     return ex.select("url", "page_no", "markdown")
 
 
@@ -170,12 +175,7 @@ def q_extract_legacy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real legacy-Office CFB containers (stdlib struct): .xls BIFF8
     sheet-per-page + .doc Word97 piece-table pages (extract/cfb.py,
     extract/legacy_office.py)."""
-    from zerox_spark.operators.extract import extract_synthetic
-    from zerox_spark.synth import _row_legacy
-
-    ex = extract_synthetic(
-        _docs(spark, sf_dir), _row_legacy, ExtractConfig(trust_text=False), NUM_BUCKETS
-    )
+    ex = _extracted(spark, sf_dir, "legacy", trust_text=False)
     return ex.select("url", "page_no", "markdown")
 
 
@@ -183,12 +183,7 @@ def q_extract_pptx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real presentation containers, slide = page: pptx (zip+XML, even
     doc_ids) and legacy .ppt ([MS-PPT] records in CFB, odd doc_ids) —
     extract/ooxml.py pptx path + extract/legacy_office.py ppt path."""
-    from zerox_spark.operators.extract import extract_synthetic
-    from zerox_spark.synth import _row_pres
-
-    ex = extract_synthetic(
-        _docs(spark, sf_dir), _row_pres, ExtractConfig(trust_text=False), NUM_BUCKETS
-    )
+    ex = _extracted(spark, sf_dir, "pres", trust_text=False)
     return ex.select("url", "page_no", "markdown")
 
 
@@ -196,12 +191,7 @@ def q_extract_odf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real OpenDocument containers: ods sheet-per-page (even doc_ids,
     byte-identical to the xlsx/xls containers of the same workbook) + odt
     heading/list/table extraction (odd) — extract/ooxml.py ODF branch."""
-    from zerox_spark.operators.extract import extract_synthetic
-    from zerox_spark.synth import _row_odf
-
-    ex = extract_synthetic(
-        _docs(spark, sf_dir), _row_odf, ExtractConfig(trust_text=False), NUM_BUCKETS
-    )
+    ex = _extracted(spark, sf_dir, "odf", trust_text=False)
     return ex.select("url", "page_no", "markdown")
 
 
@@ -214,24 +204,14 @@ def q_extract_misc(spark: SparkSession, sf_dir: str) -> DataFrame:
     RC4/CryptoAPI .xls — the 'protected workbook' crawl shape the
     reference opens implicitly via libreoffice, file.ts:129-150;
     extract/office_crypto.py)."""
-    from zerox_spark.operators.extract import extract_synthetic
-    from zerox_spark.synth import _row_misc
-
-    ex = extract_synthetic(
-        _docs(spark, sf_dir), _row_misc, ExtractConfig(trust_text=False), NUM_BUCKETS
-    )
+    ex = _extracted(spark, sf_dir, "misc", trust_text=False)
     return ex.select("url", "page_no", "markdown")
 
 
 def q_extract_rtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RTF group/control-word extraction: destinations stripped, \\page
     page split, paragraph blocks (extract/rtf.py)."""
-    from zerox_spark.operators.extract import extract_synthetic
-    from zerox_spark.synth import _row_rtf
-
-    ex = extract_synthetic(
-        _docs(spark, sf_dir), _row_rtf, ExtractConfig(trust_text=False), NUM_BUCKETS
-    )
+    ex = _extracted(spark, sf_dir, "rtf", trust_text=False)
     return ex.select("url", "page_no", "markdown")
 
 
@@ -239,12 +219,7 @@ def q_extract_delimited(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-sniffed csv/tsv structured fast path: one first-row-<th>
     table page per payload (csv carries the sheet_cells data grid; tsv
     carries a quoted field pinning csv-module escaping)."""
-    from zerox_spark.operators.extract import extract_synthetic
-    from zerox_spark.synth import _row_delimited
-
-    ex = extract_synthetic(
-        _docs(spark, sf_dir), _row_delimited, ExtractConfig(trust_text=False), NUM_BUCKETS
-    )
+    ex = _extracted(spark, sf_dir, "delimited", trust_text=False)
     return ex.select("url", "page_no", "markdown")
 
 
@@ -253,12 +228,7 @@ def q_extract_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically-corrupt CFB payload → exactly one ERROR row with
     empty markdown and content_length 0; valid docs extract normally. The
     oracle states the ERROR set and per-status counts in closed form."""
-    from zerox_spark.operators.extract import extract_synthetic
-    from zerox_spark.synth import _row_poison
-
-    ex = extract_synthetic(
-        _docs(spark, sf_dir), _row_poison, ExtractConfig(), NUM_BUCKETS
-    )
+    ex = _extracted(spark, sf_dir, "poison")
     return ex.select("url", "page_no", "status", "content_length")
 
 
@@ -272,12 +242,7 @@ def q_extract_pdf_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     layer instead of rasterize+OCR (node-zerox/src/utils/file.ts:153-207).
     Figure placeholders follow the reference dialect's mandate
     (shared/systemPrompt.txt; goldens shared/outputs/*.md use ![...](#))."""
-    from zerox_spark.operators.extract import extract_synthetic
-    from zerox_spark.synth import _row_pdf_real
-
-    ex = extract_synthetic(
-        _docs(spark, sf_dir), _row_pdf_real, ExtractConfig(trust_text=False), NUM_BUCKETS
-    )
+    ex = _extracted(spark, sf_dir, "pdf_real", trust_text=False)
     return ex.select("url", "page_no", "markdown")
 
 
@@ -293,12 +258,7 @@ def q_extract_pdf_crypt(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard SIDs; TrueType post-2.0 standard Macintosh names — the
     pdfTeX-era European-document shape, round 6), and an XFA-only
     LiveCycle form whose values live in the ``datasets`` packet."""
-    from zerox_spark.operators.extract import extract_synthetic
-    from zerox_spark.synth import _row_pdf_crypt
-
-    ex = extract_synthetic(
-        _docs(spark, sf_dir), _row_pdf_crypt, ExtractConfig(trust_text=False), NUM_BUCKETS
-    )
+    ex = _extracted(spark, sf_dir, "pdf_crypt", trust_text=False)
     return ex.select("url", "page_no", "markdown")
 
 
@@ -311,20 +271,15 @@ def q_extract_binary_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (offset-based ftyp brands incl. heic — the C2
     convertHeicToJpeg analog), folded in here so the driver checks both
     in one registry slot (r4 driver/registry-drift fix)."""
-    from zerox_spark.operators.extract import extract_synthetic
-    from zerox_spark.synth import _row_binary, synth_binary_pages
-
-    ex = extract_synthetic(
-        _docs(spark, sf_dir), _row_binary, ExtractConfig(), NUM_BUCKETS
-    ).select(
+    ex = _extracted(spark, sf_dir, "binary").select(
         "url",
         "status",
         F.regexp_extract("error", r"\((\w+)", 1).alias("kind"),
         "content_length",
     )
-    sniff = media_metadata(synth_binary_pages(spark, sf_dir)).select(
-        "url", "n_bytes", "media_kind"
-    )
+    sniff = media_metadata(
+        synth_pages(spark, sf_dir, family="binary")
+    ).select("url", "n_bytes", "media_kind")
     return ex.join(sniff, "url")
 
 
@@ -340,6 +295,17 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decontaminate(docs, bench)
 
 
+def _doc_url_col(scheme: str = "https", port: str = ""):
+    """synth.doc_url as a JVM column over (doc_id, source), optionally
+    spelled with another scheme or an explicit port."""
+    d = F.col("doc_id")
+    return F.concat(
+        F.lit(f"{scheme}://site"), (d % 97).cast("string"),
+        F.lit(f".example{port}/"), F.col("source"), F.lit("/"),
+        d.cast("string"),
+    )
+
+
 def _noisy_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministically-decorated spellings of each doc's url: tracking
     params + fragment + a '?' INSIDE a param value (doc_id%4==0), explicit
@@ -347,18 +313,9 @@ def _noisy_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     under http (doc_id%8==5), trailing slash (==2), clean (==3)."""
     docs = _docs(spark, sf_dir).select("doc_id", "source")
     d = F.col("doc_id")
-    base = F.concat(
-        F.lit("https://site"), (d % 97).cast("string"), F.lit(".example/"),
-        F.col("source"), F.lit("/"), d.cast("string"),
-    )
-    ported = F.concat(
-        F.lit("https://site"), (d % 97).cast("string"), F.lit(".example:443/"),
-        F.col("source"), F.lit("/"), d.cast("string"),
-    )
-    http_ported = F.concat(
-        F.lit("http://site"), (d % 97).cast("string"), F.lit(".example:443/"),
-        F.col("source"), F.lit("/"), d.cast("string"),
-    )
+    base = _doc_url_col()
+    ported = _doc_url_col(port=":443")
+    http_ported = _doc_url_col("http", ":443")
     noisy = (
         F.when(d % 4 == 0, F.concat(
             base, F.lit("?utm_source=feed&b=2&a="), (d % 7).cast("string"),
@@ -392,15 +349,7 @@ def q_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     noisy = _noisy_urls(spark, sf_dir)
     docs = _docs(spark, sf_dir).select("doc_id", "source")
-    d = F.col("doc_id")
-    clean = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("https://site"), (d % 97).cast("string"),
-            F.lit(".example/"), F.col("source"), F.lit("/"),
-            d.cast("string"),
-        ).alias("url"),
-    )
+    clean = docs.select("doc_id", _doc_url_col().alias("url"))
     return domain_stats(noisy.unionByName(clean))
 
 
@@ -910,7 +859,6 @@ def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstructs via _PAYLOAD_CTE (the frame bytes themselves are the
     documented deterministic stub and stay out of the compared columns)."""
     from zerox_spark.operators.multimodal import sample_frames
-    from zerox_spark.synth import synth_pages
 
     return sample_frames(synth_pages(spark, sf_dir)).select(
         "url", "frame_no", "ts_ms"
@@ -952,7 +900,6 @@ def q_media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined to the frame-sampling fan-out, both value-checked against the
     byte-level payload reconstruction (_PAYLOAD_CTE)."""
     from zerox_spark.operators.multimodal import sample_frames
-    from zerox_spark.synth import synth_pages
 
     pages = synth_pages(spark, sf_dir)
     meta = media_metadata(pages).select("url", "n_bytes", "media_kind")

@@ -35,6 +35,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from zerox_spark.schema import PAGES_SCHEMA
+
 # ---------------------------------------------------------------------------
 # taxonomy constants (shared with queries.py oracles — change both or neither)
 FAST_MOD, FAST_EQ = 10, 7
@@ -244,23 +246,6 @@ def expected_markdown_pages(
         blocks.append(f"## Section {doc_id}")
         blocks.append(" ".join(text.split(" ")[:SECTION_WORDS]))
     return [(1, "\n\n".join(blocks))]
-
-
-# ---------------------------------------------------------------------------
-# Spark-side synthesis (distributed: mapInPandas over the documents scan)
-
-
-def synth_pages(
-    spark: SparkSession, sf_dir: str, num_partitions: int | None = None
-) -> DataFrame:
-    """documents.parquet → deterministic pages DataFrame (input_hint shape).
-
-    The sandbox documents file is a single small parquet → a single scan
-    split, which would serialize the render; repartition by doc_id first so
-    synthesis is distributed. At real scale this whole stage is replaced by
-    the Iceberg table scan itself (many splits for free).
-    """
-    return _pages_from_docs(spark, sf_dir, _row_taxonomy, num_partitions)
 
 
 # ---------------------------------------------------------------------------
@@ -1970,18 +1955,6 @@ def _row_pdf_crypt(doc_id: int, text: str, lang: str, source: str):
     return render_pdf_crypt(doc_id, text), ""
 
 
-def synth_pdf_crypt_pages(
-    spark: SparkSession, sf_dir: str, num_partitions: int | None = None
-) -> DataFrame:
-    """documents.parquet → pages whose payloads are encrypted (RC4/AESV2/
-    AESV3, empty passwords), filled-AcroForm, predefined-CJK-CMap,
-    ToUnicode-less accented-subset-font (Type1C/CFF standard SIDs and
-    TrueType post-2.0 Macintosh names — round 6), and XFA-only LiveCycle
-    form %PDF-1.4 files — the round-5/6 real-world PDF gaps, end to
-    end (doc_id % 8 variants)."""
-    return _pages_from_docs(spark, sf_dir, _row_pdf_crypt, num_partitions)
-
-
 def _row_taxonomy(doc_id: int, text: str, lang: str, source: str):
     return render_payload(doc_id, text, lang, source), (
         text if is_fast(doc_id) else ""
@@ -2197,157 +2170,84 @@ def _row_binary(doc_id: int, text: str, lang: str, source: str):
     return b"\x01\x02" + filler, ""
 
 
-def _pages_from_docs(
-    spark: SparkSession,
-    sf_dir: str,
-    row_fn,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Shared scaffold for every synthesized pages table: documents scan →
-    repartition → mapInPandas building (url, warc_ts, html, text, lang)
-    rows, with ``row_fn(doc_id, text, lang, source) → (payload, trusted
-    text)`` supplying the variant-specific payload."""
-    from zerox_spark.schema import PAGES_SCHEMA
+# ---------------------------------------------------------------------------
+# Spark-side synthesis (distributed: mapInPandas over the documents scan)
 
+# every synthesized corpus by name → its ``row_fn(doc_id, text, lang,
+# source) → (payload, trusted text)``; the keys are the job CLI's
+# --synth-family choices
+SYNTH_FAMILIES = {
+    # the default mixed crawl (html / pseudo-PDF / sheet / fast path)
+    "taxonomy": _row_taxonomy,
+    # real OOXML containers: xlsx (even doc_ids), docx (odd)
+    "ooxml": _row_ooxml,
+    # legacy-Office CFB containers: .xls (even), .doc incl. encrypted (odd)
+    "legacy": _row_legacy,
+    # odp, standalone XML, WordPerfect .wpd, encrypted Office (doc_id % 4)
+    "misc": _row_misc,
+    # RTF group/control-word documents
+    "rtf": _row_rtf,
+    # real OpenDocument containers: ods (even), odt (odd)
+    "odf": _row_odf,
+    # delimited text: csv (even), quoted tsv (odd)
+    "delimited": _row_delimited,
+    # presentations: pptx (even), legacy .ppt incl. encrypted (odd)
+    "pres": _row_pres,
+    # genuine born-digital %PDF-1.4 files across doc_id % 6 font variants
+    "pdf_real": _row_pdf_real,
+    # encrypted/AcroForm/CJK/accented-subset-font/XFA PDFs (doc_id % 8)
+    "pdf_crypt": _row_pdf_crypt,
+    # png/jpeg/gif/heic magics + magic-less high-entropy bytes (binary guard)
+    "binary": _row_binary,
+    # taxonomy, but every third payload is a corrupt CFB header (containment)
+    "poison": _row_poison,
+}
+
+
+def pages_frames(batches, row_fn):
+    """documents frames (doc_id, text, lang, source) → pages frames
+    (url, warc_ts, html, text, lang), one page row per document, with
+    ``row_fn`` supplying the family-specific payload and trusted text."""
+    for pdf in batches:
+        cols: dict[str, list] = {c: [] for c in PAGES_SCHEMA.fieldNames()}
+        for doc_id, text, lang, source in zip(
+            pdf["doc_id"], pdf["text"], pdf["lang"], pdf["source"]
+        ):
+            doc_id = int(doc_id)
+            payload, trusted = row_fn(doc_id, text, lang, source)
+            cols["url"].append(doc_url(doc_id, source))
+            cols["warc_ts"].append(doc_ts(doc_id).replace(tzinfo=None))
+            cols["html"].append(payload)
+            cols["text"].append(trusted)
+            cols["lang"].append(lang)
+        yield pd.DataFrame(cols)
+
+
+def synth_docs(
+    spark: SparkSession, sf_dir: str, num_partitions: int | None = None
+) -> DataFrame:
+    """The documents scan, repartitioned by doc_id. The sandbox documents
+    file is a single small parquet → a single scan split, which would
+    serialize the render; the repartition distributes synthesis. At real
+    scale this whole stage is replaced by the Iceberg table scan itself
+    (many splits for free)."""
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-
-    def batch(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text, lang, source in zip(
-                pdf["doc_id"], pdf["text"], pdf["lang"], pdf["source"]
-            ):
-                doc_id = int(doc_id)
-                payload, trusted = row_fn(doc_id, text, lang, source)
-                rows.append(
-                    {
-                        "url": doc_url(doc_id, source),
-                        "warc_ts": doc_ts(doc_id).replace(tzinfo=None),
-                        "html": payload,
-                        "text": trusted,
-                        "lang": lang,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text", "lang", "source"
     )
-    return docs.repartition(num_partitions, "doc_id").mapInPandas(
-        batch, schema=PAGES_SCHEMA
+    return docs.repartition(num_partitions, "doc_id")
+
+
+def synth_pages(
+    spark: SparkSession,
+    sf_dir: str,
+    num_partitions: int | None = None,
+    family: str = "taxonomy",
+) -> DataFrame:
+    """documents.parquet → the deterministic pages DataFrame (input_hint
+    shape) of one ``SYNTH_FAMILIES`` corpus."""
+    row_fn = SYNTH_FAMILIES[family]
+    return synth_docs(spark, sf_dir, num_partitions).mapInPandas(
+        lambda it: pages_frames(it, row_fn), schema=PAGES_SCHEMA
     )
-
-
-def synth_ooxml_pages(
-    spark: SparkSession, sf_dir: str, num_partitions: int | None = None
-) -> DataFrame:
-    """documents.parquet → pages whose payloads are REAL OOXML containers
-    (xlsx for even doc_ids, docx for odd) — exercises the zip+XML
-    extraction path (extract/ooxml.py) end to end."""
-    return _pages_from_docs(spark, sf_dir, _row_ooxml, num_partitions)
-
-
-def synth_legacy_pages(
-    spark: SparkSession, sf_dir: str, num_partitions: int | None = None
-) -> DataFrame:
-    """documents.parquet → pages whose payloads are REAL legacy-Office CFB
-    containers (.xls for even doc_ids, .doc for odd) — exercises the
-    CFB/BIFF8/Word97 extraction path end to end."""
-    return _pages_from_docs(spark, sf_dir, _row_legacy, num_partitions)
-
-
-def synth_misc_pages(
-    spark: SparkSession, sf_dir: str, num_partitions: int | None = None
-) -> DataFrame:
-    """documents.parquet → pages whose payloads are odp presentations
-    (doc_id%4==0), standalone XML (==1), WordPerfect .wpd (==2) — the last
-    reference input families (README.md:498,500,509) — and ENCRYPTED
-    Office containers under the default password (==3: agile/standard
-    OOXML + RC4/CryptoAPI .xls, extract/office_crypto.py)."""
-    return _pages_from_docs(spark, sf_dir, _row_misc, num_partitions)
-
-
-def synth_rtf_pages(
-    spark: SparkSession, sf_dir: str, num_partitions: int | None = None
-) -> DataFrame:
-    """documents.parquet → pages whose payloads are RTF — exercises the
-    group/control-word parser end to end."""
-    return _pages_from_docs(spark, sf_dir, _row_rtf, num_partitions)
-
-
-def synth_odf_pages(
-    spark: SparkSession, sf_dir: str, num_partitions: int | None = None
-) -> DataFrame:
-    """documents.parquet → pages whose payloads are REAL OpenDocument
-    containers (ods spreadsheet for even doc_ids, odt text for odd) —
-    exercises the ODF extraction branch end to end."""
-    return _pages_from_docs(spark, sf_dir, _row_odf, num_partitions)
-
-
-def synth_delimited_pages(
-    spark: SparkSession, sf_dir: str, num_partitions: int | None = None
-) -> DataFrame:
-    """documents.parquet → pages whose payloads are delimited text (csv for
-    even doc_ids, quoted tsv for odd) — exercises the content-sniffed
-    structured fast path (extract/delimited.py) end to end."""
-    return _pages_from_docs(spark, sf_dir, _row_delimited, num_partitions)
-
-
-def synth_pres_pages(
-    spark: SparkSession, sf_dir: str, num_partitions: int | None = None
-) -> DataFrame:
-    """documents.parquet → pages whose payloads are REAL presentations
-    (pptx zip+XML for even doc_ids, legacy .ppt CFB for odd) — exercises
-    the slide-per-page extraction paths end to end."""
-    return _pages_from_docs(spark, sf_dir, _row_pres, num_partitions)
-
-
-def synth_pdf_real_pages(
-    spark: SparkSession, sf_dir: str, num_partitions: int | None = None
-) -> DataFrame:
-    """documents.parquet → pages whose payloads are GENUINE %PDF-1.4 files
-    (xref, FlateDecode, WinAnsi/Differences/Type0+ToUnicode fonts across
-    doc_id % 6 variants, incl. the letter-spaced /Widths exact-advance
-    one, an image-XObject figure page, and a Type 3 /Differences-only
-    font) — exercises the born-digital PDF parser (extract/pdf.py) end
-    to end."""
-    return _pages_from_docs(spark, sf_dir, _row_pdf_real, num_partitions)
-
-
-def synth_binary_pages(
-    spark: SparkSession, sf_dir: str, num_partitions: int | None = None
-) -> DataFrame:
-    """documents.parquet → pages whose payloads are binary/media bytes
-    (png/jpeg/gif/heic magics + magic-less high-entropy) — the corpus that
-    locks the dispatch's binary guard (round-3 What's-wrong #1)."""
-    return _pages_from_docs(spark, sf_dir, _row_binary, num_partitions)
-
-
-def synth_poison_pages(
-    spark: SparkSession, sf_dir: str, num_partitions: int | None = None
-) -> DataFrame:
-    """The standard taxonomy corpus except every third doc's payload is a
-    deterministically-corrupt CFB header (trusted text emptied) — the
-    containment-contract corpus."""
-    return _pages_from_docs(spark, sf_dir, _row_poison, num_partitions)
-
-
-# every synthesized corpus by name — the job CLI's --synth-family choices
-# (taxonomy is the default mixed corpus the driver smoke-checks)
-SYNTH_FAMILIES = {
-    "taxonomy": synth_pages,
-    "ooxml": synth_ooxml_pages,
-    "legacy": synth_legacy_pages,
-    "misc": synth_misc_pages,
-    "rtf": synth_rtf_pages,
-    "odf": synth_odf_pages,
-    "delimited": synth_delimited_pages,
-    "pres": synth_pres_pages,
-    "pdf_real": synth_pdf_real_pages,
-    "pdf_crypt": synth_pdf_crypt_pages,
-    "binary": synth_binary_pages,
-    "poison": synth_poison_pages,
-}
