@@ -1,20 +1,14 @@
-"""Unit tests: fence-strip parity (P1/P2), filename sanitization (P5),
-page selection/renumbering (C8/A8), document joins (A1/A2)."""
+"""Unit tests: fence stripping (P2), filename sanitization (P5),
+page selection/renumbering (C8/A8), document join (A1)."""
 
 from __future__ import annotations
 
 import pytest
 
-from zerox_spark.extract.fences import (
-    format_markdown_node,
-    format_markdown_py,
-    sanitize_filename,
-)
+from zerox_spark.extract.fences import format_markdown, sanitize_filename
 from zerox_spark.extract.pages import (
-    PAGE_DELIM,
     PageNumberOutOfBoundError,
     join_document,
-    join_for_extraction,
     normalize_select_pages,
     select_and_renumber,
 )
@@ -23,33 +17,21 @@ from zerox_spark.extract.pages import (
 # --- python-SDK fence semantics (anchored whole-string unwrap) -------------
 
 def test_py_unwraps_whole_string_markdown_fence():
-    assert format_markdown_py("```markdown\n# t\nbody\n```") == "# t\nbody"
+    assert format_markdown("```markdown\n# t\nbody\n```") == "# t\nbody"
 
 
 def test_py_unwraps_bare_fence():
-    assert format_markdown_py("```\nplain\n```") == "plain"
+    assert format_markdown("```\nplain\n```") == "plain"
 
 
 def test_py_keeps_interior_fences():
     s = "# t\n\n```python\nx\n```"
-    assert format_markdown_py(s) == s
+    assert format_markdown(s) == s
 
 
 def test_py_keeps_uppercase_lang_fence():
     s = "```SQL\nSELECT\n```"  # [a-z]* does not match 'SQL'
-    assert format_markdown_py(s) == s
-
-
-# --- node-SDK fence semantics (strip md/html anywhere, protect others) -----
-
-def test_node_strips_md_html_markers_anywhere():
-    s = "pre ```markdown mid ``` post ```html x ```"
-    assert "```" not in format_markdown_node(s)
-
-
-def test_node_preserves_language_fences():
-    s = "a ```python\ncode\n``` b"
-    assert format_markdown_node(s) == s
+    assert format_markdown(s) == s
 
 
 # --- filename sanitize (PY rule: every non-alnum → _) ----------------------
@@ -90,4 +72,3 @@ def test_normalize_scalar_and_sort():
 
 def test_document_joins():
     assert join_document(["a", "b"]) == "a\n\nb"
-    assert join_for_extraction(["a", "b"]) == f"a{PAGE_DELIM}b"

@@ -25,6 +25,22 @@ def test_sql_function_surface(spark):
         "SELECT zerox_fingerprint('the quick brown fox jumps over it') AS f"
     ).collect()[0].f
     assert len(fp) > 0
+    # the SQL function is the production kernel of textstats.fingerprints
+    from zerox_spark.operators.textstats import fingerprints
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").filter("doc_id < 8")
+    docs.createOrReplaceTempView("docs_v")
+    sql_fp = {
+        r.doc_id: r.fp for r in spark.sql(
+            "SELECT doc_id, zerox_fingerprint(text) AS fp FROM docs_v"
+        ).collect()
+    }
+    assert sql_fp == {r.doc_id: r.fp for r in fingerprints(docs).collect()}
+    edge = spark.sql(
+        "SELECT zerox_fingerprint(CAST(NULL AS STRING)) AS a, "
+        "zerox_fingerprint('abcd') AS b"
+    ).collect()[0]
+    assert edge.a == [] and edge.b == []
 
 
 def test_curation_removes_injected_duplicates(spark):

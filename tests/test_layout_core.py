@@ -115,12 +115,17 @@ def test_fold_py_mode_continues_after_error_with_reset():
     assert out[2][1] == TBL2
 
 
-def test_fold_node_mode_breaks_on_error():
-    out = apply_maintain_format(
-        [(1, "a", "SUCCESS"), (2, "", "ERROR"), (3, "c", "SUCCESS")],
-        mode="node",
-    )
-    assert len(out) == 2  # node-zerox/src/index.ts:362-364
+def test_extract_document_folds_when_maintain_format():
+    """extract_document is the one fold site: the job's UDF, api.zerox and
+    the SQL functions all get the fold from it, and only when asked."""
+    def two_pages(html, text):
+        return [(1, TBL1, []), (2, TBL2, [])]
+
+    for maintain, want in ((True, TBL2_FIXED), (False, TBL2)):
+        cfg = ExtractConfig(extractor=two_pages, maintain_format=maintain)
+        out = extract_document(b"x", None, cfg)
+        assert [p.markdown for p in out] == [TBL1, want]
+        assert out[1].content_length == len(want)
 
 
 def test_plain_text_document_paragraphs():

@@ -356,3 +356,19 @@ def test_substring_overlap_viral_guard(spark):
     uncapped = substring_overlap_pairs(docs, min_shared=10).count()
     assert uncapped == 30 * 29 // 2  # every pair shares the passage
     assert capped == 0  # viral fingerprints dropped before the join
+
+
+def test_every_query_is_registered():
+    """No unregistered alternates: each module-level ``q_*`` function is a
+    registry entry, and every oracle belongs to a registered query."""
+    import inspect
+
+    from zerox_spark import queries
+
+    defined = {
+        name for name, fn in inspect.getmembers(queries, inspect.isfunction)
+        if name.startswith("q_") and fn.__module__ == queries.__name__
+    }
+    registered = {fn.__name__ for fn in queries.QUERIES.values()}
+    assert defined - registered == set()
+    assert set(queries.ORACLE_SQL) <= set(queries.QUERIES)

@@ -7,7 +7,7 @@ from __future__ import annotations
 from hypothesis import given, settings, strategies as st
 
 from zerox_spark.extract.core import ExtractConfig, extract_document
-from zerox_spark.extract.fences import format_markdown_py
+from zerox_spark.extract.fences import format_markdown
 from zerox_spark.extract.markdown import html_to_markdown
 from zerox_spark.html.dom import parse
 from zerox_spark.operators.fold import apply_maintain_format
@@ -51,8 +51,8 @@ def test_extract_document_never_raises_in_ignore_mode(payload: bytes, text: str)
 @settings(max_examples=200, deadline=None)
 @given(st.text(max_size=300))
 def test_fence_strip_idempotent(text: str):
-    once = format_markdown_py(text)
-    assert format_markdown_py(once) == once
+    once = format_markdown(text)
+    assert format_markdown(once) == once
 
 
 @settings(max_examples=100, deadline=None)

@@ -16,7 +16,7 @@ from zerox_spark.extract.core import (
     extract_document,
     get_extractor,
 )
-from zerox_spark.extract.fences import sanitize_filename, sanitize_filename_node
+from zerox_spark.extract.fences import sanitize_filename
 from zerox_spark.sinks import export_markdown_files, run_retries
 
 
@@ -39,10 +39,9 @@ def test_payload_cap_disabled_with_zero():
 
 
 def test_filename_rules_diverge_as_documented():
-    # SURVEY.md §7(d): PY underscores every non-alnum; Node strips
-    # non-word chars and underscores only whitespace
+    # SURVEY.md §7(d): PY underscores every non-alnum (Node's rule, which
+    # underscores only whitespace, is a documented divergence)
     assert sanitize_filename("My Doc (v2).pdf") == "my_doc__v2_"
-    assert sanitize_filename_node("My Doc (v2).pdf") == "my_doc_v2"
 
 
 def test_run_retries_retries_then_raises():
@@ -151,6 +150,23 @@ def test_extractor_choices_track_registry():
     # every registry strategy is accepted
     for name in EXTRACTOR_NAMES:
         assert parse_args(base + ["--extractor", name]).extractor == name
+
+
+def test_iceberg_incremental_rejected_before_spark(monkeypatch):
+    """IcebergSink has no watermark cursor: the flag pair must fail at
+    argument validation, not after the SparkSession has started."""
+    import zerox_spark.session
+    from zerox_spark.job import main
+
+    def no_spark(*a, **k):
+        raise AssertionError("SparkSession started")
+
+    monkeypatch.setattr(zerox_spark.session, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        main(["--iceberg", "--incremental", "--input", "db.pages",
+              "--output", "db.extracted"])
+    assert "--iceberg" in str(exc.value)
+    assert "--incremental" in str(exc.value)
 
 
 def test_export_markdown_files(spark, tmp_path):

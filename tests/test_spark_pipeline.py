@@ -102,33 +102,6 @@ def test_duplicate_url_latest_warc_ts_wins(spark):
     assert len({r.url for r in got}) == 4
 
 
-def test_grouped_fold_operator_matches_inline(spark):
-    """applyInPandas fold ≡ inline fold on multi-row page provenance."""
-    from zerox_spark.operators.fold import maintain_format_fold
-
-    rows = [
-        Row(url="u", page_no=1,
-            markdown="<table><tr><th>h</th></tr><tr><td>1</td></tr></table>",
-            content_length=10, status="SUCCESS", error=None),
-        Row(url="u", page_no=2,
-            markdown="<table><tr><td>2</td></tr></table>",
-            content_length=10, status="SUCCESS", error=None),
-        Row(url="v", page_no=1, markdown="plain", content_length=5,
-            status="SUCCESS", error=None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "url string, page_no int, markdown string, content_length int, "
-        "status string, error string",
-    )
-    out = {(r.url, r.page_no): r.markdown
-           for r in maintain_format_fold(df).collect()}
-    assert out[("u", 2)] == (
-        "<table><tr><th>h</th></tr><tr><td>2</td></tr></table>"
-    )
-    assert out[("v", 1)] == "plain"
-
-
 def test_error_rows_contained_not_fatal(spark):
     from zerox_spark.schema import PAGES_SCHEMA
 

@@ -15,8 +15,8 @@ Architecture (all DataFrame-native):
       → resume anti-join vs committed lineage
       → salted url-hash repartition (skew handling)
       → fast-path routing (trusted pre-extracted text bypasses the DOM pass)
-      → mapInPandas(extract_batch)         # vectorized Arrow UDF, the hot loop
-      → applyInPandas(maintain_format_fold)  # optional stateful per-url fold
+      → mapInPandas(extract_pages)  # vectorized Arrow UDF, the hot loop;
+                                    # the maintainFormat fold runs per doc
       → write extracted(url, page_no, markdown, spans) + per-partition lineage
 """
 

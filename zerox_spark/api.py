@@ -21,7 +21,6 @@ from dataclasses import dataclass, field
 from zerox_spark.extract.core import ExtractConfig, PageResult, extract_document
 from zerox_spark.extract.fences import sanitize_filename
 from zerox_spark.extract.pages import join_document
-from zerox_spark.operators.fold import refold_page_results
 
 
 @dataclass
@@ -68,8 +67,6 @@ def zerox(
         error_mode=error_mode,
     )
     pages = extract_document(content, text, config)
-    if maintain_format and len(pages) > 1:
-        pages = refold_page_results(pages)
 
     successful = sum(1 for p in pages if p.status == "SUCCESS")
     out = ZeroxOutput(

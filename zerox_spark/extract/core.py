@@ -225,7 +225,7 @@ class ExtractConfig:
     validate-at-init pattern (py_zerox/pyzerox/models/modellitellm.py:33-38)."""
 
     select_pages: list[int] | None = None
-    maintain_format: bool = False  # inline fold in operators/extract.py
+    maintain_format: bool = False  # fold in extract_document
     error_mode: str = "IGNORE"  # IGNORE | THROW (node-zerox/src/types.ts:172-175)
     trust_text: bool = True  # honor the pre-extracted text fast path
     # customModelFunction analog (node-zerox/src/types.ts:9-15): a callable
@@ -312,6 +312,12 @@ def extract_document(
                     spans=spans,
                 )
             )
+        if config.maintain_format and len(out) > 1:
+            # zero-shuffle fold: every page of this document is right here
+            # (operators/fold.py); lazy import, fold.py imports this module
+            from zerox_spark.operators.fold import refold_page_results
+
+            refold_page_results(out)
         return out
     except Exception as exc:  # noqa: BLE001 — containment is the contract
         if config.error_mode == "THROW":

@@ -31,8 +31,7 @@ import io
 
 import re
 
-from zerox_spark.extract.markdown import Block, join_blocks
-from zerox_spark.extract.sheets import sheet_to_table
+from zerox_spark.extract.markdown import Block, grid_table, join_blocks
 
 _SNIFF_LINES = 20
 # no real delimited table carries C0 controls (beyond \t) or replacement
@@ -89,5 +88,5 @@ def delimited_to_pages(
     rows = [r for r in rows if any(c != "" for c in r)]
     if not rows:
         raise ValueError("delimited payload with no rows")
-    markdown, spans = join_blocks([Block("table", sheet_to_table(rows))])
+    markdown, spans = join_blocks([Block("table", grid_table(rows))])
     return [(1, markdown, spans)]

@@ -1,20 +1,18 @@
-"""Code-fence post-processing with byte-exact parity to both reference SDKs.
-
-The reference's model sometimes wraps a whole page in ```markdown fences; both
-SDKs strip that wrapper while preserving genuine language fences:
-
-- Python semantics (`py_zerox/pyzerox/processor/text.py:7-12`, patterns at
-  `py_zerox/pyzerox/constants/patterns.py:4-6`): whole-string
-  ```` ```lang\n...\n``` ```` and bare ```` ```\n...\n``` ```` wrappers are
-  unwrapped (anchored regexes).
-- Node semantics (`node-zerox/src/utils/common.ts:50-60`): protect non-html/
-  markdown language fences with a placeholder, delete ```html/```markdown/
-  bare ``` markers anywhere, restore.
-
-Per SURVEY.md §7 we standardize on the Python SDK's behavior for pipeline
-output (our goldens are generated under it) but implement both for parity
-testing. The regexes are re-stated here as *behavioral constants* of the
+"""Code-fence post-processing and file-name sanitizing: the Python SDK's
 output dialect.
+
+The reference's model sometimes wraps a whole page in ```markdown fences;
+the Python SDK (`py_zerox/pyzerox/processor/text.py:7-12`, patterns at
+`py_zerox/pyzerox/constants/patterns.py:4-6`) unwraps whole-string
+```` ```lang\n...\n``` ```` and bare ```` ```\n...\n``` ```` wrappers with
+anchored regexes and keeps every interior fence.
+
+The Node SDK strips ```html/```markdown markers anywhere and sanitizes file
+names differently (node-zerox/src/utils/common.ts:50-60, index.ts:556-562).
+Per SURVEY.md §7 this engine standardizes on the Python SDK's rules; the Node
+variants are documented divergences (PARITY.md) with no code behind them.
+The regexes are re-stated here as *behavioral constants* of the output
+dialect.
 """
 
 from __future__ import annotations
@@ -25,51 +23,17 @@ import re
 _MATCH_MARKDOWN_BLOCKS = re.compile(r"^```[a-z]*\n([\s\S]*?)\n```$")
 _MATCH_CODE_BLOCKS = re.compile(r"^```\n([\s\S]*?)\n```$")
 
-# Node-SDK placeholder-protect patterns (node-zerox/src/utils/common.ts:50-60)
-_PROTECT = re.compile(r"```(?!html|markdown)(\w+)([\s\S]*?)```")
-_STRIP = re.compile(r"```(?:html|markdown)|````(?:html|markdown)|```")
-_RESTORE = re.compile(r"§§§(\w+)([\s\S]*?)§§§")
 
-
-def format_markdown_py(text: str) -> str:
-    """Python-SDK semantics: unwrap anchored whole-string fences."""
+def format_markdown(text: str) -> str:
+    """Unwrap anchored whole-string fences (Python-SDK semantics)."""
     text = _MATCH_MARKDOWN_BLOCKS.sub(r"\1", text)
     text = _MATCH_CODE_BLOCKS.sub(r"\1", text)
     return text
 
 
-def format_markdown_node(text: str) -> str:
-    """Node-SDK semantics: strip md/html fence markers, preserve others."""
-    text = _PROTECT.sub(r"§§§\1\2§§§", text)
-    text = _STRIP.sub("", text)
-    text = _RESTORE.sub(r"```\1\2```", text)
-    return text
-
-
-# the pipeline default (Python SDK per SURVEY.md §7 "standardize on PY")
-format_markdown = format_markdown_py
-
-
 def sanitize_filename(path_or_name: str) -> str:
     """Python-SDK file-name sanitization (py_zerox/pyzerox/core/zerox.py:123-126):
-    every non-alphanumeric char → '_', lowercase, truncated to 255. The
-    engine's default (SURVEY.md §7: standardize on PY where SDKs diverge)."""
+    every non-alphanumeric char → '_', lowercase, truncated to 255."""
     base = path_or_name.rsplit("/", 1)[-1]
     stem = base.rsplit(".", 1)[0] if "." in base else base
     return "".join(c.lower() if c.isalnum() else "_" for c in stem)[:255]
-
-
-_NON_WORD = re.compile(r"[^\w\s]")
-_WS_RUN = re.compile(r"\s+")
-
-
-def sanitize_filename_node(path_or_name: str) -> str:
-    """Node-SDK variant (node-zerox/src/index.ts:556-562): strip non-word
-    chars, whitespace → '_', lowercase, truncate 255 — kept for parity
-    testing of the documented SDK divergence (underscores only whitespace,
-    unlike the PY rule above)."""
-    base = path_or_name.rsplit("/", 1)[-1]
-    stem = base.rsplit(".", 1)[0] if "." in base else base
-    out = _NON_WORD.sub("", stem)
-    out = _WS_RUN.sub("_", out)
-    return out.lower()[:255]

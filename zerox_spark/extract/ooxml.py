@@ -36,7 +36,7 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
-from zerox_spark.extract.markdown import Block, join_blocks
+from zerox_spark.extract.markdown import Block, grid_table, join_blocks
 
 _S = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _R = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
@@ -242,14 +242,6 @@ def _xlsx_grids(zf: zipfile.ZipFile) -> list[tuple[str, list[list[str]]]]:
     return grids
 
 
-def _grid_table(rows: list[list[str]]) -> str:
-    """First row <th> (file.ts:246-249) — the canonical grid serialization,
-    defined once in markdown.grid_table."""
-    from zerox_spark.extract.markdown import grid_table
-
-    return grid_table(rows)
-
-
 def grids_to_pages(
     grids: list[tuple[str, list[list[str]]]],
 ) -> list[tuple[int, str, list[tuple[str, int, int, float]]]]:
@@ -268,7 +260,7 @@ def grids_to_pages(
             len(name) + sum(len(c) + 9 for row in rows for c in row)
         )
         blocks = [Block("heading", f"## Sheet: {name}")]
-        blocks.append(Block("table", _grid_table(rows)))
+        blocks.append(Block("table", grid_table(rows)))
         markdown, spans = join_blocks(blocks)
         out.append((i, markdown, spans))
     return out
@@ -356,7 +348,7 @@ def _docx_table_block(tbl: ET.Element) -> Block | None:
         rows.append(cells)
     if not rows:
         return None
-    return Block("table", _grid_table(rows))
+    return Block("table", grid_table(rows))
 
 
 def docx_to_pages(
@@ -506,7 +498,7 @@ def _pptx_tbl_block(tbl: ET.Element) -> Block | None:
         rows.append(cells)
     if not rows:
         return None
-    return Block("table", _grid_table(rows))
+    return Block("table", grid_table(rows))
 
 
 def _pptx_slide_blocks(
@@ -643,7 +635,7 @@ def _odt_block(el: ET.Element) -> Block | None:
                 for tc in tr.findall(f"{_TBL}table-cell")
             ]
             rows.append(cells)
-        return Block("table", _grid_table(rows)) if rows else None
+        return Block("table", grid_table(rows)) if rows else None
     return None
 
 

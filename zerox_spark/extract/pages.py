@@ -65,8 +65,3 @@ def select_and_renumber(
 def join_document(markdowns: list[str]) -> str:
     """Per-doc markdown artifact (A1)."""
     return PAGE_JOIN.join(markdowns)
-
-
-def join_for_extraction(markdowns: list[str]) -> str:
-    """Page-delimited full-document form (A2)."""
-    return PAGE_DELIM.join(markdowns)

@@ -22,7 +22,7 @@ changes — routing, page model, and emission stay as is.
 
 from __future__ import annotations
 
-from zerox_spark.extract.markdown import Block, join_blocks
+from zerox_spark.extract.markdown import Block, grid_table, join_blocks
 
 SHEET_MAGIC = b"%SHEET"
 
@@ -45,14 +45,6 @@ def parse_sheet_payload(payload: bytes) -> list[tuple[str, list[list[str]]]]:
     return sheets
 
 
-def sheet_to_table(rows: list[list[str]]) -> str:
-    """First row as <th> (file.ts:246-249 semantics) — the canonical grid
-    serialization, defined once in markdown.grid_table."""
-    from zerox_spark.extract.markdown import grid_table
-
-    return grid_table(rows)
-
-
 def sheets_to_pages(
     payload: bytes,
 ) -> list[tuple[int, str, list[tuple[str, int, int, float]]]]:
@@ -62,6 +54,6 @@ def sheets_to_pages(
     for i, (_name, rows) in enumerate(parse_sheet_payload(payload), start=1):
         if not rows:
             continue
-        markdown, spans = join_blocks([Block("table", sheet_to_table(rows))])
+        markdown, spans = join_blocks([Block("table", grid_table(rows))])
         out.append((i, markdown, spans))
     return out

@@ -17,6 +17,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from zerox_spark.operators.textstats import _winnow_udf
+
 
 @pandas_udf(T.StringType())
 def zerox_extract(html: pd.Series) -> pd.Series:
@@ -41,15 +43,9 @@ def zerox_page_count(html: pd.Series) -> pd.Series:
     ).astype("int32")
 
 
-@pandas_udf(T.ArrayType(T.LongType()))
-def zerox_fingerprint(text: pd.Series) -> pd.Series:
-    from zerox_spark.operators.textstats import _winnow_one
-
-    return text.map(lambda t: _winnow_one(t or ""))
-
-
 def register_all(spark: SparkSession) -> None:
-    """Register every engine SQL function on the session."""
+    """Register every engine SQL function on the session. The fingerprint
+    is the production winnowing kernel of ``textstats.fingerprints``."""
     spark.udf.register("zerox_extract", zerox_extract)
     spark.udf.register("zerox_page_count", zerox_page_count)
-    spark.udf.register("zerox_fingerprint", zerox_fingerprint)
+    spark.udf.register("zerox_fingerprint", _winnow_udf)

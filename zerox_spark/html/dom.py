@@ -128,7 +128,3 @@ def _collect_text(nodes: list[Node], idx: int, out: list[str]) -> None:
         return
     for c in node.children:
         _collect_text(nodes, c, out)
-
-
-def find_all(nodes: list[Node], tag: str) -> list[int]:
-    return [n.idx for n in nodes if n.tag == tag]

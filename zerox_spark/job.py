@@ -90,6 +90,10 @@ def main(argv: list[str] | None = None) -> int:
     from zerox_spark.extract.core import get_extractor
 
     named_extractor = get_extractor(args.extractor or "auto")
+    if args.iceberg and args.incremental:
+        # the watermark cursor lives in the parquet sink's snapshot files;
+        # IcebergSink keeps no such cursor
+        raise SystemExit("--incremental is not supported with --iceberg")
 
     spark = get_spark(args.master, app_name="zerox-spark-job")
 

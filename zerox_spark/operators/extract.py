@@ -63,8 +63,6 @@ _UDF_COLS = _UDF_SCHEMA.fieldNames()
 def _extract_iter(
     batches: Iterator[pd.DataFrame], config: ExtractConfig
 ) -> Iterator[pd.DataFrame]:
-    from zerox_spark.operators.fold import refold_page_results
-
     for pdf in batches:
         t0 = time.monotonic()
         # columnar accumulation: pd.DataFrame(dict-of-lists) skips the
@@ -81,12 +79,7 @@ def _extract_iter(
             pdf["url"], pdf["html"], pdf["text"], pdf["warc_ts"]
         ):
             payload = bytes(html) if html is not None else None
-            pages = extract_document(payload, text, config)
-            if config.maintain_format and len(pages) > 1:
-                # zero-shuffle inline fold: all pages of this document are
-                # right here in this task (see operators/fold.py rationale)
-                pages = refold_page_results(pages)
-            for page in pages:
+            for page in extract_document(payload, text, config):
                 c_url.append(url)
                 c_no.append(page.page_no)
                 c_md.append(page.markdown)

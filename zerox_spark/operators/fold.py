@@ -5,9 +5,8 @@ order, each receiving the prior page's markdown as formatting context
 (CONSISTENCY_PROMPT, node-zerox/src/constants.ts:8-9). We standardize on the
 Python SDK's error behavior (SURVEY.md §7): on a page error the fold
 *continues* with prior context reset to "" (py_zerox/pyzerox/processor/
-pdf.py:66-73 resets prior_page; zerox.py:138-150 keeps iterating), unlike
-Node which breaks the loop (index.ts:362-364) — ``mode="node"`` provides
-that variant.
+pdf.py:66-73 resets prior_page; zerox.py:138-150 keeps iterating). Node's
+break-on-error (index.ts:362-364) is a documented divergence (PARITY.md).
 
 The deterministic continuity transform (what "consistent formatting with the
 prior page" means without an LLM): when the prior page *ends* with an HTML
@@ -16,29 +15,17 @@ headerless <table> continuation, the header row is re-emitted into the
 continuation table — the cross-page-table case the consistency prompt exists
 for.
 
-Execution shapes:
-
-- ``maintain_format_inline``: zero-shuffle. In this engine every page of a
-  url is produced from one input row inside one task, so the fold can run
-  inside the extraction pass itself. This is the default — a 100 TB job
-  should not pay a full shuffle for a per-document fold.
-- ``maintain_format_fold``: ``applyInPandas`` grouped by url — the general
-  operator for when pages of a url span input rows (e.g. duplicate urls at
-  different warc_ts, FIXTURES.md e08, or page-sharded upstream tables).
-  Grouping keys hash-shuffle by url; per-url work is serial (the semantic
-  requires it) but urls are processed in parallel across the cluster —
-  exactly the reference's per-document seriality with cross-document
-  parallelism (index.ts:357-377).
+Execution shape: zero-shuffle. Every page of a url is produced from one
+input row, so ``extract_document`` (extract/core.py) folds a document's
+pages right after extracting them, inside the extract UDF's task — a 100 TB
+job does not pay a shuffle for a per-document fold. ``apply_maintain_format``
+is the pure fold; streaming assembly and the golden tools call it directly.
 """
 
 from __future__ import annotations
 
 import re
 from typing import Iterable
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
 
 from zerox_spark.extract.core import STATUS_ERROR, STATUS_SUCCESS
 
@@ -79,7 +66,7 @@ def _continue_table(prior_table: str, markdown: str) -> str:
 
 
 def apply_maintain_format(
-    pages: Iterable[tuple[int, str, str]], mode: str = "py"
+    pages: Iterable[tuple[int, str, str]],
 ) -> list[tuple[int, str, str]]:
     """Pure fold over (page_no, markdown, status) sorted by page_no."""
     out: list[tuple[int, str, str]] = []
@@ -87,8 +74,6 @@ def apply_maintain_format(
     for page_no, markdown, status in pages:
         if status == STATUS_ERROR:
             out.append((page_no, markdown, status))
-            if mode == "node":
-                break  # node-zerox/src/index.ts:362-364
             prior = None  # py resets prior context
             continue
         if prior is not None:
@@ -100,44 +85,13 @@ def apply_maintain_format(
     return out
 
 
-# ---------------------------------------------------------------------------
-# pandas plumbing shared by both execution shapes
-
-
-def _fold_pdf(pdf: pd.DataFrame, mode: str) -> pd.DataFrame:
-    pdf = pdf.sort_values("page_no").reset_index(drop=True)
-    folded = apply_maintain_format(
-        list(zip(pdf["page_no"], pdf["markdown"], pdf["status"])), mode=mode
-    )
-    keep = pdf.iloc[: len(folded)].copy()
-    keep["markdown"] = [md for _, md, _ in folded]
-    keep["content_length"] = keep["markdown"].str.len().astype("int32")
-    return keep
-
-
-def maintain_format_fold(
-    extracted: DataFrame, mode: str = "py"
-) -> DataFrame:
-    """Grouped-by-url applyInPandas fold (general, one shuffle)."""
-    schema = extracted.schema
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _fold_pdf(pdf, mode)
-
-    return extracted.groupBy("url").applyInPandas(fold, schema=schema)
-
-
-def refold_page_results(pages):
-    """The inline maintainFormat fold over PageResult objects — THE shared
-    block for the vectorized extract UDF and the single-doc api.zerox
-    path: fold, drop pages the node mode removed, update markdown/status/
-    content_length in place. Returns the kept list."""
+def refold_page_results(pages) -> None:
+    """The maintainFormat fold over one document's PageResult objects, in
+    page order: updates markdown/status/content_length in place (the fold
+    keeps every page)."""
     folded = apply_maintain_format(
         [(p.page_no, p.markdown, p.status) for p in pages]
     )
-    by_no = {no: (md, st) for no, md, st in folded}
-    kept = [p for p in pages if p.page_no in by_no]
-    for p in kept:
-        p.markdown, p.status = by_no[p.page_no]
-        p.content_length = len(p.markdown)
-    return kept
+    for p, (_, md, st) in zip(pages, folded):
+        p.markdown, p.status = md, st
+        p.content_length = len(md)

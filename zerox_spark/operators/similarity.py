@@ -300,7 +300,7 @@ IVF_CENTROID_MOD = 20
 # tracks the probed FRACTION — measured recall@5 vs exact: 0.92 at 16/25
 # cells (sf0.01), 0.88/0.96 at 48/64 of 100 cells (sf0.1), but 0.61 at a
 # fixed 16/100 — so worst-case corpora must pass nprobe ∝ n_cells
-# explicitly, as the sandbox recall oracle (queries.q_ann_ivf_recall)
+# explicitly, as the sandbox recall oracle (queries._ann_ivf_recall)
 # does. Baking that scaling into the default would make the 'approximate'
 # path half-brute-force on large clustered corpora.
 IVF_NPROBE = 16

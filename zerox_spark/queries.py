@@ -494,7 +494,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LINE_DEDUP_CACHE: list[DataFrame] = []
 
 
-def q_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-hashed floor for the SimHash family (the ann_recall pattern):
     recall of the 8-band blocking vs the EXACT hamming-≤7 self-join over
     the same signatures, floor-clamped at 100. Pigeonhole guarantees the
@@ -603,7 +603,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate path (recall vs exact verified in pytest AND by the
-    driver-checked q_ann_recall floor; the raw rows stay rows-only because
+    hash-checked _ann_recall floor; the raw rows stay rows-only because
     per-query LSH output is probabilistic w.r.t. any SQL restatement)."""
     emb = _spread(_embeddings(spark, sf_dir), "vec_id")
     queries = emb.filter(F.col("vec_id") % ANN_QUERY_MOD == 0)
@@ -652,12 +652,12 @@ def _recall_floor(
     )
 
 
-def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@k of the LSH path vs exact (see _recall_floor)."""
     return _recall_floor(spark, sf_dir, ann_topk_lsh)
 
 
-def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@k of the IVF-flat path vs exact (see _recall_floor; measured
     0.92-0.98; floor 70 fails loudly on regression, absorbs sf drift).
     The sandbox corpus is UNCLUSTERED — the hardest IVF regime — so this
@@ -846,49 +846,6 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_stats(_spread(_docs(spark, sf_dir), "doc_id"))
 
 
-def q_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-100 corpus bigrams by (doc-frequency, total count, lexical)."""
-    from zerox_spark.operators.textstats import ngram_counts
-
-    return ngram_counts(_docs(spark, sf_dir), n=2, k=100)
-
-
-def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling fan-out, value-checked: frame COUNTS and timestamps
-    are closed-form in the payload byte length, which the oracle
-    reconstructs via _PAYLOAD_CTE (the frame bytes themselves are the
-    documented deterministic stub and stay out of the compared columns)."""
-    from zerox_spark.operators.multimodal import sample_frames
-
-    return sample_frames(synth_pages(spark, sf_dir)).select(
-        "url", "frame_no", "ts_ms"
-    )
-
-
-def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprints, value-checked: the oracle restates the FULL
-    winnowing algorithm (k-gram rolling hashes, rightmost-tie window min,
-    consecutive-position dedup) in DuckDB list SQL; fingerprints compare as
-    canonical comma-joined strings (engine-neutral, unlike raw arrays)."""
-    fp = fingerprints(_docs(spark, sf_dir))
-    return fp.select(
-        "doc_id",
-        F.size("fp").alias("n_fp"),
-        F.array_join(
-            F.transform("fp", lambda x: x.cast("string")), ","
-        ).alias("fp_str"),
-    )
-
-
-def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing, value-checked: the oracle reconstructs each
-    synthesized payload byte-for-byte in SQL (_PAYLOAD_CTE) and compares
-    octet_length + sniffed kind."""
-    return media_metadata(synth_pages(spark, sf_dir)).select(
-        "url", "n_bytes", "media_kind"
-    )
-
-
 # --------------------------------------------------------------------------
 # consolidated registry slots (r4 Next-round #4: the driver checks at most
 # 50 queries; these fold same-corpus / same-shape families into one slot
@@ -939,19 +896,19 @@ def q_recall_floors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The five driver-hashed recall floors in one slot: (metric,
     n_items, recall_floor_pct) for the SimHash 8-band blocking, the ANN
     LSH path, the IVF-flat path, verbatim fuzzy decontamination, and —
-    round 6 — EDITED-item fuzzy decontamination (see q_simhash_recall /
+    round 6 — EDITED-item fuzzy decontamination (see _simhash_recall /
     _recall_floor / edited_benchmark_variants for scope statements)."""
-    sim = q_simhash_recall(spark, sf_dir).select(
+    sim = _simhash_recall(spark, sf_dir).select(
         F.lit("simhash_band").alias("metric"),
         F.col("n_docs").cast("long").alias("n_items"),
         "recall_floor_pct",
     )
-    lsh = q_ann_recall(spark, sf_dir).select(
+    lsh = _ann_recall(spark, sf_dir).select(
         F.lit("ann_lsh").alias("metric"),
         F.col("n_queries").cast("long").alias("n_items"),
         "recall_floor_pct",
     )
-    ivf = q_ann_ivf_recall(spark, sf_dir).select(
+    ivf = _ann_ivf_recall(spark, sf_dir).select(
         F.lit("ann_ivf").alias("metric"),
         F.col("n_queries").cast("long").alias("n_items"),
         "recall_floor_pct",

@@ -25,7 +25,7 @@ import os
 import time
 from typing import Callable, TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import types as T, SparkSession, functions as F
 
 from zerox_spark.schema import LINEAGE_SCHEMA
@@ -46,6 +46,23 @@ def run_retries(fn: Callable[[], _R], max_retries: int = 1) -> _R:
             if attempt >= max_retries:
                 raise
             attempt += 1
+
+
+def latest_versions(extracted: DataFrame) -> DataFrame:
+    """Latest version per (url, page_no) of a sink's extracted rows — the
+    logical table a consumer reads after incremental upserts."""
+    # warc_ts tie-break after _snap: one snapshot can legitimately
+    # carry two versions of a url (the >= watermark boundary re-emits
+    # rows, and dedupe_latest_warc_ts=False keeps input duplicates) —
+    # the newest crawl must win inside a snapshot too
+    w = Window.partitionBy("url", "page_no").orderBy(
+        F.col("_snap").desc(), F.col("warc_ts").desc_nulls_last()
+    )
+    return (
+        extracted.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
 class ParquetSnapshotSink:
@@ -111,23 +128,7 @@ class ParquetSnapshotSink:
         return spark.read.schema(on_disk).parquet(self.extracted_path)
 
     def read_extracted_latest(self, spark: SparkSession) -> DataFrame:
-        """Latest version per (url, page_no) — the logical table a consumer
-        reads after incremental upserts."""
-        from pyspark.sql import Window
-
-        df = self.read_extracted(spark)
-        # warc_ts tie-break after _snap: one snapshot can legitimately
-        # carry two versions of a url (the >= watermark boundary re-emits
-        # rows, and dedupe_latest_warc_ts=False keeps input duplicates) —
-        # the newest crawl must win inside a snapshot too
-        w = Window.partitionBy("url", "page_no").orderBy(
-            F.col("_snap").desc(), F.col("warc_ts").desc_nulls_last()
-        )
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        return latest_versions(self.read_extracted(spark))
 
     def _max_snap_id(self) -> int:
         """Highest committed snapshot id, -1 if none. max()+1 — NOT a
@@ -243,21 +244,7 @@ class IcebergSink:
         return spark.read.table(self.extracted_table)
 
     def read_extracted_latest(self, spark: SparkSession) -> DataFrame:
-        from pyspark.sql import Window
-
-        df = self.read_extracted(spark)
-        # warc_ts tie-break after _snap: one snapshot can legitimately
-        # carry two versions of a url (the >= watermark boundary re-emits
-        # rows, and dedupe_latest_warc_ts=False keeps input duplicates) —
-        # the newest crawl must win inside a snapshot too
-        w = Window.partitionBy("url", "page_no").orderBy(
-            F.col("_snap").desc(), F.col("warc_ts").desc_nulls_last()
-        )
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        return latest_versions(self.read_extracted(spark))
 
     def next_snapshot_id(self) -> int:
         return 0  # Iceberg's snapshot log owns ids; _snap is per-commit
