@@ -48,6 +48,41 @@ def test_extract_scan_prunes_lang(spark, pages_parquet):
     assert "html" in read_schema and "url" in read_schema
 
 
+def test_job_plan_partitions_and_sorts_on_content_hash(spark, pages_parquet):
+    """The job's transform keeps two Exchanges (the max_by dedupe and the
+    salted repartition). The repartition hashes the content key
+    xxhash64(html, text), and a Sort on that key sits between it and the
+    MapInPandas, so identical payloads reach the extract UDF adjacent and
+    are extracted once (operators/extract._extract_iter)."""
+    from zerox_spark.pipeline import ExtractionPipeline, PipelineConfig
+
+    pages = spark.read.parquet(pages_parquet)
+    plan = (
+        ExtractionPipeline(PipelineConfig(num_partitions=8, num_buckets=16))
+        .transform(pages)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("Exchange ") == 2
+    m = re.search(r"Exchange hashpartitioning\((\w+#\d+L?), .*REPARTITION", plan)
+    assert m, "no repartition Exchange"
+    key = m.group(1)
+    assert re.search(
+        rf"xxhash64\([^()]*html[^()]*, [^()]*text[^()]*, 42\) AS {key}", plan
+    ), f"repartition key {key} is not xxhash64(html, text)"
+    lines = plan.splitlines()
+    at = {
+        name: next(i for i, ln in enumerate(lines) if pat in ln)
+        for name, pat in [
+            ("udf", "MapInPandas"),
+            ("sort", f"Sort [{key} ASC"),
+            ("exchange", "REPARTITION"),
+        ]
+    }
+    assert at["udf"] < at["sort"] < at["exchange"]
+
+
 def test_lang_filter_pushed_to_scan(spark, pages_parquet):
     pages = spark.read.parquet(pages_parquet)
     plan = plan_of(pages.filter(F.col("lang") == "en").select("url"))

@@ -219,3 +219,17 @@ def test_lineage_mixed_schema_old_sink_dir(spark, tmp_path):
         .wm
     )
     assert wm == datetime.datetime(2024, 1, 2)
+
+
+def test_fresh_sink_lineage_launches_no_tasks(spark, tmp_path):
+    """A first run has no lineage yet. The fallback frame is read twice
+    (the resume and the lineage anti-joins), so it must be backed by an
+    RDD of 0 partitions: a local-data frame would launch a Python task per
+    default-parallelism slot on every read."""
+    from zerox_spark.schema import LINEAGE_SCHEMA
+    from zerox_spark.sinks import ParquetSnapshotSink
+
+    lin = ParquetSnapshotSink(str(tmp_path / "fresh")).read_lineage(spark)
+    assert lin.schema == LINEAGE_SCHEMA
+    assert lin.rdd.getNumPartitions() == 0
+    assert lin.collect() == []

@@ -123,6 +123,131 @@ def test_error_rows_contained_not_fatal(spark):
     assert got["https://x/2"].markdown == "fine text"
 
 
+def test_extract_iter_reuses_identical_neighbour(monkeypatch):
+    """_extract_iter extracts a run of equal adjacent (payload, text) rows
+    once and emits its pages under every url. Equality is exact and the
+    reuse is adjacency-only: a different text, or a duplicate after some
+    other row, is extracted again, and a leading (None, None) row is
+    extracted like any other."""
+    import pandas as pd
+
+    from zerox_spark.extract.core import ExtractConfig
+    from zerox_spark.operators import extract as ex
+
+    calls: list = []
+    real = ex.extract_document
+
+    def counting(payload, text, config):
+        calls.append((payload, text))
+        return real(payload, text, config)
+
+    monkeypatch.setattr(ex, "extract_document", counting)
+    a = b"<html><body><article><p>alpha text</p></article></body></html>"
+    b = b"<html><body><article><p>beta text</p></article></body></html>"
+    rows = [
+        (None, None),  # leading null row: must not match the sentinel
+        (a, None), (a, None), (a, None),  # adjacent equal: one call
+        (a, "trusted"),  # same payload, different text: a new call
+        (b, None),
+        (a, None),  # non-adjacent duplicate: extracted again
+    ]
+
+    def frame(part):
+        return pd.DataFrame({
+            "url": [f"https://r/{i}" for i, _ in part],
+            "html": [h for _, (h, _) in part],
+            "text": [t for _, (_, t) in part],
+            "warc_ts": [None] * len(part),
+        })
+
+    indexed = list(enumerate(rows))
+    # split mid-run: the reuse carries across Arrow batches
+    out = pd.concat(list(ex._extract_iter(
+        iter([frame(indexed[:2]), frame(indexed[2:])]), ExtractConfig()
+    )))
+    assert calls == [
+        (None, None), (a, None), (a, "trusted"), (b, None), (a, None)
+    ]
+    assert list(out["url"]) == [f"https://r/{i}" for i in range(len(rows))]
+    assert out["status"].iloc[0] == "ERROR"
+    for i, (h, t) in enumerate(rows):
+        page = real(h, t, ExtractConfig())[0]
+        assert out["markdown"].iloc[i] == page.markdown
+        assert out["status"].iloc[i] == page.status
+
+
+def test_replicated_payloads_extract_like_per_row(spark, monkeypatch):
+    """Each payload under 1-6 urls through pipeline.transform: the rows
+    equal per-row extract_document output in every column but
+    elapsed_ms, and partition_id stays the url's bucket. The corpus has
+    a null-html trusted-text row, a multi-page %PDF-SYNTH doc (the
+    maintainFormat fold runs), an ERROR payload, and heavy replicas above
+    a lowered skew threshold, so the salt spreads one payload's copies."""
+    import datetime
+    from functools import partial
+
+    import zerox_spark.pipeline as pipeline_mod
+    from zerox_spark.extract.core import extract_document
+    from zerox_spark.operators.repartition import salted_repartition
+    from zerox_spark.schema import PAGES_SCHEMA
+    from zerox_spark.synth import render_pdf
+
+    heavy = (b"<html><body><article><p>"
+             + b"heavy words " * 200 + b"</p></article></body></html>")
+    payloads = [
+        (b"<html><body><article><p>alpha text</p></article></body></html>",
+         None, 3),
+        (None, "trusted text only", 2),
+        (render_pdf(4, " ".join(f"w{i}" for i in range(60))), None, 2),
+        (b"\x00\x01garbage\xff" * 10, None, 2),  # binary guard → ERROR
+        (heavy, None, 6),
+        (b"<html><body><article><p>single</p></article></body></html>",
+         "single text", 1),
+    ]
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        Row(url=f"https://mirror{r}.example/doc{d}?s={r}", warc_ts=ts,
+            html=h, text=t, lang="en")
+        for d, (h, t, n) in enumerate(payloads) for r in range(n)
+    ]
+    n_buckets = 8
+    monkeypatch.setattr(pipeline_mod, "salted_repartition", partial(
+        salted_repartition, skew_threshold=1000, salt_buckets=8
+    ))
+    pipe = ExtractionPipeline(
+        PipelineConfig(num_partitions=4, num_buckets=n_buckets)
+    )
+    pages = spark.createDataFrame(rows, PAGES_SCHEMA)
+    got = sorted(
+        (r.url, r.page_no, r.markdown, r.content_length, r.status,
+         r.error, tuple(tuple(s) for s in r.spans), r.partition_id,
+         r.warc_ts)
+        for r in pipe.transform(pages).collect()
+    )
+    bucket = {
+        r.url: r.b for r in pages.select(
+            "url", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).alias("b")
+        ).collect()
+    }
+    want = sorted(
+        (r.url, p.page_no, p.markdown, p.content_length, p.status,
+         p.error, tuple(tuple(s) for s in p.spans), bucket[r.url],
+         r.warc_ts)
+        for r in rows
+        for p in extract_document(r.html, r.text, pipe.config.extract)
+    )
+    assert got == want
+    assert {g[4] for g in got} == {"SUCCESS", "ERROR"}
+    assert max(g[1] for g in got) == 3  # the pdf's pages, folded
+    heavy_parts = {
+        r.p for r in salted_repartition(
+            pages.filter(F.length("html") > 1000), 4,
+            skew_threshold=1000, salt_buckets=8,
+        ).select(F.spark_partition_id().alias("p")).collect()
+    }
+    assert len(heavy_parts) > 1, "salt did not spread the heavy replicas"
+
+
 @pytest.fixture(scope="module")
 def fused_and_chained(spark, tmp_path_factory):
     """Rows (elapsed_ms dropped, url bucket added) of both shapes, keyed by

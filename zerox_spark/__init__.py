@@ -13,7 +13,8 @@ Architecture (all DataFrame-native):
 
     Iceberg/parquet scan of pages(url, warc_ts, html, text, lang)
       → resume anti-join vs committed lineage
-      → salted url-hash repartition (skew handling)
+      → salted content-hash repartition (skew handling), sorted so
+        copies of one payload under many urls are extracted once
       → fast-path routing (trusted pre-extracted text bypasses the DOM pass)
       → mapInPandas(extract_pages)  # vectorized Arrow UDF, the hot loop;
                                     # the maintainFormat fold runs per doc

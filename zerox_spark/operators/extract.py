@@ -60,9 +60,21 @@ _UDF_SCHEMA = T.StructType(
 _UDF_COLS = _UDF_SCHEMA.fieldNames()
 
 
+_NO_ROW = object()  # "no previous row": unequal to any (payload, text)
+
+
 def _extract_iter(
     batches: Iterator[pd.DataFrame], config: ExtractConfig
 ) -> Iterator[pd.DataFrame]:
+    # an identical neighbouring row reuses its predecessor's pages:
+    # extract_document is a pure function of (payload, text, config), and
+    # salted_repartition sorts each partition on the content hash, so
+    # replicas of one payload under many urls arrive adjacent. Equality is
+    # exact (bytes and str), never the hash; memory is one document's
+    # pages, which the per-document budgets bound. On unsorted input the
+    # reuse simply never fires.
+    prev_key: object = _NO_ROW
+    pages: list = []
     for pdf in batches:
         t0 = time.monotonic()
         # columnar accumulation: pd.DataFrame(dict-of-lists) skips the
@@ -79,7 +91,10 @@ def _extract_iter(
             pdf["url"], pdf["html"], pdf["text"], pdf["warc_ts"]
         ):
             payload = bytes(html) if html is not None else None
-            for page in extract_document(payload, text, config):
+            if prev_key != (payload, text):
+                prev_key = (payload, text)
+                pages = extract_document(payload, text, config)
+            for page in pages:
                 c_url.append(url)
                 c_no.append(page.page_no)
                 c_md.append(page.markdown)

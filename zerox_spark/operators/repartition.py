@@ -1,4 +1,4 @@
-"""Salted url-hash repartitioning — explicit skew handling (north_rule).
+"""Salted content-hash repartitioning — explicit skew handling (north_rule).
 
 Why explicit: this is a map-heavy job, and AQE's skew mitigation
 (spark.sql.adaptive.skewJoin) only rebalances *shuffle reads for joins*; it
@@ -6,19 +6,27 @@ cannot split the work of a single pathological row (a 200x-median document,
 FIXTURES.md e04), nor does it fire at all on a shuffle-less scan→UDF plan.
 So the job plans its own layout:
 
-- partition key: ``xxhash64(url)`` — co-locates all rows of a url (required
-  for the maintainFormat fold and idempotent per-url overwrite) while
-  spreading urls uniformly;
+- partition key: ``xxhash64(html, text)`` — the content, not the url.
+  Crawls store the same bytes under many urls (mirrors, query-string
+  variants, session ids; Common Crawl's ``WARC-Payload-Digest``), and a
+  content key sends every copy to the same task, where the partition is
+  sorted on the same key so the copies arrive adjacent and the extract UDF
+  (operators/extract.py ``_extract_iter``) extracts them once. Nothing
+  downstream needs url co-location: the maintainFormat fold runs inside
+  ``extract_document`` over one document's pages, and ``partition_id`` —
+  the url bucket the sink overwrites by — is projected from the url after
+  the UDF;
 - salt: rows whose payload exceeds ``skew_threshold`` bytes get a per-row
-  salt derived from ``xxhash64(url, warc_ts)``, spreading heavy *documents of
-  the same site/url-prefix* across ``salt_buckets`` partitions instead of
-  piling onto one. The salt is deterministic (no rand()) so replays land in
-  the same partition — resume-safe.
+  salt derived from ``xxhash64(url, warc_ts)``, spreading heavy rows —
+  including many replicas of one heavy payload — across ``salt_buckets``
+  partitions instead of piling onto one. The salt is deterministic (no
+  rand()) so replays land in the same partition — resume-safe.
 
 At 100 TB: partition count should target ~128-256 MB of html per task
 (set ``num_partitions`` ≈ input_bytes / 200MB via job.py); the shuffle this
 repartition introduces is the job's only full shuffle and is what buys even
-task runtimes on skewed crawl data.
+task runtimes on skewed crawl data. The sort within each partition adds no
+shuffle; it spills like any Spark sort.
 """
 
 from __future__ import annotations
@@ -35,13 +43,17 @@ def salted_repartition(
     skew_threshold: int = DEFAULT_SKEW_THRESHOLD,
     salt_buckets: int = DEFAULT_SALT_BUCKETS,
 ) -> DataFrame:
-    """Repartition by (url-hash, conditional salt)."""
+    """Repartition by (content hash, conditional salt), then sort each
+    partition on the content hash so identical payloads are adjacent."""
     salt = F.when(
         F.length(F.col("html")) > F.lit(skew_threshold),
         F.pmod(F.xxhash64("url", "warc_ts"), F.lit(salt_buckets)),
     ).otherwise(F.lit(0))
-    return pages.repartition(
-        num_partitions, F.xxhash64("url"), salt.alias("_salt")
+    return (
+        pages.withColumn("_content", F.xxhash64("html", "text"))
+        .repartition(num_partitions, F.col("_content"), salt.alias("_salt"))
+        .sortWithinPartitions("_content")
+        .drop("_content")
     )
 
 

@@ -1,6 +1,7 @@
 """End-to-end job assembly (SURVEY.md §3.4 lifecycle).
 
-    scan → resume-filter → salted repartition → extract (+inline fold)
+    scan → resume-filter → salted content-hash repartition
+         → extract (+inline fold, identical neighbours extracted once)
          → write extracted (bucket-partitioned, dynamic overwrite)
          → lineage agg → append lineage → snapshot commit
 
@@ -80,8 +81,10 @@ class ExtractionPipeline:
                 )
                 .select("url", "_r.warc_ts", "_r.html", "_r.text", "_r.lang")
             )
-            # already hash-partitioned by url from the groupBy; the salted
-            # repartition below still runs to split heavy-row skew.
+            # hash-partitioned by url from the groupBy; the salted
+            # repartition below re-partitions by content, so the copies of
+            # one payload under many urls meet and are extracted once,
+            # and splits heavy-row skew.
         repartitioned = salted_repartition(pages, cfg.num_partitions)
         return extract_pages(repartitioned, cfg.extract, cfg.num_buckets)
 

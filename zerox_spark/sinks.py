@@ -115,7 +115,12 @@ class ParquetSnapshotSink:
                 self.lineage_path
             )
         except Exception:  # first run: no lineage yet
-            return spark.createDataFrame([], LINEAGE_SCHEMA)
+            # emptyRDD has 0 partitions, so the resume and lineage
+            # anti-joins launch no tasks over it; createDataFrame([]) is a
+            # Python-backed RDD of defaultParallelism Python tasks
+            return spark.createDataFrame(
+                spark.sparkContext.emptyRDD(), LINEAGE_SCHEMA
+            )
 
     def read_extracted(self, spark: SparkSession) -> DataFrame:
         """All row versions (plus the _snap version column). Explicit
