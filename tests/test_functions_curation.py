@@ -369,19 +369,6 @@ class TestSequencePacking:
                 assert r.seq_last == last // 64
                 assert r.seq_last >= r.seq_first
 
-    def test_stats_fill_ratio(self, spark):
-        from zerox_spark.operators.packing import (
-            pack_sequences,
-            packing_stats,
-        )
-
-        placed = pack_sequences(self._docs(spark), seq_len=64, n_shards=4)
-        stats = {r.shard: r for r in packing_stats(placed, 64).collect()}
-        for shard, r in stats.items():
-            assert r.n_seqs == -(-r.total_tokens // 64)
-            assert 0 < r.fill_ratio <= 1.0
-            assert r.n_docs == 50
-
     def test_no_global_sort_in_plan(self, spark):
         # the scale contract (round 6, two-level): never a global
         # (rangepartitioned) sort; the window over the FULL corpus

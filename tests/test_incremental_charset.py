@@ -25,7 +25,7 @@ def _page(url, ts_sec, body):
 def test_incremental_processes_only_new_rows(spark, tmp_path):
     sink = ParquetSnapshotSink(str(tmp_path / "s"))
     pipe = ExtractionPipeline(
-        PipelineConfig(num_partitions=2, num_buckets=4, dedupe_latest_warc_ts=False)
+        PipelineConfig(num_partitions=2, num_buckets=4)
     )
     old = spark.createDataFrame([_page("https://i/1", 10, "old one"),
                                  _page("https://i/2", 20, "old two")], PAGES_SCHEMA)
@@ -85,7 +85,7 @@ def test_charset_lying_declaration_recovers():
 def test_incremental_recrawl_latest_wins(spark, tmp_path):
     sink = ParquetSnapshotSink(str(tmp_path / "s2"))
     pipe = ExtractionPipeline(
-        PipelineConfig(num_partitions=2, num_buckets=4, dedupe_latest_warc_ts=False)
+        PipelineConfig(num_partitions=2, num_buckets=4)
     )
     v1 = spark.createDataFrame([_page("https://r/1", 10, "version one")], PAGES_SCHEMA)
     pipe.run(spark, v1, sink, job_id="d1", incremental=True)
@@ -93,10 +93,10 @@ def test_incremental_recrawl_latest_wins(spark, tmp_path):
         spark.createDataFrame([_page("https://r/1", 40, "version two")], PAGES_SCHEMA)
     )
     pipe.run(spark, recrawl, sink, job_id="d2", incremental=True)
-    # both versions exist physically (the >= watermark boundary also
-    # re-appends d1's boundary row — split-second deliveries must never be
-    # LOST, and the latest-version dedupe absorbs the re-emission); the
-    # latest view resolves to exactly v2
+    # both versions exist physically: d1 appended v1 and d2 appended v2
+    # (the >= watermark boundary lets v1 into d2's input too, and the
+    # in-run newest-crawl dedupe keeps only v2 of it); the latest view
+    # resolves to exactly v2
     assert sink.read_extracted(spark).filter("url='https://r/1'").count() >= 2
     latest = sink.read_extracted_latest(spark).filter("url='https://r/1'").collect()
     assert len(latest) == 1 and "version two" in latest[0].markdown
@@ -108,7 +108,7 @@ def test_incremental_boundary_split_second_not_lost(spark, tmp_path):
     processed — the strict > filter would drop them forever."""
     sink = ParquetSnapshotSink(str(tmp_path / "s3"))
     pipe = ExtractionPipeline(
-        PipelineConfig(num_partitions=2, num_buckets=4, dedupe_latest_warc_ts=False)
+        PipelineConfig(num_partitions=2, num_buckets=4)
     )
     first = spark.createDataFrame([_page("https://b/1", 10, "early half")], PAGES_SCHEMA)
     pipe.run(spark, first, sink, job_id="d1", incremental=True)

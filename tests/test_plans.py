@@ -193,42 +193,6 @@ def test_minhash_signature_computed_once_per_plan(spark):
     assert plan.count("pmod") < 3000, "signature subtree duplicated in plan"
 
 
-def test_bucketed_tables_join_without_exchange(spark, tmp_path):
-    """Two tables bucketed identically on the join key must sort-merge-join
-    with ZERO exchange on either side — the co-located layout the extracted
-    table uses for its downstream consumers at scale (sinks.write_bucketed)."""
-    from zerox_spark.sinks import write_bucketed
-
-    try:
-        left = spark.range(0, 2000).selectExpr(
-            "concat('u', id) AS url", "id AS a"
-        )
-        right = spark.range(0, 2000).selectExpr(
-            "concat('u', id) AS url", "id * 2 AS b"
-        )
-        write_bucketed(left, "bk_left", 8, str(tmp_path / "l"))
-        write_bucketed(right, "bk_right", 8, str(tmp_path / "r"))
-        with_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = spark.table("bk_left").join(
-                spark.table("bk_right"), "url"
-            )
-            plan = plan_of(joined)
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan, (
-                "bucketed join must not shuffle either side"
-            )
-            assert joined.count() == 2000
-        finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", with_thresh
-            )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bk_left")
-        spark.sql("DROP TABLE IF EXISTS bk_right")
-
-
 def test_decontaminate_broadcast_and_filter_first(spark):
     """The benchmark gram match must be a broadcast join, and the corpus
     side must NOT shuffle its exploded grams before the match (the
@@ -350,47 +314,6 @@ def test_decontaminate_fuzzy_benchmark_side_broadcast(spark):
     # (candidates) and shingle arrays (verification) — losing any one of
     # them means the corpus shuffles for the match
     assert plan.count("broadcastexchange") >= 3
-
-
-def test_substring_overlap_catches_shared_passage(spark):
-    """Two documents sharing one long verbatim paragraph but nothing else
-    sit below any whole-doc Jaccard threshold (MinHash misses them); the
-    winnowing fingerprint join must flag the pair."""
-    from zerox_spark.operators.dedup import (
-        dedup_ngram_pairs,
-        substring_overlap_pairs,
-    )
-
-    passage = " ".join(f"shared passage word{i} stays verbatim" for i in range(30))
-    doc_a = " ".join(f"alpha unique{i} content{i*3}" for i in range(120)) + " " + passage
-    doc_b = passage + " " + " ".join(f"beta other{i} stuff{i*7}" for i in range(120))
-    doc_c = " ".join(f"gamma unrelated{i} text{i*11}" for i in range(140))
-    docs = spark.createDataFrame(
-        [(1, doc_a), (2, doc_b), (3, doc_c)], "doc_id long, text string"
-    )
-    pairs = {
-        (r.id_a, r.id_b): r.shared_fp
-        for r in substring_overlap_pairs(docs, min_shared=10).collect()
-    }
-    assert (1, 2) in pairs and pairs[(1, 2)] >= 10
-    assert (1, 3) not in pairs and (2, 3) not in pairs
-    # and the whole-doc Jaccard view indeed misses the pair at 0.5
-    jac = dedup_ngram_pairs(docs, threshold=0.5).collect()
-    assert not any({r.id_a, r.id_b} == {1, 2} for r in jac)
-
-
-def test_substring_overlap_viral_guard(spark):
-    from zerox_spark.operators.dedup import substring_overlap_pairs
-
-    boiler = " ".join(f"boilerplate footer word{i} repeated" for i in range(30))
-    docs = spark.createDataFrame(
-        [(i, f"doc{i} " * 40 + boiler) for i in range(30)],
-        "doc_id long, text string",
-    )
-    capped = substring_overlap_pairs(docs, min_shared=10, max_bucket=5).count()
-    uncapped = substring_overlap_pairs(docs, min_shared=10).count()
-    assert uncapped == 30 * 29 // 2  # every pair shares the passage
-    assert capped == 0  # viral fingerprints dropped before the join
 
 
 def test_every_query_is_registered():

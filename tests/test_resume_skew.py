@@ -3,6 +3,10 @@ and salted-skew partition distribution."""
 
 from __future__ import annotations
 
+import datetime
+import os
+
+import pytest
 from pyspark.sql import Row, functions as F
 
 from tests.conftest import SF_SMOKE
@@ -83,3 +87,163 @@ def test_salted_repartition_spreads_heavy_rows(spark):
         r.p for r in rep2.select(F.spark_partition_id().alias("p")).collect()
     }
     assert len(parts2) == 1, "light same-url rows must stay co-located"
+
+
+def _pages(spark, urls, body="page"):
+    return spark.createDataFrame(
+        [
+            Row(
+                url=u,
+                warc_ts=datetime.datetime(2024, 1, 1, 0, 0, i % 60),
+                # one null payload: an ERROR row in every sequence
+                html=None if u.endswith("/7") else (
+                    f"<html><body><article><p>{body} {u} with enough "
+                    "words to count as content</p></article></body></html>"
+                ).encode(),
+                text=None,
+                lang="en",
+            )
+            for i, u in enumerate(urls)
+        ],
+        PAGES_SCHEMA,
+    )
+
+
+def _reference_stats(spark, sink) -> dict:
+    """The summary as one pass over the latest table: the formula the
+    per-bucket fold must reproduce."""
+    return (
+        sink.read_extracted_latest(spark)
+        .agg(
+            F.count_distinct("url").alias("total_docs"),
+            F.count(F.lit(1)).alias("total_pages"),
+            F.sum(F.when(F.col("status") == "SUCCESS", 1).otherwise(0)).alias(
+                "successful"
+            ),
+            F.sum(F.when(F.col("status") == "ERROR", 1).otherwise(0)).alias(
+                "failed"
+            ),
+            F.sum("content_length").alias("total_content_length"),
+        )
+        .collect()[0]
+        .asDict()
+    )
+
+
+def _lineage_buckets(spark, sink, job_id) -> list[int]:
+    return sorted(
+        r.partition_id
+        for r in sink.read_lineage(spark).filter(F.col("job_id") == job_id)
+        .collect()
+    )
+
+
+def _stats(spark, pipe, pages, sink, **kw) -> dict:
+    stats = pipe.run(spark, pages, sink, **kw)
+    stats.pop("job_id")
+    assert stats == _reference_stats(spark, sink)
+    return stats
+
+
+def test_lineage_holds_only_the_buckets_a_job_wrote(spark, tmp_path):
+    """Job B writes one bucket of a sink job A filled: B's lineage holds
+    that bucket alone (it used to claim all four), while B's summary still
+    covers the whole table, where B's overwrite replaced A's bucket."""
+    from zerox_spark.operators.repartition import partition_bucket
+
+    sink = ParquetSnapshotSink(str(tmp_path / "ab"))
+    pipe = ExtractionPipeline(PipelineConfig(num_partitions=2, num_buckets=4))
+    a_urls = [f"https://ab/{i}" for i in range(40)]
+    a = _pages(spark, a_urls)
+    bucket_of = {
+        r.url: r.b
+        for r in a.select("url", partition_bucket(4).alias("b")).collect()
+    }
+    assert set(bucket_of.values()) == {0, 1, 2, 3}
+    stats_a = _stats(spark, pipe, a, sink, job_id="A")
+    assert stats_a["total_docs"] == 40 and stats_a["failed"] == 1
+    assert _lineage_buckets(spark, sink, "A") == [0, 1, 2, 3]
+
+    b_url = "https://ab/1"
+    stats_b = _stats(
+        spark, pipe, _pages(spark, [b_url], body="rewritten"), sink,
+        job_id="B",
+    )
+    assert _lineage_buckets(spark, sink, "B") == [bucket_of[b_url]]
+    replaced = sum(1 for b in bucket_of.values() if b == bucket_of[b_url])
+    assert stats_b["total_docs"] == 40 - replaced + 1
+
+
+def test_summary_fold_equals_one_pass_over_the_table(spark, tmp_path):
+    """The summary folded from per-bucket rows equals the one-pass
+    aggregate over the latest table after every run of a crashed-then-
+    resumed job and of an incremental sequence, and a resumed job's
+    lineage holds only the buckets the retry wrote."""
+    from zerox_spark.operators.repartition import partition_bucket
+
+    pipe = ExtractionPipeline(PipelineConfig(num_partitions=2, num_buckets=4))
+    urls = [f"https://rs/{i}" for i in range(24)]
+    pages = _pages(spark, urls)
+
+    sink = ParquetSnapshotSink(str(tmp_path / "resume"))
+    _stats(spark, pipe, pages.filter(partition_bucket(4) < 2), sink,
+           job_id="r")
+    assert _lineage_buckets(spark, sink, "r") == [0, 1]
+    stats = _stats(spark, pipe, pages, sink, job_id="r")
+    assert stats["total_docs"] == 24
+    assert _lineage_buckets(spark, sink, "r") == [0, 1, 2, 3]
+
+    sink = ParquetSnapshotSink(str(tmp_path / "incremental"))
+    for day, n in (("d1", 8), ("d2", 16), ("d3", 16)):
+        stats = _stats(spark, pipe, _pages(spark, urls[:n]), sink,
+                       job_id=day, incremental=True)
+        assert stats["total_docs"] == n
+
+
+def test_empty_input_summary(spark, tmp_path):
+    sink = ParquetSnapshotSink(str(tmp_path / "empty"))
+    pipe = ExtractionPipeline(PipelineConfig(num_partitions=2, num_buckets=4))
+    stats = pipe.run(spark, _pages(spark, []), sink, job_id="e")
+    assert stats == {
+        "job_id": "e", "total_docs": 0, "total_pages": 0,
+        "successful": None, "failed": None, "total_content_length": None,
+    }
+    assert sink.read_lineage(spark).count() == 0
+
+
+def test_sink_refuses_a_second_bucket_count(spark, tmp_path):
+    """A sink keeps the bucket count of its first run, even one that
+    crashed during extraction; a run with another count raises before it
+    extracts and leaves extracted/ as it was."""
+    def listing(root):
+        return sorted(
+            (d, f, os.path.getmtime(os.path.join(d, f)))
+            for d, _, files in os.walk(root) for f in files
+        )
+
+    pages = _pages(spark, [f"https://nb/{i}" for i in range(8)])
+    crashed = ParquetSnapshotSink(str(tmp_path / "crashed"))
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("executor lost")
+
+    crashed.write_extracted = crash
+    with pytest.raises(RuntimeError):
+        ExtractionPipeline(
+            PipelineConfig(num_partitions=2, num_buckets=16)
+        ).run(spark, pages, crashed, job_id="x")
+    with pytest.raises(ValueError, match="16 buckets"):
+        ExtractionPipeline(
+            PipelineConfig(num_partitions=2, num_buckets=32)
+        ).run(spark, pages, ParquetSnapshotSink(crashed.root), job_id="x")
+
+    sink = ParquetSnapshotSink(str(tmp_path / "done"))
+    ExtractionPipeline(PipelineConfig(num_partitions=2, num_buckets=4)).run(
+        spark, pages, sink, job_id="y"
+    )
+    before = listing(sink.extracted_path)
+    with pytest.raises(ValueError, match="4 buckets"):
+        ExtractionPipeline(
+            PipelineConfig(num_partitions=2, num_buckets=8)
+        ).run(spark, pages, sink, job_id="y")
+    assert listing(sink.extracted_path) == before

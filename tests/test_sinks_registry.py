@@ -233,3 +233,34 @@ def test_fresh_sink_lineage_launches_no_tasks(spark, tmp_path):
     assert lin.schema == LINEAGE_SCHEMA
     assert lin.rdd.getNumPartitions() == 0
     assert lin.collect() == []
+
+
+def test_commit_after_write_job_count(spark, tmp_path):
+    """Spark jobs a fresh-sink run launches after write_extracted returns:
+    the per-bucket aggregate, the lineage append, the summary fold and the
+    watermark's lineage re-read. On this input the formulation that
+    persisted the whole latest table and aggregated it twice launched 10;
+    one checkpointed aggregate launches 9."""
+    from zerox_spark.pipeline import ExtractionPipeline, PipelineConfig
+    from zerox_spark.sinks import ParquetSnapshotSink
+    from zerox_spark.synth import synth_pages
+
+    sc = spark.sparkContext
+    group = f"after-write-{tmp_path.name}"
+    sink = ParquetSnapshotSink(str(tmp_path / "fresh"))
+    write = sink.write_extracted
+
+    def write_then_tag(*args, **kwargs):
+        write(*args, **kwargs)
+        sc.setJobGroup(group, "jobs after write_extracted")
+
+    sink.write_extracted = write_then_tag
+    pipe = ExtractionPipeline(PipelineConfig(num_partitions=4, num_buckets=8))
+    try:
+        pipe.run(spark, synth_pages(spark, SF_SMOKE), sink, job_id="jobs")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 9

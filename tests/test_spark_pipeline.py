@@ -115,7 +115,7 @@ def test_error_rows_contained_not_fatal(spark):
         PAGES_SCHEMA,
     )
     pipe = ExtractionPipeline(
-        PipelineConfig(num_partitions=2, num_buckets=4, dedupe_latest_warc_ts=False)
+        PipelineConfig(num_partitions=2, num_buckets=4)
     )
     got = {r.url: r for r in pipe.transform(pages).collect()}
     assert got["https://x/1"].status == "ERROR"
@@ -519,17 +519,13 @@ def test_ann_ivf_empty_centroid_sample_raises(spark):
 
 
 def test_resize_and_frame_sample_plumbing(spark):
-    """Multimodal resize + frame-sample: real schemas/batching/fan-out with
-    the deterministic stub codec — exact expected values per contract."""
+    """Multimodal frame-sample: real schema/batching/fan-out with the
+    deterministic stub codec — exact expected values per contract."""
     import hashlib
 
     from pyspark.sql import Row
 
-    from zerox_spark.operators.multimodal import (
-        FRAME_MOD,
-        resize_media,
-        sample_frames,
-    )
+    from zerox_spark.operators.multimodal import FRAME_MOD, sample_frames
 
     pages = spark.createDataFrame(
         [
@@ -538,16 +534,6 @@ def test_resize_and_frame_sample_plumbing(spark):
             Row(url="u3", html=None),
         ]
     )
-    resized = {r.url: r for r in resize_media(pages, 32, 16).collect()}
-    assert set(resized) == {"u1", "u2", "u3"}
-    seed = hashlib.sha256(
-        b"\x89PNGfakebytes"
-        + (32).to_bytes(4, "little")
-        + (16).to_bytes(4, "little")
-    ).digest()
-    assert bytes(resized["u1"].payload) == (seed * 8)[:256]
-    assert (resized["u1"].width, resized["u1"].height) == (32, 16)
-
     frames = sample_frames(pages).collect()
     by_url: dict = {}
     for r in frames:

@@ -18,7 +18,8 @@ Architecture (all DataFrame-native):
       → fast-path routing (trusted pre-extracted text bypasses the DOM pass)
       → mapInPandas(extract_pages)  # vectorized Arrow UDF, the hot loop;
                                     # the maintainFormat fold runs per doc
-      → write extracted(url, page_no, markdown, spans) + per-partition lineage
+      → write extracted(url, page_no, markdown, spans)
+      → one per-bucket aggregate → lineage + job summary
 """
 
 __version__ = "0.1.0"

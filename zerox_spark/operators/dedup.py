@@ -409,59 +409,6 @@ def dedup_minhash_pairs(
     )
 
 
-def substring_overlap_pairs(
-    docs: DataFrame,
-    min_shared: int = 8,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Exact-substring overlap candidates (the Lee et al. 2022
-    'Deduplicating Training Data' failure mode MinHash misses): two
-    documents sharing one long VERBATIM passage — a quoted paragraph, a
-    license block, a syndicated lead — can sit far below any
-    whole-document Jaccard threshold while still being the duplication
-    that hurts training. Winnowing guarantees any shared run of at least
-    window+k-1 characters shares at least one fingerprint, so a
-    fingerprint-bucket join finds these pairs WITHOUT suffix arrays:
-
-    (id_a, id_b, shared_fp) for pairs sharing >= ``min_shared`` distinct
-    winnowing fingerprints. Fingerprints hash CHARACTER k-grams, so two
-    unrelated documents routinely coincide on a few short windows —
-    min_shared is the precision knob (a genuinely shared paragraph
-    contributes dozens of fingerprints; measured noise floor on unrelated
-    synthetic docs is ~6).
-
-    Scale shape: explode per-doc fingerprints (bounded: ~1 per window of
-    text) → self-join on the fingerprint value → pair count. Same plan
-    family as the LSH band join, same ``max_bucket`` viral guard — a
-    fingerprint appearing in thousands of documents IS boilerplate and
-    belongs to line dedup."""
-    from zerox_spark.operators.textstats import fingerprints
-
-    fp = fingerprints(docs).select(
-        "doc_id", F.explode(F.array_distinct("fp")).alias("f")
-    )
-    if max_bucket is not None:
-        fp = drop_viral_buckets(fp, ["f"], max_bucket)
-    a = fp.alias("a")
-    b = fp.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.f") == F.col("b.f"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-        )
-        # both sides explode DISTINCT fingerprints, so each shared value
-        # yields exactly one joined row — plain count == countDistinct,
-        # without the two-phase distinct agg over the join output
-        .agg(F.count(F.lit(1)).alias("shared_fp"))
-        .filter(F.col("shared_fp") >= min_shared)
-    )
-
-
 # ---------------------------------------------------------------------------
 # SimHash
 

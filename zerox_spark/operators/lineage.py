@@ -1,17 +1,34 @@
-"""Per-partition lineage/metrics — replaces ZeroxOutput.summary +
+"""Per-bucket lineage and the job summary — replaces ZeroxOutput.summary +
 completionTime (node-zerox/src/types.ts:260-270, index.ts:574-606) at
-partition granularity (SURVEY.md §4.3, FIXTURES.md §4).
+bucket granularity (SURVEY.md §4.3, FIXTURES.md §4).
 
-The metrics are a grouped aggregation over the raw extract output's carrier
-columns (partition_id, elapsed_ms) — a tiny shuffle (one row per partition)
-that Catalyst executes with map-side partial aggregation, so the cost at
-100 TB is negligible next to the extract itself.
+``bucket_aggregate`` is the one per-bucket formula: a grouped aggregation
+over the extract output's carrier columns (partition_id, elapsed_ms, ...)
+that Catalyst runs with map-side partial aggregation into at most
+``num_buckets`` rows. ``lineage_rows`` is a projection of those rows and
+``summary`` a fold of them, so the lineage table and the job summary can
+never disagree, and a job computes both from one small cached result
+(pipeline.run).
+
+The fold is exact. ``partition_id`` is a function of the url
+(repartition.partition_bucket), so the buckets partition the urls and
+Σ doc_count = Σ count(distinct url in bucket) = count(distinct url). Row
+counts and the status/length sums add across any partition of the rows.
+This needs one bucket count per table, which the sink enforces
+(ParquetSnapshotSink.check_num_buckets). Over an empty table the fold
+keeps the single-pass aggregate's output: 0 docs and 0 pages, null sums.
 
 checksum: order-insensitive XOR of xxhash64(url, page_no, markdown) per
-partition, rendered as a string. Bitwise-stable across replays, independent
+bucket, rendered as a string. Bitwise-stable across replays, independent
 of row arrival order (and immune to ANSI-mode long overflow, unlike sum),
 and cheap to recompute for audit; (url, page_no) uniqueness means XOR's
 duplicate-cancellation cannot trigger.
+
+_snap: on sink rows the aggregate also carries the bucket's newest
+snapshot id. A run owns the buckets whose ``_snap`` is its own snapshot
+id: a dynamic overwrite leaves only this run's rows in a bucket it wrote,
+an incremental append makes them the bucket's newest, and a bucket the run
+did not write keeps the older id it had (pipeline.run).
 """
 
 from __future__ import annotations
@@ -21,52 +38,61 @@ from pyspark.sql import DataFrame, functions as F
 from zerox_spark.extract.core import STATUS_ERROR
 
 
-def lineage_rows(raw_extracted: DataFrame, job_id: str) -> DataFrame:
-    """raw extract output → one lineage row per partition (LINEAGE_SCHEMA)."""
-    return (
-        raw_extracted.groupBy("partition_id")
-        .agg(
-            F.count_distinct("url").alias("doc_count"),
-            F.count(F.lit(1)).alias("page_count"),
-            F.bit_xor(F.xxhash64("url", "page_no", "markdown")).alias("_cksum"),
-            F.sum("elapsed_ms").alias("elapsed_ms"),
-            F.min(F.xxhash64("url")).alias("_hmin"),
-            F.max(F.xxhash64("url")).alias("_hmax"),
-            F.sum(
-                F.when(F.col("status") == STATUS_ERROR, 1).otherwise(0)
-            ).alias("_errors"),
-            F.max("warc_ts").alias("max_warc_ts"),
-        )
-        .select(
-            F.lit(job_id).alias("job_id"),
-            F.col("partition_id"),
-            F.concat_ws(":", F.col("_hmin"), F.col("_hmax")).alias("input_split"),
-            F.col("doc_count"),
-            F.col("page_count"),
-            F.col("_cksum").cast("string").alias("checksum"),
-            F.col("elapsed_ms"),
-            F.when(F.col("_errors") > 0, F.lit("PARTIAL"))
-            .otherwise(F.lit("SUCCESS"))
-            .alias("status"),
-            # per-bucket crawl high-watermark: max over the lineage table is
-            # the sink's incremental watermark — computed from written rows,
-            # never by re-scanning the input (pipeline.run)
-            F.col("max_warc_ts"),
-        )
+def bucket_aggregate(extracted: DataFrame) -> DataFrame:
+    """Extract output (or a sink's latest rows) → one row per bucket:
+    the lineage columns, the SUCCESS/ERROR counts, the content_length sum
+    and, on sink rows, ``max(_snap)`` (null for raw extract output)."""
+    snap = (
+        F.max("_snap") if "_snap" in extracted.columns
+        else F.lit(None).cast("int")
     )
-
-
-def summary(raw_extracted: DataFrame) -> DataFrame:
-    """Job-level Summary analog (totalPages, ocr successful/failed —
-    node-zerox/src/types.ts:260-270) as a 1-row DataFrame."""
-    return raw_extracted.agg(
-        F.count_distinct("url").alias("total_docs"),
-        F.count(F.lit(1)).alias("total_pages"),
+    return extracted.groupBy("partition_id").agg(
+        F.count_distinct("url").alias("doc_count"),
+        F.count(F.lit(1)).alias("page_count"),
+        F.bit_xor(F.xxhash64("url", "page_no", "markdown")).alias("_cksum"),
+        F.sum("elapsed_ms").alias("elapsed_ms"),
+        F.min(F.xxhash64("url")).alias("_hmin"),
+        F.max(F.xxhash64("url")).alias("_hmax"),
         F.sum(F.when(F.col("status") == "SUCCESS", 1).otherwise(0)).alias(
             "successful"
         ),
         F.sum(F.when(F.col("status") == STATUS_ERROR, 1).otherwise(0)).alias(
             "failed"
         ),
+        F.sum("content_length").alias("content_length"),
+        # per-bucket crawl high-watermark: max over the lineage table is
+        # the sink's incremental watermark — computed from written rows,
+        # never by re-scanning the input (pipeline.run)
+        F.max("warc_ts").alias("max_warc_ts"),
+        snap.alias("_snap"),
+    )
+
+
+def lineage_rows(buckets: DataFrame, job_id: str) -> DataFrame:
+    """``bucket_aggregate`` rows → lineage rows (LINEAGE_SCHEMA)."""
+    return buckets.select(
+        F.lit(job_id).alias("job_id"),
+        F.col("partition_id"),
+        F.concat_ws(":", F.col("_hmin"), F.col("_hmax")).alias("input_split"),
+        F.col("doc_count"),
+        F.col("page_count"),
+        F.col("_cksum").cast("string").alias("checksum"),
+        F.col("elapsed_ms"),
+        F.when(F.col("failed") > 0, F.lit("PARTIAL"))
+        .otherwise(F.lit("SUCCESS"))
+        .alias("status"),
+        F.col("max_warc_ts"),
+    )
+
+
+def summary(buckets: DataFrame) -> DataFrame:
+    """``bucket_aggregate`` rows → the job-level Summary analog
+    (totalPages, ocr successful/failed — node-zerox/src/types.ts:260-270)
+    as a 1-row DataFrame."""
+    return buckets.agg(
+        F.coalesce(F.sum("doc_count"), F.lit(0)).alias("total_docs"),
+        F.coalesce(F.sum("page_count"), F.lit(0)).alias("total_pages"),
+        F.sum("successful").alias("successful"),
+        F.sum("failed").alias("failed"),
         F.sum("content_length").alias("total_content_length"),
     )

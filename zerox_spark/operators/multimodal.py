@@ -125,21 +125,11 @@ def media_metadata(pages: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# resize + frame-sample plumbing (brief: "decode / feature-extract / resize /
+# frame-sample plumbing (brief: "decode / feature-extract / resize /
 # frame-sample as Pandas UDFs over mapInPandas"). The codec work rides the
-# same stub contract as _decode_image: deterministic byte-derived fakes in
-# this container, a real PIL branch for resize when the lib is importable;
-# the Spark-side shape — schemas, Arrow batching, per-input fan-out — is
-# real and tested either way.
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ]
-)
+# same stub contract as _decode_image: deterministic byte-derived fakes
+# without ffmpeg; the Spark-side shape — schema, Arrow batching, per-input
+# fan-out — is real and tested either way.
 
 FRAMES_SCHEMA = T.StructType(
     [
@@ -154,54 +144,6 @@ FRAMES_SCHEMA = T.StructType(
 # a payload yields 1 + n_bytes % FRAME_MOD frames
 FRAME_MOD = 5
 FRAME_INTERVAL_MS = 1000
-
-
-def _resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """Real PIL resize (deterministic PNG re-encode) when available; else a
-    deterministic fake: sha256(payload, dims) keystream, 256 bytes."""
-    if HAVE_PIL:  # pragma: no cover - not present in this container
-        import io
-
-        try:
-            img = PIL.Image.open(io.BytesIO(payload))
-            out = io.BytesIO()
-            img.resize((width, height), PIL.Image.BILINEAR).save(
-                out, format="PNG"
-            )
-            return out.getvalue()
-        except Exception:
-            pass  # malformed image → deterministic stub below
-    seed = hashlib.sha256(
-        payload + width.to_bytes(4, "little") + height.to_bytes(4, "little")
-    ).digest()
-    return (seed * 8)[:256]
-
-
-def resize_media(pages, width: int = 64, height: int = 64):
-    """pages(url, html, …) → (url, width, height, payload): per-row binary
-    transform in one mapInPandas pass (the convertHeicToJpeg-shaped
-    operator, node-zerox/src/utils/file.ts:101-126)."""
-
-    def it(batches):
-        for pdf in batches:
-            rows = [
-                (
-                    url,
-                    width,
-                    height,
-                    _resize_image(
-                        bytes(p) if p is not None else b"", width, height
-                    ),
-                )
-                for url, p in zip(pdf["url"], pdf["html"])
-            ]
-            yield pd.DataFrame(
-                rows, columns=["url", "width", "height", "payload"]
-            )
-
-    return pages.select("url", "html").mapInPandas(
-        it, schema=RESIZED_SCHEMA
-    )
 
 
 def sample_frames(pages, interval_ms: int = FRAME_INTERVAL_MS):

@@ -127,22 +127,3 @@ def pack_sequences(
         F.floor(last_tok / seq_len).cast("long").alias("seq_last"),
     )
 
-
-def packing_stats(placed: DataFrame, seq_len: int = 2048) -> DataFrame:
-    """Shard-level packing accounting over pack_sequences output:
-    (shard, n_docs, total_tokens, n_seqs, fill_ratio, boundary_crossings).
-    fill_ratio is the fraction of the last-sequence-padded token budget
-    actually used — the number a seq_len sweep optimizes."""
-    return placed.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("total_tokens"),
-        F.ceil(F.sum("n_tokens") / seq_len).cast("long").alias("n_seqs"),
-        F.round(
-            F.sum("n_tokens")
-            / (F.ceil(F.sum("n_tokens") / seq_len) * F.lit(seq_len)),
-            6,
-        ).alias("fill_ratio"),
-        F.sum(F.col("seq_last") - F.col("seq_first"))
-        .cast("long")
-        .alias("boundary_crossings"),
-    )

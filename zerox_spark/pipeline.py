@@ -1,14 +1,21 @@
 """End-to-end job assembly (SURVEY.md §3.4 lifecycle).
 
-    scan → resume-filter → salted content-hash repartition
+    scan → newest crawl per url → resume filter
+         → salted content-hash repartition
          → extract (+inline fold, identical neighbours extracted once)
-         → write extracted (bucket-partitioned, dynamic overwrite)
-         → lineage agg → append lineage → snapshot commit
+         → write extracted (bucket-partitioned: dynamic overwrite, or a
+           versioned append in incremental mode)
+         → per-bucket aggregate of the latest table (≤ num_buckets rows)
+         → append lineage for the buckets this run wrote
+         → fold the summary → snapshot commit
 
-Every stage is a DataFrame transformation; the only actions are the two
-writes. The plan Catalyst sees: parquet/Iceberg scan with column pruning
-(url/html/text/+bucket only), one explicit repartition (the job's only full
-shuffle), one mapInPandas, a map-side-combinable grouped agg for lineage.
+``transform`` is lazy: a pruned scan, the max_by dedupe (one shuffle by
+url), the salted repartition (one shuffle by content) and one mapInPandas.
+``run`` adds the actions: the extracted write; one read of the latest
+table into ``operators/lineage.bucket_aggregate``, checkpointed, which is
+the only per-bucket formula for both the lineage rows and the summary;
+the lineage append; the summary collect; and a lineage re-read for the
+incremental watermark.
 """
 
 from __future__ import annotations
@@ -20,7 +27,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from zerox_spark.extract.core import ExtractConfig
 from zerox_spark.operators.extract import extract_pages
-from zerox_spark.operators.lineage import lineage_rows, summary
+from zerox_spark.operators.lineage import (
+    bucket_aggregate,
+    lineage_rows,
+    summary,
+)
 from zerox_spark.operators.repartition import salted_repartition
 from zerox_spark.operators.resume import committed_buckets, filter_uncommitted
 from zerox_spark.sinks import ParquetSnapshotSink
@@ -34,7 +45,6 @@ class PipelineConfig:
     trust_text: bool = True
     error_mode: str = "IGNORE"
     select_pages: list[int] | None = None
-    dedupe_latest_warc_ts: bool = True  # e08: latest snapshot of a url wins
     extract: ExtractConfig = field(init=False)
 
     def __post_init__(self) -> None:
@@ -54,37 +64,36 @@ class ExtractionPipeline:
     def transform(self, pages: DataFrame) -> DataFrame:
         """pages → raw extracted rows (lazy; no writes). The testable core."""
         cfg = self.config
-        if cfg.dedupe_latest_warc_ts:
-            # duplicate urls at different warc_ts: keep the newest crawl.
-            # max_by aggregates in one shuffle (vs window+filter's
-            # shuffle+sort). The ORDERING struct matters twice over:
-            # - null warc_ts (real archives with missing WARC-Date) must
-            #   coalesce to a floor — max_by IGNORES rows whose ordering
-            #   key is null, which would null the whole payload struct and
-            #   silently destroy the document;
-            # - html is the tie-break, so equal-warc_ts duplicates resolve
-            #   to the same row on every replay/partitioning (the lineage
-            #   checksum contract requires bitwise-stable output).
-            order = F.struct(
-                F.coalesce(
-                    F.col("warc_ts"),
-                    F.lit("1900-01-01 00:00:00").cast("timestamp"),
-                ).alias("ts"),
-                F.col("html").alias("tie"),
+        # duplicate urls at different warc_ts (e08): keep the newest crawl.
+        # max_by aggregates in one shuffle (vs window+filter's
+        # shuffle+sort). The ORDERING struct matters twice over:
+        # - null warc_ts (real archives with missing WARC-Date) must
+        #   coalesce to a floor — max_by IGNORES rows whose ordering
+        #   key is null, which would null the whole payload struct and
+        #   silently destroy the document;
+        # - html is the tie-break, so equal-warc_ts duplicates resolve
+        #   to the same row on every replay/partitioning (the lineage
+        #   checksum contract requires bitwise-stable output).
+        order = F.struct(
+            F.coalesce(
+                F.col("warc_ts"),
+                F.lit("1900-01-01 00:00:00").cast("timestamp"),
+            ).alias("ts"),
+            F.col("html").alias("tie"),
+        )
+        pages = (
+            pages.groupBy("url")
+            .agg(
+                F.max_by(
+                    F.struct("warc_ts", "html", "text", "lang"), order
+                ).alias("_r")
             )
-            pages = (
-                pages.groupBy("url")
-                .agg(
-                    F.max_by(
-                        F.struct("warc_ts", "html", "text", "lang"), order
-                    ).alias("_r")
-                )
-                .select("url", "_r.warc_ts", "_r.html", "_r.text", "_r.lang")
-            )
-            # hash-partitioned by url from the groupBy; the salted
-            # repartition below re-partitions by content, so the copies of
-            # one payload under many urls meet and are extracted once,
-            # and splits heavy-row skew.
+            .select("url", "_r.warc_ts", "_r.html", "_r.text", "_r.lang")
+        )
+        # hash-partitioned by url from the groupBy; the salted repartition
+        # below re-partitions by content, so the copies of one payload
+        # under many urls meet and are extracted once, and splits
+        # heavy-row skew.
         repartitioned = salted_repartition(pages, cfg.num_partitions)
         return extract_pages(repartitioned, cfg.extract, cfg.num_buckets)
 
@@ -113,63 +122,52 @@ class ExtractionPipeline:
         - bucket resume (non-incremental): a job_id names ONE input
           snapshot; re-running it finishes the uncommitted buckets of
           THAT input. New data needs a new job_id — or incremental mode.
+
+        Either way the lineage rows carry this job_id only for the
+        buckets this run wrote, and the returned summary covers the
+        whole latest table. A sink keeps the bucket count of its first
+        run; a different ``num_buckets`` raises before any extraction.
         """
         job_id = job_id or uuid.uuid4().hex[:12]
+        num_buckets = self.config.num_buckets
+        sink.check_num_buckets(num_buckets)
         watermark = sink.last_watermark() if incremental else None
         if watermark is not None:
             pages = pages.filter(
                 F.col("warc_ts") >= F.lit(watermark).cast("timestamp")
             )
-        lineage_prev = sink.read_lineage(spark)
+        committed = committed_buckets(sink.read_lineage(spark), job_id)
         if incremental:
-            committed = committed_buckets(lineage_prev, job_id).limit(0)
-        else:
-            committed = committed_buckets(lineage_prev, job_id)
-        todo = filter_uncommitted(pages, committed, self.config.num_buckets)
-        raw = self.transform(todo)
+            committed = committed.limit(0)
+        todo = filter_uncommitted(pages, committed, num_buckets)
+        snap_id = sink.next_snapshot_id()
         # elapsed_ms is persisted with the rows so lineage can be computed
         # from the *written* files (one extraction pass; no cache of a
         # 100 TB intermediate, no recompute) — see operators/lineage.py.
         # Incremental deltas append versioned rows (a delta covers only part
         # of a bucket; overwrite would drop its siblings — sinks.py).
         sink.write_extracted(
-            raw, snap_id=sink.next_snapshot_id(), append=incremental
+            self.transform(todo), snap_id=snap_id, append=incremental
         )
-        # the latest-version table feeds THREE consumers (lineage write,
-        # summary, and implicitly the watermark); persist it across those
-        # actions instead of re-running the full-table window per consumer
-        latest = sink.read_extracted_latest(spark).persist()
-        try:
-            # lineage attribution: only buckets this run could have
-            # written carry this job_id — tagging the whole table would
-            # claim other jobs' buckets (wrong metrics, and it would feed
-            # the committed-bucket set buckets this job never processed)
-            if incremental:
-                from zerox_spark.operators.repartition import partition_bucket
-
-                touched = todo.select(
-                    partition_bucket(self.config.num_buckets).alias(
-                        "partition_id"
-                    )
-                ).distinct()
-                lineage_src = latest.join(
-                    F.broadcast(touched), "partition_id", "left_semi"
-                )
-            else:
-                lineage_src = latest.join(
-                    F.broadcast(
-                        committed.withColumnRenamed(
-                            "bucket", "partition_id"
-                        )
-                    ),
-                    "partition_id",
-                    "left_anti",
-                )
-            lineage = lineage_rows(lineage_src, job_id)
-            sink.write_lineage(lineage)
-            stats = summary(latest).collect()[0].asDict()
-        finally:
-            latest.unpersist()
+        # one aggregate of at most num_buckets rows feeds both the lineage
+        # write and the summary; localCheckpoint keeps those rows so the
+        # table is read and window-sorted once
+        buckets = bucket_aggregate(
+            sink.read_extracted_latest(spark)
+        ).localCheckpoint()
+        # lineage attribution: this run owns the buckets whose newest rows
+        # carry its snapshot id, less those an earlier attempt of this
+        # job_id already committed (it may have crashed after its lineage
+        # write, before its snapshot commit, leaving the same id behind)
+        owned = buckets.filter(F.col("_snap") == snap_id).join(
+            F.broadcast(
+                committed.withColumnRenamed("bucket", "partition_id")
+            ),
+            "partition_id",
+            "left_anti",
+        )
+        sink.write_lineage(lineage_rows(owned, job_id))
+        stats = summary(buckets).collect()[0].asDict()
         # incremental watermark: max over the (tiny) lineage table — a
         # per-bucket max(warc_ts) carried through the extract's output rows
         # (operators/extract.py RAW_EXTRACTED_SCHEMA) — NOT a second scan of

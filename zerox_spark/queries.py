@@ -30,7 +30,7 @@ from zerox_spark.operators.dedup import (
     with_injected_duplicates,
 )
 from zerox_spark.operators.extract import extract_pages
-from zerox_spark.operators.lineage import lineage_rows, summary
+from zerox_spark.operators.lineage import bucket_aggregate, lineage_rows, summary
 from zerox_spark.operators.multimodal import media_metadata
 from zerox_spark.operators.similarity import ann_topk_exact, ann_topk_lsh
 from zerox_spark.operators.textstats import (
@@ -355,7 +355,9 @@ def q_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_extract_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3/A4: the ZeroxOutput.summary analog over the whole corpus."""
-    return summary(_extracted(spark, sf_dir, maintain_format=True))
+    return summary(
+        bucket_aggregate(_extracted(spark, sf_dir, maintain_format=True))
+    )
 
 
 def q_keyword_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -409,7 +411,7 @@ def q_lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bucket lineage rows (no SQL oracle: bucketing is xxhash64-based,
     which DuckDB lacks — rows-only check; exact values asserted in pytest)."""
     raw = _extracted(spark, sf_dir, maintain_format=True)
-    return lineage_rows(raw, "oracle-job").select(
+    return lineage_rows(bucket_aggregate(raw), "oracle-job").select(
         "partition_id", "doc_count", "page_count", "status"
     )
 
@@ -421,7 +423,7 @@ def q_lineage_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     statuses, bucket cardinality) is hash-checked even though the bucket
     keys themselves stay rows-only."""
     raw = _extracted(spark, sf_dir, maintain_format=True)
-    lin = lineage_rows(raw, "oracle-job")
+    lin = lineage_rows(bucket_aggregate(raw), "oracle-job")
     return lin.agg(
         F.count(F.lit(1)).alias("n_buckets"),
         F.sum("doc_count").alias("total_docs"),

@@ -51,10 +51,10 @@ def run_retries(fn: Callable[[], _R], max_retries: int = 1) -> _R:
 def latest_versions(extracted: DataFrame) -> DataFrame:
     """Latest version per (url, page_no) of a sink's extracted rows — the
     logical table a consumer reads after incremental upserts."""
-    # warc_ts tie-break after _snap: one snapshot can legitimately
-    # carry two versions of a url (the >= watermark boundary re-emits
-    # rows, and dedupe_latest_warc_ts=False keeps input duplicates) —
-    # the newest crawl must win inside a snapshot too
+    # warc_ts tie-break after _snap: one _snap value can carry two
+    # versions of a url (IcebergSink writes _snap = 0 on every commit,
+    # and a crashed attempt's appended rows share the id its retry
+    # writes under) — the newest crawl must win inside a snapshot too
     w = Window.partitionBy("url", "page_no").orderBy(
         F.col("_snap").desc(), F.col("warc_ts").desc_nulls_last()
     )
@@ -71,6 +71,27 @@ class ParquetSnapshotSink:
         self.extracted_path = os.path.join(root, "extracted")
         self.lineage_path = os.path.join(root, "lineage")
         self.snap_dir = os.path.join(root, "_snapshots")
+        self.buckets_path = os.path.join(root, "_num_buckets")
+
+    def check_num_buckets(self, num_buckets: int) -> None:
+        """Pin the sink to one bucket count: record it on first use, before
+        anything is extracted (so a crashed first attempt pins it too), and
+        raise ValueError on a different count later. Under a new count a
+        url lands in a new bucket: resume would drop every input row whose
+        new bucket id an earlier attempt committed, and a dynamic overwrite
+        would leave the url's old rows behind in its old bucket."""
+        if os.path.exists(self.buckets_path):
+            with open(self.buckets_path, encoding="utf-8") as fh:
+                pinned = int(fh.read())
+            if pinned != num_buckets:
+                raise ValueError(
+                    f"sink {self.root} has {pinned} buckets, "
+                    f"not {num_buckets}"
+                )
+            return
+        os.makedirs(self.root, exist_ok=True)
+        with open(self.buckets_path, "w", encoding="utf-8") as fh:
+            fh.write(str(num_buckets))
 
     def write_extracted(
         self, extracted: DataFrame, snap_id: int = 0, append: bool = False
@@ -218,11 +239,20 @@ class IcebergSink:
 
     Not exercisable in this sandbox (no jars); the call shapes are the
     production path and are covered by the ParquetSnapshotSink contract
-    tests."""
+    tests.
+
+    Every commit writes ``_snap = 0``, so pipeline.run's lineage
+    attribution (the buckets whose newest ``_snap`` is the run's snapshot
+    id) gives a run every bucket of the table that its job_id has not
+    committed, not only the buckets it wrote. The bucket count is not
+    pinned either: the table's partition spec is the place for that."""
 
     def __init__(self, extracted_table: str, lineage_table: str) -> None:
         self.extracted_table = extracted_table
         self.lineage_table = lineage_table
+
+    def check_num_buckets(self, num_buckets: int) -> None:
+        pass
 
     def write_extracted(
         self, extracted: DataFrame, snap_id: int = 0, append: bool = False
@@ -258,28 +288,3 @@ class IcebergSink:
         # Iceberg's own snapshot log is the commit record
         return f"{self.extracted_table}@latest"
 
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    num_buckets: int,
-    path: str,
-    bucket_col: str = "url",
-) -> None:
-    """Bucketed + sorted parquet table — the co-located-join layout.
-
-    Two tables bucketed identically on the join key sort-merge-join with
-    ZERO exchange on either side (plan-tested): at 100 TB this is how the
-    extracted table joins its consumers (dedup verdicts, structured
-    values, lineage backfills) without re-shuffling the crawl-scale side
-    every downstream job. Spark-native bucketing (no Hive needed);
-    `sortBy` makes the SMJ sort a no-op read order.
-    """
-    (
-        df.write.format("parquet")
-        .mode("overwrite")
-        .option("path", path)
-        .bucketBy(num_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .saveAsTable(table)
-    )
