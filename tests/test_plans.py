@@ -330,3 +330,18 @@ def test_every_query_is_registered():
     registered = {fn.__name__ for fn in queries.QUERIES.values()}
     assert defined - registered == set()
     assert set(queries.ORACLE_SQL) <= set(queries.QUERIES)
+
+
+def test_job_scan_prunes_lang(spark, pages_parquet):
+    """The job's whole transform (the max_by dedupe, the repartition and
+    the extract) reads no ``lang``: nothing after the dedupe uses it."""
+    from zerox_spark.pipeline import ExtractionPipeline, PipelineConfig
+
+    pages = spark.read.parquet(pages_parquet)
+    job = ExtractionPipeline(
+        PipelineConfig(num_partitions=8, num_buckets=16)
+    ).transform(pages)
+    m = re.search(r"ReadSchema: (.*)", plan_of(job))
+    assert m, "no ReadSchema in plan"
+    assert "lang" not in m.group(1)
+    assert "html" in m.group(1) and "text" in m.group(1)

@@ -36,11 +36,9 @@ def test_partial_failure_resume(spark, tmp_path):
 
     # attempt 2: same job_id over the FULL input → only uncommitted buckets
     # should be re-extracted
-    from zerox_spark.operators.resume import committed_buckets, filter_uncommitted
+    from zerox_spark.operators.resume import filter_uncommitted
 
-    todo = filter_uncommitted(
-        pages, committed_buckets(lineage1, "crashy"), 16
-    )
+    todo = filter_uncommitted(pages, sink.lineage_state("crashy")[0], 16)
     todo_buckets = {
         r.b for r in todo.select(partition_bucket(16).alias("b")).distinct().collect()
     }
@@ -247,3 +245,69 @@ def test_sink_refuses_a_second_bucket_count(spark, tmp_path):
             PipelineConfig(num_partitions=2, num_buckets=8)
         ).run(spark, pages, sink, job_id="y")
     assert listing(sink.extracted_path) == before
+
+
+def _last_manifest(sink) -> dict:
+    import json
+
+    snaps = sorted(os.listdir(sink.snap_dir))
+    with open(os.path.join(sink.snap_dir, snaps[-1]), encoding="utf-8") as fh:
+        return json.load(fh)
+
+
+def _lineage_watermark(spark, sink) -> str:
+    """The watermark as a max over the re-read lineage table."""
+    return str(sink.read_lineage(spark).agg(F.max("max_warc_ts")).collect()[0][0])
+
+
+def test_watermark_fold_equals_lineage_max(spark, tmp_path, monkeypatch):
+    """The watermark folded from the previous lineage max and the run's own
+    bucket rows equals the max over the re-read lineage table after every
+    run: of a three-day incremental sequence (with a re-crawl and a
+    sub-second timestamp), and of a job that crashed after its lineage
+    append, before its commit, and was resumed."""
+    from zerox_spark.operators.repartition import partition_bucket
+
+    pipe = ExtractionPipeline(PipelineConfig(num_partitions=2, num_buckets=4))
+
+    def day(d, urls, second=0, micro=0):
+        return _pages(spark, urls, body=f"day {d}").withColumn(
+            "warc_ts",
+            F.lit(datetime.datetime(2024, 1, d, 13, 37, second, micro)),
+        )
+
+    sink = ParquetSnapshotSink(str(tmp_path / "days"))
+    crawl = day(1, [f"https://wm/{i}" for i in range(8)])
+    for d, new, micro in ((1, [], 0), (2, [3, 8, 9, 10], 0),
+                          (3, [11, 12], 250000)):
+        crawl = crawl.unionByName(
+            day(d, [f"https://wm/{i}" for i in new], 29, micro)
+        )
+        pipe.run(spark, crawl, sink, job_id=f"day{d}", incremental=True)
+        assert _last_manifest(sink)["watermark"] == _lineage_watermark(
+            spark, sink
+        )
+    assert sink.last_watermark() == "2024-01-03 13:37:29.250000"
+
+    sink = ParquetSnapshotSink(str(tmp_path / "resume"))
+    pages = day(1, [f"https://rs/{i}" for i in range(24)], 5)
+    pipe.run(spark, pages.filter(partition_bucket(4) < 2), sink, job_id="r")
+    assert _last_manifest(sink)["watermark"] == _lineage_watermark(spark, sink)
+
+    def crash(job_id, meta):
+        raise RuntimeError("killed before the commit")
+
+    monkeypatch.setattr(sink, "commit_snapshot", crash)
+    with pytest.raises(RuntimeError):
+        pipe.run(spark, pages, sink, job_id="r")
+    monkeypatch.undo()
+    assert _lineage_buckets(spark, sink, "r") == [0, 1, 2, 3]
+    stats = _stats(spark, pipe, pages, sink, job_id="r")
+    assert stats["total_docs"] == 24
+    # the retry re-ran only the PARTIAL bucket (the null payload's)
+    (partial,) = {
+        r.b for r in pages.filter(F.col("html").isNull())
+        .select(partition_bucket(4).alias("b")).collect()
+    }
+    assert _lineage_buckets(spark, sink, "r") == sorted([0, 1, 2, 3, partial])
+    assert _last_manifest(sink)["watermark"] == _lineage_watermark(spark, sink)

@@ -237,10 +237,11 @@ def test_fresh_sink_lineage_launches_no_tasks(spark, tmp_path):
 
 def test_commit_after_write_job_count(spark, tmp_path):
     """Spark jobs a fresh-sink run launches after write_extracted returns:
-    the per-bucket aggregate, the lineage append, the summary fold and the
-    watermark's lineage re-read. On this input the formulation that
-    persisted the whole latest table and aggregated it twice launched 10;
-    one checkpointed aggregate launches 9."""
+    the one collect of the per-bucket aggregate; the lineage append, the
+    summary and the watermark fold on the driver. On this input the
+    formulation that persisted the whole latest table and aggregated it
+    twice launched 10, one checkpointed aggregate with a Spark lineage
+    append, summary collect and lineage re-read 9, one collect 4."""
     from zerox_spark.pipeline import ExtractionPipeline, PipelineConfig
     from zerox_spark.sinks import ParquetSnapshotSink
     from zerox_spark.synth import synth_pages
@@ -263,4 +264,141 @@ def test_commit_after_write_job_count(spark, tmp_path):
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 9
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+
+
+def test_lineage_mixed_writers_agree(spark, tmp_path):
+    """One lineage directory holds an old Spark file without max_warc_ts,
+    a Spark file (INT96 timestamps) and a driver-written file. The
+    driver's lineage_state, read_lineage(spark) and DuckDB agree on the
+    committed buckets and on the max, and the driver file has the Spark
+    file's physical column types."""
+    import datetime
+    import glob
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import Row, functions as F, types as T
+
+    from zerox_spark.schema import LINEAGE_SCHEMA
+    from zerox_spark.sinks import ParquetSnapshotSink
+
+    sink = ParquetSnapshotSink(str(tmp_path / "mixed"))
+    common = dict(input_split="x", doc_count=1, page_count=1, checksum="0",
+                  elapsed_ms=1)
+    old_schema = T.StructType(LINEAGE_SCHEMA.fields[:-1])
+    assert "max_warc_ts" not in old_schema.names
+    spark.createDataFrame(
+        [Row(job_id="j", partition_id=1, **common, status="SUCCESS")],
+        old_schema,
+    ).write.mode("append").parquet(sink.lineage_path)
+    spark_files = set(glob.glob(f"{sink.lineage_path}/*.parquet"))
+    late = datetime.datetime(2024, 1, 3, 13, 37, 29, 250000)
+    spark.createDataFrame(
+        [
+            Row(job_id="j", partition_id=2, **common, status="SUCCESS",
+                max_warc_ts=datetime.datetime(2024, 1, 2)),
+            Row(job_id="j", partition_id=3, **common, status="PARTIAL",
+                max_warc_ts=late),
+            Row(job_id="k", partition_id=5, **common, status="SUCCESS",
+                max_warc_ts=datetime.datetime(2024, 1, 1)),
+        ],
+        LINEAGE_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(sink.lineage_path)
+    (int96_file,) = set(glob.glob(f"{sink.lineage_path}/*.parquet")) - spark_files
+    sink.write_lineage(pa.Table.from_pylist([
+        dict(job_id="j", partition_id=4, **common, status="SUCCESS",
+             max_warc_ts=datetime.datetime(2024, 1, 2, 6)),
+    ]))
+    (driver_file,) = glob.glob(f"{sink.lineage_path}/*-driver.zstd.parquet")
+
+    def physical(path):
+        schema = pq.ParquetFile(path).schema
+        return {c.name: c.physical_type for c in schema}
+
+    assert physical(driver_file) == physical(int96_file)
+    assert physical(driver_file)["max_warc_ts"] == "INT96"
+
+    done, wm = sink.lineage_state("j")
+    assert done == {1, 2, 4} and wm == late
+
+    lin = sink.read_lineage(spark)
+    spark_done = {
+        r.partition_id
+        for r in lin.filter((F.col("job_id") == "j")
+                            & (F.col("status") == "SUCCESS")).collect()
+    }
+    spark_wm = lin.agg(F.max("max_warc_ts")).collect()[0][0]
+    assert (spark_done, spark_wm) == (done, wm)
+
+    rel = f"read_parquet('{sink.lineage_path}/*.parquet', union_by_name = true)"
+    duck_done = {
+        r[0] for r in duckdb.sql(
+            f"SELECT partition_id FROM {rel} "
+            "WHERE job_id = 'j' AND status = 'SUCCESS'"
+        ).fetchall()
+    }
+    (duck_wm,) = duckdb.sql(f"SELECT max(max_warc_ts) FROM {rel}").fetchone()
+    assert (duck_done, duck_wm) == (done, wm)
+
+
+def test_lineage_state_of_a_fresh_sink(tmp_path):
+    from zerox_spark.sinks import ParquetSnapshotSink
+
+    sink = ParquetSnapshotSink(str(tmp_path / "fresh"))
+    assert sink.lineage_state("any") == (frozenset(), None)
+
+
+def test_torn_snapshot_commit_leaves_no_manifest(spark, tmp_path, monkeypatch):
+    """A commit that dies in the middle of writing its manifest leaves no
+    snap-*.json behind, and neither the torn write nor a stray file in
+    _snapshots/ stops the next incremental run."""
+    import datetime
+    import json
+    import types
+
+    from pyspark.sql import Row
+
+    from zerox_spark import sinks
+    from zerox_spark.pipeline import ExtractionPipeline, PipelineConfig
+    from zerox_spark.schema import PAGES_SCHEMA
+    from zerox_spark.sinks import ParquetSnapshotSink
+
+    def pages(days):
+        return spark.createDataFrame(
+            [
+                Row(url=f"https://torn/{d}/{i}",
+                    warc_ts=datetime.datetime(2024, 1, d, 12, 0, i),
+                    html=f"<article><p>day {d} page {i} with enough words "
+                         "to count as content</p></article>".encode(),
+                    text=None, lang="en")
+                for d in days for i in range(4)
+            ],
+            PAGES_SCHEMA,
+        )
+
+    sink = ParquetSnapshotSink(str(tmp_path / "s"))
+    pipe = ExtractionPipeline(PipelineConfig(num_partitions=2, num_buckets=4))
+    pipe.run(spark, pages([1]), sink, job_id="d1", incremental=True)
+
+    def torn_dump(obj, fh, **kw):
+        fh.write(json.dumps(obj, **kw)[:12])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(
+        sinks, "json", types.SimpleNamespace(dump=torn_dump, load=json.load)
+    )
+    with pytest.raises(OSError, match="disk full"):
+        pipe.run(spark, pages([1, 2]), sink, job_id="d2", incremental=True)
+    monkeypatch.undo()
+    snap_dir = tmp_path / "s" / "_snapshots"
+    assert sorted(p.name for p in snap_dir.glob("snap-*.json")) == [
+        "snap-000000.json"
+    ]
+
+    (snap_dir / "snap-000000.json~").write_text("{torn")
+    stats = pipe.run(spark, pages([1, 2]), sink, job_id="d2",
+                     incremental=True)
+    assert stats["total_docs"] == 8
+    assert sink.last_watermark() == "2024-01-02 12:00:03"

@@ -75,17 +75,15 @@ def test_lineage_complete_and_consistent(spark, run_result):
 
 def test_resume_skips_committed_buckets(spark, run_result):
     out, _, sink = run_result
-    from zerox_spark.operators.resume import committed_buckets, filter_uncommitted
+    from zerox_spark.operators.resume import filter_uncommitted
 
     pages = synth_pages(spark, SF_SMOKE)
-    committed = committed_buckets(sink.read_lineage(spark), "t1")
+    committed, _ = sink.lineage_state("t1")
     remaining = filter_uncommitted(pages, committed, 16)
     # everything was committed → nothing left to do
     assert remaining.count() == 0
     # a fresh job id sees no committed work
-    fresh = filter_uncommitted(
-        pages, committed_buckets(sink.read_lineage(spark), "other"), 16
-    )
+    fresh = filter_uncommitted(pages, sink.lineage_state("other")[0], 16)
     assert fresh.count() == pages.count()
 
 

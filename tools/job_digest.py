@@ -1,11 +1,12 @@
 """Order-insensitive digests of a job's sink, for output-identity checks.
 
 Prints one JSON line: a sha256 over every row of ``extracted`` (all
-columns but ``elapsed_ms``, which is wall time) and one over every row of
-``lineage`` (without ``job_id`` and ``elapsed_ms``), plus the row counts.
-Two runs of ``zerox_spark/job.py`` over the same input wrote the same
-output iff both digests match, whatever task layout or row order each run
-had. The oracle queries cannot show this for the job: they extract through
+columns but ``elapsed_ms``, which is wall time), one over every row of
+``lineage`` (without ``job_id`` and ``elapsed_ms``), the row counts, and a
+sha256 of the last snapshot manifest without ``ts`` and ``job_id`` (its
+summary and watermark, rendered as committed). Two runs of
+``zerox_spark/job.py`` over the same input wrote the same output iff the
+digests match, whatever task layout or row order each run had. The oracle queries cannot show this for the job: they extract through
 the fused ``render`` path, not ``salted_repartition``.
 
 Usage: python tools/job_digest.py SINK_DIR
@@ -13,6 +14,7 @@ Usage: python tools/job_digest.py SINK_DIR
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import sys
@@ -34,6 +36,19 @@ def table_digest(glob: str, exclude: list[str]) -> tuple[str, int]:
     return h.hexdigest(), len(rows)
 
 
+def manifest_digest(sink_dir: str) -> str | None:
+    snaps = sorted(glob.glob(f"{sink_dir}/_snapshots/snap-*.json"))
+    if not snaps:
+        return None
+    with open(snaps[-1], encoding="utf-8") as fh:
+        meta = json.load(fh)
+    for key in ("ts", "job_id"):
+        meta.pop(key, None)
+    return hashlib.sha256(
+        json.dumps(meta, sort_keys=True).encode()
+    ).hexdigest()
+
+
 def main(sink_dir: str) -> None:
     ex, n_ex = table_digest(f"{sink_dir}/extracted/*/*.parquet", ["elapsed_ms"])
     lin, n_lin = table_digest(
@@ -42,6 +57,7 @@ def main(sink_dir: str) -> None:
     print(json.dumps({
         "extracted": ex, "extracted_rows": n_ex,
         "lineage": lin, "lineage_rows": n_lin,
+        "manifest": manifest_digest(sink_dir),
     }))
 
 

@@ -12,7 +12,7 @@ byte-identical and reproducible at 10^12-document scale.
 Architecture (all DataFrame-native):
 
     Iceberg/parquet scan of pages(url, warc_ts, html, text, lang)
-      → resume anti-join vs committed lineage
+      → resume filter: skip the buckets committed lineage lists
       → salted content-hash repartition (skew handling), sorted so
         copies of one payload under many urls are extracted once
       → fast-path routing (trusted pre-extracted text bypasses the DOM pass)

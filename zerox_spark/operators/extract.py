@@ -17,7 +17,7 @@ Design notes (scale-first):
   never dies.
 - Each output row carries ``partition_id`` — the **logical url bucket**
   (operators/repartition.py partition_bucket), the shared id space of the
-  lineage table, the resume anti-join and the sink's overwrite granularity,
+  lineage table, the resume filter and the sink's overwrite granularity,
   projected JVM-side over the output url after the UDF (the bucket never
   crosses into Python) — plus a batch-amortized ``elapsed_ms`` so lineage
   (operators/lineage.py) can aggregate per-bucket metrics without a second

@@ -6,9 +6,11 @@ bucket granularity (SURVEY.md §4.3, FIXTURES.md §4).
 over the extract output's carrier columns (partition_id, elapsed_ms, ...)
 that Catalyst runs with map-side partial aggregation into at most
 ``num_buckets`` rows. ``lineage_rows`` is a projection of those rows and
-``summary`` a fold of them, so the lineage table and the job summary can
-never disagree, and a job computes both from one small cached result
-(pipeline.run).
+``fold_summary`` the one summary formula, a fold of them on the driver
+(at most ``num_buckets`` rows as one Arrow table), so the lineage table and
+the job summary can never disagree. pipeline.run collects the rows once
+and both writes lineage and folds the summary from them;
+queries.q_extract_summary folds the same way.
 
 The fold is exact. ``partition_id`` is a function of the url
 (repartition.partition_bucket), so the buckets partition the urls and
@@ -33,6 +35,8 @@ did not write keeps the older id it had (pipeline.run).
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from zerox_spark.extract.core import STATUS_ERROR
@@ -68,8 +72,11 @@ def bucket_aggregate(extracted: DataFrame) -> DataFrame:
     )
 
 
-def lineage_rows(buckets: DataFrame, job_id: str) -> DataFrame:
-    """``bucket_aggregate`` rows → lineage rows (LINEAGE_SCHEMA)."""
+def lineage_rows(
+    buckets: DataFrame, job_id: str, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """``bucket_aggregate`` rows → lineage rows (LINEAGE_SCHEMA), followed
+    by the ``carry`` columns of ``buckets`` unchanged."""
     return buckets.select(
         F.lit(job_id).alias("job_id"),
         F.col("partition_id"),
@@ -82,17 +89,29 @@ def lineage_rows(buckets: DataFrame, job_id: str) -> DataFrame:
         .otherwise(F.lit("SUCCESS"))
         .alias("status"),
         F.col("max_warc_ts"),
+        *carry,
     )
 
 
-def summary(buckets: DataFrame) -> DataFrame:
-    """``bucket_aggregate`` rows → the job-level Summary analog
+# the fold's output columns, in order, as a Spark schema
+SUMMARY_SCHEMA = (
+    "total_docs bigint, total_pages bigint, successful bigint, "
+    "failed bigint, total_content_length bigint"
+)
+
+
+def fold_summary(buckets: pa.Table) -> dict:
+    """``bucket_aggregate`` rows, collected → the job-level Summary analog
     (totalPages, ocr successful/failed — node-zerox/src/types.ts:260-270)
-    as a 1-row DataFrame."""
-    return buckets.agg(
-        F.coalesce(F.sum("doc_count"), F.lit(0)).alias("total_docs"),
-        F.coalesce(F.sum("page_count"), F.lit(0)).alias("total_pages"),
-        F.sum("successful").alias("successful"),
-        F.sum("failed").alias("failed"),
-        F.sum("content_length").alias("total_content_length"),
-    )
+    with SUMMARY_SCHEMA's keys. Sums follow SQL: null over no rows."""
+
+    def total(column: str) -> int | None:
+        return pc.sum(buckets[column]).as_py()
+
+    return {
+        "total_docs": total("doc_count") or 0,
+        "total_pages": total("page_count") or 0,
+        "successful": total("successful"),
+        "failed": total("failed"),
+        "total_content_length": total("content_length"),
+    }

@@ -1,21 +1,30 @@
 """End-to-end job assembly (SURVEY.md §3.4 lifecycle).
 
-    scan → newest crawl per url → resume filter
+    lineage state (driver) → scan → newest crawl per url → resume filter
          → salted content-hash repartition
          → extract (+inline fold, identical neighbours extracted once)
          → write extracted (bucket-partitioned: dynamic overwrite, or a
            versioned append in incremental mode)
-         → per-bucket aggregate of the latest table (≤ num_buckets rows)
-         → append lineage for the buckets this run wrote
-         → fold the summary → snapshot commit
+         → per-bucket aggregate of the latest table (≤ num_buckets rows),
+           collected once as an Arrow table
+         → driver: append lineage for the buckets this run wrote, fold
+           the summary and the watermark → snapshot commit
 
 ``transform`` is lazy: a pruned scan, the max_by dedupe (one shuffle by
 url), the salted repartition (one shuffle by content) and one mapInPandas.
-``run`` adds the actions: the extracted write; one read of the latest
-table into ``operators/lineage.bucket_aggregate``, checkpointed, which is
-the only per-bucket formula for both the lineage rows and the summary;
-the lineage append; the summary collect; and a lineage re-read for the
-incremental watermark.
+``run`` adds the actions: the extracted write, and one ``toArrow`` of
+``operators/lineage.bucket_aggregate`` over the latest table, the only
+per-bucket formula. Everything after that collect runs on the driver over
+at most ``num_buckets`` rows and launches no Spark job. Lineage is commit
+metadata that the sink reads and appends on the driver (sinks.py), like
+the snapshot manifest and the bucket-count pin.
+
+The watermark fold equals the max over the re-read lineage table. Lineage
+is append-only, and this run appends exactly its owned rows, so the table
+after the run is the table before it plus those rows, and
+max(after) = max(max(before), max(owned)), with None for an empty side.
+``lineage_state`` reads max(before) before the write; the sink has one
+writer at a time, as the snapshot ids already assume.
 """
 
 from __future__ import annotations
@@ -23,17 +32,19 @@ from __future__ import annotations
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from zerox_spark.extract.core import ExtractConfig
 from zerox_spark.operators.extract import extract_pages
 from zerox_spark.operators.lineage import (
     bucket_aggregate,
+    fold_summary,
     lineage_rows,
-    summary,
 )
 from zerox_spark.operators.repartition import salted_repartition
-from zerox_spark.operators.resume import committed_buckets, filter_uncommitted
+from zerox_spark.operators.resume import filter_uncommitted
 from zerox_spark.sinks import ParquetSnapshotSink
 
 
@@ -84,11 +95,11 @@ class ExtractionPipeline:
         pages = (
             pages.groupBy("url")
             .agg(
-                F.max_by(
-                    F.struct("warc_ts", "html", "text", "lang"), order
-                ).alias("_r")
+                F.max_by(F.struct("warc_ts", "html", "text"), order).alias(
+                    "_r"
+                )
             )
-            .select("url", "_r.warc_ts", "_r.html", "_r.text", "_r.lang")
+            .select("url", "_r.warc_ts", "_r.html", "_r.text")
         )
         # hash-partitioned by url from the groupBy; the salted repartition
         # below re-partitions by content, so the copies of one payload
@@ -113,7 +124,7 @@ class ExtractionPipeline:
           (max warc_ts; the predicate is pushed to the scan, so a daily
           delta over a 100 TB table reads ~one day of data). Bucket
           resume is OFF here: a reused job_id's committed buckets would
-          silently anti-join every new day's rows away. ``>=`` (not
+          silently filter every new day's rows away. ``>=`` (not
           ``>``) at the boundary: second-granularity crawl deliveries can
           split one warc_ts across runs, and a strictly-newer filter
           would lose the late half forever — the boundary rows re-extract
@@ -136,9 +147,9 @@ class ExtractionPipeline:
             pages = pages.filter(
                 F.col("warc_ts") >= F.lit(watermark).cast("timestamp")
             )
-        committed = committed_buckets(sink.read_lineage(spark), job_id)
+        committed, lineage_wm = sink.lineage_state(job_id)
         if incremental:
-            committed = committed.limit(0)
+            committed = frozenset()
         todo = filter_uncommitted(pages, committed, num_buckets)
         snap_id = sink.next_snapshot_id()
         # elapsed_ms is persisted with the rows so lineage can be computed
@@ -149,36 +160,37 @@ class ExtractionPipeline:
         sink.write_extracted(
             self.transform(todo), snap_id=snap_id, append=incremental
         )
-        # one aggregate of at most num_buckets rows feeds both the lineage
-        # write and the summary; localCheckpoint keeps those rows so the
-        # table is read and window-sorted once
-        buckets = bucket_aggregate(
-            sink.read_extracted_latest(spark)
-        ).localCheckpoint()
+        # the one collect: at most num_buckets rows feed the lineage
+        # append, the summary and the watermark
+        buckets = lineage_rows(
+            bucket_aggregate(sink.read_extracted_latest(spark)),
+            job_id,
+            carry=("_snap", "successful", "failed", "content_length"),
+        ).toArrow()
         # lineage attribution: this run owns the buckets whose newest rows
         # carry its snapshot id, less those an earlier attempt of this
         # job_id already committed (it may have crashed after its lineage
         # write, before its snapshot commit, leaving the same id behind)
-        owned = buckets.filter(F.col("_snap") == snap_id).join(
-            F.broadcast(
-                committed.withColumnRenamed("bucket", "partition_id")
-            ),
-            "partition_id",
-            "left_anti",
+        owned = buckets.filter(
+            (pc.field("_snap") == snap_id)
+            & ~pc.field("partition_id").isin(sorted(committed))
         )
-        sink.write_lineage(lineage_rows(owned, job_id))
-        stats = summary(buckets).collect()[0].asDict()
-        # incremental watermark: max over the (tiny) lineage table — a
-        # per-bucket max(warc_ts) carried through the extract's output rows
-        # (operators/extract.py RAW_EXTRACTED_SCHEMA) — NOT a second scan of
-        # the 100 TB input. Note select_pages can drop a doc's rows, so this
-        # can trail the input max; the monotone max() with the previous
-        # watermark below keeps resume idempotent either way.
-        new_wm = (
-            sink.read_lineage(spark)
-            .agg(F.max("max_warc_ts").alias("wm"))
-            .collect()[0]
-            .wm
+        if owned.num_rows:
+            sink.write_lineage(owned)
+        stats = fold_summary(buckets)
+        # incremental watermark: the lineage max after this append (module
+        # docstring), from the per-bucket max(warc_ts) carried through the
+        # extract's output rows (operators/extract.py RAW_EXTRACTED_SCHEMA)
+        # — NOT a second scan of the 100 TB input. Note select_pages can
+        # drop a doc's rows, so this can trail the input max; the monotone
+        # max() with the previous watermark below keeps resume idempotent
+        # either way. Rendered as str() of a naive UTC datetime.
+        owned_wm = pc.max(
+            pc.cast(owned["max_warc_ts"], pa.timestamp("us"))
+        ).as_py()
+        new_wm = max(
+            (wm for wm in (lineage_wm, owned_wm) if wm is not None),
+            default=None,
         )
         meta: dict = {"summary": stats}
         if new_wm is not None:

@@ -30,7 +30,12 @@ from zerox_spark.operators.dedup import (
     with_injected_duplicates,
 )
 from zerox_spark.operators.extract import extract_pages
-from zerox_spark.operators.lineage import bucket_aggregate, lineage_rows, summary
+from zerox_spark.operators.lineage import (
+    SUMMARY_SCHEMA,
+    bucket_aggregate,
+    fold_summary,
+    lineage_rows,
+)
 from zerox_spark.operators.multimodal import media_metadata
 from zerox_spark.operators.similarity import ann_topk_exact, ann_topk_lsh
 from zerox_spark.operators.textstats import (
@@ -354,10 +359,12 @@ def q_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_extract_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3/A4: the ZeroxOutput.summary analog over the whole corpus."""
-    return summary(
-        bucket_aggregate(_extracted(spark, sf_dir, maintain_format=True))
-    )
+    """A3/A4: the ZeroxOutput.summary analog over the whole corpus, folded
+    on the driver from the collected bucket rows like pipeline.run's."""
+    buckets = bucket_aggregate(
+        _extracted(spark, sf_dir, maintain_format=True)
+    ).toArrow()
+    return spark.createDataFrame([fold_summary(buckets)], SUMMARY_SCHEMA)
 
 
 def q_keyword_hits(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,10 +9,20 @@ implements the same contract on plain parquet:
 - extracted table partitioned by the logical url bucket (``partition_id``),
   written with **dynamic partition overwrite** — re-emitting a bucket on
   resume replaces exactly that bucket's files, nothing else (idempotence);
-- lineage table is append-only; the latest SUCCESS row per (job_id, bucket)
-  is authoritative (operators/resume.py filters on it);
+- lineage is commit metadata, like ``_snapshots/`` and ``_num_buckets``:
+  the driver reads it with pyarrow before the write (``lineage_state``:
+  this job_id's SUCCESS buckets, which operators/resume.py skips, and the
+  max ``max_warc_ts``) and appends one parquet file of at most
+  ``num_buckets`` rows after it (``write_lineage``), in the physical types
+  Spark writes (INT96 timestamps), so ``read_lineage``, DuckDB and pyarrow
+  read a mix of Spark- and driver-written files alike;
 - a tiny JSON snapshot manifest is written after each successful commit —
   the parquet-mode stand-in for Iceberg's snapshot log.
+
+Every driver-side file (the manifest, a lineage file, the bucket-count
+pin) is written whole or not at all: a hidden temp file in the same
+directory, then ``os.replace`` (``_write_replacing``). A crash leaves at
+most a dot-file that every reader skips, never a truncated manifest.
 
 Mirrors the reference's sink layer (markdown file + ZeroxOutput,
 node-zerox/src/index.ts:564-607) lifted to table semantics (SURVEY.md §2.8).
@@ -20,17 +30,30 @@ node-zerox/src/index.ts:564-607) lifted to table semantics (SURVEY.md §2.8).
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
+import pathlib
+import re
 import time
+import uuid
 from typing import Callable, TypeVar
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import types as T, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from zerox_spark.schema import LINEAGE_SCHEMA
 
 _R = TypeVar("_R")
+
+# LINEAGE_SCHEMA in Arrow, timestamps naive UTC (the session time zone)
+LINEAGE_ARROW_SCHEMA = to_arrow_schema(LINEAGE_SCHEMA, timestamp_utc=False)
+_SNAP_NAME = re.compile(r"snap-(\d{6,})\.json")
 
 
 def run_retries(fn: Callable[[], _R], max_retries: int = 1) -> _R:
@@ -46,6 +69,22 @@ def run_retries(fn: Callable[[], _R], max_retries: int = 1) -> _R:
             if attempt >= max_retries:
                 raise
             attempt += 1
+
+
+def _write_replacing(path: str, write: Callable[[str], None]) -> None:
+    """Create or replace ``path`` atomically: ``write`` fills a hidden temp
+    file beside it, which ``os.replace`` renames over ``path``. If
+    ``write`` raises, the temp file is removed and ``path`` is untouched."""
+    tmp = os.path.join(
+        os.path.dirname(path),
+        f".{os.path.basename(path)}.{uuid.uuid4().hex}.tmp",
+    )
+    try:
+        write(tmp)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def latest_versions(extracted: DataFrame) -> DataFrame:
@@ -90,8 +129,12 @@ class ParquetSnapshotSink:
                 )
             return
         os.makedirs(self.root, exist_ok=True)
-        with open(self.buckets_path, "w", encoding="utf-8") as fh:
-            fh.write(str(num_buckets))
+        _write_replacing(
+            self.buckets_path,
+            lambda tmp: pathlib.Path(tmp).write_text(
+                str(num_buckets), encoding="utf-8"
+            ),
+        )
 
     def write_extracted(
         self, extracted: DataFrame, snap_id: int = 0, append: bool = False
@@ -119,26 +162,77 @@ class ParquetSnapshotSink:
             .parquet(self.extracted_path)
         )
 
-    def write_lineage(self, lineage: DataFrame) -> None:
+    def lineage_state(
+        self, job_id: str
+    ) -> tuple[frozenset[int], datetime.datetime | None]:
+        """The lineage a run needs before it writes, read on the driver:
+        the buckets ``job_id`` committed with status SUCCESS, and the max
+        ``max_warc_ts`` over all rows (naive UTC, None if there is none).
+        A sink without a lineage directory reads nothing.
+
+        EXPLICIT schema: a sink dir written by an older engine version
+        may lack newer columns (e.g. max_warc_ts); the known schema
+        null-fills them. Spark writes timestamps as INT96, which the
+        reader coerces to the schema's microseconds."""
+        if not os.path.isdir(self.lineage_path):
+            return frozenset(), None
+        # two column-pruned scans: the job filter is pushed into the
+        # first, so the driver holds the job's ids and one column of
+        # timestamps, not the whole table
+        lineage = ds.dataset(
+            self.lineage_path,
+            schema=LINEAGE_ARROW_SCHEMA,
+            format=ds.ParquetFileFormat(
+                read_options=ds.ParquetReadOptions(
+                    coerce_int96_timestamp_unit="us"
+                )
+            ),
+        )
+        mine = lineage.to_table(
+            columns=["partition_id"],
+            filter=(pc.field("job_id") == job_id)
+            & (pc.field("status") == "SUCCESS"),
+        )
+        return (
+            frozenset(mine["partition_id"].to_pylist()),
+            pc.max(
+                lineage.to_table(columns=["max_warc_ts"])["max_warc_ts"]
+            ).as_py(),
+        )
+
+    def write_lineage(self, lineage: pa.Table) -> None:
+        """Append the LINEAGE_SCHEMA columns of ``lineage`` as one parquet
+        file with Spark's physical types: zstd, INT96 timestamps."""
+        lineage = lineage.select(LINEAGE_ARROW_SCHEMA.names).cast(
+            LINEAGE_ARROW_SCHEMA
+        )
+        os.makedirs(self.lineage_path, exist_ok=True)
+        path = os.path.join(
+            self.lineage_path, f"part-{uuid.uuid4().hex}-driver.zstd.parquet"
+        )
         run_retries(
-            lambda: lineage.write.mode("append").parquet(self.lineage_path)
+            lambda: _write_replacing(
+                path,
+                lambda tmp: pq.write_table(
+                    lineage, tmp, compression="zstd",
+                    use_deprecated_int96_timestamps=True,
+                ),
+            )
         )
 
     def read_lineage(self, spark: SparkSession) -> DataFrame:
-        # EXPLICIT schema: a sink dir written by an older engine version
-        # may lack newer columns (e.g. max_warc_ts) — single-footer
-        # inference could sample an old file and fail the watermark
-        # aggregation AFTER the expensive extraction ran, and mergeSchema
-        # would pay a footer-merge over every part file on every read.
-        # The known schema null-fills old files for free.
+        """The lineage table as a DataFrame, for queries and audits (a run
+        reads it with ``lineage_state``). Explicit schema for the same
+        old-sink-dir reason as there; mergeSchema would pay a footer merge
+        over every part file on every read."""
         try:
             return spark.read.schema(LINEAGE_SCHEMA).parquet(
                 self.lineage_path
             )
         except Exception:  # first run: no lineage yet
-            # emptyRDD has 0 partitions, so the resume and lineage
-            # anti-joins launch no tasks over it; createDataFrame([]) is a
-            # Python-backed RDD of defaultParallelism Python tasks
+            # emptyRDD has 0 partitions, so a query over it launches no
+            # tasks; createDataFrame([]) is a Python-backed RDD of
+            # defaultParallelism Python tasks
             return spark.createDataFrame(
                 spark.sparkContext.emptyRDD(), LINEAGE_SCHEMA
             )
@@ -156,20 +250,25 @@ class ParquetSnapshotSink:
     def read_extracted_latest(self, spark: SparkSession) -> DataFrame:
         return latest_versions(self.read_extracted(spark))
 
+    def _snap_ids(self) -> list[int]:
+        """Committed snapshot ids, ascending: the ``snap-NNNNNN.json``
+        names only, so a stray file or a temp file is never read."""
+        if not os.path.isdir(self.snap_dir):
+            return []
+        return sorted(
+            int(m.group(1))
+            for m in map(_SNAP_NAME.fullmatch, os.listdir(self.snap_dir))
+            if m
+        )
+
+    def _snap_path(self, snap_id: int) -> str:
+        return os.path.join(self.snap_dir, f"snap-{snap_id:06d}.json")
+
     def _max_snap_id(self) -> int:
         """Highest committed snapshot id, -1 if none. max()+1 — NOT a
         file count: deleting/compacting an old snapshot file must never
         make a new id collide with rows already on disk."""
-        if not os.path.isdir(self.snap_dir):
-            return -1
-        best = -1
-        for name in os.listdir(self.snap_dir):
-            if name.startswith("snap-") and name.endswith(".json"):
-                try:
-                    best = max(best, int(name[5:-5]))
-                except ValueError:
-                    continue
-        return best
+        return max(self._snap_ids(), default=-1)
 
     def next_snapshot_id(self) -> int:
         return self._max_snap_id() + 1
@@ -177,21 +276,23 @@ class ParquetSnapshotSink:
     def commit_snapshot(self, job_id: str, meta: dict) -> str:
         os.makedirs(self.snap_dir, exist_ok=True)
         snap_id = self._max_snap_id() + 1
-        path = os.path.join(self.snap_dir, f"snap-{snap_id:06d}.json")
+        path = self._snap_path(snap_id)
         payload = {"snapshot": snap_id, "job_id": job_id,
                    "ts": int(time.time() * 1000), **meta}
-        with open(path, "w", encoding="utf-8") as fh:
-            json.dump(payload, fh, sort_keys=True)
+
+        def dump(tmp: str) -> None:
+            with open(tmp, "w", encoding="utf-8") as fh:
+                json.dump(payload, fh, sort_keys=True)
+
+        _write_replacing(path, dump)
         return path
 
     def last_watermark(self) -> str | None:
         """High watermark (max warc_ts, isoformat) committed by the latest
         snapshot that recorded one — the incremental-scan cursor (the
         parquet-mode analog of reading Iceberg's snapshot summary)."""
-        if not os.path.isdir(self.snap_dir):
-            return None
-        for name in sorted(os.listdir(self.snap_dir), reverse=True):
-            with open(os.path.join(self.snap_dir, name), encoding="utf-8") as fh:
+        for snap_id in reversed(self._snap_ids()):
+            with open(self._snap_path(snap_id), encoding="utf-8") as fh:
                 meta = json.load(fh)
             if meta.get("watermark"):
                 return meta["watermark"]
@@ -269,8 +370,29 @@ class IcebergSink:
             self.extracted_table
         ).overwritePartitions()
 
-    def write_lineage(self, lineage: DataFrame) -> None:
-        lineage.writeTo(self.lineage_table).append()
+    def lineage_state(
+        self, job_id: str
+    ) -> tuple[frozenset[int], datetime.datetime | None]:
+        """ParquetSnapshotSink.lineage_state in one Spark collect."""
+        mine = (F.col("job_id") == job_id) & (F.col("status") == "SUCCESS")
+        row = (
+            SparkSession.active()
+            .read.table(self.lineage_table)
+            .agg(
+                F.collect_set(
+                    F.when(mine, F.col("partition_id"))
+                ).alias("done"),
+                F.max("max_warc_ts").alias("wm"),
+            )
+            .first()
+        )
+        return frozenset(row.done), row.wm
+
+    def write_lineage(self, lineage: pa.Table) -> None:
+        SparkSession.active().createDataFrame(
+            lineage.select(LINEAGE_SCHEMA.names).cast(LINEAGE_ARROW_SCHEMA),
+            LINEAGE_SCHEMA,
+        ).writeTo(self.lineage_table).append()
 
     def read_lineage(self, spark: SparkSession) -> DataFrame:
         return spark.read.table(self.lineage_table)

@@ -19,7 +19,7 @@ Design notes:
   late data: pages/bytes per event-time window, tolerating
   ``late_threshold`` of out-of-order arrival.
 - Checkpointing gives resume-on-restart for free (the streaming analog of
-  the batch lineage/anti-join machinery in operators/resume.py).
+  the batch lineage/resume-filter machinery in operators/resume.py).
 """
 
 from __future__ import annotations
