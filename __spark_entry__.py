@@ -28,7 +28,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     pages = synth_pages(spark, "/root/testdata/sf0.001")
     pipe = ExtractionPipeline(
-        PipelineConfig(num_partitions=8, num_buckets=16, maintain_format=True)
+        PipelineConfig(num_partitions=8, num_buckets=16)
     )
     return pipe.transform(pages).select(
         "url", "page_no", "markdown", "content_length", "status"

@@ -192,3 +192,40 @@ def test_streaming_job_cli_empty_backlog_prints_zero_totals(tmp_path):
     assert stats == {
         "mode": "streaming", "total_docs": 0, "total_pages": 0, "failed": 0
     }
+
+
+def test_streaming_job_main_reads_back_totals(spark, tmp_path, capsys):
+    """job.main --streaming in process over a non-empty backlog: the
+    printed totals are read back from the stream sink, and a rerun after a
+    new file lands adds only that file's rows (the checkpoint); its empty
+    payload is one ERROR page."""
+    import json
+
+    from zerox_spark import job
+
+    pages_dir = str(tmp_path / "pages")
+    spark.createDataFrame(
+        [_page("https://m/1", 10, "main one"), _page("https://m/2", 20, "main two")],
+        PAGES_SCHEMA,
+    ).write.parquet(pages_dir)
+    # the fixture's master: get_spark re-applies its settings (the shuffle
+    # width among them) to the running session that job.main picks up
+    argv = [
+        "--streaming", "--input", pages_dir, "--output", str(tmp_path / "out"),
+        "--master", "local[4]",
+    ]
+
+    def totals():
+        assert job.main(argv) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    assert totals() == {
+        "mode": "streaming", "total_docs": 2, "total_pages": 2, "failed": 0
+    }
+    empty = _page("https://m/3", 30, "").asDict() | {"html": b""}
+    spark.createDataFrame([Row(**empty)], PAGES_SCHEMA).write.mode(
+        "append"
+    ).parquet(pages_dir)
+    assert totals() == {
+        "mode": "streaming", "total_docs": 3, "total_pages": 3, "failed": 1
+    }

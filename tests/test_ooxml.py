@@ -10,12 +10,7 @@ import zipfile
 import pytest
 
 from zerox_spark.extract.core import ExtractConfig, extract_document
-from zerox_spark.extract.ooxml import (
-    docx_to_pages,
-    ooxml_to_pages,
-    xlsx_to_grids,
-    xlsx_to_pages,
-)
+from zerox_spark.extract.ooxml import ooxml_to_pages, xlsx_to_grids
 from zerox_spark.synth import (
     _PKG_RELS,
     _XLSX_CT,
@@ -117,13 +112,13 @@ def test_xlsx_empty_rows_dropped_and_cells_without_ref():
 
 
 def test_xlsx_first_row_is_th():
-    md = xlsx_to_pages(render_xlsx(4))[0][1]
+    md = ooxml_to_pages(render_xlsx(4))[0][1]
     assert "<th>name</th><th>q1</th><th>q2</th>" in md
     assert md.startswith("## Sheet: data")
 
 
 def test_docx_renderer_pages_and_styles():
-    pages = docx_to_pages(render_docx(7, "a b c d e f g h i j k l"))
+    pages = ooxml_to_pages(render_docx(7, "a b c d e f g h i j k l"))
     assert len(pages) == 2
     p1, p2 = pages[0][1], pages[1][1]
     assert p1.startswith("# Document 7")  # Title style
@@ -148,12 +143,12 @@ def test_docx_page_break_before_property():
             ("word/document.xml", doc),
         ]
     )
-    pages = docx_to_pages(payload)
+    pages = ooxml_to_pages(payload)
     assert [(n, md) for n, md, _ in pages] == [(1, "one"), (2, "two")]
 
 
 def test_docx_xml_entities_unescaped():
-    pages = docx_to_pages(render_docx(1, "a < b & c"))
+    pages = ooxml_to_pages(render_docx(1, "a < b & c"))
     assert "a < b & c" in pages[0][1]
 
 
@@ -194,10 +189,9 @@ def test_throw_mode_propagates_ooxml_errors():
 
 
 def test_pptx_renderer_slides_title_body_table():
-    from zerox_spark.extract.ooxml import pptx_to_pages
     from zerox_spark.synth import render_pptx
 
-    pages = pptx_to_pages(render_pptx(7, "a b c d e f g h i j k l"))
+    pages = ooxml_to_pages(render_pptx(7, "a b c d e f g h i j k l"))
     assert len(pages) == 2
     p1, p2 = pages[0][1], pages[1][1]
     assert p1.startswith("# Document 7")
@@ -222,7 +216,6 @@ def test_pptx_routes_through_extract_document():
 def test_pptx_empty_slide_skipped_and_renumbered():
     """A slide whose shapes carry no text yields no page; later slides
     renumber sequentially (the docx empty-page contract)."""
-    from zerox_spark.extract.ooxml import pptx_to_pages
     from zerox_spark.synth import (
         _PKG_RELS,
         _PPTX_CT,
@@ -253,12 +246,11 @@ def test_pptx_empty_slide_skipped_and_renumbered():
             ("ppt/slides/slide2.xml", _pptx_slide(_pptx_sp("only text"))),
         ]
     )
-    pages = pptx_to_pages(payload)
+    pages = ooxml_to_pages(payload)
     assert [(n, md) for n, md, _ in pages] == [(1, "only text")]
 
 
 def test_pptx_grouped_shapes_recurse_in_order():
-    from zerox_spark.extract.ooxml import pptx_to_pages
     from zerox_spark.synth import (
         _PKG_RELS,
         _PPTX_CT,
@@ -290,7 +282,7 @@ def test_pptx_grouped_shapes_recurse_in_order():
             ),
         ]
     )
-    assert pptx_to_pages(payload)[0][1] == (
+    assert ooxml_to_pages(payload)[0][1] == (
         "before\n\ninner one\n\ninner two\n\nafter"
     )
 
@@ -320,8 +312,6 @@ def _odt(body: str) -> bytes:
 
 
 def test_odt_headings_paragraphs_lists_tables():
-    from zerox_spark.extract.ooxml import odt_to_pages
-
     body = (
         '<text:h text:outline-level="1">Title</text:h>'
         "<text:p>Some <text:span>nested</text:span> body.</text:p>"
@@ -335,7 +325,7 @@ def test_odt_headings_paragraphs_lists_tables():
         "<table:table-cell><text:p>b</text:p></table:table-cell>"
         "</table:table-row></table:table>"
     )
-    pages = odt_to_pages(_odt(body))
+    pages = ooxml_to_pages(_odt(body))
     assert len(pages) == 1
     md = pages[0][1]
     assert md.startswith("# Title")
@@ -348,14 +338,12 @@ def test_odt_headings_paragraphs_lists_tables():
 
 
 def test_odt_space_run_and_tab_elements():
-    from zerox_spark.extract.ooxml import odt_to_pages
-
     body = (
         '<text:p>a<text:s text:c="3"/>b<text:tab/>c</text:p>'
     )
     # runs of spaces collapse in the inline contract at emission? blocks are
     # emitted raw here — the <text:s> expands, the emitter's join keeps it
-    md = odt_to_pages(_odt(body))[0][1]
+    md = ooxml_to_pages(_odt(body))[0][1]
     assert md == "a   b c"
 
 
@@ -417,9 +405,8 @@ def test_ods_repeated_columns_and_rows():
         "</table:table-row>"
         "</table:table>"
     )
-    from zerox_spark.extract.ooxml import odt_to_pages
 
-    md = odt_to_pages(_ods(body))[0][1]
+    md = ooxml_to_pages(_ods(body))[0][1]
     assert (
         "<table><tr><th>x</th><th>x</th><th>x</th></tr>"
         "<tr><td>y</td></tr><tr><td>y</td></tr></table>" in md
@@ -438,9 +425,8 @@ def test_ods_empty_repeat_filler_dropped_and_value_attr_fallback():
         "</table:table-row>"
         "</table:table>"
     )
-    from zerox_spark.extract.ooxml import odt_to_pages
 
-    md = odt_to_pages(_ods(body))[0][1]
+    md = ooxml_to_pages(_ods(body))[0][1]
     assert "<table><tr><th>42</th></tr></table>" in md
 
 
@@ -454,10 +440,9 @@ def test_ods_routes_through_extract_document():
 
 
 def test_odp_renderer_slides_and_title_mapping():
-    from zerox_spark.extract.ooxml import odt_to_pages
     from zerox_spark.synth import render_odp
 
-    pages = odt_to_pages(render_odp(9, "w1 w2 w3"))
+    pages = ooxml_to_pages(render_odp(9, "w1 w2 w3"))
     assert [(n, md) for n, md, _ in pages] == [
         (1, "# Document 9\n\nw1 w2 w3"),
         (2, "# Section 9\n\nw1 w2 w3"),
@@ -468,10 +453,9 @@ def test_odp_ppt_pptx_same_text_shape():
     """odp, legacy .ppt and (table-less slides of) pptx share the slide
     page shape: title heading + body paragraphs."""
     from zerox_spark.extract.legacy_office import ppt_to_pages
-    from zerox_spark.extract.ooxml import odt_to_pages
     from zerox_spark.synth import render_odp, render_ppt
 
-    odp = [(n, md) for n, md, _ in odt_to_pages(render_odp(5, "a b c"))]
+    odp = [(n, md) for n, md, _ in ooxml_to_pages(render_odp(5, "a b c"))]
     ppt = [(n, md) for n, md, _ in ppt_to_pages(render_ppt(5, "a b c"))]
     assert odp == ppt
 

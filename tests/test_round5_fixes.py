@@ -455,7 +455,7 @@ class TestCompressedPayloads:
         # VERDICT r4 #7: bit-flip anywhere in a two-member gzip payload →
         # full decode, keep-what-decoded truncation, or a contained
         # ValueError — never an uncontained exception or a hang
-        from zerox_spark.extract.core import _gunzip_payload
+        from zerox_spark.extract.core import _unwrap_payload
 
         m1 = gzip.compress(b"<p>first member body</p>" * 20)
         m2 = gzip.compress(b"<p>second member body</p>" * 20)
@@ -463,7 +463,7 @@ class TestCompressedPayloads:
         payload[pos % len(payload)] ^= 1 << bit
         cfg = ExtractConfig()
         try:
-            out = _gunzip_payload(bytes(payload), cfg)
+            out = _unwrap_payload("gzip", bytes(payload), cfg)
         except ValueError:
             return  # contained
         assert isinstance(out, bytes) and out
@@ -472,23 +472,23 @@ class TestCompressedPayloads:
         # VERDICT r4 #7 boundary: a corrupt FIRST member keeps its decoded
         # output IF any chunk materialized before the error (output spans
         # multiple 1 MB inflate chunks), and raises when nothing did
-        from zerox_spark.extract.core import _gunzip_payload
+        from zerox_spark.extract.core import _unwrap_payload
 
         big = bytearray(gzip.compress(b"A" * 3_000_000))
         big[-5] ^= 0xFF  # CRC fails AFTER ~2 chunks appended → keep
-        out = _gunzip_payload(bytes(big), ExtractConfig())
+        out = _unwrap_payload("gzip", bytes(big), ExtractConfig())
         assert out.startswith(b"AAAA") and len(out) >= 1 << 20
         small = bytearray(gzip.compress(b"A" * 1000))
         small[-5] ^= 0xFF  # whole member decodes in one call → CRC error
         with pytest.raises(ValueError):  # before any chunk appended
-            _gunzip_payload(bytes(small), ExtractConfig())
+            _unwrap_payload("gzip", bytes(small), ExtractConfig())
 
     def test_zero_output_corrupt_gzip_raises(self):
-        from zerox_spark.extract.core import _gunzip_payload
+        from zerox_spark.extract.core import _unwrap_payload
 
         junk = b"\x1f\x8b" + b"\x00" * 64
         with pytest.raises(ValueError):
-            _gunzip_payload(junk, ExtractConfig())
+            _unwrap_payload("gzip", junk, ExtractConfig())
 
 
 # --------------------------------------------------------------------------

@@ -27,6 +27,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from zerox_spark.extract.fences import format_markdown
+from zerox_spark.extract.inflate import CODEC_ERRORS, inflate
 from zerox_spark.extract.layout import PDF_MAGIC, SYNTH_MAGIC, pdf_to_pages
 from zerox_spark.extract.markdown import Block, html_to_markdown, join_blocks
 from zerox_spark.extract.pages import normalize_select_pages, select_and_renumber
@@ -399,10 +400,7 @@ def _extract_raw(
             # per-scheme nested checks cannot see across schemes.
             if _depth >= 2:
                 raise ValueError("compression nesting too deep")
-            if kind == "gzip":
-                inner = _gunzip_payload(html, config)
-            else:
-                inner = _bounded_decompress(kind, html, config)
+            inner = _unwrap_payload(kind, html, config)
             return _extract_raw(inner, text, config, _depth + 1)
     if route is None or route.text:
         src = _decode_payload(html).replace("\r\n", "\n").replace("\r", "\n")
@@ -476,111 +474,23 @@ _CHARSET_ALIASES = {
 }
 
 
-def _gunzip_payload(html: bytes, config: "ExtractConfig") -> bytes:
-    """Bounded gzip inflate for transfer-encoded crawl payloads: output is
-    capped at 4× the payload budget and raised incrementally (a bomb dies
-    at the cap, never after materializing); nested gzip (bomb shape) and
-    empty results are contained errors."""
-    import zlib
-
+def _unwrap_payload(kind: str, html: bytes, config: "ExtractConfig") -> bytes:
+    """Bounded inflate of a transfer-encoded crawl payload (gzip, bzip2 or
+    xz; ``inflate.py``). Output is capped at 4× the payload budget; a
+    corrupt payload that decodes to nothing, an empty result and the same
+    scheme nested inside (the bomb shape) are contained errors."""
     cap = (config.max_payload_bytes or 16 * 1024 * 1024) * 4
-    out: list[bytes] = []
-    total = 0
-    data = html
-    members = 0
     try:
-        # gzip files are a SEQUENCE of members (RFC 1952 §2.2; gzip -c a b
-        # > ab.gz); decode them all, same budget across the whole payload
-        while data and members < 64:
-            members += 1
-            d = zlib.decompressobj(31)  # gzip wrapper
-            chunk = d.decompress(data, 1 << 20)
-            while True:
-                total += len(chunk)
-                if total > cap:
-                    raise ValueError("gzip payload expands past the budget")
-                out.append(chunk)
-                if not d.unconsumed_tail:
-                    break
-                chunk = d.decompress(d.unconsumed_tail, 1 << 20)
-                if not chunk and d.unconsumed_tail:
-                    break  # no progress — corrupt tail
-            tail = d.flush()
-            total += len(tail)
-            if total > cap:
-                raise ValueError("gzip payload expands past the budget")
-            out.append(tail)
-            data = d.unused_data if d.eof else b""
-            if data[:2] != b"\x1f\x8b":
-                break  # trailing non-gzip bytes: ignore (padding/garbage)
-        if data[:2] == b"\x1f\x8b":
-            raise ValueError("gzip payload exceeds the member cap")
-    except zlib.error as exc:
-        if not any(out):
-            raise ValueError(f"corrupt gzip payload: {exc}") from exc
-        # a corrupt LATER member truncates — keep what decoded (the same
-        # tolerance the WARC reader applies to damaged archives)
-    data = b"".join(out)
+        data = inflate(html, kind, cap)
+    except CODEC_ERRORS as exc:
+        raise ValueError(f"corrupt {kind} payload: {exc}") from exc
     if not data:
-        raise ValueError("gzip payload decompressed to nothing")
-    if sniff_binary(data) == "gzip":
-        raise ValueError("nested gzip payload")
-    return data
-
-
-def _bounded_decompress(
-    kind: str, html: bytes, config: "ExtractConfig"
-) -> bytes:
-    """Bounded bz2/xz inflate with the gzip path's exact contract:
-    incremental budget enforcement, multi-stream concatenation (pbzip2 and
-    `xz -c a b` emit stream sequences), corrupt-later-stream truncation,
-    nested-compression rejection."""
-    import bz2
-    import lzma
-
-    mk, magic = {
-        "bzip2": (bz2.BZ2Decompressor, b"BZh"),
-        "xz": (lzma.LZMADecompressor, b"\xfd7zXZ\x00"),
-    }[kind]
-    cap = (config.max_payload_bytes or 16 * 1024 * 1024) * 4
-    out: list[bytes] = []
-    total = 0
-    data = html
-    streams = 0
-    try:
-        while data and streams < 64:
-            streams += 1
-            d = mk()
-            buf = data
-            while True:
-                chunk = d.decompress(buf, 1 << 20)
-                buf = b""
-                total += len(chunk)
-                if total > cap:
-                    raise ValueError(
-                        f"{kind} payload expands past the budget"
-                    )
-                out.append(chunk)
-                if d.eof or d.needs_input:
-                    break
-            data = d.unused_data if d.eof else b""
-            if data[: len(magic)] != magic:
-                break  # trailing non-stream bytes: ignore
-        if data[: len(magic)] == magic:
-            raise ValueError(f"{kind} payload exceeds the stream cap")
-    except (OSError, EOFError, lzma.LZMAError) as exc:
-        if not any(out):
-            raise ValueError(f"corrupt {kind} payload: {exc}") from exc
-        # corrupt later stream truncates — keep what decoded
-    joined = b"".join(out)
-    if not joined:
         raise ValueError(f"{kind} payload decompressed to nothing")
-    if sniff_binary(joined) == kind:
-        # same-scheme-in-scheme is the classic bomb shape; a DIFFERENT
-        # scheme inside is legitimate layering (bz2 dump of gzip bodies)
-        # and is bounded by the dispatch depth guard instead
+    if sniff_binary(data) == kind:
+        # a DIFFERENT scheme inside is legitimate layering (bz2 dump of
+        # gzip bodies) and is bounded by the dispatch depth guard instead
         raise ValueError(f"nested {kind} payload")
-    return joined
+    return data
 
 
 def _decode_payload(html: bytes) -> str:

@@ -266,18 +266,11 @@ def grids_to_pages(
     return out
 
 
-def xlsx_to_pages(
-    payload: bytes,
-) -> list[tuple[int, str, list[tuple[str, int, int, float]]]]:
-    """Sheet k → page k (extractPagesFromStructuredDataFile,
-    file.ts:311-329)."""
-    with _zip(payload) as zf:
-        return _xlsx_pages(zf)
-
-
 def _xlsx_pages(
     zf: zipfile.ZipFile,
 ) -> list[tuple[int, str, list[tuple[str, int, int, float]]]]:
+    """Sheet k → page k (extractPagesFromStructuredDataFile,
+    file.ts:311-329)."""
     return grids_to_pages(_xlsx_grids(zf))
 
 
@@ -351,17 +344,10 @@ def _docx_table_block(tbl: ET.Element) -> Block | None:
     return Block("table", grid_table(rows))
 
 
-def docx_to_pages(
-    payload: bytes,
-) -> list[tuple[int, str, list[tuple[str, int, int, float]]]]:
-    """word/document.xml body → pages split on explicit page breaks."""
-    with _zip(payload) as zf:
-        return _docx_pages(zf)
-
-
 def _docx_pages(
     zf: zipfile.ZipFile,
 ) -> list[tuple[int, str, list[tuple[str, int, int, float]]]]:
+    """word/document.xml body → pages split on explicit page breaks."""
     root = _read_xml(zf, "word/document.xml")
     body = root.find(f"{_W}body")
     if body is None:
@@ -438,7 +424,7 @@ def ooxml_to_pages(
 # after xlsx/docx, README.md:508-509, routed via convertFileToPdf,
 # node-zerox/src/utils/file.ts:129-150; libreoffice rasterizes slide k to
 # page k, so slide = page is the deterministic analog, exactly the
-# sheet-per-page shape of xlsx_to_pages)
+# sheet-per-page shape of xlsx)
 
 _P = "{http://schemas.openxmlformats.org/presentationml/2006/main}"
 _A = "{http://schemas.openxmlformats.org/drawingml/2006/main}"
@@ -542,18 +528,11 @@ def _pptx_slide_blocks(
     return blocks
 
 
-def pptx_to_pages(
-    payload: bytes,
-) -> list[tuple[int, str, list[tuple[str, int, int, float]]]]:
-    """Slide k → page k; title placeholder → '# ' heading, body paragraphs
-    → para blocks, a:tbl → the canonical first-row-<th> table."""
-    with _zip(payload) as zf:
-        return _pptx_pages(zf)
-
-
 def _pptx_pages(
     zf: zipfile.ZipFile,
 ) -> list[tuple[int, str, list[tuple[str, int, int, float]]]]:
+    """Slide k → page k; title placeholder → '# ' heading, body paragraphs
+    → para blocks, a:tbl → the canonical first-row-<th> table."""
     budget = OutputBudget()
     zip_budget = [MAX_CONTAINER_BYTES]
     out = []
@@ -637,16 +616,6 @@ def _odt_block(el: ET.Element) -> Block | None:
             rows.append(cells)
         return Block("table", grid_table(rows)) if rows else None
     return None
-
-
-def odt_to_pages(
-    payload: bytes,
-) -> list[tuple[int, str, list[tuple[str, int, int, float]]]]:
-    """content.xml office:body/office:text children → one page of blocks
-    (ODT pagination is renderer-defined, like docx without explicit
-    breaks)."""
-    with _zip(payload) as zf:
-        return _odt_pages(zf)
 
 
 _O = "{urn:oasis:names:tc:opendocument:xmlns:office:1.0}"
@@ -761,6 +730,9 @@ def _odp_pages(
 def _odt_pages(
     zf: zipfile.ZipFile,
 ) -> list[tuple[int, str, list[tuple[str, int, int, float]]]]:
+    """content.xml office:body/office:text children → one page of blocks
+    (ODT pagination is renderer-defined, like docx without explicit
+    breaks)."""
     root = _read_xml(zf, "content.xml")
     body = root.find(f"{_O}body")
     if body is not None:

@@ -33,6 +33,8 @@ import struct
 import zlib
 from dataclasses import dataclass
 
+from zerox_spark.extract.inflate import inflate
+
 # --------------------------------------------------------------------------
 # budgets (error containment / bomb guards)
 
@@ -335,49 +337,21 @@ class Keyword(bytes):
 # filters
 
 
-def _inflate_bounded(d, data: bytes) -> bytes:
-    """Incremental inflate that raises the MOMENT output passes the budget
-    — a 10 MB bomb expanding to 10 GB must die at 64 MB of output, not
-    after full materialization (zlib.decompress has no output cap; a
-    decompressobj's max_length only bounds one call, and flush() is again
-    unbounded)."""
-    out = []
-    total = 0
-    try:
-        chunk = d.decompress(data, 1 << 20)
-        while True:
-            total += len(chunk)
-            if total > MAX_STREAM_BYTES:
-                raise PdfError("stream decompression budget exceeded")
-            out.append(chunk)
-            if not d.unconsumed_tail:
-                break
-            chunk = d.decompress(d.unconsumed_tail, 1 << 20)
-            if not chunk and d.unconsumed_tail:
-                break  # no progress — corrupt tail
-        tail = d.flush(1 << 20)
-        if total + len(tail) > MAX_STREAM_BYTES:
-            raise PdfError("stream decompression budget exceeded")
-        out.append(tail)
-    except zlib.error:
-        # keep-what-decoded (damaged-PDF salvage): a stream truncated by a
-        # cut-off download still yields its valid prefix — the content
-        # tokenizer just stops at the cut. Zero output (e.g. a missing
-        # zlib header) re-raises so _flate's raw-deflate fallback runs.
-        if not total:
-            raise
-    return b"".join(out)
-
-
 def _flate(data: bytes) -> bytes:
+    """FlateDecode through the bounded inflate (``inflate.py``): a 10 MB
+    bomb expanding to 10 GB dies at 64 MB of output. A damaged stream keeps
+    the prefix that decoded (a stream cut off by a truncated download still
+    yields its text; the content tokenizer just stops at the cut)."""
     try:
-        return _inflate_bounded(zlib.decompressobj(), data)
-    except zlib.error:
-        # raw deflate (missing zlib header) — seen in the wild
         try:
-            return _inflate_bounded(zlib.decompressobj(-15), data)
-        except zlib.error as exc:
-            raise PdfError(f"flate: {exc}") from exc
+            return inflate(data, "zlib", MAX_STREAM_BYTES)
+        except zlib.error:
+            # raw deflate (missing zlib header) — seen in the wild
+            return inflate(data, "deflate", MAX_STREAM_BYTES)
+    except zlib.error as exc:
+        raise PdfError(f"flate: {exc}") from exc
+    except ValueError:  # one stream has no member cap: this is the budget
+        raise PdfError("stream decompression budget exceeded") from None
 
 
 def _ascii_hex(data: bytes) -> bytes:

@@ -113,7 +113,9 @@ def parse(src: str) -> list[Node]:
 
 
 def node_text(nodes: list[Node], idx: int) -> str:
-    """Concatenated raw text under a node (document order)."""
+    """Concatenated raw text under a node (document order): the text
+    accessor of this module's public DOM API, next to ``parse``. The
+    scoring and emit passes walk the node array themselves."""
     out: list[str] = []
     _collect_text(nodes, idx, out)
     return "".join(out)

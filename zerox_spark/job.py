@@ -87,9 +87,7 @@ def main(argv: list[str] | None = None) -> int:
 
     # config validation BEFORE any I/O (validate-at-init,
     # py_zerox/pyzerox/models/modellitellm.py:33-38)
-    from zerox_spark.extract.core import get_extractor
-
-    named_extractor = get_extractor(args.extractor or "auto")
+    extract_config = _extract_config(args)
     if args.iceberg and args.incremental:
         # the watermark cursor lives in the parquet sink's snapshot files;
         # IcebergSink keeps no such cursor
@@ -100,7 +98,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.streaming:
         if not args.input:
             raise SystemExit("--streaming requires --input (a stream dir)")
-        return _run_streaming(spark, args, named_extractor)
+        return _run_streaming(spark, args, extract_config)
 
     if args.synth_sf_dir:
         from zerox_spark.synth import synth_pages
@@ -121,19 +119,13 @@ def main(argv: list[str] | None = None) -> int:
             "one of --input / --input-warc / --synth-sf-dir is required"
         )
 
-    select_pages = (
-        [int(p) for p in args.select_pages.split(",")] if args.select_pages else None
+    pipe = ExtractionPipeline(
+        PipelineConfig(
+            num_partitions=args.partitions,
+            num_buckets=args.buckets,
+            extract=extract_config,
+        )
     )
-    config = PipelineConfig(
-        num_partitions=args.partitions,
-        num_buckets=args.buckets,
-        maintain_format=args.maintain_format,
-        error_mode=args.error_mode,
-        select_pages=select_pages,
-    )
-    if named_extractor is not None:
-        config.extract.extractor = named_extractor
-    pipe = ExtractionPipeline(config)
     sink = (
         IcebergSink(args.output + ".extracted", args.output + ".lineage")
         if args.iceberg
@@ -154,14 +146,29 @@ def main(argv: list[str] | None = None) -> int:
     return 0
 
 
-def _run_streaming(spark, args, named_extractor=None) -> int:
+def _extract_config(args: argparse.Namespace):
+    """The one ExtractConfig of a run, batch or streaming, from the CLI."""
+    from zerox_spark.extract.core import ExtractConfig, get_extractor
+
+    return ExtractConfig(
+        select_pages=(
+            [int(p) for p in args.select_pages.split(",")]
+            if args.select_pages
+            else None
+        ),
+        maintain_format=args.maintain_format,
+        error_mode=args.error_mode,
+        extractor=get_extractor(args.extractor or "auto"),
+    )
+
+
+def _run_streaming(spark, args, extract_config) -> int:
     """Streaming mode: file-source stream → extract → parquet sink with a
     checkpoint (resume-on-restart comes from the checkpoint; rerunning
     after a crash reprocesses only unconsumed files — the streaming analog
     of the batch bucket resume)."""
     import os
 
-    from zerox_spark.extract.core import ExtractConfig
     from zerox_spark.streaming import read_pages_stream, stream_extract
 
     # extracted_stream, NOT the batch sink's extracted/: the batch layout
@@ -170,23 +177,11 @@ def _run_streaming(spark, args, named_extractor=None) -> int:
     out_dir = os.path.join(args.output, "extracted_stream")
     ckpt_dir = os.path.join(args.output, "_checkpoint")
     stream = read_pages_stream(spark, args.input)
-    select_pages = (
-        [int(p) for p in args.select_pages.split(",")]
-        if args.select_pages
-        else None
-    )
-    cfg = ExtractConfig(
-        maintain_format=args.maintain_format,
-        error_mode=args.error_mode,
-        select_pages=select_pages,
-    )
-    if named_extractor is not None:
-        cfg.extractor = named_extractor
     q = stream_extract(
         stream,
         out_dir,
         ckpt_dir,
-        config=cfg,
+        config=extract_config,
         num_buckets=args.buckets,
         available_now=True,
     )

@@ -52,19 +52,10 @@ from zerox_spark.sinks import ParquetSnapshotSink
 class PipelineConfig:
     num_partitions: int = 32  # shuffle width; ≈ input_bytes / 200MB at scale
     num_buckets: int = 64  # lineage/resume/overwrite granularity
-    maintain_format: bool = True
-    trust_text: bool = True
-    error_mode: str = "IGNORE"
-    select_pages: list[int] | None = None
-    extract: ExtractConfig = field(init=False)
-
-    def __post_init__(self) -> None:
-        self.extract = ExtractConfig(
-            select_pages=self.select_pages,
-            maintain_format=self.maintain_format,
-            error_mode=self.error_mode,
-            trust_text=self.trust_text,
-        )
+    # the job folds continued tables by default (maintainFormat)
+    extract: ExtractConfig = field(
+        default_factory=lambda: ExtractConfig(maintain_format=True)
+    )
 
 
 class ExtractionPipeline:

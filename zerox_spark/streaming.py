@@ -32,14 +32,9 @@ from zerox_spark.operators.extract import extract_pages
 from zerox_spark.schema import PAGES_SCHEMA
 
 
-def read_pages_stream(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """File-source stream of pages parquet (schema fixed = input_hint)."""
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(input_dir)
+    return spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
 
 
 def stream_extract(
@@ -121,7 +116,10 @@ def stream_assemble_documents(
     pass ``ttl_ms`` for any CONTINUOUS deployment (ProcessingTimeTimeout
     evicts a url's state after that idle period; its last emitted doc is
     already complete, so eviction loses nothing). The None default keeps
-    bounded availableNow drains — the sandbox/batch-drain mode — simple."""
+    bounded availableNow drains — the sandbox/batch-drain mode — simple.
+
+    This is the "custom stateful streaming op" row of PARITY.md; the job
+    CLI does not run it (``--streaming`` writes per-page rows)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     timeout = (

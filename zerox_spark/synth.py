@@ -1591,7 +1591,9 @@ def render_pdf_form_encrypted(
 ) -> bytes:
     """An ENCRYPTED filled AcroForm — the composition that silently loses
     data if string decryption is missing (streams alone would render the
-    page heading and AP value but garble /V //Contents //DA)."""
+    page heading and AP value but garble /V //Contents //DA). No synth
+    family renders it: it is the fixture of the string-decryption half of
+    PARITY.md row C3-C5 (AcroForm harvest under the standard handler)."""
     fk, _, _ = _crypt_material(mode, doc_id)
     return render_pdf_form(doc_id, text, _crypt=(mode, fk))
 

@@ -51,7 +51,11 @@ _CRLF2 = b"\r\n\r\n"
 def _decompress_members(data: bytes, budget: int = MAX_ARCHIVE_BYTES) -> bytes:
     """All concatenated gzip members (GzipFile iterates members natively),
     chunked against the decompression budget; non-gzip input passes
-    through. A blown budget truncates — callers keep whole records."""
+    through. A blown budget truncates — callers keep whole records.
+
+    Not ``extract/inflate.py``: that loop fails the document at its cap,
+    while an archive over budget is cut short and keeps the records before
+    the cut."""
     if data[:2] != b"\x1f\x8b":
         return data[:budget]
     out = []
