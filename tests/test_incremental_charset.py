@@ -208,8 +208,7 @@ def test_streaming_job_main_reads_back_totals(spark, tmp_path, capsys):
         [_page("https://m/1", 10, "main one"), _page("https://m/2", 20, "main two")],
         PAGES_SCHEMA,
     ).write.parquet(pages_dir)
-    # the fixture's master: get_spark re-applies its settings (the shuffle
-    # width among them) to the running session that job.main picks up
+    # the fixture's master: job.main picks up the running session as it is
     argv = [
         "--streaming", "--input", pages_dir, "--output", str(tmp_path / "out"),
         "--master", "local[4]",

@@ -10,9 +10,10 @@ Four strategies, cheapest-first, all DataFrame-native:
               verification stage of minhash and as the oracle-checkable
               ground truth at test scale.
 - minhash:    MinHash + LSH banding — the scale path. k permutation hashes
-              per doc (one explode + groupBy agg), band signatures → bucket
-              join on (band, signature) → candidate pairs (only docs sharing
-              a band bucket) → exact-Jaccard verification of candidates.
+              per doc (the block-bounded signature kernel), band signatures
+              → bucket join on (band, signature) → candidate pairs (only
+              docs sharing a band bucket) → exact-Jaccard verification of
+              candidates.
               Sub-quadratic: cost ∝ candidates, not pairs.
 - simhash:    64-bit SimHash per doc + banded hamming candidate search.
 
@@ -25,11 +26,14 @@ every dedup operator value-checkable end to end.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 # injected-duplicate derivation (mirrored in oracle SQL — keep in sync)
 DUP_EXACT_MOD = 10
@@ -68,6 +72,27 @@ def drop_viral_buckets(
         .select(*keys)
     )
     return df.join(small, keys, "left_semi")
+
+
+def bucket_pairs(
+    buckets: DataFrame, id_col: str, keys: list[str], max_bucket: int | None
+) -> DataFrame:
+    """Distinct (id_a < id_b) pairs of rows that agree on ``keys`` — THE
+    LSH candidate self-join (MinHash bands, embedding hash tables), behind
+    the viral-bucket guard when ``max_bucket`` is set."""
+    if max_bucket is not None:
+        buckets = drop_viral_buckets(buckets, keys, max_bucket)
+    l, r = buckets.alias("l"), buckets.alias("r")
+    on = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+    on.append(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+    return (
+        l.join(r, reduce(and_, on))
+        .select(
+            F.col(f"l.{id_col}").alias("id_a"),
+            F.col(f"r.{id_col}").alias("id_b"),
+        )
+        .distinct()
+    )
 
 
 def with_injected_duplicates(docs: DataFrame) -> DataFrame:
@@ -210,6 +235,67 @@ def dedup_ngram_pairs(
 
 
 # ---------------------------------------------------------------------------
+# the signature kernel (MinHash and SimHash)
+
+# features expanded per step: one (width × block) int64 matrix, 8 MiB for
+# MinHash; 8192 measured fastest of 4096 / 8192 / 16384
+SIGNATURE_BLOCK = 8192
+
+
+def _segment_reduce(hs, expand, ufunc, width: int) -> np.ndarray:
+    """(width, docs) per-document ``ufunc`` reductions of one Arrow batch
+    of non-empty int64 feature-hash arrays — THE signature loop. The batch
+    is flattened once; ``expand`` maps SIGNATURE_BLOCK hashes at a time to
+    a (width × block) matrix whose per-document ``reduceat`` partials land
+    in the result, folded with ``ufunc`` where a document crosses a block
+    edge. Memory: the flat copy plus one block, whatever the lengths."""
+    out = np.empty((width, len(hs)), dtype=np.int64)
+    if not len(hs):
+        return out
+    arrs = [np.asarray(h, dtype=np.int64) for h in hs]
+    flat = np.concatenate(arrs)
+    starts = np.zeros(len(arrs), dtype=np.int64)
+    np.cumsum([len(a) for a in arrs[:-1]], out=starts[1:])
+    for lo in range(0, len(flat), SIGNATURE_BLOCK):
+        hi = min(lo + SIGNATURE_BLOCK, len(flat))
+        first = np.searchsorted(starts, lo, side="right") - 1
+        end = np.searchsorted(starts, hi)
+        seg = starts[first:end] - lo
+        carried = seg[0] < 0  # document `first` began in an earlier block
+        seg[0] = 0
+        part = ufunc.reduceat(expand(flat[lo:hi]), seg, axis=1)
+        if carried:
+            ufunc(part[:, 0], out[:, first], out=part[:, 0])
+        out[:, first:end] = part
+    return out
+
+
+def _signature_udf(name, expand, ufunc, width, finish, return_type):
+    """Iterator pandas UDF yielding ``finish(_segment_reduce(batch))``;
+    plans show the body as ``name``, tests call it as the UDF's ``.func``."""
+
+    def body(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        for hs in it:
+            yield finish(_segment_reduce(hs, expand, ufunc, width))
+
+    body.__name__ = body.__qualname__ = name
+    return F.pandas_udf(body, return_type)
+
+
+def _signatures(
+    corpus: DataFrame, features: Column, udf, name: str
+) -> DataFrame:
+    """(doc_id, ``name``): ``udf`` over each doc's feature hashes behind
+    THE non-empty guard — a null or featureless text has no signature, so the
+    kernel never sees a null array or an empty ``reduceat`` segment."""
+    return (
+        corpus.select("doc_id", features.alias("_hs"))
+        .filter(F.size("_hs") > 0)
+        .select("doc_id", udf(F.col("_hs")).alias(name))
+    )
+
+
+# ---------------------------------------------------------------------------
 # MinHash + LSH
 
 
@@ -225,85 +311,37 @@ def _minhash_params() -> tuple[list[int], list[int]]:
     return a, b
 
 
-_MINHASH_NP_PARAMS = None
+_MINHASH_A, _MINHASH_B = (
+    np.asarray(c, dtype=np.int64)[:, None] for c in _minhash_params()
+)
 
 
-def _minhash_np_params():
-    """(a, b) as (k, 1) int64 numpy arrays, cached per process."""
-    global _MINHASH_NP_PARAMS
-    if _MINHASH_NP_PARAMS is None:
-        import numpy as np
-
-        a, b = _minhash_params()
-        _MINHASH_NP_PARAMS = (
-            np.asarray(a, dtype=np.int64)[:, None],
-            np.asarray(b, dtype=np.int64)[:, None],
-        )
-    return _MINHASH_NP_PARAMS
+# h < p and a <= p-1 with p = 2^31 - 1 → a*h + b < 2^62: exact int64
+_minhash_sig_udf = _signature_udf(
+    "_minhash_sig_batches",
+    lambda h: (_MINHASH_A * h + _MINHASH_B) % MERSENNE_PRIME,
+    np.minimum,
+    MINHASH_K,
+    lambda mins: pd.Series(list(mins.T)),
+    T.ArrayType(T.LongType()),
+)
 
 
 def minhash_signatures(corpus: DataFrame) -> DataFrame:
     """(doc_id, sig: array<bigint>[k]) — min over shingle hashes per
     permutation. Shingle hashing stays JVM-side (split/transform/xxhash64
-    in codegen); the k×shingles permutation arithmetic runs as ONE
-    vectorized Arrow/numpy batch op per partition (guide §4.2: hand whole
-    batches to vectorized native code). Bit-identical output to the
-    historical explode + groupBy(128 mins) aggregation (all-int64 modular
-    arithmetic, products < 2^62 — no overflow on any path; equality with
-    a per-document numpy reference is pytest-locked).
-
-    Why not the 128-column aggregation any more (round 7): its generated
-    code was a single huge method whose JIT state collapsed in long-lived
-    driver JVMs — the SAME query measured 9-20 core-seconds in a fresh
-    process and 80-110 core-seconds in a bench session that had run other
-    heavy stages first (per-pass, not just first-run). numpy's cost is
-    flat in both. Scale shape: strictly better — zero shuffle here (the
-    old agg exchanged one 129-column row per doc); consumers that read
-    signatures more than once add their own materialization point (see
-    dedup_minhash_pairs)."""
+    in codegen); the permutations run in the signature kernel
+    (_segment_reduce). Bit-identical to the historical explode +
+    groupBy(128 mins) aggregation (all-int64, products < 2^62; a
+    per-document numpy reference is pytest-locked), whose one huge
+    generated method collapsed in long-lived driver JVMs (9-20 vs 80-110
+    core-seconds for the same query, round 7). No shuffle here; consumers
+    that read signatures twice add their own (see dedup_minhash_pairs)."""
     hs = F.transform(
         _shingles(F.col("text")),
         lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE_PRIME)),
     )
-    base = corpus.select("doc_id", hs.alias("_hs")).filter(
-        F.size("_hs") > 0
-    )
-    return base.select(
-        "doc_id", _minhash_sig_udf(F.col("_hs")).alias("sig")
-    )
-
-
-def _minhash_sig_batches(
-    it: "Iterator[pd.Series]",
-) -> "Iterator[pd.Series]":
-    """Iterator-form pandas UDF body: per Arrow batch, flatten the batch's
-    shingle-hash arrays, compute the (k × total) permutation matrix in one
-    numpy op, and take per-document segment minima via minimum.reduceat —
-    no Python loop over shingles or permutations."""
-    import numpy as np
-    import pandas as pd
-
-    a, b = _minhash_np_params()
-    for hs in it:
-        if len(hs) == 0:
-            yield pd.Series([], dtype=object)
-            continue
-        arrs = [np.asarray(h, dtype=np.int64) for h in hs]
-        lens = np.array([len(x) for x in arrs], dtype=np.int64)
-        flat = np.concatenate(arrs)
-        # h < p and a <= p-1 with p = 2^31 - 1 → a*h + b < 2^62: exact int64
-        prods = (a * flat[None, :] + b) % MERSENNE_PRIME
-        starts = np.zeros(len(arrs), dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        mins = np.minimum.reduceat(prods, starts, axis=1)
-        yield pd.Series(list(mins.T))
-
-
-from pyspark.sql import types as _T  # noqa: E402
-
-_minhash_sig_udf = F.pandas_udf(
-    _minhash_sig_batches, _T.ArrayType(_T.LongType())
-)
+    return _signatures(corpus, hs, _minhash_sig_udf, "sig")
 
 
 def band_table(sigs: DataFrame) -> DataFrame:
@@ -367,22 +405,8 @@ def dedup_minhash_pairs(
     # extra exchange+broadcast chain added blocking and the plan computed
     # the corpus union twice — 53.8 vs 28.4 core-seconds.)
     sigs = minhash_signatures(corpus).repartition(F.xxhash64("doc_id"))
-    bands = band_table(sigs)
-    if max_bucket is not None:
-        bands = drop_viral_buckets(bands, ["band", "sig_hash"], max_bucket)
-    left = bands.alias("l")
-    right = bands.alias("r")
-    candidates = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.sig_hash") == F.col("r.sig_hash"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b")
-        )
-        .distinct()
+    candidates = bucket_pairs(
+        band_table(sigs), "doc_id", ["band", "sig_hash"], max_bucket
     )
     # verify candidates with exact jaccard, per pair: join each side to its
     # distinct-shingle array and intersect JVM-side. Same exact rational
@@ -419,34 +443,21 @@ def _bit_lit(i: int):
     return F.lit(1 << i if i < 63 else -(1 << 63)).cast("long")
 
 
-def _simhash_batches(
-    it: "Iterator[pd.Series]",
-) -> "Iterator[pd.Series]":
-    """Vectorized SimHash body (the minhash UDF's sibling): per Arrow
-    batch, flatten the feature-hash arrays, expand each 64-bit hash to ±1
-    per bit, per-document segment sums via add.reduceat, sign → bit."""
-    import numpy as np
-    import pandas as pd
-
-    shifts = np.arange(64, dtype=np.uint64)
-    for hs in it:
-        if len(hs) == 0:
-            yield pd.Series([], dtype="int64")
-            continue
-        arrs = [np.asarray(h, dtype=np.int64) for h in hs]
-        lens = np.array([len(x) for x in arrs], dtype=np.int64)
-        flat = np.concatenate(arrs).view(np.uint64)
-        pm = (((flat[:, None] >> shifts) & 1) << 1).astype(np.int64) - 1
-        starts = np.zeros(len(arrs), dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        sums = np.add.reduceat(pm, starts, axis=0)  # (docs, 64)
-        packed = np.bitwise_or.reduce(
-            (sums > 0).astype(np.uint64) << shifts, axis=1
+_SIMHASH_SHIFTS = np.arange(64, dtype=np.int64)[:, None]
+# ±1 per bit of each 64-bit hash; the sign of a bit's sum sets that bit
+# (arithmetic shifts and int64 wrap-around: bit 63 packs to Long.MIN_VALUE)
+_simhash_udf = _signature_udf(
+    "_simhash_batches",
+    lambda h: ((h >> _SIMHASH_SHIFTS) & 1) * 2 - 1,
+    np.add,
+    64,
+    lambda sums: pd.Series(
+        np.bitwise_or.reduce(
+            (sums > 0).astype(np.int64) << _SIMHASH_SHIFTS, axis=0
         )
-        yield pd.Series(packed.view(np.int64))
-
-
-_simhash_udf = F.pandas_udf(_simhash_batches, _T.LongType())
+    ),
+    T.LongType(),
+)
 
 
 def simhash(corpus: DataFrame) -> DataFrame:
@@ -455,24 +466,14 @@ def simhash(corpus: DataFrame) -> DataFrame:
     setup) keep small edits small in hamming space — n-gram features would
     amplify a 2-word edit into ~3n flipped features.
 
-    Feature hashing stays JVM-side; the 64 bit-sums run as one vectorized
-    Arrow/numpy op per partition — the same round-7 rework as
-    minhash_signatures and for the same measured reason (the 64-column
-    aggregation's generated code collapsed in long-lived JVMs; see that
-    docstring). Bit-identical: integer bit tests and sums, sign bit via
-    uint64 view (bit 63 ≡ the old negative-long _bit_lit(63)); equality
-    with the agg formulation is pytest-locked."""
+    The 64 bit-sums run in the signature kernel, for minhash_signatures'
+    reason; bit-identical to the 64-column aggregation (bit 63 packs to
+    the negative long, ≡ _bit_lit(63)), which is pytest-locked."""
     hs = F.transform(
         F.array_distinct(F.split(F.col("text"), " ")),
         lambda w: F.xxhash64(w),
     )
-    # null text has no features: drop the doc (as minhash_signatures does)
-    # rather than hand the UDF a null array
-    return (
-        corpus.select("doc_id", hs.alias("_hs"))
-        .filter(F.size("_hs") > 0)
-        .select("doc_id", _simhash_udf(F.col("_hs")).alias("simhash"))
-    )
+    return _signatures(corpus, hs, _simhash_udf, "simhash")
 
 
 def dedup_simhash_pairs(corpus: DataFrame, max_hamming: int = 7) -> DataFrame:
@@ -501,6 +502,8 @@ def dedup_simhash_pairs(corpus: DataFrame, max_hamming: int = 7) -> DataFrame:
             )
         ).alias("bc"),
     ).select("doc_id", "simhash", "bc.band", "bc.chunk")
+    # not bucket_pairs: this join carries simhash through to cut on
+    # hamming distance before the distinct
     l, r = bands.alias("l"), bands.alias("r")
     pairs = (
         l.join(

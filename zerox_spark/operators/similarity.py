@@ -194,25 +194,11 @@ def embedding_dup_pairs(
     if brute_force:
         cand = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
     else:
-        buckets = lsh_buckets(embeddings, dim)
-        if max_bucket is not None:
-            from zerox_spark.operators.dedup import drop_viral_buckets
+        from zerox_spark.operators.dedup import bucket_pairs
 
-            buckets = drop_viral_buckets(
-                buckets, ["table", "bucket"], max_bucket
-            )
-        l, r = buckets.alias("l"), buckets.alias("r")
-        pairs = (
-            l.join(
-                r,
-                (F.col("l.table") == F.col("r.table"))
-                & (F.col("l.bucket") == F.col("r.bucket"))
-                & (F.col("l.vec_id") < F.col("r.vec_id")),
-            )
-            .select(
-                F.col("l.vec_id").alias("id_a"), F.col("r.vec_id").alias("id_b")
-            )
-            .distinct()
+        pairs = bucket_pairs(
+            lsh_buckets(embeddings, dim), "vec_id", ["table", "bucket"],
+            max_bucket,
         )
         cand = pairs.join(a, "id_a").join(b, "id_b")
     cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))

@@ -40,11 +40,15 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or get) a SparkSession configured for this engine.
+    """Build a SparkSession configured for this engine. An active session
+    is returned unchanged: its owner's master, app name and confs stay.
 
     ``master=None`` defers to spark-submit / env (real cluster); tests and
     bench pass explicit ``local[N]``.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     if master is None:
         master = os.environ.get("ZEROX_SPARK_MASTER", "local[*]")
     if shuffle_partitions is None:
