@@ -52,7 +52,7 @@ def test_job_plan_partitions_and_sorts_on_content_hash(spark, pages_parquet):
     """The job's transform keeps two Exchanges (the max_by dedupe and the
     salted repartition). The repartition hashes the content key
     xxhash64(html, text), and a Sort on that key sits between it and the
-    MapInPandas, so identical payloads reach the extract UDF adjacent and
+    MapInArrow, so identical payloads reach the extract UDF adjacent and
     are extracted once (operators/extract._extract_iter)."""
     from zerox_spark.pipeline import ExtractionPipeline, PipelineConfig
 
@@ -75,7 +75,7 @@ def test_job_plan_partitions_and_sorts_on_content_hash(spark, pages_parquet):
     at = {
         name: next(i for i, ln in enumerate(lines) if pat in ln)
         for name, pat in [
-            ("udf", "MapInPandas"),
+            ("udf", "MapInArrow"),
             ("sort", f"Sort [{key} ASC"),
             ("exchange", "REPARTITION"),
         ]
@@ -235,7 +235,7 @@ def test_decontaminate_short_docs_pass(spark):
 def test_pdf_crypt_plan_single_exchange(spark):
     """The encrypted-PDF family keeps extract_pdf_real's plan shape: one
     Exchange (the synth repartition) and — since the round-7 fusion — ONE
-    MapInPandas doing payload build + extract together (the chained
+    MapInArrow doing payload build + extract together (the chained
     two-UDF shape moved every payload across the JVM↔Python boundary
     three times; operators/extract.extract_pages ``render``), no join — all
     crypto cost stays in-UDF and budget-bounded, so the plan survives a
@@ -250,7 +250,7 @@ def test_pdf_crypt_plan_single_exchange(spark):
         .lower()
     )
     assert plan.count("exchange") == 1
-    assert plan.count("mapinpandas") == 1
+    assert plan.count("mapinarrow") == 1
     assert "join" not in plan
 
 

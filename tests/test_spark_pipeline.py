@@ -127,7 +127,7 @@ def test_extract_iter_reuses_identical_neighbour(monkeypatch):
     reuse is adjacency-only: a different text, or a duplicate after some
     other row, is extracted again, and a leading (None, None) row is
     extracted like any other."""
-    import pandas as pd
+    import pyarrow as pa
 
     from zerox_spark.extract.core import ExtractConfig
     from zerox_spark.operators import extract as ex
@@ -150,28 +150,73 @@ def test_extract_iter_reuses_identical_neighbour(monkeypatch):
         (a, None),  # non-adjacent duplicate: extracted again
     ]
 
-    def frame(part):
-        return pd.DataFrame({
+    def batch(part):
+        return pa.RecordBatch.from_pydict({
             "url": [f"https://r/{i}" for i, _ in part],
-            "html": [h for _, (h, _) in part],
-            "text": [t for _, (_, t) in part],
-            "warc_ts": [None] * len(part),
+            "html": pa.array([h for _, (h, _) in part], pa.binary()),
+            "text": pa.array([t for _, (_, t) in part], pa.string()),
+            "warc_ts": pa.nulls(len(part), pa.timestamp("us", tz="UTC")),
         })
 
     indexed = list(enumerate(rows))
     # split mid-run: the reuse carries across Arrow batches
-    out = pd.concat(list(ex._extract_iter(
-        iter([frame(indexed[:2]), frame(indexed[2:])]), ExtractConfig()
-    )))
+    out = pa.Table.from_batches(list(ex._extract_iter(
+        iter([batch(indexed[:2]), batch(indexed[2:])]), ExtractConfig()
+    ))).to_pydict()
     assert calls == [
         (None, None), (a, None), (a, "trusted"), (b, None), (a, None)
     ]
-    assert list(out["url"]) == [f"https://r/{i}" for i in range(len(rows))]
-    assert out["status"].iloc[0] == "ERROR"
+    assert out["url"] == [f"https://r/{i}" for i in range(len(rows))]
+    assert out["status"][0] == "ERROR"
     for i, (h, t) in enumerate(rows):
         page = real(h, t, ExtractConfig())[0]
-        assert out["markdown"].iloc[i] == page.markdown
-        assert out["status"].iloc[i] == page.status
+        assert out["markdown"][i] == page.markdown
+        assert out["status"][i] == page.status
+
+
+def _extract_input(html, text, warc_ts):
+    """One record batch of extract input (url, html, text, warc_ts), typed
+    the way the scan hands it to the UDF."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_pydict(
+        {
+            "url": pa.array([f"https://e/{i}" for i in range(len(html))]),
+            "html": pa.array(html, pa.binary()),
+            "text": pa.array(text, pa.string()),
+            "warc_ts": pa.array(warc_ts, pa.timestamp("us", tz="UTC")),
+        }
+    )
+
+
+def test_extract_iter_empty_batch_keeps_output_schema():
+    """A 0-row input batch yields one 0-row batch typed from _UDF_SCHEMA,
+    the schema mapInArrow declares to Spark."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from zerox_spark.extract.core import ExtractConfig
+    from zerox_spark.operators import extract as ex
+
+    (out,) = ex._extract_iter(
+        iter([_extract_input([], [], [])]), ExtractConfig()
+    )
+    assert out.num_rows == 0
+    assert out.schema == to_arrow_schema(ex._UDF_SCHEMA)
+
+
+def test_extract_iter_all_null_row_is_one_error_row():
+    """A row whose html, text and warc_ts are all null is contained: one
+    ERROR page row, its url kept and its warc_ts still null."""
+    from zerox_spark.extract.core import ExtractConfig
+    from zerox_spark.operators import extract as ex
+
+    (out,) = ex._extract_iter(
+        iter([_extract_input([None], [None], [None])]), ExtractConfig()
+    )
+    (row,) = out.to_pylist()
+    assert row["status"] == "ERROR"
+    assert row["url"] == "https://e/0"
+    assert row["warc_ts"] is None
 
 
 def test_replicated_payloads_extract_like_per_row(spark, monkeypatch):

@@ -16,8 +16,9 @@ Architecture (all DataFrame-native):
       → salted content-hash repartition (skew handling), sorted so
         copies of one payload under many urls are extracted once
       → fast-path routing (trusted pre-extracted text bypasses the DOM pass)
-      → mapInPandas(extract_pages)  # vectorized Arrow UDF, the hot loop;
-                                    # the maintainFormat fold runs per doc
+      → mapInArrow(extract_pages)   # record batches in and out, the hot
+                                    # loop; the maintainFormat fold runs
+                                    # per doc
       → write extracted(url, page_no, markdown, spans)
       → one per-bucket aggregate → lineage + job summary
 """

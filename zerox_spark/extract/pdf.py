@@ -21,7 +21,7 @@ Everything here derives from the public PDF 1.7 spec (ISO 32000-1):
   §9.10 ToUnicode CMaps (bfchar/bfrange)
   Annex D / Adobe Glyph List (subset) for /Differences glyph names
 
-Scale notes: runs per-row inside the extraction mapInPandas (no extra
+Scale notes: runs per-row inside the extraction mapInArrow (no extra
 shuffle); work is bounded by the payload cap upstream plus the per-stream
 decompression budget here (zip-bomb guard, same policy as ooxml._read_member).
 """

@@ -4,43 +4,51 @@ functions, so the extraction capabilities compose inside ``spark.sql``.
     register_all(spark)
     spark.sql("SELECT url, zerox_extract(html) AS md FROM pages")
 
-Vectorized pandas UDFs (Arrow-batched) — the blessed slow-path shape; the
-scalar helpers (token counts, langid) exist as pure-JVM column functions in
-operators/textstats.py and are re-exposed here only for SQL ergonomics.
+Vectorized Arrow UDFs (pyarrow arrays in and out, no pandas) — the blessed
+slow-path shape; the scalar helpers (token counts, langid) exist as
+pure-JVM column functions in operators/textstats.py and are re-exposed
+here only for SQL ergonomics.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 
 from zerox_spark.operators.textstats import _winnow_udf
 
+_MARKDOWN_TYPE = T.StringType()
+_PAGE_COUNT_TYPE = T.IntegerType()
 
-@pandas_udf(T.StringType())
-def zerox_extract(html: pd.Series) -> pd.Series:
+
+@arrow_udf(_MARKDOWN_TYPE)
+def zerox_extract(html: pa.Array) -> pa.Array:
     """binary html/pdf/sheet payload → full document markdown (pages joined
     per A1). ERROR documents yield '' (IGNORE containment)."""
     from zerox_spark.extract.core import extract_document
     from zerox_spark.extract.pages import join_document
 
-    def one(payload) -> str:
-        pages = extract_document(bytes(payload) if payload is not None else None, None)
-        return join_document([p.markdown for p in pages])
+    return pa.array(
+        [
+            join_document([p.markdown for p in extract_document(h, None)])
+            for h in html.to_pylist()
+        ],
+        to_arrow_type(_MARKDOWN_TYPE),
+    )
 
-    return html.map(one)
 
-
-@pandas_udf(T.IntegerType())
-def zerox_page_count(html: pd.Series) -> pd.Series:
+@arrow_udf(_PAGE_COUNT_TYPE)
+def zerox_page_count(html: pa.Array) -> pa.Array:
     from zerox_spark.extract.core import extract_document
 
-    return html.map(
-        lambda p: len(extract_document(bytes(p) if p is not None else None, None))
-    ).astype("int32")
+    return pa.array(
+        [len(extract_document(h, None)) for h in html.to_pylist()],
+        to_arrow_type(_PAGE_COUNT_TYPE),
+    )
 
 
 def register_all(spark: SparkSession) -> None:

@@ -24,7 +24,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # static mirror of synth.SYNTH_FAMILIES (test-asserted equal): importing
-# synth at parse time would pay the pandas+pyspark import on every --help
+# synth at parse time would pay the pyarrow+pyspark import on every --help
 # or arg-error invocation, against this file's lazy-import policy
 SYNTH_FAMILY_CHOICES = (
     "binary", "delimited", "legacy", "misc", "odf", "ooxml",

@@ -20,27 +20,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from zerox_spark.operators.dedup import _shingles
+
 DEFAULT_N = 8
-
-
-def _gram_col(text_col: str, n: int):
-    """Array of word n-grams (lowercased, single-space tokenization) as a
-    JVM column expression — stays in whole-stage codegen, no UDF."""
-    words = f"split(lower({text_col}), ' ')"
-    return F.expr(
-        f"CASE WHEN size({words}) >= {n} THEN "
-        f"transform(sequence(1, size({words}) - {n} + 1), "
-        f"i -> array_join(slice({words}, i, {n}), ' ')) "
-        f"ELSE array() END"
-    )
 
 
 def benchmark_ngrams(benchmark: DataFrame, n: int = DEFAULT_N, text_col: str = "text") -> DataFrame:
     """Benchmark rows → distinct n-gram table (the broadcast side)."""
-    return (
-        benchmark.select(F.explode(_gram_col(text_col, n)).alias("gram"))
-        .distinct()
-    )
+    grams = _shingles(F.lower(F.col(text_col)), n, distinct=False)
+    return benchmark.select(F.explode(grams).alias("gram")).distinct()
 
 
 def decontaminate(
@@ -58,7 +46,9 @@ def decontaminate(
     # matches — rare by construction. A distinct() before the join would
     # shuffle every exploded n-gram of the whole crawl instead.
     doc_grams = docs.select(
-        "doc_id", F.explode(_gram_col(text_col, n)).alias("gram")
+        "doc_id",
+        F.explode(_shingles(F.lower(F.col(text_col)), n, distinct=False))
+        .alias("gram"),
     ).join(F.broadcast(grams), "gram")
     hits = doc_grams.groupBy("doc_id").agg(
         F.countDistinct("gram").alias("n_hits")
@@ -117,11 +107,7 @@ def decontaminate_fuzzy(
     shuffled rows are candidates (filtered BEFORE any shuffle, the same
     ordering the exact pass uses) and the per-doc hit agg on the corpus
     bucketing key."""
-    from zerox_spark.operators.dedup import (
-        _shingles,
-        band_table,
-        minhash_signatures,
-    )
+    from zerox_spark.operators.dedup import band_table, minhash_signatures
 
     corpus = docs.select("doc_id", F.col(text_col).alias("text"))
     bench = benchmark.select(
@@ -137,7 +123,7 @@ def decontaminate_fuzzy(
     # DISTINCT grams on both sides: a benchmark 4-gram repeated inside
     # one corpus doc is one shared gram, not several — the
     # CANDIDATE_MIN_GRAMS noise filter counts distinct evidence
-    short = F.array_distinct(_gram_col("text", CANDIDATE_GRAM_N))
+    short = _shingles(F.lower(F.col("text")), CANDIDATE_GRAM_N)
     bench_grams = bench.select(
         "bench_id", F.explode(short).alias("gram")
     ).distinct()

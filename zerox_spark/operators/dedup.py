@@ -31,9 +31,10 @@ from operator import and_
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 # injected-duplicate derivation (mirrored in oracle SQL — keep in sync)
 DUP_EXACT_MOD = 10
@@ -242,20 +243,20 @@ def dedup_ngram_pairs(
 SIGNATURE_BLOCK = 8192
 
 
-def _segment_reduce(hs, expand, ufunc, width: int) -> np.ndarray:
+def _segment_reduce(hs: pa.ListArray, expand, ufunc, width: int) -> np.ndarray:
     """(width, docs) per-document ``ufunc`` reductions of one Arrow batch
-    of non-empty int64 feature-hash arrays — THE signature loop. The batch
-    is flattened once; ``expand`` maps SIGNATURE_BLOCK hashes at a time to
-    a (width × block) matrix whose per-document ``reduceat`` partials land
-    in the result, folded with ``ufunc`` where a document crosses a block
-    edge. Memory: the flat copy plus one block, whatever the lengths."""
+    of non-empty int64 feature-hash arrays — THE signature loop. The flat
+    hashes are the list's child values, read in place (no per-document
+    copy, even for a sliced array); ``expand`` maps SIGNATURE_BLOCK hashes
+    at a time to a (width × block) matrix whose per-document ``reduceat``
+    partials land in the result, folded with ``ufunc`` where a document
+    crosses a block edge. Memory: one block, whatever the lengths."""
     out = np.empty((width, len(hs)), dtype=np.int64)
     if not len(hs):
         return out
-    arrs = [np.asarray(h, dtype=np.int64) for h in hs]
-    flat = np.concatenate(arrs)
-    starts = np.zeros(len(arrs), dtype=np.int64)
-    np.cumsum([len(a) for a in arrs[:-1]], out=starts[1:])
+    offsets = hs.offsets.to_numpy()
+    flat = hs.values.slice(offsets[0], offsets[-1] - offsets[0]).to_numpy()
+    starts = offsets[:-1] - offsets[0]
     for lo in range(0, len(flat), SIGNATURE_BLOCK):
         hi = min(lo + SIGNATURE_BLOCK, len(flat))
         first = np.searchsorted(starts, lo, side="right") - 1
@@ -271,15 +272,17 @@ def _segment_reduce(hs, expand, ufunc, width: int) -> np.ndarray:
 
 
 def _signature_udf(name, expand, ufunc, width, finish, return_type):
-    """Iterator pandas UDF yielding ``finish(_segment_reduce(batch))``;
-    plans show the body as ``name``, tests call it as the UDF's ``.func``."""
+    """Iterator Arrow UDF yielding ``finish(_segment_reduce(batch), type)``
+    with ``type`` the Arrow form of ``return_type``; plans show the body as
+    ``name``, tests call it as the UDF's ``.func``."""
+    arrow_type = to_arrow_type(return_type)
 
-    def body(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    def body(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         for hs in it:
-            yield finish(_segment_reduce(hs, expand, ufunc, width))
+            yield finish(_segment_reduce(hs, expand, ufunc, width), arrow_type)
 
     body.__name__ = body.__qualname__ = name
-    return F.pandas_udf(body, return_type)
+    return F.arrow_udf(body, return_type)
 
 
 def _signatures(
@@ -322,7 +325,12 @@ _minhash_sig_udf = _signature_udf(
     lambda h: (_MINHASH_A * h + _MINHASH_B) % MERSENNE_PRIME,
     np.minimum,
     MINHASH_K,
-    lambda mins: pd.Series(list(mins.T)),
+    # one k-long list per document, straight from the (docs × k) values
+    lambda mins, t: pa.ListArray.from_arrays(
+        np.arange(0, mins.size + 1, MINHASH_K, dtype=np.int32),
+        mins.T.ravel(),
+        type=t,
+    ),
     T.ArrayType(T.LongType()),
 )
 
@@ -451,10 +459,11 @@ _simhash_udf = _signature_udf(
     lambda h: ((h >> _SIMHASH_SHIFTS) & 1) * 2 - 1,
     np.add,
     64,
-    lambda sums: pd.Series(
+    lambda sums, t: pa.array(
         np.bitwise_or.reduce(
             (sums > 0).astype(np.int64) << _SIMHASH_SHIFTS, axis=0
-        )
+        ),
+        t,
     ),
     T.LongType(),
 )

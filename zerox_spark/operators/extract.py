@@ -1,8 +1,8 @@
-"""The hot-loop operator: pages → per-page markdown rows via mapInPandas.
+"""The hot-loop operator: pages → per-page markdown rows via mapInArrow.
 
 Design notes (scale-first):
 
-- ONE ``mapInPandas`` over the (repartitioned) scan. The trusted-text fast
+- ONE ``mapInArrow`` over the (repartitioned) scan. The trusted-text fast
   path and the %PDF layout branch are routed **inside** the vectorized UDF
   rather than as a DataFrame filter+union: a plan-level branch would scan the
   input twice (or force a cache) and union two UDF stages — strictly worse at
@@ -11,7 +11,9 @@ Design notes (scale-first):
   per-document switch, not a second pass.
 - Arrow batch size is capped (session.py) so a batch of heavy rows cannot
   blow executor memory; within a batch, work is per-document Python over
-  numpy/str — no JVM round-trips.
+  bytes/str — no JVM round-trips. Record batches come in and go out (no
+  pandas): the output batch is typed once from ``_UDF_SCHEMA``, and the
+  pass-through columns (url, warc_ts) never become Python objects.
 - Error containment is row-level (ErrorMode.IGNORE,
   node-zerox/src/index.ts:338-352): one ERROR row per failed doc, the task
   never dies.
@@ -30,10 +32,11 @@ from __future__ import annotations
 import time
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from zerox_spark.extract.core import ExtractConfig, extract_document
 from zerox_spark.schema import EXTRACTED_SCHEMA
@@ -57,15 +60,15 @@ _COLS = [f.name for f in RAW_EXTRACTED_SCHEMA.fields]
 _UDF_SCHEMA = T.StructType(
     [f for f in RAW_EXTRACTED_SCHEMA.fields if f.name != "partition_id"]
 )
-_UDF_COLS = _UDF_SCHEMA.fieldNames()
+_UDF_ARROW_SCHEMA = to_arrow_schema(_UDF_SCHEMA)
 
 
 _NO_ROW = object()  # "no previous row": unequal to any (payload, text)
 
 
 def _extract_iter(
-    batches: Iterator[pd.DataFrame], config: ExtractConfig
-) -> Iterator[pd.DataFrame]:
+    batches: Iterator[pa.RecordBatch], config: ExtractConfig
+) -> Iterator[pa.RecordBatch]:
     # an identical neighbouring row reuses its predecessor's pages:
     # extract_document is a pure function of (payload, text, config), and
     # salted_repartition sorts each partition on the content hash, so
@@ -75,40 +78,21 @@ def _extract_iter(
     # reuse simply never fires.
     prev_key: object = _NO_ROW
     pages: list = []
-    for pdf in batches:
+    for batch in batches:
         t0 = time.monotonic()
-        # columnar accumulation: pd.DataFrame(dict-of-lists) skips the
-        # row-tuple transpose pandas does for a list-of-tuples input
-        c_url: list = []
-        c_no: list = []
-        c_md: list = []
-        c_len: list = []
-        c_status: list = []
-        c_error: list = []
-        c_spans: list = []
-        c_ts: list = []
-        for url, html, text, ts in zip(
-            pdf["url"], pdf["html"], pdf["text"], pdf["warc_ts"]
+        # the input row of each output page: url and warc_ts pass through
+        # as Arrow takes, never as Python objects
+        rows: list = []
+        out: list = []
+        for i, key in enumerate(
+            zip(batch["html"].to_pylist(), batch["text"].to_pylist())
         ):
-            payload = bytes(html) if html is not None else None
-            if prev_key != (payload, text):
-                prev_key = (payload, text)
-                pages = extract_document(payload, text, config)
-            for page in pages:
-                c_url.append(url)
-                c_no.append(page.page_no)
-                c_md.append(page.markdown)
-                c_len.append(page.content_length)
-                c_status.append(page.status)
-                c_error.append(page.error)
-                c_spans.append(
-                    [
-                        {"kind": k, "start": s, "end": e, "score": sc}
-                        for k, s, e, sc in page.spans
-                    ]
-                )
-                c_ts.append(ts)
-        n_rows = len(c_url)
+            if prev_key != key:
+                prev_key = key
+                pages = extract_document(*key, config)
+            rows += [i] * len(pages)
+            out += pages
+        n_rows = len(out)
         elapsed_us = int((time.monotonic() - t0) * 1_000_000)
         # amortize the batch's wall time across its rows (µs resolution,
         # remainder on row 0) so lineage sums are correct under ANY
@@ -118,19 +102,21 @@ def _extract_iter(
             per_row = elapsed_us // n_rows // 1000
             c_elapsed = [per_row] * n_rows
             c_elapsed[0] = elapsed_us // 1000 - per_row * (n_rows - 1)
-        yield pd.DataFrame(
+        take = pa.array(rows, pa.int32())
+        yield pa.RecordBatch.from_pydict(
             {
-                "url": c_url,
-                "page_no": c_no,
-                "markdown": c_md,
-                "content_length": c_len,
-                "status": c_status,
-                "error": c_error,
-                "spans": c_spans,
+                "url": batch["url"].take(take),
+                "page_no": [p.page_no for p in out],
+                "markdown": [p.markdown for p in out],
+                "content_length": [p.content_length for p in out],
+                "status": [p.status for p in out],
+                "error": [p.error for p in out],
+                # (kind, start, end, score) tuples are struct values
+                "spans": [p.spans for p in out],
                 "elapsed_ms": c_elapsed,
-                "warc_ts": c_ts,
+                "warc_ts": batch["warc_ts"].take(take),
             },
-            columns=_UDF_COLS,
+            schema=_UDF_ARROW_SCHEMA,
         )
 
 
@@ -152,9 +138,10 @@ def extract_pages(
     provenance/watermark carrier column (see RAW_EXTRACTED_SCHEMA).
 
     ``render`` fuses corpus synthesis into the same UDF: a generator
-    ``render(batches) → pages frames`` (e.g. ``synth.pages_frames`` bound
-    to a family's row_fn) that turns the frames of ``pages`` — then any
-    input, such as a documents scan — into pages frames inside the worker.
+    ``render(batches) → pages batches`` (e.g. ``synth.pages_frames`` bound
+    to a family's row_fn) that turns the record batches of ``pages`` — then
+    any input, such as a documents scan — into pages batches inside the
+    worker.
     The chained ``extract_pages(synth_pages(...))`` shape moves every
     synthesized payload across the JVM↔Python Arrow boundary three times
     (out of the synth worker, into the extract worker, results out again);
@@ -169,7 +156,7 @@ def extract_pages(
     config = config or ExtractConfig()
     if render is None:
         pages = pages.select("url", "html", "text", "warc_ts")
-    out = pages.mapInPandas(
+    out = pages.mapInArrow(
         lambda it: _extract_iter(render(it) if render else it, config),
         schema=_UDF_SCHEMA,
     )

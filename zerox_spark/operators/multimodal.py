@@ -2,7 +2,7 @@
 
 Images/audio/video ride through the engine as ``binary`` columns with a
 typed metadata struct. The Spark-side machinery — schema, Arrow batch shape,
-mapInPandas signature, partition behavior — is real and tested; the actual
+mapInArrow signature, partition behavior — is real and tested; the actual
 codec work is stubbed behind ``_decode_image`` because this container ships
 no image/audio libraries: with PIL/ffmpeg present, only that function body
 changes (drop-in), nothing in the plan does.
@@ -17,10 +17,11 @@ from __future__ import annotations
 import hashlib
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -97,39 +98,41 @@ def _decode_image(payload: bytes) -> tuple[int, int, list[float]]:
     return width, height, feature
 
 
-def _media_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
+def _media_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    schema = to_arrow_schema(MEDIA_META_SCHEMA)
+    for batch in batches:
         rows = []
-        for url, payload in zip(pdf["url"], pdf["html"]):
-            data = bytes(payload) if payload is not None else b""
+        for url, data in zip(
+            batch["url"].to_pylist(), batch["html"].to_pylist()
+        ):
+            data = data or b""
             kind = sniff_kind(data)
-            width = height = None
-            feature = None
+            width = height = feature = None
             if kind in ("png", "jpeg", "gif"):
                 width, height, feature = _decode_image(data)
-            rows.append((url, len(data), kind, width, height, feature))
-        yield pd.DataFrame(
-            rows,
-            columns=["url", "n_bytes", "media_kind", "width", "height", "feature"],
-        )
+            rows.append(dict(
+                url=url, n_bytes=len(data), media_kind=kind,
+                width=width, height=height, feature=feature,
+            ))
+        yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
 
 def media_metadata(pages: DataFrame) -> DataFrame:
-    """pages(url, html, …) → typed media metadata. One mapInPandas pass;
+    """pages(url, html, …) → typed media metadata. One mapInArrow pass;
     binary stays in Arrow buffers end to end (no base64 round-trips — the
     reference's encodeImageToBase64 exists only to feed HTTP APIs,
     node-zerox/src/utils/image.ts:13-15; a columnar engine never needs it)."""
-    return pages.select("url", "html").mapInPandas(
+    return pages.select("url", "html").mapInArrow(
         _media_iter, schema=MEDIA_META_SCHEMA
     )
 
 
 # ---------------------------------------------------------------------------
-# frame-sample plumbing (brief: "decode / feature-extract / resize /
-# frame-sample as Pandas UDFs over mapInPandas"). The codec work rides the
-# same stub contract as _decode_image: deterministic byte-derived fakes
-# without ffmpeg; the Spark-side shape — schema, Arrow batching, per-input
-# fan-out — is real and tested either way.
+# frame-sample plumbing (decode / feature-extract / resize / frame-sample
+# as vectorized UDFs: Arrow in, Arrow out over mapInArrow). The codec work
+# rides the same stub contract as _decode_image: deterministic byte-derived
+# fakes without ffmpeg; the Spark-side shape — schema, Arrow batching,
+# per-input fan-out — is real and tested either way.
 
 FRAMES_SCHEMA = T.StructType(
     [
@@ -148,30 +151,29 @@ FRAME_INTERVAL_MS = 1000
 
 def sample_frames(pages, interval_ms: int = FRAME_INTERVAL_MS):
     """pages(url, html, …) → one row per sampled frame: the video
-    frame-sampling shape (per-input FAN-OUT inside the pandas UDF — output
+    frame-sampling shape (per-input FAN-OUT inside the Arrow UDF — output
     batches are longer than input batches, like the PDF page explode).
     No ffmpeg in this container → deterministic fake frames: n_frames =
     1 + n_bytes % FRAME_MOD, frame bytes = sha256(payload, frame_no)."""
 
-    def it(batches):
-        for pdf in batches:
-            rows = []
-            for url, p in zip(pdf["url"], pdf["html"]):
-                data = bytes(p) if p is not None else b""
-                n_frames = 1 + len(data) % FRAME_MOD
-                for i in range(n_frames):
-                    rows.append(
-                        (
-                            url,
-                            i + 1,
-                            i * interval_ms,
-                            hashlib.sha256(
-                                data + i.to_bytes(4, "little")
-                            ).digest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["url", "frame_no", "ts_ms", "frame"]
-            )
+    schema = to_arrow_schema(FRAMES_SCHEMA)
 
-    return pages.select("url", "html").mapInPandas(it, schema=FRAMES_SCHEMA)
+    def it(batches):
+        for batch in batches:
+            rows = []
+            for url, data in zip(
+                batch["url"].to_pylist(), batch["html"].to_pylist()
+            ):
+                data = data or b""
+                rows += [
+                    dict(
+                        url=url, frame_no=i + 1, ts_ms=i * interval_ms,
+                        frame=hashlib.sha256(
+                            data + i.to_bytes(4, "little")
+                        ).digest(),
+                    )
+                    for i in range(1 + len(data) % FRAME_MOD)
+                ]
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
+
+    return pages.select("url", "html").mapInArrow(it, schema=FRAMES_SCHEMA)

@@ -42,13 +42,14 @@ def _dot(a, b):
 
 
 def _norm(a):
-    """sqrt(Σ x²) of an array<double> column — the same expression the old
-    per-pair _cosine evaluated, exposed so operators can compute it ONCE per
-    row (projection before the join) instead of once per scored pair: the
-    value is bit-identical and the join stage drops 2/3 of its interpreted
-    higher-order-function work (sf0.1 brute-force scoring join, corpus
-    already spread: 0.90 s with per-pair norms → 0.69 s with per-row;
-    the full query fell 3.5 → ~1.0 s from spread + this combined).
+    """sqrt(Σ x²) of an array<double> column — the cosine's denominator
+    factor, exposed so operators compute it ONCE per row (projection
+    before the join) and divide ``_dot`` by it, instead of once per scored
+    pair: the value is bit-identical and the join stage drops 2/3 of its
+    interpreted higher-order-function work (sf0.1 brute-force scoring
+    join, corpus already spread: 0.90 s with per-pair norms → 0.69 s with
+    per-row; the full query fell 3.5 → ~1.0 s from spread + this
+    combined).
 
     An expression-unrolled formulation (Σ a[i]·b[i] over getItem) was
     measured too: the giant Add tree is NOT whole-stage-codegen'd and
@@ -58,11 +59,6 @@ def _norm(a):
     return F.sqrt(
         F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, v: s + v)
     )
-
-
-def _cosine(a, b):
-    """Cosine similarity of two array<double> columns, JVM-side."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def _as_double(col):

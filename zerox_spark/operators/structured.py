@@ -111,7 +111,7 @@ def extract_structured(
     page_schema, doc_schema = split_schema(schema, extract_per_page)
 
     # ONE pass per scope, not one select per property: the upstream
-    # extraction subtree is expensive (mapInPandas over the corpus) and
+    # extraction subtree is expensive (mapInArrow over the corpus) and
     # Catalyst does not reuse subplans across union branches — a
     # k-property schema would re-run the whole extraction k times.
     # All properties of a scope compile into a single (key, value)

@@ -5,18 +5,19 @@ Everything except the winnowing fingerprint is pure JVM-side column algebra
 (split/filter/aggregate/regexp) — whole-stage-codegen friendly, no Python in
 the hot path; each has a DuckDB-oracle-expressible definition so the driver
 can value-check it. The winnowing fingerprint needs a rolling window min —
-implemented as a vectorized pandas UDF (Arrow-batched); its oracle restates
-the full algorithm in DuckDB list SQL (queries._WINNOW_SQL), and property
-tests pin the vectorized==scalar equality.
+implemented as a vectorized Arrow UDF (pyarrow arrays in and out); its
+oracle restates the full algorithm in DuckDB list SQL (queries._WINNOW_SQL),
+and property tests pin the vectorized==scalar equality.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 
 # language marker words → language, checked in this order (argmax with
 # first-listed winning ties). A deterministic n-gram-ish heuristic stand-in:
@@ -59,12 +60,6 @@ def _pred_lang_col():
     return pred
 
 
-def lang_id(docs: DataFrame) -> DataFrame:
-    """(doc_id, pred_lang) by marker-word argmax; 'und' (undetermined) when
-    no marker hits."""
-    return docs.select("doc_id", _pred_lang_col().alias("pred_lang"))
-
-
 def quality_col(text=None):
     """The composite quality score as a pure Column expression — composable
     into other plans (curation inlines it as a filter instead of a join)."""
@@ -94,15 +89,6 @@ def bpe_tokens_col(text=None):
         F.size(F.regexp_extract_all(text, F.lit(TOKEN_PATTERN), 0))
         .cast("int")
     )
-
-
-def quality_score(docs: DataFrame) -> DataFrame:
-    """Deterministic quality features + composite score per document.
-
-    Features mirror standard web-corpus filters (length, mean word length,
-    stopword ratio, non-alnum ratio); score is a fixed linear blend rounded
-    to 6dp for cross-engine float stability."""
-    return docs.select("doc_id", *_quality_cols())
 
 
 def _quality_cols():
@@ -358,9 +344,15 @@ def _winnow_np(text: str) -> list[int]:
     return mins[keep].tolist()
 
 
-@pandas_udf(T.ArrayType(T.LongType()))
-def _winnow_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: _winnow_np(t or ""))
+_FP_TYPE = T.ArrayType(T.LongType())
+
+
+@arrow_udf(_FP_TYPE)
+def _winnow_udf(texts: pa.Array) -> pa.Array:
+    return pa.array(
+        [_winnow_np(t or "") for t in texts.to_pylist()],
+        to_arrow_type(_FP_TYPE),
+    )
 
 
 def fingerprints(docs: DataFrame) -> DataFrame:

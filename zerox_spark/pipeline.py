@@ -11,7 +11,7 @@
            the summary and the watermark → snapshot commit
 
 ``transform`` is lazy: a pruned scan, the max_by dedupe (one shuffle by
-url), the salted repartition (one shuffle by content) and one mapInPandas.
+url), the salted repartition (one shuffle by content) and one mapInArrow.
 ``run`` adds the actions: the extracted write, and one ``toArrow`` of
 ``operators/lineage.bucket_aggregate`` over the latest table, the only
 per-bucket formula. Everything after that collect runs on the driver over

@@ -105,7 +105,7 @@ def _extracted(
     **cfg,
 ) -> DataFrame:
     """One synth family's corpus, synthesized and extracted in ONE
-    MapInPandas (extract_pages ``render``), over every document or over
+    MapInArrow (extract_pages ``render``), over every document or over
     the ``docs`` slice of synth_docs a query passes."""
     row_fn = SYNTH_FAMILIES[family]
     return extract_pages(

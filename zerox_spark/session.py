@@ -2,10 +2,12 @@
 
 Scale rationale (tuned for a multi-executor cluster, tested on local[N]):
 
-- Arrow execution ON: every hot-loop operator is a pandas/Arrow UDF
-  (mapInPandas / applyInPandas); Arrow batch transfer is the difference
-  between ~10-100x vs row-at-a-time Python (reference's hot op is a network
-  LLM call — ours is CPU, so serde overhead actually matters).
+- Arrow execution ON: every hot-loop operator is an Arrow UDF
+  (mapInArrow / arrow_udf, record batches in and out — only the streaming
+  document assembly uses applyInPandasWithState); Arrow batch transfer is
+  the difference between ~10-100x vs row-at-a-time Python (reference's hot
+  op is a network LLM call — ours is CPU, so serde overhead actually
+  matters).
 - AQE ON (+ coalescePartitions + skewJoin): runtime re-planning of shuffle
   partition counts; single-row skew is additionally handled by explicit
   salting in operators/repartition.py because AQE cannot split one row.

@@ -6,7 +6,7 @@ cross-event). For crawl feeds that arrive continuously, the same extraction
 operator composes with readStream unchanged:
 
     pages stream (file source / Kafka)          — same input_hint schema
-      → extract_pages(...)                      — mapInPandas works on
+      → extract_pages(...)                      — mapInArrow works on
                                                   streaming DataFrames as-is
       → writeStream parquet + checkpoint        — exactly-once per epoch
 
@@ -20,6 +20,9 @@ Design notes:
   ``late_threshold`` of out-of-order arrival.
 - Checkpointing gives resume-on-restart for free (the streaming analog of
   the batch lineage/resume-filter machinery in operators/resume.py).
+- ``stream_assemble_documents`` is the engine's one pandas boundary:
+  ``applyInPandasWithState`` has no Arrow form in this Spark. Every other
+  map operator and vectorized UDF takes and yields Arrow.
 """
 
 from __future__ import annotations

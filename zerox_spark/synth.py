@@ -31,11 +31,14 @@ from __future__ import annotations
 
 import datetime as _dt
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from zerox_spark.schema import PAGES_SCHEMA
+
+_PAGES_ARROW_SCHEMA = to_arrow_schema(PAGES_SCHEMA)
 
 # ---------------------------------------------------------------------------
 # taxonomy constants (shared with queries.py oracles — change both or neither)
@@ -2173,7 +2176,7 @@ def _row_binary(doc_id: int, text: str, lang: str, source: str):
 
 
 # ---------------------------------------------------------------------------
-# Spark-side synthesis (distributed: mapInPandas over the documents scan)
+# Spark-side synthesis (distributed: mapInArrow over the documents scan)
 
 # every synthesized corpus by name → its ``row_fn(doc_id, text, lang,
 # source) → (payload, trusted text)``; the keys are the job CLI's
@@ -2207,22 +2210,22 @@ SYNTH_FAMILIES = {
 
 
 def pages_frames(batches, row_fn):
-    """documents frames (doc_id, text, lang, source) → pages frames
-    (url, warc_ts, html, text, lang), one page row per document, with
-    ``row_fn`` supplying the family-specific payload and trusted text."""
-    for pdf in batches:
+    """documents record batches (doc_id, text, lang, source) → pages record
+    batches (url, warc_ts, html, text, lang), one page row per document,
+    with ``row_fn`` supplying the family-specific payload and trusted
+    text."""
+    for batch in batches:
         cols: dict[str, list] = {c: [] for c in PAGES_SCHEMA.fieldNames()}
         for doc_id, text, lang, source in zip(
-            pdf["doc_id"], pdf["text"], pdf["lang"], pdf["source"]
+            *(batch[c].to_pylist() for c in ("doc_id", "text", "lang", "source"))
         ):
-            doc_id = int(doc_id)
             payload, trusted = row_fn(doc_id, text, lang, source)
             cols["url"].append(doc_url(doc_id, source))
-            cols["warc_ts"].append(doc_ts(doc_id).replace(tzinfo=None))
+            cols["warc_ts"].append(doc_ts(doc_id))
             cols["html"].append(payload)
             cols["text"].append(trusted)
             cols["lang"].append(lang)
-        yield pd.DataFrame(cols)
+        yield pa.RecordBatch.from_pydict(cols, schema=_PAGES_ARROW_SCHEMA)
 
 
 def synth_docs(
@@ -2250,6 +2253,6 @@ def synth_pages(
     """documents.parquet → the deterministic pages DataFrame (input_hint
     shape) of one ``SYNTH_FAMILIES`` corpus."""
     row_fn = SYNTH_FAMILIES[family]
-    return synth_docs(spark, sf_dir, num_partitions).mapInPandas(
+    return synth_docs(spark, sf_dir, num_partitions).mapInArrow(
         lambda it: pages_frames(it, row_fn), schema=PAGES_SCHEMA
     )

@@ -20,7 +20,7 @@ Format notes (public spec, ISO 28500 / WARC 1.0-1.1):
 
 Scale + robustness:
 
-- Spark side is a ``binaryFile`` scan → ``mapInPandas`` parse: one archive
+- Spark side is a ``binaryFile`` scan → ``mapInArrow`` parse: one archive
   file = one task (Common Crawl ships ~64k files per crawl, so file-level
   parallelism is the natural unit, exactly how production WARC jobs run).
 - per-record body cap (MAX_RECORD_BYTES) and a per-file decompression
@@ -219,21 +219,23 @@ def write_warc(
 
 def read_warc(spark: SparkSession, path: str, lang: str = "") -> DataFrame:
     """Directory/glob of ``*.warc(.gz)`` → pages DataFrame (input_hint
-    shape). binaryFile scan → mapInPandas parse; one archive = one task."""
-    import pandas as pd
+    shape). binaryFile scan → mapInArrow parse; one archive = one task."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from zerox_spark.schema import PAGES_SCHEMA
 
     raw = spark.read.format("binaryFile").load(path)
+    schema = to_arrow_schema(PAGES_SCHEMA)
 
     def batches(it):
-        for pdf in it:
-            # one output frame PER ARCHIVE FILE, not per Arrow batch:
+        for batch in it:
+            # one output batch PER ARCHIVE FILE, not per Arrow batch:
             # a 1 GiB-budget archive already holds raw + decompressed +
             # payload copies in memory — accumulating several files'
             # records on top of that before yielding would OOM at exactly
             # the archive sizes this reader targets
-            for content in pdf["content"]:
+            for content in batch["content"]:
                 rows = [
                     {
                         "url": url,
@@ -242,10 +244,8 @@ def read_warc(spark: SparkSession, path: str, lang: str = "") -> DataFrame:
                         "text": "",
                         "lang": lang,
                     }
-                    for url, ts, payload in parse_warc(bytes(content))
+                    for url, ts, payload in parse_warc(content.as_py())
                 ]
-                yield pd.DataFrame(
-                    rows, columns=["url", "warc_ts", "html", "text", "lang"]
-                )
+                yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    return raw.select("content").mapInPandas(batches, schema=PAGES_SCHEMA)
+    return raw.select("content").mapInArrow(batches, schema=PAGES_SCHEMA)
