@@ -30,7 +30,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # 1) the distributed pipeline (what a cluster job runs)
-    pages = synth_pages(spark, sf_dir)  # or sources.read_pages(...)
+    pages = synth_pages(spark, sf_dir)  # or job.main's parquet/Iceberg scan
     pipe = ExtractionPipeline(PipelineConfig(num_partitions=8, num_buckets=16))
     stats = pipe.run(spark, pages, ParquetSnapshotSink(out))
     print("pipeline:", stats)

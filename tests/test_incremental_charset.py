@@ -30,19 +30,19 @@ def test_incremental_processes_only_new_rows(spark, tmp_path):
     old = spark.createDataFrame([_page("https://i/1", 10, "old one"),
                                  _page("https://i/2", 20, "old two")], PAGES_SCHEMA)
     pipe.run(spark, old, sink, job_id="day1", incremental=True)
-    assert sink.last_watermark() is not None
+    assert sink.lineage_state("day1")[1] is not None
 
     both = old.unionByName(
         spark.createDataFrame([_page("https://i/3", 30, "new three")], PAGES_SCHEMA)
     )
     stats = pipe.run(spark, both, sink, job_id="day2", incremental=True)
-    # the table now holds all three urls, and day2 advanced the watermark
+    # the table now holds all three urls, and day2 advanced the cursor
     urls = {r.url for r in sink.read_extracted(spark).select("url").collect()}
     assert urls == {"https://i/1", "https://i/2", "https://i/3"}
-    assert "00:00:30" in sink.last_watermark()
-    # day3 with no new rows processes nothing and keeps the watermark
+    assert "00:00:30" in str(sink.lineage_state("day2")[1])
+    # day3 with no new rows processes nothing and keeps the cursor
     stats3 = pipe.run(spark, both, sink, job_id="day3", incremental=True)
-    assert "00:00:30" in sink.last_watermark()
+    assert "00:00:30" in str(sink.lineage_state("day3")[1])
     assert stats3["total_docs"] == 3  # table state unchanged
 
 

@@ -345,3 +345,47 @@ def test_job_scan_prunes_lang(spark, pages_parquet):
     assert m, "no ReadSchema in plan"
     assert "lang" not in m.group(1)
     assert "html" in m.group(1) and "text" in m.group(1)
+
+
+def test_spread_launches_no_job(spark, monkeypatch):
+    """``_spread`` reads its input's partition count on the driver: over
+    the scan and union inputs the queries pass it (``_docs``,
+    ``with_injected_duplicates(_docs)``, ``_embeddings`` and the union
+    ``_embeddings_with_dups`` spreads), it launches no Spark job, and at a
+    target within that count it returns its input."""
+    from zerox_spark import queries
+    from zerox_spark.operators.dedup import with_injected_duplicates
+    from tests.conftest import SF_CORRECT
+
+    spread = queries._spread
+    received = []
+
+    def record(df, *keys, target=None):
+        received.append((df, keys))
+        return spread(df, *keys, target=target)
+
+    monkeypatch.setattr(queries, "_spread", record)
+    queries._embeddings_with_dups(spark, SF_CORRECT)
+    monkeypatch.undo()
+    docs = queries._docs(spark, SF_CORRECT)
+    inputs = [
+        (docs, ("doc_id",)),
+        (with_injected_duplicates(docs), ("doc_id",)),
+        (queries._embeddings(spark, SF_CORRECT), ("vec_id",)),
+        *received,
+    ]
+    assert len(inputs) == 4
+    sc = spark.sparkContext
+    group = "spread-probe"
+    sc.setJobGroup(group, "jobs launched by _spread")
+    try:
+        for df, keys in inputs:
+            spread(df, *keys)
+            n = df.rdd.getNumPartitions()
+            assert spread(df, *keys, target=n) is df
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

@@ -247,12 +247,14 @@ def test_sink_refuses_a_second_bucket_count(spark, tmp_path):
     assert listing(sink.extracted_path) == before
 
 
-def _last_manifest(sink) -> dict:
+def _manifests(sink) -> list[dict]:
     import json
 
-    snaps = sorted(os.listdir(sink.snap_dir))
-    with open(os.path.join(sink.snap_dir, snaps[-1]), encoding="utf-8") as fh:
-        return json.load(fh)
+    out = []
+    for name in sorted(os.listdir(sink.snap_dir)):
+        with open(os.path.join(sink.snap_dir, name), encoding="utf-8") as fh:
+            out.append(json.load(fh))
+    return out
 
 
 def _lineage_watermark(spark, sink) -> str:
@@ -261,11 +263,12 @@ def _lineage_watermark(spark, sink) -> str:
 
 
 def test_watermark_fold_equals_lineage_max(spark, tmp_path, monkeypatch):
-    """The watermark folded from the previous lineage max and the run's own
-    bucket rows equals the max over the re-read lineage table after every
-    run: of a three-day incremental sequence (with a re-crawl and a
-    sub-second timestamp), and of a job that crashed after its lineage
-    append, before its commit, and was resumed."""
+    """The incremental cursor ``lineage_state`` reads equals the max over
+    the re-read lineage table, no manifest carries a watermark, and the
+    last manifest is written under the newest snapshot id on the rows,
+    after every run: of a three-day incremental sequence (with a re-crawl
+    and a sub-second timestamp), and of a job that crashed after its
+    lineage append, before its commit, and was resumed."""
     from zerox_spark.operators.repartition import partition_bucket
 
     pipe = ExtractionPipeline(PipelineConfig(num_partitions=2, num_buckets=4))
@@ -276,6 +279,16 @@ def test_watermark_fold_equals_lineage_max(spark, tmp_path, monkeypatch):
             F.lit(datetime.datetime(2024, 1, d, 13, 37, second, micro)),
         )
 
+    def check(sink):
+        assert str(sink.lineage_state("")[1]) == _lineage_watermark(
+            spark, sink
+        )
+        manifests = _manifests(sink)
+        assert not any("watermark" in m for m in manifests)
+        assert manifests[-1]["snapshot"] == (
+            sink.read_extracted(spark).agg(F.max("_snap")).collect()[0][0]
+        )
+
     sink = ParquetSnapshotSink(str(tmp_path / "days"))
     crawl = day(1, [f"https://wm/{i}" for i in range(8)])
     for d, new, micro in ((1, [], 0), (2, [3, 8, 9, 10], 0),
@@ -284,17 +297,15 @@ def test_watermark_fold_equals_lineage_max(spark, tmp_path, monkeypatch):
             day(d, [f"https://wm/{i}" for i in new], 29, micro)
         )
         pipe.run(spark, crawl, sink, job_id=f"day{d}", incremental=True)
-        assert _last_manifest(sink)["watermark"] == _lineage_watermark(
-            spark, sink
-        )
-    assert sink.last_watermark() == "2024-01-03 13:37:29.250000"
+        check(sink)
+    assert str(sink.lineage_state("day3")[1]) == "2024-01-03 13:37:29.250000"
 
     sink = ParquetSnapshotSink(str(tmp_path / "resume"))
     pages = day(1, [f"https://rs/{i}" for i in range(24)], 5)
     pipe.run(spark, pages.filter(partition_bucket(4) < 2), sink, job_id="r")
-    assert _last_manifest(sink)["watermark"] == _lineage_watermark(spark, sink)
+    check(sink)
 
-    def crash(job_id, meta):
+    def crash(job_id, snap_id, meta):
         raise RuntimeError("killed before the commit")
 
     monkeypatch.setattr(sink, "commit_snapshot", crash)
@@ -310,4 +321,38 @@ def test_watermark_fold_equals_lineage_max(spark, tmp_path, monkeypatch):
         .select(partition_bucket(4).alias("b")).collect()
     }
     assert _lineage_buckets(spark, sink, "r") == sorted([0, 1, 2, 3, partial])
-    assert _last_manifest(sink)["watermark"] == _lineage_watermark(spark, sink)
+    check(sink)
+
+
+def test_incremental_retry_resumes_at_lineage_cursor(
+    spark, tmp_path, monkeypatch
+):
+    """An incremental run that crashed after its lineage append, before
+    its manifest, already wrote its rows: the retry resumes at the lineage
+    cursor and re-extracts only the rows at that cursor, not the whole
+    crashed delta."""
+    pipe = ExtractionPipeline(PipelineConfig(num_partitions=2, num_buckets=4))
+
+    def crawl(urls, second):
+        return _pages(spark, urls).withColumn(
+            "warc_ts", F.lit(datetime.datetime(2024, 1, 1, 0, 0, second))
+        )
+
+    sink = ParquetSnapshotSink(str(tmp_path / "retry"))
+    day1 = crawl([f"https://rc/{i}" for i in range(4)], 10)
+    pipe.run(spark, day1, sink, job_id="d1", incremental=True)
+    day2 = day1.unionByName(
+        crawl([f"https://rc/{i}" for i in range(4, 8)], 20)
+    ).unionByName(crawl(["https://rc/8"], 30))
+
+    def crash(*args):
+        raise RuntimeError("killed before the commit")
+
+    monkeypatch.setattr(sink, "commit_snapshot", crash)
+    with pytest.raises(RuntimeError):
+        pipe.run(spark, day2, sink, job_id="d2", incremental=True)
+    monkeypatch.undo()
+    before = sink.read_extracted(spark).count()
+    stats = pipe.run(spark, day2, sink, job_id="d2", incremental=True)
+    assert sink.read_extracted(spark).count() - before == 1
+    assert stats["total_docs"] == 9

@@ -153,8 +153,9 @@ def test_extractor_choices_track_registry():
 
 
 def test_iceberg_incremental_rejected_before_spark(monkeypatch):
-    """IcebergSink has no watermark cursor: the flag pair must fail at
-    argument validation, not after the SparkSession has started."""
+    """IcebergSink writes _snap = 0 on every commit, so an incremental run
+    would claim every bucket of the table as its own: the flag pair must
+    fail at argument validation, not after the SparkSession has started."""
     import zerox_spark.session
     from zerox_spark.job import main
 
@@ -401,4 +402,4 @@ def test_torn_snapshot_commit_leaves_no_manifest(spark, tmp_path, monkeypatch):
     stats = pipe.run(spark, pages([1, 2]), sink, job_id="d2",
                      incremental=True)
     assert stats["total_docs"] == 8
-    assert sink.last_watermark() == "2024-01-02 12:00:03"
+    assert str(sink.lineage_state("d2")[1]) == "2024-01-02 12:00:03"

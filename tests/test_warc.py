@@ -140,7 +140,7 @@ def test_snapshot_ids_survive_deleted_snapshots(tmp_path):
 
     sink = ParquetSnapshotSink(str(tmp_path))
     for _ in range(3):
-        sink.commit_snapshot("job", {})
+        sink.commit_snapshot("job", sink.next_snapshot_id(), {})
     assert sink.next_snapshot_id() == 3
     (tmp_path / "_snapshots" / "snap-000001.json").unlink()
     assert sink.next_snapshot_id() == 3  # count would say 2 → collision

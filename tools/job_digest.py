@@ -4,7 +4,7 @@ Prints one JSON line: a sha256 over every row of ``extracted`` (all
 columns but ``elapsed_ms``, which is wall time), one over every row of
 ``lineage`` (without ``job_id`` and ``elapsed_ms``), the row counts, and a
 sha256 of the last snapshot manifest without ``ts`` and ``job_id`` (its
-summary and watermark, rendered as committed). Two runs of
+snapshot id and summary, rendered as committed). Two runs of
 ``zerox_spark/job.py`` over the same input wrote the same output iff the
 digests match, whatever task layout or row order each run had. The oracle queries cannot show this for the job: they extract through
 the fused ``render`` path, not ``salted_repartition``.

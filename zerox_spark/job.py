@@ -54,7 +54,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap.add_argument("--partitions", type=int, default=256)
     ap.add_argument("--buckets", type=int, default=256)
     ap.add_argument("--job-id", default=None, help="stable id enables resume")
-    ap.add_argument("--incremental", action="store_true", help="process only rows newer than the last committed warc_ts watermark (delta mode)")
+    ap.add_argument("--incremental", action="store_true", help="process only rows at or after the max warc_ts recorded in lineage (delta mode)")
     ap.add_argument("--maintain-format", dest="maintain_format", action="store_true", default=True)
     ap.add_argument("--no-maintain-format", dest="maintain_format", action="store_false")
     ap.add_argument("--error-mode", choices=["IGNORE", "THROW"], default="IGNORE")
@@ -89,8 +89,9 @@ def main(argv: list[str] | None = None) -> int:
     # py_zerox/pyzerox/models/modellitellm.py:33-38)
     extract_config = _extract_config(args)
     if args.iceberg and args.incremental:
-        # the watermark cursor lives in the parquet sink's snapshot files;
-        # IcebergSink keeps no such cursor
+        # IcebergSink writes _snap = 0 on every commit, so pipeline.run's
+        # attribution would give an incremental run every bucket of the
+        # table as its own, not only the buckets it wrote
         raise SystemExit("--incremental is not supported with --iceberg")
 
     spark = get_spark(args.master, app_name="zerox-spark-job")
@@ -167,8 +168,6 @@ def _run_streaming(spark, args, extract_config) -> int:
     checkpoint (resume-on-restart comes from the checkpoint; rerunning
     after a crash reprocesses only unconsumed files — the streaming analog
     of the batch bucket resume)."""
-    import os
-
     from zerox_spark.streaming import read_pages_stream, stream_extract
 
     # extracted_stream, NOT the batch sink's extracted/: the batch layout
@@ -186,8 +185,6 @@ def _run_streaming(spark, args, extract_config) -> int:
         available_now=True,
     )
     q.awaitTermination()
-    from pyspark.sql import functions as F
-
     if not os.path.isdir(out_dir):
         # availableNow found no files → no batch committed, no output dir;
         # an empty backlog is a legitimate invocation, not an error
@@ -199,21 +196,19 @@ def _run_streaming(spark, args, extract_config) -> int:
     # explicit schema: the sink may have created the dir with metadata but
     # no data files yet (empty backlog) — inference would fail there
     from zerox_spark.operators.extract import RAW_EXTRACTED_SCHEMA
+    from zerox_spark.operators.lineage import bucket_aggregate, fold_summary
 
-    stats = (
-        spark.read.schema(RAW_EXTRACTED_SCHEMA).parquet(out_dir)
-        .agg(
-            F.count_distinct("url").alias("total_docs"),
-            F.count(F.lit(1)).alias("total_pages"),
-            F.coalesce(
-                F.sum(F.when(F.col("status") == "ERROR", 1).otherwise(0)),
-                F.lit(0),
-            ).alias("failed"),
-        )
-        .collect()[0]
-        .asDict()
+    stats = fold_summary(
+        bucket_aggregate(
+            spark.read.schema(RAW_EXTRACTED_SCHEMA).parquet(out_dir)
+        ).toArrow()
     )
-    print(json.dumps({"mode": "streaming", **stats}))
+    print(json.dumps({
+        "mode": "streaming",
+        "total_docs": stats["total_docs"],
+        "total_pages": stats["total_pages"],
+        "failed": stats["failed"] or 0,  # a sum over no rows is null
+    }))
     return 0
 
 

@@ -8,7 +8,7 @@
          → per-bucket aggregate of the latest table (≤ num_buckets rows),
            collected once as an Arrow table
          → driver: append lineage for the buckets this run wrote, fold
-           the summary and the watermark → snapshot commit
+           the summary → snapshot commit
 
 ``transform`` is lazy: a pruned scan, the max_by dedupe (one shuffle by
 url), the salted repartition (one shuffle by content) and one mapInArrow.
@@ -17,14 +17,13 @@ url), the salted repartition (one shuffle by content) and one mapInArrow.
 per-bucket formula. Everything after that collect runs on the driver over
 at most ``num_buckets`` rows and launches no Spark job. Lineage is commit
 metadata that the sink reads and appends on the driver (sinks.py), like
-the snapshot manifest and the bucket-count pin.
+the snapshot manifest and the bucket-count pin. The manifest holds the
+snapshot id the run stamped on its rows and the summary; lineage holds the
+incremental cursor, the max ``max_warc_ts`` that ``lineage_state`` reads.
 
-The watermark fold equals the max over the re-read lineage table. Lineage
-is append-only, and this run appends exactly its owned rows, so the table
-after the run is the table before it plus those rows, and
-max(after) = max(max(before), max(owned)), with None for an empty side.
-``lineage_state`` reads max(before) before the write; the sink has one
-writer at a time, as the snapshot ids already assume.
+The cursor needs one fact: lineage is appended only after the extracted
+write finishes, so every row at or below the cursor is already in the
+table.
 """
 
 from __future__ import annotations
@@ -32,7 +31,6 @@ from __future__ import annotations
 import uuid
 from dataclasses import dataclass, field
 
-import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -111,16 +109,16 @@ class ExtractionPipeline:
         """Two distinct resume mechanisms, deliberately NOT combined:
 
         - ``incremental=True``: the delta mode for RECURRING crawls —
-          processes only rows at-or-after the committed high watermark
-          (max warc_ts; the predicate is pushed to the scan, so a daily
-          delta over a 100 TB table reads ~one day of data). Bucket
-          resume is OFF here: a reused job_id's committed buckets would
-          silently filter every new day's rows away. ``>=`` (not
-          ``>``) at the boundary: second-granularity crawl deliveries can
-          split one warc_ts across runs, and a strictly-newer filter
-          would lose the late half forever — the boundary rows re-extract
-          as new versions and the latest-version dedupe keeps the table
-          idempotent.
+          processes only rows at-or-after the lineage cursor (max
+          ``max_warc_ts`` over the lineage table; the predicate is pushed
+          to the scan, so a daily delta over a 100 TB table reads ~one
+          day of data). Bucket resume is OFF here: a reused job_id's
+          committed buckets would silently filter every new day's rows
+          away. ``>=`` (not ``>``) at the boundary: second-granularity
+          crawl deliveries can split one warc_ts across runs, and a
+          strictly-newer filter would lose the late half forever — the
+          boundary rows re-extract as new versions and the latest-version
+          dedupe keeps the table idempotent.
         - bucket resume (non-incremental): a job_id names ONE input
           snapshot; re-running it finishes the uncommitted buckets of
           THAT input. New data needs a new job_id — or incremental mode.
@@ -133,14 +131,15 @@ class ExtractionPipeline:
         job_id = job_id or uuid.uuid4().hex[:12]
         num_buckets = self.config.num_buckets
         sink.check_num_buckets(num_buckets)
-        watermark = sink.last_watermark() if incremental else None
-        if watermark is not None:
-            pages = pages.filter(
-                F.col("warc_ts") >= F.lit(watermark).cast("timestamp")
-            )
-        committed, lineage_wm = sink.lineage_state(job_id)
+        committed, cursor = sink.lineage_state(job_id)
         if incremental:
             committed = frozenset()
+            if cursor is not None:
+                # str() of the naive UTC datetime, cast in the session
+                # time zone like every warc_ts literal of the job
+                pages = pages.filter(
+                    F.col("warc_ts") >= F.lit(str(cursor)).cast("timestamp")
+                )
         todo = filter_uncommitted(pages, committed, num_buckets)
         snap_id = sink.next_snapshot_id()
         # elapsed_ms is persisted with the rows so lineage can be computed
@@ -152,7 +151,7 @@ class ExtractionPipeline:
             self.transform(todo), snap_id=snap_id, append=incremental
         )
         # the one collect: at most num_buckets rows feed the lineage
-        # append, the summary and the watermark
+        # append and the summary
         buckets = lineage_rows(
             bucket_aggregate(sink.read_extracted_latest(spark)),
             job_id,
@@ -169,26 +168,5 @@ class ExtractionPipeline:
         if owned.num_rows:
             sink.write_lineage(owned)
         stats = fold_summary(buckets)
-        # incremental watermark: the lineage max after this append (module
-        # docstring), from the per-bucket max(warc_ts) carried through the
-        # extract's output rows (operators/extract.py RAW_EXTRACTED_SCHEMA)
-        # — NOT a second scan of the 100 TB input. Note select_pages can
-        # drop a doc's rows, so this can trail the input max; the monotone
-        # max() with the previous watermark below keeps resume idempotent
-        # either way. Rendered as str() of a naive UTC datetime.
-        owned_wm = pc.max(
-            pc.cast(owned["max_warc_ts"], pa.timestamp("us"))
-        ).as_py()
-        new_wm = max(
-            (wm for wm in (lineage_wm, owned_wm) if wm is not None),
-            default=None,
-        )
-        meta: dict = {"summary": stats}
-        if new_wm is not None:
-            meta["watermark"] = max(
-                str(new_wm), watermark or ""
-            )
-        elif watermark is not None:
-            meta["watermark"] = watermark
-        sink.commit_snapshot(job_id, meta)
+        sink.commit_snapshot(job_id, snap_id, {"summary": stats})
         return {"job_id": job_id, **stats}

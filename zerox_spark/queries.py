@@ -89,7 +89,11 @@ def _spread(df: DataFrame, *keys: str, target: int | None = None) -> DataFrame:
     point AQE reuse deduplicates when several consumers share the subtree.
     Measured on dedup_minhash: spreading by raw doc_id removed the
     signature agg's exchange and the band self-join recomputed the whole
-    128-permutation pipeline on BOTH sides (cpu 14.9 s → 37.7 s)."""
+    128-permutation pipeline on BOTH sides (cpu 14.9 s → 37.7 s).
+
+    Pass only a plan of scans, projections, filters and unions: the
+    partition count comes from ``df.rdd``, which plans the input, and under
+    AQE a plan with a shuffle would run its upstream stages to build it."""
     spark = df.sparkSession
     target = target or spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:

@@ -12,12 +12,13 @@ implements the same contract on plain parquet:
 - lineage is commit metadata, like ``_snapshots/`` and ``_num_buckets``:
   the driver reads it with pyarrow before the write (``lineage_state``:
   this job_id's SUCCESS buckets, which operators/resume.py skips, and the
-  max ``max_warc_ts``) and appends one parquet file of at most
-  ``num_buckets`` rows after it (``write_lineage``), in the physical types
-  Spark writes (INT96 timestamps), so ``read_lineage``, DuckDB and pyarrow
-  read a mix of Spark- and driver-written files alike;
-- a tiny JSON snapshot manifest is written after each successful commit —
-  the parquet-mode stand-in for Iceberg's snapshot log.
+  max ``max_warc_ts``, the incremental cursor) and appends one parquet
+  file of at most ``num_buckets`` rows after it (``write_lineage``), in
+  the physical types Spark writes (INT96 timestamps), so ``read_lineage``,
+  DuckDB and pyarrow read a mix of Spark- and driver-written files alike;
+- a tiny JSON snapshot manifest is written after each successful commit,
+  under the snapshot id the run stamped on its rows, with the run's
+  summary — the parquet-mode stand-in for Iceberg's snapshot log.
 
 Every driver-side file (the manifest, a lineage file, the bucket-count
 pin) is written whole or not at all: a hidden temp file in the same
@@ -167,7 +168,8 @@ class ParquetSnapshotSink:
     ) -> tuple[frozenset[int], datetime.datetime | None]:
         """The lineage a run needs before it writes, read on the driver:
         the buckets ``job_id`` committed with status SUCCESS, and the max
-        ``max_warc_ts`` over all rows (naive UTC, None if there is none).
+        ``max_warc_ts`` over all rows (naive UTC, None if there is none),
+        the cursor of an incremental run.
         A sink without a lineage directory reads nothing.
 
         EXPLICIT schema: a sink dir written by an older engine version
@@ -250,33 +252,28 @@ class ParquetSnapshotSink:
     def read_extracted_latest(self, spark: SparkSession) -> DataFrame:
         return latest_versions(self.read_extracted(spark))
 
-    def _snap_ids(self) -> list[int]:
-        """Committed snapshot ids, ascending: the ``snap-NNNNNN.json``
-        names only, so a stray file or a temp file is never read."""
-        if not os.path.isdir(self.snap_dir):
-            return []
-        return sorted(
-            int(m.group(1))
-            for m in map(_SNAP_NAME.fullmatch, os.listdir(self.snap_dir))
-            if m
-        )
-
-    def _snap_path(self, snap_id: int) -> str:
-        return os.path.join(self.snap_dir, f"snap-{snap_id:06d}.json")
-
-    def _max_snap_id(self) -> int:
-        """Highest committed snapshot id, -1 if none. max()+1 — NOT a
-        file count: deleting/compacting an old snapshot file must never
-        make a new id collide with rows already on disk."""
-        return max(self._snap_ids(), default=-1)
-
     def next_snapshot_id(self) -> int:
-        return self._max_snap_id() + 1
+        """Highest committed snapshot id + 1, 0 if none, from the
+        ``snap-NNNNNN.json`` names only, so a stray file or a temp file
+        is never counted. max()+1 — NOT a file count: deleting/compacting
+        an old snapshot file must never make a new id collide with rows
+        already on disk."""
+        if not os.path.isdir(self.snap_dir):
+            return 0
+        return max(
+            (
+                int(m.group(1))
+                for m in map(_SNAP_NAME.fullmatch, os.listdir(self.snap_dir))
+                if m
+            ),
+            default=-1,
+        ) + 1
 
-    def commit_snapshot(self, job_id: str, meta: dict) -> str:
+    def commit_snapshot(self, job_id: str, snap_id: int, meta: dict) -> str:
+        """Write the manifest of snapshot ``snap_id``, the id the run got
+        from ``next_snapshot_id`` and stamped on its rows."""
         os.makedirs(self.snap_dir, exist_ok=True)
-        snap_id = self._max_snap_id() + 1
-        path = self._snap_path(snap_id)
+        path = os.path.join(self.snap_dir, f"snap-{snap_id:06d}.json")
         payload = {"snapshot": snap_id, "job_id": job_id,
                    "ts": int(time.time() * 1000), **meta}
 
@@ -286,17 +283,6 @@ class ParquetSnapshotSink:
 
         _write_replacing(path, dump)
         return path
-
-    def last_watermark(self) -> str | None:
-        """High watermark (max warc_ts, isoformat) committed by the latest
-        snapshot that recorded one — the incremental-scan cursor (the
-        parquet-mode analog of reading Iceberg's snapshot summary)."""
-        for snap_id in reversed(self._snap_ids()):
-            with open(self._snap_path(snap_id), encoding="utf-8") as fh:
-                meta = json.load(fh)
-            if meta.get("watermark"):
-                return meta["watermark"]
-        return None
 
 
 def export_markdown_files(extracted: DataFrame, out_dir: str) -> int:
@@ -406,7 +392,7 @@ class IcebergSink:
     def next_snapshot_id(self) -> int:
         return 0  # Iceberg's snapshot log owns ids; _snap is per-commit
 
-    def commit_snapshot(self, job_id: str, meta: dict) -> str:
+    def commit_snapshot(self, job_id: str, snap_id: int, meta: dict) -> str:
         # Iceberg's own snapshot log is the commit record
         return f"{self.extracted_table}@latest"
 

@@ -4,8 +4,9 @@ The reference's source stage is downloadFile + mime/extension resolution +
 magic-byte sniffing (node-zerox/src/utils/file.ts:32-98). Table-native
 equivalents:
 
-- ``read_pages``: the primary scan — parquet path or Iceberg table of the
-  input_hint shape. Predicate pushdown / column pruning come free from
+- the primary scan, a parquet path or an Iceberg table of the input_hint
+  shape, is ``job.main``'s own read (``spark.read.parquet`` or
+  ``spark.read.table``). Predicate pushdown / column pruning come free from
   Catalyst (filter on lang/warc_ts before any UDF and it reaches the scan).
 - ``read_html_dir``: the raw-file analog of downloadFile — a directory of
   HTML/PDF files via Spark's binaryFile source, mapped into the pages
@@ -19,15 +20,6 @@ equivalents:
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-
-from zerox_spark.schema import PAGES_SCHEMA
-
-
-def read_pages(spark: SparkSession, source: str, fmt: str = "parquet") -> DataFrame:
-    """Scan the pages table. fmt: 'parquet' (path) | 'iceberg' (table name)."""
-    if fmt == "iceberg":
-        return spark.read.table(source)
-    return spark.read.schema(PAGES_SCHEMA).parquet(source)
 
 
 def read_html_dir(spark: SparkSession, path: str, lang: str = "") -> DataFrame:
