@@ -123,7 +123,7 @@ def test_dedup_lines_strips_cross_doc_boilerplate(spark):
     df = spark.createDataFrame(rows, ["url", "page_no", "markdown"])
     out = {
         (r.url, r.page_no): (r.clean_md, r.n_removed)
-        for r in dedup_lines(df, min_docs=2).collect()
+        for r in dedup_lines(df).collect()
     }
     assert out[("u1", 1)] == ("unique one\n\nkeep me", 1)
     assert out[("u2", 1)] == ("different text\n", 1)
@@ -286,6 +286,74 @@ def test_embedding_max_bucket_knob(spark):
         ).collect()
     }
     assert capped == {(1, 2)}
+
+
+def test_ann_lsh_max_bucket_knob(spark):
+    """The ANN-LSH viral-bucket cap: a family of identical vectors floods
+    its bucket in every table; a family query then has only over-cap
+    buckets and gets no candidates, while a query whose buckets all stay
+    under the cap gets the same neighbors as without it."""
+    from zerox_spark.operators.similarity import ann_topk_lsh
+
+    # odd dim: a ±1 plane's component sum is never 0, so -v takes the
+    # complementary sign bit of v on every plane — the family's buckets
+    # and the small group's never meet in any table
+    dim = 9
+    small = [(1, [-0.5] * dim), (2, [-0.45] + [-0.5] * (dim - 1)),
+             (3, [-0.5] * (dim - 1) + [-0.45])]
+    viral = [(100 + i, [0.5] * dim) for i in range(8)]
+    df = spark.createDataFrame(small + viral, ["vec_id", "embedding"])
+    queries = df.filter(F.col("vec_id").isin(1, 100))
+
+    def top(max_bucket):
+        return {
+            (r.query_id, r.rank, r.neighbor_id, r.cos)
+            for r in ann_topk_lsh(
+                df, queries, dim, k=5, max_bucket=max_bucket
+            ).collect()
+        }
+
+    full, capped = top(None), top(4)
+    assert {n for q, _, n, _ in full if q == 100} == {101, 102, 103, 104, 105}
+    assert {n for q, _, n, _ in full if q == 1} == {2, 3}
+    assert capped == {row for row in full if row[0] == 1}
+
+
+def test_decontaminate_fuzzy_max_gram_df_knob(spark):
+    """The fuzzy-decontamination gram cap: more than ``max_gram_df`` long,
+    mutually distinct pages quoting one benchmark item verbatim put each of
+    its 4-grams over the cap, so the cap unflags them (the bands of a long
+    page miss a short item); an item embedded in one page is matched
+    through 4-grams under the cap and stays flagged."""
+    from zerox_spark.operators.decontam import decontaminate_fuzzy
+
+    common = " ".join(f"common{i}" for i in range(20))
+    rare = " ".join(f"rare{i}" for i in range(20))
+
+    def page(doc_id, item):
+        filler = " ".join(f"fill{doc_id}x{j}" for j in range(300))
+        return (doc_id, f"{filler} {item}")
+
+    viral = [page(i, common) for i in range(1, 6)]  # 5 > max_gram_df=3
+    docs = spark.createDataFrame(
+        viral + [page(9, rare), (10, "unrelated text " * 20)],
+        "doc_id long, text string",
+    )
+    bench = spark.createDataFrame(
+        [(100, common), (101, rare)], "doc_id long, text string"
+    )
+
+    def flagged(max_gram_df):
+        return {
+            r.doc_id
+            for r in decontaminate_fuzzy(
+                docs, bench, max_gram_df=max_gram_df
+            ).collect()
+            if r.fuzzy_contaminated
+        }
+
+    assert flagged(None) == {1, 2, 3, 4, 5, 9}
+    assert flagged(3) == {9}
 
 
 class TestUrlTools:

@@ -282,7 +282,7 @@ def test_decontaminate_fuzzy_flags_near_duplicates(spark):
     )
     rows = {
         r.doc_id: r
-        for r in decontaminate_fuzzy(docs, bench, threshold=0.5).collect()
+        for r in decontaminate_fuzzy(docs, bench).collect()
     }
     assert rows[3].fuzzy_contaminated == 1  # verbatim copy
     assert rows[1].fuzzy_contaminated == 1  # near-dup edit

@@ -51,22 +51,17 @@ def stratified_sample(
     docs: DataFrame,
     rates_pct: dict[str, int],
     default_pct: int = 100,
-    stratum_col: str = "lang",
-    key_col: str = "doc_id",
-    denom: int = 100,
 ) -> DataFrame:
-    """Deterministic mod-based stratified sampling — the data-mixing
-    primitive (down-weight over-represented strata, keep rare ones whole).
-    A row survives iff ``key % denom < rate_pct(stratum)``: replay-stable
-    (same rows on every run and on task retry — rand() would not be),
-    shuffle-free (a pure filter the scan can evaluate), and exactly
-    restatable in oracle SQL. Rates are integer percents of ``denom``."""
+    """Deterministic mod-based stratified sampling by ``lang`` — the
+    data-mixing primitive (down-weight over-represented strata, keep rare
+    ones whole). A row survives iff ``doc_id % 100 < rate_pct(lang)``:
+    replay-stable (same rows on every run and on task retry — rand() would
+    not be), shuffle-free (a pure filter the scan can evaluate), and
+    exactly restatable in oracle SQL. Rates are integer percents."""
     rate = F.lit(default_pct)
     for stratum, pct in sorted(rates_pct.items()):
-        rate = F.when(F.col(stratum_col) == stratum, F.lit(pct)).otherwise(
-            rate
-        )
-    return docs.filter(F.col(key_col) % denom < rate)
+        rate = F.when(F.col("lang") == stratum, F.lit(pct)).otherwise(rate)
+    return docs.filter(F.col("doc_id") % 100 < rate)
 
 
 def corpus_mix(docs: DataFrame) -> DataFrame:
@@ -87,7 +82,6 @@ def corpus_mix(docs: DataFrame) -> DataFrame:
 def curate(
     docs: DataFrame,
     quality_min: float = QUALITY_MIN,
-    jaccard_max: float = JACCARD_MAX,
     cluster_dedup: bool = False,
 ) -> DataFrame:
     """(doc_id, ws_tokens, bpe_tokens, quality) for documents that survive
@@ -120,10 +114,10 @@ def curate(
         .select("doc_id", "text", "quality")
     )
 
-    # near-dup removal: for each pair at jaccard ≥ threshold, the larger
+    # near-dup removal: for each pair at jaccard ≥ JACCARD_MAX, the larger
     # doc_id is removed (anti-join against the loser set); pairs come from
     # the sub-quadratic LSH path (see module docstring)
-    pairs = dedup_minhash_pairs(deduped.select("doc_id", "text"), jaccard_max)
+    pairs = dedup_minhash_pairs(deduped.select("doc_id", "text"), JACCARD_MAX)
     if cluster_dedup:
         from zerox_spark.operators.dedup import connected_components
 

@@ -25,29 +25,24 @@ from zerox_spark.operators.dedup import _shingles
 DEFAULT_N = 8
 
 
-def benchmark_ngrams(benchmark: DataFrame, n: int = DEFAULT_N, text_col: str = "text") -> DataFrame:
-    """Benchmark rows → distinct n-gram table (the broadcast side)."""
-    grams = _shingles(F.lower(F.col(text_col)), n, distinct=False)
+def benchmark_ngrams(benchmark: DataFrame) -> DataFrame:
+    """Benchmark rows → distinct DEFAULT_N-gram table (broadcast side)."""
+    grams = _shingles(F.lower(F.col("text")), DEFAULT_N, distinct=False)
     return benchmark.select(F.explode(grams).alias("gram")).distinct()
 
 
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    n: int = DEFAULT_N,
-    text_col: str = "text",
-) -> DataFrame:
+def decontaminate(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     """(doc_id, n_hits, contaminated): per document, how many DISTINCT
     benchmark n-grams it contains, and the keep/drop flag. Documents with
-    fewer than ``n`` words trivially pass (no grams)."""
-    grams = benchmark_ngrams(benchmark, n, text_col)
+    fewer than DEFAULT_N words trivially pass (no grams)."""
+    grams = benchmark_ngrams(benchmark)
     # order matters at scale: the broadcast match FILTERS FIRST, so the
     # only rows that ever shuffle (for the per-doc distinct count) are the
     # matches — rare by construction. A distinct() before the join would
     # shuffle every exploded n-gram of the whole crawl instead.
     doc_grams = docs.select(
         "doc_id",
-        F.explode(_shingles(F.lower(F.col(text_col)), n, distinct=False))
+        F.explode(_shingles(F.lower(F.col("text")), DEFAULT_N, distinct=False))
         .alias("gram"),
     ).join(F.broadcast(grams), "gram")
     hits = doc_grams.groupBy("doc_id").agg(
@@ -74,13 +69,13 @@ def decontaminate(
 
 CANDIDATE_GRAM_N = 4  # short enough that ~10% word edits leave survivors
 CANDIDATE_MIN_GRAMS = 2  # ≥2 shared 4-grams → candidate (noise filter)
+CONTAINMENT_THRESHOLD = 0.5  # |A∩B| / |B| at or above → contaminated
+EDITED_ID_OFFSET = 1_000_000  # edited_benchmark_variants' doc_id shift
 
 
 def decontaminate_fuzzy(
     docs: DataFrame,
     benchmark: DataFrame,
-    threshold: float = 0.5,
-    text_col: str = "text",
     max_gram_df: int | None = None,
 ) -> DataFrame:
     """NEAR-duplicate contamination: exact long-n-gram matching (above)
@@ -100,7 +95,8 @@ def decontaminate_fuzzy(
       for embedded items, at the cost of more candidates to verify)
 
     Output: (doc_id, fuzzy_hits, fuzzy_contaminated) — distinct benchmark
-    items each corpus doc contains at ≥ threshold, and the drop flag.
+    items each corpus doc contains at ≥ CONTAINMENT_THRESHOLD, and the
+    drop flag.
 
     Scale shape (100 TB): both candidate passes broadcast the eval-sized
     benchmark side; the corpus streams past them map-side, so the only
@@ -109,10 +105,8 @@ def decontaminate_fuzzy(
     bucketing key."""
     from zerox_spark.operators.dedup import band_table, minhash_signatures
 
-    corpus = docs.select("doc_id", F.col(text_col).alias("text"))
-    bench = benchmark.select(
-        F.col("doc_id").alias("bench_id"), F.col(text_col).alias("text")
-    )
+    corpus = docs.select("doc_id", "text")
+    bench = benchmark.select(F.col("doc_id").alias("bench_id"), "text")
     corpus_bands = band_table(minhash_signatures(corpus))
     bench_bands = band_table(
         minhash_signatures(bench.withColumnRenamed("bench_id", "doc_id"))
@@ -160,7 +154,7 @@ def decontaminate_fuzzy(
             "containment",
             n_inter / F.greatest(F.size("shb"), F.lit(1)),
         )
-        .filter(F.col("containment") >= threshold)
+        .filter(F.col("containment") >= CONTAINMENT_THRESHOLD)
     )
     hits = verified.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("fuzzy_hits")  # one row per (doc, bench)
@@ -181,9 +175,7 @@ def decontaminate_fuzzy(
     )
 
 
-def edited_benchmark_variants(
-    benchmark: DataFrame, id_offset: int = 1_000_000
-) -> DataFrame:
+def edited_benchmark_variants(benchmark: DataFrame) -> DataFrame:
     """Deterministically EDITED copies of benchmark items — the corpus
     shape fuzzy decontamination exists for (a verbatim slice is caught by
     the exact 8-gram pass too; an edited one is not). Two seed-free,
@@ -197,10 +189,10 @@ def edited_benchmark_variants(
     - digit renumbering (translate 0-9 → 5-9,0-4 — the "same question,
       renumbered" benchmark-editing pattern)
 
-    Output: (doc_id + id_offset, edited text). Used by the edited_fuzzy
-    recall floor (queries.q_recall_floors): decontaminate_fuzzy over
-    these MUST flag ≥ EDITED_FUZZY_FLOOR of them, or the floor row's
-    hash breaks."""
+    Output: (doc_id + EDITED_ID_OFFSET, edited text). Used by the
+    edited_fuzzy recall floor (queries.q_recall_floors):
+    decontaminate_fuzzy over these MUST flag ≥ EDITED_FUZZY_FLOOR of
+    them, or the floor row's hash breaks."""
     words = F.split(F.col("text"), " ")
     n = F.size(words)
     # transform index i is 0-based; element_at is 1-based — so
@@ -220,6 +212,6 @@ def edited_benchmark_variants(
         F.array_join(swapped, " "), "0123456789", "5678901234"
     )
     return benchmark.select(
-        (F.col("doc_id") + id_offset).alias("doc_id"),
+        (F.col("doc_id") + EDITED_ID_OFFSET).alias("doc_id"),
         edited.alias("text"),
     )

@@ -58,6 +58,10 @@ LSH_ROWS = MINHASH_K // LSH_BANDS
 # arithmetic stays inside ANSI-safe int64 (no overflow, no bigint UDF)
 MERSENNE_PRIME = (1 << 31) - 1
 
+# 64-bit SimHash cut into 8 bands of 8 bits: a pair within hamming 7
+# agrees exactly on ≥1 band (pigeonhole), so banding misses none at 7
+SIMHASH_MAX_HAMMING = 7
+
 
 def drop_viral_buckets(
     df: DataFrame, keys: list[str], max_bucket: int
@@ -199,10 +203,9 @@ def _shingles(
     )
 
 
-def dedup_ngram_pairs(
-    corpus: DataFrame, threshold: float = JACCARD_THRESHOLD
-) -> DataFrame:
-    """Exact near-dup pairs (a<b) with word-bigram Jaccard ≥ threshold.
+def dedup_ngram_pairs(corpus: DataFrame) -> DataFrame:
+    """Exact near-dup pairs (a<b) with word-bigram Jaccard ≥
+    JACCARD_THRESHOLD.
 
     Plan: explode distinct shingles → self-join on shingle (co-shingled
     pairs only) → count intersections → join doc shingle-counts → Jaccard.
@@ -230,7 +233,7 @@ def dedup_ngram_pairs(
             F.col("n_inter")
             / (F.col("ca.n_sh") + F.col("cb.n_sh") - F.col("n_inter")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
 
@@ -485,11 +488,11 @@ def simhash(corpus: DataFrame) -> DataFrame:
     return _signatures(corpus, hs, _simhash_udf, "simhash")
 
 
-def dedup_simhash_pairs(corpus: DataFrame, max_hamming: int = 7) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance ≤ max_hamming, found via
-    8-band exact-match blocking (any pair within hamming 7 of a 64-bit hash
-    agrees exactly on ≥1 of 8 8-bit bands — pigeonhole, zero false
-    negatives w.r.t. the hamming radius)."""
+def dedup_simhash_pairs(corpus: DataFrame) -> DataFrame:
+    """Near-dup pairs by SimHash hamming distance ≤ SIMHASH_MAX_HAMMING,
+    found via 8-band exact-match blocking (any pair within hamming 7 of a
+    64-bit hash agrees exactly on ≥1 of 8 8-bit bands — pigeonhole, zero
+    false negatives w.r.t. the hamming radius)."""
     # same two-consumer reuse point as dedup_minhash_pairs: the band
     # self-join reads signatures twice; the repartition Exchange is the
     # materialization AQE deduplicates
@@ -531,7 +534,7 @@ def dedup_simhash_pairs(corpus: DataFrame, max_hamming: int = 7) -> DataFrame:
         # filter BEFORE distinct: band collisions between unrelated hashes
         # (p≈1/256 per band) make most candidates fail the hamming cut —
         # the dedup shuffle should only carry the survivors
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
     return pairs
@@ -541,18 +544,13 @@ def dedup_simhash_pairs(corpus: DataFrame, max_hamming: int = 7) -> DataFrame:
 # cross-document line dedup (boilerplate-line removal)
 
 
-def dedup_lines(
-    pages: DataFrame,
-    min_docs: int = 2,
-    text_col: str = "markdown",
-    key_col: str = "url",
-) -> DataFrame:
-    """Remove every non-empty LINE that appears in ≥ ``min_docs`` distinct
-    documents — the C4/FineWeb-style cross-document boilerplate strip at
-    the text layer (nav fragments, repeated list items, shared footers
-    survive per-document extraction; only corpus-level frequency exposes
-    them). Returns (key, page_no, clean_md, n_removed) per page; pages
-    whose every line was boilerplate drop out.
+def dedup_lines(pages: DataFrame) -> DataFrame:
+    """Remove every non-empty ``markdown`` LINE that appears in ≥ 2
+    distinct ``url``s — the C4/FineWeb-style cross-document boilerplate
+    strip at the text layer (nav fragments, repeated list items, shared
+    footers survive per-document extraction; only corpus-level frequency
+    exposes them). Returns (url, page_no, clean_md, n_removed) per page;
+    pages whose every line was boilerplate drop out.
 
     Plan (100 TB shape): posexplode lines → distinct-doc count per line
     (one map-side-combined agg) → join back on the line → re-assemble.
@@ -569,21 +567,21 @@ def dedup_lines(
     layout), and exactly what a corpus pipeline does anyway.
     """
     lines = pages.select(
-        key_col,
+        "url",
         "page_no",
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.posexplode(F.split(F.col("markdown"), "\n")).alias("pos", "line"),
     )
     boiler = (
         lines.filter(F.col("line") != "")
         .groupBy("line")
-        .agg(F.count_distinct(key_col).alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
+        .agg(F.count_distinct("url").alias("n_docs"))
+        .filter(F.col("n_docs") >= 2)
         .select("line", F.lit(True).alias("is_boiler"))
     )
     kept = lines.join(boiler, "line", "left")
     per_line = F.struct("pos", "line")
     return (
-        kept.groupBy(key_col, "page_no")
+        kept.groupBy("url", "page_no")
         .agg(
             F.array_join(
                 F.transform(

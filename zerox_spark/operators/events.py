@@ -19,15 +19,18 @@ from pyspark.sql import DataFrame, Window, functions as F
 SESSION_GAP_SECONDS = 30 * 60
 
 
-def sessionize(events: DataFrame, gap_seconds: int = SESSION_GAP_SECONDS) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """(event_id, user_id, session_no): a new session starts when the gap
-    to the user's previous event exceeds gap_seconds. lag + running sum —
-    one shuffle on user_id."""
+    to the user's previous event exceeds SESSION_GAP_SECONDS. lag +
+    running sum — one shuffle on user_id."""
     by_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev_ts = F.lag("ts").over(by_user)
     is_new = F.when(
         prev_ts.isNull()
-        | (F.unix_timestamp("ts") - F.unix_timestamp(prev_ts) > gap_seconds),
+        | (
+            F.unix_timestamp("ts") - F.unix_timestamp(prev_ts)
+            > SESSION_GAP_SECONDS
+        ),
         1,
     ).otherwise(0)
     return (

@@ -149,12 +149,13 @@ FRAME_MOD = 5
 FRAME_INTERVAL_MS = 1000
 
 
-def sample_frames(pages, interval_ms: int = FRAME_INTERVAL_MS):
+def sample_frames(pages):
     """pages(url, html, …) → one row per sampled frame: the video
     frame-sampling shape (per-input FAN-OUT inside the Arrow UDF — output
     batches are longer than input batches, like the PDF page explode).
     No ffmpeg in this container → deterministic fake frames: n_frames =
-    1 + n_bytes % FRAME_MOD, frame bytes = sha256(payload, frame_no)."""
+    1 + n_bytes % FRAME_MOD, FRAME_INTERVAL_MS apart, frame bytes =
+    sha256(payload, frame_no)."""
 
     schema = to_arrow_schema(FRAMES_SCHEMA)
 
@@ -167,7 +168,7 @@ def sample_frames(pages, interval_ms: int = FRAME_INTERVAL_MS):
                 data = data or b""
                 rows += [
                     dict(
-                        url=url, frame_no=i + 1, ts_ms=i * interval_ms,
+                        url=url, frame_no=i + 1, ts_ms=i * FRAME_INTERVAL_MS,
                         frame=hashlib.sha256(
                             data + i.to_bytes(4, "little")
                         ).digest(),

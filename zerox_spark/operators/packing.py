@@ -50,9 +50,8 @@ def pack_sequences(
     docs: DataFrame,
     seq_len: int = 2048,
     n_shards: int = 32,
-    tokens_col: str | None = None,
 ) -> DataFrame:
-    """docs(doc_id, text | tokens_col) → per-document placement:
+    """docs(doc_id, text) → per-document placement:
 
     (doc_id, shard, n_tokens, pack_offset, seq_first, seq_last)
 
@@ -61,13 +60,10 @@ def pack_sequences(
     [k*seq_len, (k+1)*seq_len). Token counts follow the corpus
     accountant's convention (ws_tokens_col: split on spaces, so an empty
     string counts as ONE token — consistent with the token_counts
-    oracle); pass ``tokens_col`` with a pre-computed count for
-    exact-zero empty-document semantics."""
+    oracle)."""
     if seq_len <= 0:
         raise ValueError("seq_len must be positive")
-    tokens = (
-        F.col(tokens_col) if tokens_col else ws_tokens_col()
-    ).cast("long")
+    tokens = ws_tokens_col().cast("long")
     shard = (F.col("doc_id") % n_shards).cast("int")
     base = docs.select(
         "doc_id",

@@ -162,7 +162,6 @@ def embedding_dup_pairs(
     embeddings: DataFrame,
     dim: int,
     threshold: float = 0.9,
-    brute_force: bool = False,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥
@@ -173,7 +172,6 @@ def embedding_dup_pairs(
     candidates, exact cosine verifies them. At threshold ≥0.9 the per-pair
     LSH miss probability is ≈(1-p_bit^PLANES)^TABLES < 1e-8 (p_bit =
     1-θ/π ≥ 0.93), so the verified output matches brute force.
-    ``brute_force=True`` is the O(N²) oracle baseline for tests.
 
     ``max_bucket`` is the same viral-bucket skew knob as
     dedup_minhash_pairs: a hash bucket holding B vectors yields B²
@@ -187,16 +185,12 @@ def embedding_dup_pairs(
     b = embeddings.select(
         F.col("vec_id").alias("id_b"), _as_double("embedding").alias("vb")
     ).select("id_b", "vb", _norm(F.col("vb")).alias("nb"))
-    if brute_force:
-        cand = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    else:
-        from zerox_spark.operators.dedup import bucket_pairs
+    from zerox_spark.operators.dedup import bucket_pairs
 
-        pairs = bucket_pairs(
-            lsh_buckets(embeddings, dim), "vec_id", ["table", "bucket"],
-            max_bucket,
-        )
-        cand = pairs.join(a, "id_a").join(b, "id_b")
+    pairs = bucket_pairs(
+        lsh_buckets(embeddings, dim), "vec_id", ["table", "bucket"], max_bucket
+    )
+    cand = pairs.join(a, "id_a").join(b, "id_b")
     cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     return (
         cand.withColumn("cos", cos)
@@ -281,10 +275,10 @@ IVF_CENTROID_MOD = 20
 # UNCLUSTERED vectors (the sandbox corpus, the hardest regime) recall
 # tracks the probed FRACTION — measured recall@5 vs exact: 0.92 at 16/25
 # cells (sf0.01), 0.88/0.96 at 48/64 of 100 cells (sf0.1), but 0.61 at a
-# fixed 16/100 — so worst-case corpora must pass nprobe ∝ n_cells
-# explicitly, as the sandbox recall oracle (queries._ann_ivf_recall)
-# does. Baking that scaling into the default would make the 'approximate'
-# path half-brute-force on large clustered corpora.
+# fixed 16/100 — so worst-case corpora must pass an nprobe_fn ∝ n_cells,
+# as the sandbox recall oracle (queries._ann_ivf_recall) does. Baking
+# that scaling into the default would make the 'approximate' path
+# half-brute-force on large clustered corpora.
 IVF_NPROBE = 16
 
 
@@ -328,16 +322,15 @@ def ann_topk_ivf(
     dim: int,
     k: int = DEFAULT_K,
     centroid_mod: int = IVF_CENTROID_MOD,
-    nprobe: int | None = None,
     nprobe_fn=None,
 ) -> DataFrame:
     """IVF-flat approximate top-k: each database vector lives in its
-    nearest-centroid cell; a query probes its ``nprobe`` nearest cells and
+    nearest-centroid cell; a query probes its nprobe nearest cells and
     exactly reranks only those cells' members. Same output contract as
-    ann_topk_exact/ann_topk_lsh. ``nprobe=None`` → IVF_NPROBE (see the
-    note there: unclustered corpora need nprobe ∝ n_cells — pass a fixed
-    ``nprobe`` or an ``nprobe_fn(n_cells) -> int`` policy, evaluated on
-    the single guard count so no extra scan is spent)."""
+    ann_topk_exact/ann_topk_lsh. nprobe is ``nprobe_fn(n_cells)`` if
+    given, else IVF_NPROBE (see the note there: unclustered corpora need
+    nprobe ∝ n_cells — pass an ``nprobe_fn(n_cells) -> int`` policy,
+    evaluated on the single guard count so no extra scan is spent)."""
     # No persist/localCheckpoint: persist inside a library operator leaks
     # (nothing can safely unpersist before the caller's action) and
     # localCheckpoint severs lineage (unrecoverable on executor loss). The
@@ -350,10 +343,7 @@ def ann_topk_ivf(
             f"IVF centroid sample is empty (no vec_id divisible by "
             f"{centroid_mod}) — lower centroid_mod or use the LSH path"
         )
-    if nprobe is None:
-        nprobe = (
-            int(nprobe_fn(n_cells)) if nprobe_fn is not None else IVF_NPROBE
-        )
+    nprobe = int(nprobe_fn(n_cells)) if nprobe_fn is not None else IVF_NPROBE
     assign = ivf_assignments(embeddings, cents)
     # query-side: nprobe nearest cells (tiny Q×C set; window is fine)
     q = queries.select(

@@ -60,10 +60,11 @@ def _pred_lang_col():
     return pred
 
 
-def quality_col(text=None):
-    """The composite quality score as a pure Column expression — composable
-    into other plans (curation inlines it as a filter instead of a join)."""
-    text = F.col("text") if text is None else text
+def quality_col():
+    """The composite quality score of the ``text`` column as a pure Column
+    expression — composable into other plans (curation inlines it as a
+    filter instead of a join)."""
+    text = F.col("text")
     words = _words(text)
     n_chars = F.length(text)
     n_words = F.size(words)
@@ -78,15 +79,13 @@ def quality_col(text=None):
     )
 
 
-def ws_tokens_col(text=None):
-    text = F.col("text") if text is None else text
-    return F.size(_words(text)).cast("int")
+def ws_tokens_col():
+    return F.size(_words(F.col("text"))).cast("int")
 
 
-def bpe_tokens_col(text=None):
-    text = F.col("text") if text is None else text
+def bpe_tokens_col():
     return (
-        F.size(F.regexp_extract_all(text, F.lit(TOKEN_PATTERN), 0))
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(TOKEN_PATTERN), 0))
         .cast("int")
     )
 
@@ -100,7 +99,7 @@ def _quality_cols():
     stop_ratio = F.round(_count_in(words, STOPWORDS) / n_words, 6)
     alnum = F.length(F.regexp_replace(text, r"[^A-Za-z0-9 ]", ""))
     punct_ratio = F.round((n_chars - alnum) / n_chars, 6)
-    score = quality_col(text)
+    score = quality_col()
     return [
         n_chars.cast("int").alias("n_chars"),
         n_words.cast("int").alias("n_words"),
@@ -368,15 +367,15 @@ def fingerprints(docs: DataFrame) -> DataFrame:
     )
 
 
-def ngram_counts(docs: DataFrame, n: int = 2, k: int = 100) -> DataFrame:
-    """Top-k corpus n-grams by document frequency THEN total count — the
+def ngram_counts(docs: DataFrame) -> DataFrame:
+    """Top-100 corpus bigrams by document frequency THEN total count — the
     classic LM-corpus accounting sweep (vocabulary/collocation tables).
     ``docs`` must carry (doc_id, text).
 
     Plan: ONE n-gram explode → groupBy(ngram) with count(*) for total
     occurrences and count_distinct(doc_id) for document frequency (Spark
     plans the distinct as a two-phase aggregate) — the corpus is tokenized
-    once. The final top-k is a single-partition sort of the (tiny)
+    once. The final top-100 is a single-partition sort of the (tiny)
     aggregated table, not of the corpus. Ties break lexicographically for
     cross-engine determinism."""
     from zerox_spark.operators.dedup import _shingles
@@ -385,7 +384,7 @@ def ngram_counts(docs: DataFrame, n: int = 2, k: int = 100) -> DataFrame:
     # ONE explode computes both counts (count_distinct doc_id = doc
     # frequency) — a second array_distinct explode would double the
     # dominant tokenize+shuffle cost of the corpus sweep
-    grams = _shingles(F.col("text"), n=n, distinct=False)
+    grams = _shingles(F.col("text"), n=2, distinct=False)
     exploded = docs.select("doc_id", F.explode(grams).alias("ngram"))
     counts = exploded.groupBy("ngram").agg(
         F.count_distinct("doc_id").alias("n_docs"),
@@ -393,6 +392,6 @@ def ngram_counts(docs: DataFrame, n: int = 2, k: int = 100) -> DataFrame:
     )
     return (
         counts.orderBy(F.desc("n_docs"), F.desc("n_total"), F.asc("ngram"))
-        .limit(k)
+        .limit(100)
         .select("ngram", "n_docs", "n_total")
     )

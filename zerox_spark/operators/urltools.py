@@ -10,8 +10,8 @@ sibling.
 
 Everything is pure JVM column algebra (split/filter/array_sort — no UDF, no
 shuffle); the domain rollup is one map-side-combined hash aggregation on a
-low-cardinality key. Expressions are composed as SQL fragments over a
-column *name* so the whole rule is also restateable verbatim by the DuckDB
+low-cardinality key. Expressions are composed as SQL fragments over the
+``url`` column so the whole rule is also restateable verbatim by the DuckDB
 oracle.
 """
 
@@ -26,12 +26,12 @@ TRACKING_PARAMS = (
 )
 
 
-def canonicalize_url(url_col: str = "url") -> Column:
-    """Canonical form of the URL in column ``url_col``: fragment dropped,
+def canonicalize_url() -> Column:
+    """Canonical form of the URL in column ``url``: fragment dropped,
     scheme+host lowercased, default :80/:443 stripped, tracking params
     removed, remaining query params sorted, empty path → '/', trailing
     slashes on a non-root path trimmed. Pure column algebra."""
-    nofrag = f"split({url_col}, '#')[0]"
+    nofrag = "split(url, '#')[0]"
     base = f"split({nofrag}, '\\\\?')[0]"
     # everything after the FIRST '?' is the query ('?' is legal INSIDE a
     # query per RFC 3986 — substring_index(…, -1) would split on the last
@@ -66,28 +66,28 @@ def canonicalize_url(url_col: str = "url") -> Column:
     )
 
 
-def domain_of(url_col: str = "url") -> Column:
-    """Lowercase authority without userinfo/port."""
+def domain_of() -> Column:
+    """Lowercase authority of column ``url`` without userinfo/port."""
     return F.expr(
-        f"regexp_replace(regexp_replace(lower(regexp_extract({url_col}, "
-        f"'^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), '^.*@', ''), "
-        f"':[0-9]+$', '')"
+        "regexp_replace(regexp_replace(lower(regexp_extract(url, "
+        "'^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), '^.*@', ''), "
+        "':[0-9]+$', '')"
     )
 
 
-def canonical_urls(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def canonical_urls(pages: DataFrame) -> DataFrame:
     """pages(url, …) → + (canonical_url, domain)."""
-    return pages.withColumn(
-        "canonical_url", canonicalize_url(url_col)
-    ).withColumn("domain", domain_of(url_col))
+    return pages.withColumn("canonical_url", canonicalize_url()).withColumn(
+        "domain", domain_of()
+    )
 
 
-def domain_stats(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def domain_stats(pages: DataFrame) -> DataFrame:
     """(domain, n_pages, n_canonical): per-domain page counts and distinct
     canonical-URL counts — the blocklist/corpus-mix accounting table. One
     hash agg; map-side combined; the domain key is low-cardinality."""
     return (
-        canonical_urls(pages, url_col)
+        canonical_urls(pages)
         .groupBy("domain")
         .agg(
             F.count(F.lit(1)).alias("n_pages"),

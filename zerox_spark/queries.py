@@ -499,12 +499,21 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     while _LINE_DEDUP_CACHE:
         _LINE_DEDUP_CACHE.pop().unpersist(blocking=False)
     _LINE_DEDUP_CACHE.append(ex)
-    return dedup_lines(ex, min_docs=2).select(
+    return dedup_lines(ex).select(
         "url", "page_no", "clean_md", "n_removed"
     )
 
 
 _LINE_DEDUP_CACHE: list[DataFrame] = []
+
+
+def _floor_pct(hit, cap: int):
+    """The recall-floor aggregate every floor query emits:
+    min(floor(100 · Σhit / rows), cap) as a long ``recall_floor_pct``."""
+    return F.least(
+        F.floor(F.sum(hit) * 100 / F.count(F.lit(1))),
+        F.lit(cap).cast("long"),
+    ).alias("recall_floor_pct")
 
 
 def _simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -521,7 +530,7 @@ def _simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle). The exact self-join is the declared test-scale ground truth
     (all-pairs on the (doc_id, int64) signature table only — never on
     text), mirroring dedup_ngram's role."""
-    from zerox_spark.operators.dedup import simhash
+    from zerox_spark.operators.dedup import SIMHASH_MAX_HAMMING, simhash
 
     corpus = _spread(with_injected_duplicates(_docs(spark, sf_dir)), "doc_id")
     sigs = simhash(corpus)
@@ -532,7 +541,7 @@ def _simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.bit_count(
                 F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))
             )
-            <= 7
+            <= SIMHASH_MAX_HAMMING
         )
         .select(
             F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b")
@@ -542,16 +551,7 @@ def _simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_a", "id_b", F.lit(1).alias("hit")
     )
     joined = exact.join(banded, ["id_a", "id_b"], "left")
-    recall = joined.agg(
-        F.least(
-            F.floor(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-                * 100
-                / F.count(F.lit(1))
-            ),
-            F.lit(100).cast("long"),
-        ).alias("recall_floor_pct")
-    )
+    recall = joined.agg(_floor_pct(F.coalesce(F.col("hit"), F.lit(0)), 100))
     n_docs = corpus.agg(F.count(F.lit(1)).alias("n_docs"))
     return n_docs.crossJoin(recall)
 
@@ -654,14 +654,7 @@ def _recall_floor(
     joined = exact.join(approx, ["query_id", "neighbor_id"], "left")
     return joined.agg(
         F.count_distinct("query_id").alias("n_queries"),
-        F.least(
-            F.floor(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-                * 100
-                / F.count(F.lit(1))
-            ),
-            F.lit(ANN_RECALL_FLOOR).cast("long"),
-        ).alias("recall_floor_pct"),
+        _floor_pct(F.coalesce(F.col("hit"), F.lit(0)), ANN_RECALL_FLOOR),
     )
 
 
@@ -886,7 +879,7 @@ def q_text_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zerox_spark.operators.textstats import ngram_counts
 
     docs = _spread(_docs(spark, sf_dir), "doc_id")
-    grams = ngram_counts(docs, n=2, k=100).select(
+    grams = ngram_counts(docs).select(
         F.lit("bigram").alias("kind"),
         F.col("ngram").alias("key"),
         F.col("n_docs").cast("long").alias("n1"),
@@ -941,14 +934,7 @@ def q_recall_floors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(bench.select("doc_id"), "doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_items"),
-            F.least(
-                F.floor(
-                    F.sum("fuzzy_contaminated") * 100 / F.count(F.lit(1))
-                ),
-                F.lit(100),
-            )
-            .cast("long")
-            .alias("recall_floor_pct"),
+            _floor_pct("fuzzy_contaminated", 100),
         )
         .select(
             F.lit("fuzzy_decontam").alias("metric"),
@@ -971,14 +957,7 @@ def q_recall_floors(spark: SparkSession, sf_dir: str) -> DataFrame:
         decontaminate_fuzzy(edited, bench)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_items"),
-            F.least(
-                F.floor(
-                    F.sum("fuzzy_contaminated") * 100 / F.count(F.lit(1))
-                ),
-                F.lit(EDITED_FUZZY_FLOOR),
-            )
-            .cast("long")
-            .alias("recall_floor_pct"),
+            _floor_pct("fuzzy_contaminated", EDITED_FUZZY_FLOOR),
         )
         .select(
             F.lit("edited_fuzzy").alias("metric"),

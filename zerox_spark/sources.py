@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 
-def read_html_dir(spark: SparkSession, path: str, lang: str = "") -> DataFrame:
+def read_html_dir(spark: SparkSession, path: str) -> DataFrame:
     """Directory/glob of raw files → pages rows (binaryFile source).
 
     binaryFile gives (path, modificationTime, length, content); pruning
@@ -34,7 +34,7 @@ def read_html_dir(spark: SparkSession, path: str, lang: str = "") -> DataFrame:
         F.col("modificationTime").alias("warc_ts"),
         F.col("content").alias("html"),
         F.lit("").alias("text"),
-        F.lit(lang).alias("lang"),
+        F.lit("").alias("lang"),
     )
 
 
