@@ -3,6 +3,7 @@ record types and encodings the synthesized driver corpus doesn't exercise."""
 
 from __future__ import annotations
 
+import hashlib
 import struct
 
 import pytest
@@ -459,3 +460,82 @@ def test_ppt_duplicate_offset_under_two_ids_contained():
     )
     pages = extract_document(payload, None, ExtractConfig(trust_text=False))
     assert len(pages) == 1 and pages[0].status == "ERROR"
+
+
+# --------------------------------------------------------------------------
+# encrypted .doc under the empty password (the second _LEGACY_PASSWORDS
+# candidate)
+
+
+def _doc_encrypted_under(password: str, capi: bool, doc_id: int = 9) -> bytes:
+    """render_doc's streams encrypted per [MS-DOC] 2.2.6.2/.3 under
+    ``password``: the EncryptionHeader and the keystream are built here
+    from the key-derivation primitives, not from the module's own
+    default-password header builder."""
+    plain = CfbReader(render_doc(doc_id, "w1 w2 w3"))
+    word = bytearray(plain.read_stream("WordDocument"))
+    clx = plain.read_stream("1Table")
+    salt = _det_bytes(f"docpw:{doc_id}", 16)
+    derive = oc._xls_capi_base if capi else oc._xls_rc4_base
+    rc4 = oc._Rc4Stream(derive(salt, password), capi, 16, oc.DOC_BLOCK_BYTES)
+    verifier = b"\xa5" * 16
+    vhash = (hashlib.sha1 if capi else hashlib.md5)(verifier).digest()
+    enc = bytes(
+        a ^ b
+        for a, b in zip(
+            verifier + vhash, rc4.keystream_at(0, 16 + len(vhash))
+        )
+    )
+    if capi:
+        hdr = struct.pack("<8I", 0, 0, 0x6801, 0x8004, 128, 0x18, 0, 0)
+        header = (
+            struct.pack("<HHII", 4, 2, 0, len(hdr))
+            + hdr
+            + struct.pack("<I", 16)
+            + salt
+            + enc[:16]
+            + struct.pack("<I", 20)
+            + enc[16:]
+        )
+    else:
+        header = struct.pack("<HH", 1, 1) + salt + enc
+    (flags,) = struct.unpack_from("<H", word, 0x0A)
+    struct.pack_into("<H", word, 0x0A, flags | 0x0100)  # fEncrypted
+    struct.pack_into("<I", word, 0x0E, len(header))  # lKey
+    (fc_clx,) = struct.unpack_from("<I", word, 0x01A2)
+    struct.pack_into("<I", word, 0x01A2, fc_clx + len(header))
+    table = header + clx
+
+    def encrypt_from(buf: bytes, start: int) -> bytes:
+        ks = rc4.keystream_at(start, len(buf) - start)
+        return buf[:start] + bytes(a ^ b for a, b in zip(buf[start:], ks))
+
+    return write_cfb(
+        [
+            ("WordDocument", encrypt_from(bytes(word), 0x44)),
+            ("1Table", encrypt_from(table, len(header))),
+        ]
+    )
+
+
+@pytest.mark.parametrize("capi", [False, True])
+def test_doc_encrypted_under_empty_password_extracts(capi):
+    expected = [
+        (p.page_no, p.markdown, p.status)
+        for p in extract_document(render_doc(9, "w1 w2 w3"), None)
+    ]
+    pages = extract_document(_doc_encrypted_under("", capi), None)
+    assert [(p.page_no, p.markdown, p.status) for p in pages] == expected
+    assert expected and all(s == "SUCCESS" for _, _, s in expected)
+
+
+@pytest.mark.parametrize("capi", [False, True])
+def test_doc_encrypted_under_other_password_contained(capi):
+    pages = extract_document(_doc_encrypted_under("hunter2", capi), None)
+    assert [(p.status, p.error) for p in pages] == [
+        (
+            "ERROR",
+            "ValueError: encrypted doc (password verifier rejected the "
+            "default and empty passwords)",
+        )
+    ]

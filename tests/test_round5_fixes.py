@@ -81,7 +81,7 @@ class TestAesPrimitives:
         ]
         for key_hex, ct_hex in cases:
             rk = aes.expand_key(bytes.fromhex(key_hex))
-            ct = aes.encrypt_block(rk, pt)
+            ct = aes.ecb_encrypt(bytes.fromhex(key_hex), pt)
             assert ct.hex() == ct_hex
             assert aes.decrypt_block(rk, ct) == pt
 
@@ -118,6 +118,18 @@ class TestAesPrimitives:
         # nopad mode leaves everything
         raw = aes.cbc_decrypt(key, iv, enc, unpad=False)
         assert raw[: len(b"payload")] == b"payload" and len(raw) == 16
+
+    @pytest.mark.parametrize("n", [32, 64])
+    def test_cbc_decrypt_rejects_non_block_iv(self, n):
+        # 32 bytes runs the scalar ECB blocks, 64 the bulk pass; the IV
+        # is checked before either
+        with pytest.raises(ValueError, match="AES-CBC IV of 8 bytes"):
+            aes.cbc_decrypt(b"k" * 16, b"i" * 8, bytes(n), unpad=False)
+
+    def test_xor_bytes_truncates_to_shorter_input(self):
+        assert aes.xor_bytes(b"\x0f\xf0\xaa", b"\xff\xff") == b"\xf0\x0f"
+        assert aes.xor_bytes(b"\x01", b"\x03\x05\x07") == b"\x02"
+        assert aes.xor_bytes(b"", b"abc") == b""
 
     def test_bad_key_length_rejected(self):
         with pytest.raises(ValueError):
@@ -195,7 +207,7 @@ class TestEncryptedPdfRoundtrip:
             (synth._CRYPT_P & 0xFFFFFFFF).to_bytes(4, "little")
             + b"\xff\xff\xff\xffTadbzx5\x00"
         )
-        perms = aes.ecb_encrypt_block(fk, perms_plain)
+        perms = aes.ecb_encrypt(fk, perms_plain)
         saved = synth._V5_CACHE
         synth._V5_CACHE = (fk, u, ue, o, oe, perms)
         try:
@@ -590,7 +602,7 @@ class TestSecurityHandlerEdges:
         oe = aes.cbc_encrypt_nopad(
             hashlib.sha256(b"" + ok_ + u[:48]).digest(), b"\x00" * 16, fk
         )
-        perms = aes.ecb_encrypt_block(
+        perms = aes.ecb_encrypt(
             fk,
             (synth._CRYPT_P & 0xFFFFFFFF).to_bytes(4, "little")
             + b"\xff\xff\xff\xffTadbzx5\x00",
@@ -702,6 +714,27 @@ class TestEncryptedOffice:
         assert oc.decrypt_ooxml_package(info, pkg) == zip_bytes
         cfb = write_cfb([("EncryptionInfo", info), ("EncryptedPackage", pkg)])
         assert _success_pages(cfb) == self._expected_pages(6)
+
+    def test_agile_short_block_size_contained(self):
+        # keyData blockSize sizes the segment IV; "08" is outside input
+        # that must surface as one contained error, not a numpy message
+        import hashlib
+
+        from zerox_spark.extract import office_crypto as oc
+        from zerox_spark.extract.cfb import write_cfb
+        from zerox_spark.synth import render_xlsx
+
+        info, pkg = oc.encrypt_ooxml_agile(
+            render_xlsx(6), hashlib.sha256(b"t6").digest()[:16]
+        )
+        key_data = b'<keyData saltSize="16" blockSize='
+        assert info.count(key_data + b'"16"') == 1
+        info = info.replace(key_data + b'"16"', key_data + b'"08"')
+        cfb = write_cfb([("EncryptionInfo", info), ("EncryptedPackage", pkg)])
+        pages = extract_document(cfb, None)
+        assert [(p.status, p.error) for p in pages] == [
+            ("ERROR", "ValueError: AES-CBC IV of 8 bytes")
+        ]
 
     def test_ooxml_real_password_contained(self):
         import hashlib
@@ -1026,11 +1059,7 @@ class TestReviewFindings:
     def test_bulk_ecb_decrypt_matches_scalar(self):
         key = bytes(range(32))
         data = bytes((i * 3 + 1) % 256 for i in range(512))
-        rk = aes.expand_key(key)
-        enc = b"".join(
-            aes.encrypt_block(rk, data[i : i + 16])
-            for i in range(0, 512, 16)
-        )
+        enc = aes.ecb_encrypt(key, data)
         assert aes.ecb_decrypt(key, enc) == data
         assert aes.ecb_decrypt(key, enc[:40]) == data[:32]  # ragged drop
 

@@ -1,4 +1,5 @@
-"""Pure-Python AES (FIPS-197) + CBC helpers for PDF standard security.
+"""Pure-Python AES (FIPS-197) + ECB/CBC helpers for PDF standard security
+and encrypted Office documents (MS-OFFCRYPTO, extract/office_crypto.py).
 
 Why hand-rolled: the container bans third-party installs and the stdlib has
 no AES, yet AES is how every post-2005 "owner-locked" PDF in a crawl is
@@ -22,12 +23,10 @@ Everything here derives from the public FIPS-197 spec and ISO 32000-1/2
 from __future__ import annotations
 
 import hashlib
+import struct
 from functools import lru_cache
 
-try:  # numpy ships in the container; scalar fallback keeps imports soft
-    import numpy as _np
-except Exception:  # pragma: no cover
-    _np = None
+import numpy as np
 
 # -- tables (computed from the spec's GF(2^8) algebra, not pasted) ---------
 
@@ -189,28 +188,6 @@ def _encrypt_words(words, nr: int, c0: int, c1: int, c2: int, c3: int):
     return o0, o1, o2, o3
 
 
-def _encrypt_block_w(words, nr: int, block: bytes) -> bytes:
-    o0, o1, o2, o3 = _encrypt_words(
-        words,
-        nr,
-        int.from_bytes(block[0:4], "big"),
-        int.from_bytes(block[4:8], "big"),
-        int.from_bytes(block[8:12], "big"),
-        int.from_bytes(block[12:16], "big"),
-    )
-    return ((o0 << 96) | (o1 << 64) | (o2 << 32) | o3).to_bytes(16, "big")
-
-
-def encrypt_block(rk: list[int], block: bytes) -> bytes:
-    """Byte-form round-key entry point (kept for the FIPS vector tests and
-    one-off callers); bulk encrypt paths use the cached word form."""
-    words = tuple(
-        (rk[i] << 24) | (rk[i + 1] << 16) | (rk[i + 2] << 8) | rk[i + 3]
-        for i in range(0, len(rk), 4)
-    )
-    return _encrypt_block_w(words, len(rk) // 16 - 1, block)
-
-
 def decrypt_block(rk: list[int], block: bytes) -> bytes:
     nr = len(rk) // 16 - 1
     s = [b ^ k for b, k in zip(block, rk[16 * nr :])]
@@ -239,12 +216,12 @@ def _np_tables():
     global _NP_TABLES
     if _NP_TABLES is None:
         _NP_TABLES = {
-            "inv_sbox": _np.array(_INV_SBOX, dtype=_np.uint8),
-            "x9": _np.array(_X9, dtype=_np.uint8),
-            "xb": _np.array(_XB, dtype=_np.uint8),
-            "xd": _np.array(_XD, dtype=_np.uint8),
-            "xe": _np.array(_XE, dtype=_np.uint8),
-            "inv_shift": _np.array(_INV_SHIFT, dtype=_np.intp),
+            "inv_sbox": np.array(_INV_SBOX, dtype=np.uint8),
+            "x9": np.array(_X9, dtype=np.uint8),
+            "xb": np.array(_XB, dtype=np.uint8),
+            "xd": np.array(_XD, dtype=np.uint8),
+            "xe": np.array(_XE, dtype=np.uint8),
+            "inv_shift": np.array(_INV_SHIFT, dtype=np.intp),
         }
     return _NP_TABLES
 
@@ -254,8 +231,8 @@ def _ecb_decrypt_bulk(rk: list[int], data: bytes) -> bytes:
     elementwise table gather / XOR over an (n_blocks, 16) array."""
     t = _np_tables()
     nr = len(rk) // 16 - 1
-    keys = _np.array(rk, dtype=_np.uint8).reshape(nr + 1, 16)
-    s = _np.frombuffer(data, dtype=_np.uint8).reshape(-1, 16) ^ keys[nr]
+    keys = np.array(rk, dtype=np.uint8).reshape(nr + 1, 16)
+    s = np.frombuffer(data, dtype=np.uint8).reshape(-1, 16) ^ keys[nr]
     inv_shift, inv_sbox = t["inv_shift"], t["inv_sbox"]
     x9, xb, xd, xe = t["x9"], t["xb"], t["xd"], t["xe"]
     for rnd in range(nr - 1, 0, -1):
@@ -263,7 +240,7 @@ def _ecb_decrypt_bulk(rk: list[int], data: bytes) -> bytes:
         cols = s.reshape(-1, 4, 4)  # (n, column, row)
         a0, a1 = cols[:, :, 0], cols[:, :, 1]
         a2, a3 = cols[:, :, 2], cols[:, :, 3]
-        ns = _np.empty_like(cols)
+        ns = np.empty_like(cols)
         ns[:, :, 0] = xe[a0] ^ xb[a1] ^ xd[a2] ^ x9[a3]
         ns[:, :, 1] = x9[a0] ^ xe[a1] ^ xb[a2] ^ xd[a3]
         ns[:, :, 2] = xd[a0] ^ x9[a1] ^ xe[a2] ^ xb[a3]
@@ -276,8 +253,17 @@ def _ecb_decrypt_bulk(rk: list[int], data: bytes) -> bytes:
 # -- CBC + padding (ISO 32000-1 §7.6.2: 16-byte blocks, PKCS#7-style) ------
 
 
-def _cbc_encrypt_core(key: bytes, iv: bytes, data: bytes) -> bytes:
-    words, nr = _expand_key_words(key)
+def xor_bytes(a: bytes, b: bytes) -> bytes:
+    """a XOR b over the shorter length (zip's truncation), as one big-int
+    XOR instead of a per-byte loop."""
+    n = min(len(a), len(b))
+    return (
+        int.from_bytes(a[:n], "big") ^ int.from_bytes(b[:n], "big")
+    ).to_bytes(n, "big")
+
+
+def _cbc_encrypt_core(words, nr: int, iv: bytes, data: bytes) -> bytes:
+    """The CBC chain over whole blocks, in u32 column-word space."""
     frombytes = int.from_bytes
     p0 = frombytes(iv[0:4], "big")
     p1 = frombytes(iv[4:8], "big")
@@ -303,43 +289,28 @@ def cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     """Pad (always, per spec) then chain. Sequential by construction —
     fixture-synthesis / key-derivation use only, never the extract path."""
     pad = 16 - len(data) % 16
-    return _cbc_encrypt_core(key, iv, data + bytes([pad]) * pad)
+    return _cbc_encrypt_core(
+        *_expand_key_words(key), iv, data + bytes([pad]) * pad
+    )
 
 
 def cbc_encrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
     """Exact-multiple CBC without padding (the /UE //OE wrapping mode)."""
     if len(data) % 16:
         raise ValueError("nopad CBC needs a block multiple")
-    return _cbc_encrypt_core(key, iv, data)
+    return _cbc_encrypt_core(*_expand_key_words(key), iv, data)
 
 
 def cbc_decrypt(key: bytes, iv: bytes, data: bytes, unpad: bool = True) -> bytes:
-    """Bulk CBC decrypt: one vectorized ECB pass + shifted XOR when numpy
-    is present, scalar otherwise. Tolerant unpadding — a malformed final
-    block keeps its bytes rather than failing the document."""
-    if len(data) % 16 or not data:
-        # tolerate ragged tails the way the rest of the parser tolerates
-        # damage: decrypt the whole blocks, drop the fragment
-        data = data[: len(data) - len(data) % 16]
-        if not data:
-            return b""
-    rk = expand_key(key)
-    if _np is not None and len(data) >= 64:
-        plain = _ecb_decrypt_bulk(rk, data)
-        buf = _np.frombuffer(plain, dtype=_np.uint8).copy()
-        prior = _np.frombuffer(iv + data[:-16], dtype=_np.uint8)
-        buf ^= prior
-        out = buf.tobytes()
-    else:
-        out_b = bytearray()
-        prev = iv
-        for i in range(0, len(data), 16):
-            blk = data[i : i + 16]
-            out_b += bytes(
-                a ^ b for a, b in zip(decrypt_block(rk, blk), prev)
-            )
-            prev = blk
-        out = bytes(out_b)
+    """Bulk CBC decrypt: one ECB pass + one shifted XOR with the previous
+    ciphertext blocks. Tolerant unpadding — a malformed final block keeps
+    its bytes rather than failing the document."""
+    if len(iv) != 16:
+        raise ValueError(f"AES-CBC IV of {len(iv)} bytes")
+    # tolerate ragged tails the way the rest of the parser tolerates
+    # damage: decrypt the whole blocks, drop the fragment
+    data = data[: len(data) - len(data) % 16]
+    out = xor_bytes(ecb_decrypt(key, data), iv + data[:-16])
     if unpad and out:
         pad = out[-1]
         if 1 <= pad <= 16 and out.endswith(bytes([pad]) * pad):
@@ -347,29 +318,35 @@ def cbc_decrypt(key: bytes, iv: bytes, data: bytes, unpad: bool = True) -> bytes
     return out
 
 
-def ecb_decrypt_block(key: bytes, block: bytes) -> bytes:
-    """Single-block ECB (the /Perms validation field)."""
-    return decrypt_block(expand_key(key), block[:16])
-
-
 def ecb_decrypt(key: bytes, data: bytes) -> bytes:
-    """Bulk ECB decrypt (the ECMA-376 standard-encryption package mode):
-    one vectorized pass over all blocks when numpy is present, scalar
-    fallback otherwise. Trailing non-block fragment is dropped."""
+    """ECB decrypt (the ECMA-376 standard-encryption package mode and the
+    first pass of cbc_decrypt): one vectorized pass over all blocks from
+    64 bytes up, the scalar block loop below that. Trailing non-block
+    fragment is dropped."""
     data = data[: len(data) - len(data) % 16]
     if not data:
         return b""
     rk = expand_key(key)
-    if _np is not None and len(data) >= 64:
+    if len(data) >= 64:
         return _ecb_decrypt_bulk(rk, data)
+    return b"".join(
+        decrypt_block(rk, data[i : i + 16]) for i in range(0, len(data), 16)
+    )
+
+
+def ecb_encrypt(key: bytes, data: bytes) -> bytes:
+    """ECB encrypt, zero-padding a ragged tail (the /Perms field, the
+    ECMA-376 standard-encryption fixtures)."""
+    if len(data) % 16:
+        data += b"\x00" * (16 - len(data) % 16)
+    words, nr = _expand_key_words(key)
     out = bytearray()
     for i in range(0, len(data), 16):
-        out += decrypt_block(rk, data[i : i + 16])
+        o0, o1, o2, o3 = _encrypt_words(
+            words, nr, *struct.unpack_from(">4I", data, i)
+        )
+        out += struct.pack(">4I", o0, o1, o2, o3)
     return bytes(out)
-
-
-def ecb_encrypt_block(key: bytes, block: bytes) -> bytes:
-    return encrypt_block(expand_key(key), block[:16])
 
 
 # -- ISO 32000-2 Algorithm 2.B (the R6 password hash) ----------------------
@@ -382,27 +359,12 @@ def hash_r6(password: bytes, salt: bytes, udata: bytes = b"") -> bytes:
     executor process instead of per document."""
     k = hashlib.sha256(password + salt + udata).digest()
     i = 0
-    frombytes = int.from_bytes
     while True:
-        k1 = (password + k + udata) * 64
-        words, nr = _expand_key_words_uncached(k[:16])
-        p0 = frombytes(k[16:20], "big")
-        p1 = frombytes(k[20:24], "big")
-        p2 = frombytes(k[24:28], "big")
-        p3 = frombytes(k[28:32], "big")
-        e = bytearray()
-        for off in range(0, len(k1), 16):
-            p0, p1, p2, p3 = _encrypt_words(
-                words,
-                nr,
-                p0 ^ frombytes(k1[off : off + 4], "big"),
-                p1 ^ frombytes(k1[off + 4 : off + 8], "big"),
-                p2 ^ frombytes(k1[off + 8 : off + 12], "big"),
-                p3 ^ frombytes(k1[off + 12 : off + 16], "big"),
-            )
-            e += ((p0 << 96) | (p1 << 64) | (p2 << 32) | p3).to_bytes(
-                16, "big"
-            )
+        e = _cbc_encrypt_core(
+            *_expand_key_words_uncached(k[:16]),
+            k[16:32],
+            (password + k + udata) * 64,
+        )
         # first 16 bytes of E as a big-endian integer mod 3 == digit-sum
         # mod 3 (256 ≡ 1 mod 3), picks the next hash
         mod = sum(e[:16]) % 3

@@ -30,6 +30,8 @@ import re
 import struct
 from functools import lru_cache
 
+from zerox_spark.extract import aes
+
 DEFAULT_PASSWORD = "VelvetSweatshop"
 
 _SEGMENT = 4096  # agile package segment size
@@ -66,27 +68,6 @@ def _standard_key(salt: bytes, password: str, key_bytes: int) -> bytes:
     return (x1 + x2)[:key_bytes]
 
 
-def _ecb_decrypt(key: bytes, data: bytes) -> bytes:
-    # numpy-vectorized bulk pass (aes.ecb_decrypt) — the EncryptedPackage
-    # of a standard-encrypted xlsx is the extract hot path, not a loop of
-    # scalar block calls
-    from zerox_spark.extract import aes
-
-    return aes.ecb_decrypt(key, data)
-
-
-def _ecb_encrypt(key: bytes, data: bytes) -> bytes:
-    from zerox_spark.extract import aes
-
-    if len(data) % 16:
-        data += b"\x00" * (16 - len(data) % 16)
-    words, nr = aes._expand_key_words(key)  # cached word form, once
-    out = bytearray()
-    for i in range(0, len(data), 16):
-        out += aes._encrypt_block_w(words, nr, data[i : i + 16])
-    return bytes(out)
-
-
 def _decrypt_standard(info: bytes, package: bytes, password: str) -> bytes:
     # EncryptionVersionInfo(4) Flags(4) HeaderSize(4) Header Verifier
     (header_size,) = struct.unpack_from("<I", info, 8)
@@ -110,15 +91,15 @@ def _decrypt_standard(info: bytes, package: bytes, password: str) -> bytes:
         )
     enc_vhash = info[v + 24 + salt_size : v + 24 + salt_size + 32]
     key = _standard_key(salt, password, key_bytes)
-    verifier = _ecb_decrypt(key, enc_verifier)
-    vhash = _ecb_decrypt(key, enc_vhash)
+    verifier = aes.ecb_decrypt(key, enc_verifier)
+    vhash = aes.ecb_decrypt(key, enc_vhash)
     if hashlib.sha1(verifier).digest()[:vh_size] != vhash[:vh_size]:
         raise ValueError(
             "encrypted Office package (password verifier rejected the "
             "default password)"
         )
     (size,) = struct.unpack_from("<Q", package, 0)
-    plain = _ecb_decrypt(key, package[8:])
+    plain = aes.ecb_decrypt(key, package[8:])
     return plain[:size]
 
 
@@ -161,8 +142,6 @@ def _agile_password_hash(
 
 def _decrypt_agile(info: bytes, package: bytes, password: str) -> bytes:
     import base64
-
-    from zerox_spark.extract import aes
 
     xml = info[8:].decode("utf-8", errors="ignore")
 
@@ -255,9 +234,9 @@ def encrypt_ooxml_standard(
     """→ (EncryptionInfo, EncryptedPackage), ECMA-376 standard/AES-128."""
     key = _standard_key(salt, password, 16)
     verifier = hashlib.md5(salt).digest()  # any deterministic 16 bytes
-    enc_verifier = _ecb_encrypt(key, verifier)
+    enc_verifier = aes.ecb_encrypt(key, verifier)
     vhash = hashlib.sha1(verifier).digest()
-    enc_vhash = _ecb_encrypt(key, vhash + b"\x00" * 12)
+    enc_vhash = aes.ecb_encrypt(key, vhash + b"\x00" * 12)
     header = (
         struct.pack("<IIIIIIII", 0x24, 0, 0x660E, 0x8004, 128, 0x18, 0, 0)
         + _CSP_AES.encode("utf-16-le")
@@ -273,7 +252,7 @@ def encrypt_ooxml_standard(
         + struct.pack("<I", 20)
         + enc_vhash
     )
-    package = struct.pack("<Q", len(zip_bytes)) + _ecb_encrypt(
+    package = struct.pack("<Q", len(zip_bytes)) + aes.ecb_encrypt(
         key, zip_bytes
     )
     return info, package
@@ -289,8 +268,6 @@ def encrypt_ooxml_agile(
     spin defaults low for fixture speed; the decryptor reads it from the
     descriptor, so real-world 100k-spin files work identically."""
     import base64
-
-    from zerox_spark.extract import aes
 
     hfn = _HASHES["SHA512"]
     h = _agile_password_hash(salt, password, spin, "SHA512")
@@ -472,57 +449,27 @@ def _parse_encryption_header(body: bytes):
 
 def _try_passwords(fields, passwords, block_bytes: int = 1024):
     """Run the §2.3.5.6/§2.3.6.4 password verifier for each candidate;
-    → (base, capi, klen) for the first that validates, else None."""
+    → the keystream (_Rc4Stream) of the first that validates, else None."""
     kind, salt, enc_verifier, enc_vhash, vh_size, klen = fields
     capi = kind == "capi"
     for pwd in passwords:
         base = (
             _xls_capi_base(salt, pwd) if capi else _xls_rc4_base(salt, pwd)
         )
-        ks = _Rc4Stream(base, capi, klen, block_bytes).keystream_at(
-            0, 16 + vh_size
-        )
-        verifier = bytes(a ^ b for a, b in zip(enc_verifier, ks[:16]))
-        vhash = bytes(
-            a ^ b for a, b in zip(enc_vhash, ks[16 : 16 + vh_size])
-        )
+        rc4 = _Rc4Stream(base, capi, klen, block_bytes)
+        ks = rc4.keystream_at(0, 16 + vh_size)
+        verifier = aes.xor_bytes(enc_verifier, ks[:16])
+        vhash = aes.xor_bytes(enc_vhash, ks[16 : 16 + vh_size])
         hfn = hashlib.sha1 if capi else hashlib.md5
         if hfn(verifier).digest()[:vh_size] == vhash:
-            return base, capi, klen
+            return rc4
     return None
 
 
-def _parse_filepass(body: bytes):
-    """FilePass payload → (base_key_material, capi, klen, verify_fn)."""
-    (enc_type,) = struct.unpack_from("<H", body, 0)
-    if enc_type == 0x0000:
-        raise ValueError("xls XOR obfuscation unsupported")
-    fields = _parse_encryption_header(body[2:])
-    kind, salt, enc_verifier, enc_vhash, vh_size, klen = fields
-    capi = kind == "capi"
-    base = (
-        _xls_capi_base(salt, DEFAULT_PASSWORD)
-        if capi
-        else _xls_rc4_base(salt, DEFAULT_PASSWORD)
-    )
-
-    def verify(stream: _Rc4Stream) -> bool:
-        ks = stream.keystream_at(0, 16 + vh_size)
-        verifier = bytes(a ^ b for a, b in zip(enc_verifier, ks[:16]))
-        vhash = bytes(
-            a ^ b for a, b in zip(enc_vhash, ks[16 : 16 + vh_size])
-        )
-        hfn = hashlib.sha1 if capi else hashlib.md5
-        return hfn(verifier).digest()[:vh_size] == vhash
-
-    return base, capi, klen, verify
-
-
-def _xls_transform(wb: bytes, encrypt: bool, base, capi, klen) -> bytes:
+def _xls_transform(wb: bytes, rc4: _Rc4Stream) -> bytes:
     """Walk the workbook stream applying the RC4 keystream to every
     non-exempt payload byte. Symmetric (XOR), so the same walk encrypts
     (synth fixtures) and decrypts."""
-    stream = _Rc4Stream(base, capi, klen)
     out = bytearray(wb)
     pos = 0
     n = len(wb)
@@ -535,9 +482,9 @@ def _xls_transform(wb: bytes, encrypt: bool, base, capi, klen) -> bytes:
             start, length = body_at, ln
             if op == _XLS_BOUNDSHEET and ln >= 4:
                 start, length = body_at + 4, ln - 4  # lbPlyPos is clear
-            ks = stream.keystream_at(start, length)
-            for i in range(length):
-                out[start + i] ^= ks[i]
+            out[start : start + length] = aes.xor_bytes(
+                wb[start : start + length], rc4.keystream_at(start, length)
+            )
         pos = body_at + ln
         if op == 0x000A and pos >= n:  # trailing EOF
             break
@@ -562,13 +509,18 @@ def decrypt_xls_stream(wb: bytes) -> bytes:
         pos += 4 + ln
     if fp_body is None:
         return wb  # not encrypted
-    base, capi, klen, verify = _parse_filepass(fp_body)
-    if not verify(_Rc4Stream(base, capi, klen)):
+    (enc_type,) = struct.unpack_from("<H", fp_body, 0)
+    if enc_type == 0x0000:
+        raise ValueError("xls XOR obfuscation unsupported")
+    rc4 = _try_passwords(
+        _parse_encryption_header(fp_body[2:]), (DEFAULT_PASSWORD,)
+    )
+    if rc4 is None:
         raise ValueError(
             "encrypted xls (password verifier rejected the default "
             "password)"
         )
-    return _xls_transform(wb, False, base, capi, klen)
+    return _xls_transform(wb, rc4)
 
 
 def encrypt_xls_stream(
@@ -576,44 +528,8 @@ def encrypt_xls_stream(
 ) -> bytes:
     """Fixture-synthesis inverse: insert a FilePass after BOF and encrypt
     the stream under the default password (standard RC4 or CryptoAPI)."""
-    if capi:
-        base = _xls_capi_base(salt, DEFAULT_PASSWORD)
-        klen = 16
-        stream = _Rc4Stream(base, True, klen)
-        verifier = b"\xa5" * 16
-        ks = stream.keystream_at(0, 36)
-        enc_verifier = bytes(a ^ b for a, b in zip(verifier, ks[:16]))
-        vhash = hashlib.sha1(verifier).digest()
-        enc_vhash = bytes(a ^ b for a, b in zip(vhash, ks[16:36]))
-        csp = "Microsoft Enhanced Cryptographic Provider v1.0\x00".encode(
-            "utf-16-le"
-        )
-        header = (
-            struct.pack("<IIIIIIII", 0, 0, 0x6801, 0x8004, 128, 0x18, 0, 0)
-            + csp
-        )
-        body = (
-            struct.pack("<HHH", 1, 4, 2)
-            + struct.pack("<II", 0, len(header))  # headerFlags, headerSize
-            + header
-            + struct.pack("<I", 16)
-            + salt
-            + enc_verifier
-            + struct.pack("<I", 20)
-            + enc_vhash
-        )
-    else:
-        base = _xls_rc4_base(salt, DEFAULT_PASSWORD)
-        klen = 16
-        stream = _Rc4Stream(base, False, klen)
-        verifier = b"\xa5" * 16
-        ks = stream.keystream_at(0, 32)
-        enc_verifier = bytes(a ^ b for a, b in zip(verifier, ks[:16]))
-        vhash = hashlib.md5(verifier).digest()
-        enc_vhash = bytes(a ^ b for a, b in zip(vhash, ks[16:32]))
-        body = (
-            struct.pack("<HHH", 1, 1, 1) + salt + enc_verifier + enc_vhash
-        )
+    header = build_legacy_encryption_header(salt, capi, 1024)
+    body = struct.pack("<H", 1) + header  # wEncryptionType: RC4
     # insert FilePass right after the stream-leading BOF record; every
     # BoundSheet8 lbPlyPos is an ABSOLUTE stream offset, so offsets past
     # the insertion point shift by the record's size
@@ -629,7 +545,8 @@ def encrypt_xls_stream(
             if ply >= insert_at:
                 struct.pack_into("<I", with_fp, pos + 4, ply + len(fp))
         pos += 4 + rln
-    return _xls_transform(bytes(with_fp), True, base, capi, klen)
+    rc4 = _try_passwords(_parse_encryption_header(header), (DEFAULT_PASSWORD,))
+    return _xls_transform(bytes(with_fp), rc4)
 
 
 # --------------------------------------------------------------------------
@@ -653,9 +570,8 @@ def build_legacy_encryption_header(
     if capi:
         base = _xls_capi_base(salt, DEFAULT_PASSWORD)
         ks = _Rc4Stream(base, True, 16, block_bytes).keystream_at(0, 36)
-        enc_verifier = bytes(a ^ b for a, b in zip(verifier, ks[:16]))
-        vhash = hashlib.sha1(verifier).digest()
-        enc_vhash = bytes(a ^ b for a, b in zip(vhash, ks[16:36]))
+        enc_verifier = aes.xor_bytes(verifier, ks[:16])
+        enc_vhash = aes.xor_bytes(hashlib.sha1(verifier).digest(), ks[16:36])
         csp = "Microsoft Enhanced Cryptographic Provider v1.0\x00".encode(
             "utf-16-le"
         )
@@ -675,9 +591,8 @@ def build_legacy_encryption_header(
         )
     base = _xls_rc4_base(salt, DEFAULT_PASSWORD)
     ks = _Rc4Stream(base, False, 16, block_bytes).keystream_at(0, 32)
-    enc_verifier = bytes(a ^ b for a, b in zip(verifier, ks[:16]))
-    vhash = hashlib.md5(verifier).digest()
-    enc_vhash = bytes(a ^ b for a, b in zip(vhash, ks[16:32]))
+    enc_verifier = aes.xor_bytes(verifier, ks[:16])
+    enc_vhash = aes.xor_bytes(hashlib.md5(verifier).digest(), ks[16:32])
     return struct.pack("<HH", 1, 1) + salt + enc_verifier + enc_vhash
 
 
@@ -699,23 +614,16 @@ def transform_doc_streams(
     if not 4 <= lkey <= len(table):
         raise ValueError(f"encrypted doc (bad lKey {lkey})")
     fields = _parse_encryption_header(table[:lkey])
-    got = _try_passwords(fields, _LEGACY_PASSWORDS, DOC_BLOCK_BYTES)
-    if got is None:
+    rc4 = _try_passwords(fields, _LEGACY_PASSWORDS, DOC_BLOCK_BYTES)
+    if rc4 is None:
         raise ValueError(
             "encrypted doc (password verifier rejected the default and "
             "empty passwords)"
         )
-    base, capi, klen = got
 
     def xor_from(buf: bytes, start: int) -> bytes:
-        out = bytearray(buf)
-        if start < len(buf):
-            ks = _Rc4Stream(base, capi, klen, DOC_BLOCK_BYTES).keystream_at(
-                start, len(buf) - start
-            )
-            for i, k in enumerate(ks):
-                out[start + i] ^= k
-        return bytes(out)
+        ks = rc4.keystream_at(start, len(buf) - start)
+        return buf[:start] + aes.xor_bytes(buf[start:], ks)
 
     return xor_from(word, 0x44), xor_from(table, lkey)
 
@@ -814,13 +722,12 @@ def decrypt_ppt_document(stream: bytes, current_user: bytes) -> bytes:
     fields = _parse_encryption_header(
         stream[cs_off + 8 : cs_off + 8 + cs_len]
     )
-    got = _try_passwords(fields, _LEGACY_PASSWORDS)
-    if got is None:
+    rc4 = _try_passwords(fields, _LEGACY_PASSWORDS)
+    if rc4 is None:
         raise ValueError(
             "encrypted ppt (password verifier rejected the default and "
             "empty passwords)"
         )
-    base, _capi, klen = got
     from zerox_spark.extract.pdf import _rc4
 
     out = bytearray(stream)
@@ -849,7 +756,7 @@ def decrypt_ppt_document(stream: bytes, current_user: bytes) -> bytes:
                 "encrypted ppt (overlapping persist ranges in the "
                 "directory — structure mismatch, refusing to emit garbage)"
             )
-        key = _xls_block_key(base, pid, True, klen)
+        key = _xls_block_key(rc4.base, pid, True, rc4.klen)
         head = _rc4(key, bytes(out[off : off + 8]))
         _vi, rectype, reclen = struct.unpack("<HHI", head)
         if off + 8 + reclen > len(stream):

@@ -474,9 +474,11 @@ def _as_list(v):
 
 
 # --------------------------------------------------------------------------
-# encryption (spec §7.6: standard security handler, RC4 /V 1-2 with the
-# empty user password — the ubiquitous "owner-locked" crawl case; AES and
-# /V 4-5 raise a clear contained error instead of emitting garbage)
+# encryption (spec §7.6: the standard security handler with the empty user
+# or owner password — the ubiquitous "owner-locked" crawl case: RC4 /V 1-2,
+# /V 4 crypt filters (RC4 or AESV2) and /V 5 AESV3, see _StandardCrypt; a
+# password that fails validation, another handler or an unknown crypt
+# filter raises a clear contained error instead of emitting garbage)
 
 _PAD = bytes(
     [
@@ -667,7 +669,7 @@ class _StandardCrypt:
             )
         perms = resolve(enc.get(Name("Perms")))
         if isinstance(perms, bytes) and len(perms) >= 16:
-            dec = aes.ecb_decrypt_block(self.key, perms[:16])
+            dec = aes.ecb_decrypt(self.key, perms[:16])
             if dec[9:12] != b"adb":
                 raise PdfError("encrypted PDF (/Perms validation failed)")
 

@@ -1384,7 +1384,7 @@ def _v5_material():
             + b"adb"
             + b"zx5\x00"
         )
-        perms = _aes.ecb_encrypt_block(fk, perms_plain)
+        perms = _aes.ecb_encrypt(fk, perms_plain)
         _V5_CACHE = (fk, u, ue, o, oe, perms)
     return _V5_CACHE
 
